@@ -242,8 +242,9 @@ def _media_image_features_suite(spark, sf_dir):
 
 
 def _media_gif_features_suite(spark, sf_dir):
-    # round 15: executor-side GIF synthesis -> sub-block LZW decode
-    # -> palette expansion -> integer features, zero shuffles
+    # unregistered bench-only synth_features shape: executor-side GIF
+    # synthesis -> sub-block LZW decode -> palette expansion ->
+    # integer features, zero shuffles
     from kafkadirect_spark.functions import multimodal
     from kafkadirect_spark.sources.batch import load_table
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -251,10 +252,10 @@ def _media_gif_features_suite(spark, sf_dir):
 
 
 def _media_png_features_suite(spark, sf_dir):
-    # the r16 media_png_features candidate (round 15): executor-side
-    # PNG synthesis (filter cycles id % 5) -> CRC-verified chunk walk
-    # -> zlib inflate -> all-five-filter unfilter -> integer
-    # features, zero shuffles
+    # unregistered bench-only synth_features shape: executor-side PNG
+    # synthesis (filter cycles id % 5) -> CRC-verified chunk walk ->
+    # zlib inflate -> all-five-filter unfilter -> integer features,
+    # zero shuffles
     from kafkadirect_spark.functions import multimodal
     from kafkadirect_spark.sources.batch import load_table
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -425,19 +426,6 @@ def build_suites() -> tuple[dict, dict]:
     ``main`` and tools/bench_one.py so a single suite can be re-measured
     in isolation with exactly the bench's own callables."""
     from kafkadirect_spark.plans import QUERIES
-    # r11/r12: suite queries RETIRED from the registry (near-duplicate
-    # consolidation) whose suite plans are fingerprint-pinned — call
-    # the surviving functions directly so the measured plans stay
-    # byte-identical
-    from kafkadirect_spark.plans.analytics_queries import (
-        distinct_orders_hll as _distinct_orders_hll_q,
-        interval_overlap_join as _interval_overlap_join_q,
-        value_decile_buckets as _value_decile_buckets_q,
-    )
-    from kafkadirect_spark.plans.llm_queries import (
-        bpe_chunks as _bpe_chunks_q,
-        dedup_containment as _dedup_containment_q,
-    )
     from kafkadirect_spark.plans.queries import stream_count as _stream_count_q
     from kafkadirect_spark.sources.batch import load_table
 
@@ -504,7 +492,6 @@ def build_suites() -> tuple[dict, dict]:
         # sketches' wall clock is the proof their bounded-register
         # design works (register exchange, not a data exchange);
         # k-means times the full quantize → 2×(assign, update) loop
-        "distinct_orders_hll": _distinct_orders_hll_q,
         "heavy_hitters_cms": QUERIES["heavy_hitters_cms"],
         "kmeans_clusters": QUERIES["kmeans_clusters"],
         "global_shuffle": QUERIES["global_shuffle"],
@@ -515,16 +502,11 @@ def build_suites() -> tuple[dict, dict]:
         "semdedup_prune": QUERIES["semdedup_prune"],
         "range_bucket_join": QUERIES["range_bucket_join"],
         "rolling_distinct_hll": QUERIES["rolling_distinct_hll"],
-        # round-8 shape: the interval×interval overlap join (same
-        # no-nested-loop pin as range_bucket_join, both sides exploded)
-        "interval_overlap_join": _interval_overlap_join_q,
         # lossless prefix-filtered Jaccard (the uncapped exact path)
         "dedup_jaccard_prefix": QUERIES["dedup_jaccard_prefix"],
-        # late-r8 shapes: directed containment (inverted-index pair
-        # agg), incremental new-batch-vs-index LSH (band-keyed join,
-        # corpus quadrant excluded), and the integer unigram-surprisal
-        # scorer (occurrence collapse → vocab join → doc agg)
-        "dedup_containment": _dedup_containment_q,
+        # incremental new-batch-vs-index LSH (band-keyed join, corpus
+        # quadrant excluded) and the integer unigram-surprisal scorer
+        # (occurrence collapse → vocab join → doc agg)
         "dedup_incremental_lsh": QUERIES["dedup_incremental_lsh"],
         "doc_surprisal": QUERIES["doc_surprisal"],
         # iterative graph shape: 2 unrolled PageRank rounds — one
@@ -560,11 +542,6 @@ def build_suites() -> tuple[dict, dict]:
         # measured family has a fingerprint row and plan_diff covers
         # the full bench (VERDICT r8 item 6).  One representative per
         # plan shape:
-        # - bpe_chunks: the mapInPandas encode + row-local slice pass
-        #   (distinct from bpe_merges' training shape)
-        # retired from the registry r13 (chunking-shape consolidation);
-        # the suite plan stays fingerprint-pinned via the direct call
-        "bpe_chunks": _bpe_chunks_q,
         # - collocations_topk: PMI over the bigram/unigram tables with
         #   the one-row total broadcast
         "collocations_topk": QUERIES["collocations_topk"],
@@ -582,8 +559,7 @@ def build_suites() -> tuple[dict, dict]:
         "partition_diff": QUERIES["partition_diff"],
         "embedding_profile": QUERIES["embedding_profile"],
         "join_explosion_check": QUERIES["join_explosion_check"],
-        # - equi-depth bucketize: global + grouped narrowing variants
-        "value_decile_buckets": _value_decile_buckets_q,
+        # - grouped exact quantiles via histogram narrowing
         "exact_quantiles_by_type": QUERIES["exact_quantiles_by_type"],
         # - nb_langid (new r9): trained NB classifier — one exploded
         #   train exchange + pivoted vocab join + one doc agg
@@ -713,18 +689,13 @@ def main() -> None:
         """Stable plan-shape fingerprint per suite: if a timing moves
         but these don't, the movement is machine noise, not a plan
         regression — and vice versa.  Captures the public
-        ``df.explain("formatted")`` output (it prints driver-side, so
-        redirect_stdout sees it) instead of reaching into the private
-        ``_jvm.PythonSQLUtils`` API, which breaks under Spark Connect."""
-        import contextlib
-        import io
+        ``df.explain("formatted")`` output."""
         import re
         from collections import Counter
 
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        c = Counter(re.findall(r"\(\d+\) (\w+)", buf.getvalue()))
+        from kafkadirect_spark.testing import explain_formatted
+
+        c = Counter(re.findall(r"\(\d+\) (\w+)", explain_formatted(df)))
         return {
             "shuffles": c.get("Exchange", 0),
             "broadcasts": c.get("BroadcastExchange", 0),

@@ -973,23 +973,6 @@ def bucketize_by_quantiles(df: DataFrame, col: Column | str,
         out_col, F.when(c.isNotNull(), bucket.cast("long")))
 
 
-def bucketize_sql_cuts(table: str, value_expr: str,
-                       n_buckets: int = 10) -> str:
-    """DuckDB fragment: the same exact-rank cuts as a scalar-ready
-    CTE body — ``SELECT list_sort(list(v)) ...`` is not needed; the
-    rank cover mirrors ``exact_quantiles``."""
-    qs = sorted(set(i * 1000 // n_buckets for i in range(1, n_buckets)))
-    cases = ", ".join(
-        f"MIN(CASE WHEN rk >= ({q} * n + 999) // 1000 THEN v END) AS c{q}"
-        for q in qs)
-    return f"""(
-      SELECT {cases}
-      FROM (SELECT v, ROW_NUMBER() OVER (ORDER BY v) AS rk,
-                   COUNT(*) OVER () AS n
-            FROM (SELECT {value_expr} AS v FROM {table}
-                  WHERE {value_expr} IS NOT NULL)))"""
-
-
 def bucketize_by_quantiles_grouped(df: DataFrame, group_col: str,
                                    col: Column | str,
                                    n_buckets: int = 10,

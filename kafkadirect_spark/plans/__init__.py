@@ -1,261 +1,40 @@
+import glob
+import json
+import os
+import re
+
 from kafkadirect_spark.plans.queries import ORACLE_SQL, QUERIES
 from kafkadirect_spark.plans import llm_queries  # noqa: F401  (registers into QUERIES)
 from kafkadirect_spark.plans import curation_queries  # noqa: F401  (registers into QUERIES)
 from kafkadirect_spark.plans import analytics_queries  # noqa: F401  (registers into QUERIES)
 
-# ---------------------------------------------------------------------------
-# Registration-order rotation.
-#
-# The driver's correctness gate samples the first 50 registered queries, so
-# a fixed registration order would leave the same tail permanently outside
-# its hard evidence window.  Rotate: queries that have never had a driver
-# CORRECTNESS row (the similarity/ANN, curation, winnowing and multimodal
-# tail of rounds 1-3) are promoted to the front; the long-green core
-# operators move behind them.  Done in place so every importer —
-# ``plans.QUERIES``, ``plans.queries.QUERIES``, ``__spark_entry__`` — sees
-# the same order.
-# ---------------------------------------------------------------------------
-
-# ---------------------------------------------------------------------------
-# REGISTRATION-BUDGET POLICY (VERDICT r8 item 3, standing).  The driver
-# verifies exactly 50 queries per round, so every registered query costs
-# a recurring slice of that budget forever: at N registered queries the
-# staleness horizon is ceil(N/50)-1 rounds (the tripwire's capacity
-# bound), and past N=200 it degrades to 4 — every window 100% mandatory,
-# zero slack for re-checking changed queries.  Therefore: (a) net
-# registration growth is capped at ~10 queries/round; (b) a new OPERATOR
-# lands under pytest goldens first and is registered only if it earns a
-# driver-verified claim the existing surface doesn't already make;
-# (c) near-duplicate query shapes should be consolidated or retired
-# rather than accumulated.
-#
-# r15 executes the rotation the r14 tripwire prescribed (the 20
-# r11-dated leftovers front, verbatim) and registers SIX queries —
-# the r14 plan's pre-scheduled pool (all with oracle generators
-# pytest-pinned engine==oracle in round 14 or earlier), one per
-# operator family for claim diversity: pii_scrub (regex redaction +
-# integer Luhn validity over Catalyst-synthesized injections; the
-# regex-FREE arithmetic oracle proves the engine's regexes end to
-# end), media_video_features (real YUV4MPEG2 round-trip with
-# integer scene-cut localization — completes the driver-verified
-# image/audio/video container triad), cusum_changepoint (Page's
-# sequential changepoint via the prefix-sum closed form — the
-# when-did-it-shift claim theil_sen's trend fit and value_drift's
-# distribution compare cannot make), twap (LOCF time-weighted mean —
-# the irregular-sampling claim user_moving_avg's row-window mean
-# cannot make), basket_pairs (unordered co-membership support/lift
-# over order baskets — the relational market-basket claim, judged
-# more distinct than mmr_diversify vs the existing retrieval family;
-# + _BNLJ_OK one-row basket-count broadcast and _GLOBAL_WINDOW_OK
-# ≤k-row rank window), and weighted_quantiles (the weighted-order-
-# statistics claim deferred since r12 — "the median TOKEN lives in a
-# doc of length X", not the row-count quantile) — and RETIRES ONE
-# shape under item c, the r14 plan's named 1:1 pairing:
-# pii_redaction (→ pii_scrub strictly extends its email/SSN/phone
-# masking+counting claim with card shape, the Luhn split, IPv4,
-# per-kind counts and the regex-free oracle).  mmr_diversify stays
-# library-level this round (oracle-pinned, r16 pool);
-# graph_local_clustering stays library-level PERMANENTLY under the
-# "at most one" rule — DECISION RECORDED (VERDICT r14 item 5): the
-# driver-green census already proves the orientation / wedge /
-# closure machinery and the per-node variant shares its entire edge
-# surface, so a per-node row would re-prove the same claim at a
-# recurring window cost; it keeps its goldens and bench fingerprint.
-# Every retired OPERATOR stays in the library with its pytest
-# goldens.  N = 172 (167 + 6 − 1); horizon stays 3 (151..200 band).
-#
-# PAYDOWN MATH, recomputed at N=172 (supersedes the r14 note): the
-# horizon-3 capacity bound needs every pool older than upcoming−3 to
-# drain through the window on schedule.  Pools after r15's artifact
-# lands: 28 r12-dated leftovers (mandatory at r16 — 25 by rotation
-# plus the three fill slots the rule-2 media re-verifications took),
-# 47 r13, 47 r14 (the three media rows move to r15), 50 r15
-# (28 + 47 + 47 + 50 = 172 ✓, recomputed from the artifacts).  r16:
-# 28 mandatory + ~5 new registrations + 17 r13 fill → 30 r13 left at
-# r17; r17: 30 + ~5 + 15 r14 fill → 32 r14 left; the train keeps
-# moving as long as (oldest pool) + (new) ≤ 50.
-# Tightening to horizon 2 stays mathematically false while three
-# trailing pools exist (28 + 47 > 50 at r16).  Decision standing:
-# stay in the 151..200 band, keep ~5-10 free slots per round for new
-# oracle-ready operators — the slack IS the feature, not debt.
-# ---------------------------------------------------------------------------
-
-_PROMOTED = [
-    # Round-15 window.  Two admission rules (VERDICT r4, standing):
-    # (1) every query whose newest driver CORRECTNESS row would
-    #     otherwise fall past the capacity horizon — enforced by
-    #     tests/test_plans.py's rotation-staleness sweep;
-    # (2) every query whose implementation or oracle CHANGED this
-    #     round stays inside the sampled window so the driver, not
-    #     just the local checker, re-verifies the new behavior.
-    #
-    # -- rule 1, mandatory: the 20 r11-dated leftovers the r14
-    #    tripwire named verbatim --
-    "select_key_regroup",
-    "session_aggregate",
-    "session_reduce",
-    "shipping_priority",
-    "skew_salted_distinct",
-    "skew_salted_join",
-    "smt_chain",
-    "stream_aggregate",
-    "stream_reduce",
-    "supplier_nation_volume",
-    "table_group_aggregate",
-    "table_map_values",
-    "table_tombstones",
-    "tokenizer_eval",
-    "ts_policy_previous",
-    "unlimited_window_count",
-    "windowed_avg_hopping",
-    "windowed_chunks",
-    "windowed_count_tumbling",
-    "yahoo_pipeline",
-    # -- new in round 15 (the pre-scheduled registrations; never
-    #    driver-verified, so they front).  The r14 ipv4 ADVICE fix
-    #    (octet range check) changed privacy.py's pattern table; the
-    #    only registered query on that code path is pii_scrub itself,
-    #    fronting here --
-    "basket_pairs",
-    "cusum_changepoint",
-    "media_video_features",
-    "pii_scrub",
-    "twap",
-    "weighted_quantiles",
-    # -- rule 2: the round-15 REAL PNG and GIF paths (stdlib-zlib /
-    #    pure-LZW codecs) added branches to the SHARED multimodal
-    #    helpers `sniff_media` (new magic checks), `synth_media` (new
-    #    kinds), and the image_features / image_phash dispatch tables
-    #    that sit in these three registered queries' code paths;
-    #    behavior for their pnm/bmp/wav payloads is provably
-    #    unchanged (no such payload starts with the PNG/GIF magics),
-    #    but rule 2 tracks implementation text, not arguments — the
-    #    driver re-verifies them.  (media_video_features shares the
-    #    same helpers and fronts above as a new registration; no
-    #    other registered query's implementation or oracle text
-    #    changed this round.)
-    #    Three fill slots paid for these — see the fill note below. --
-    "media_audio_features",
-    "media_image_features",
-    "media_phash_pairs",
-    # -- fill: the 21 alphabetically-first of the 49 surviving
-    #    r12-dated queries (newest driver row r12 — legal outside the
-    #    window this round, mandatory at r16; scheduling the oldest
-    #    now leaves a 28-query r16 mandatory front: the 25
-    #    large_order_customers..zorder_events leftovers plus the
-    #    three alphabetically-last fills the rule-2 media
-    #    re-admissions displaced — important_part_stock,
-    #    join_explosion_check, kmeans_clusters) --
-    "asof_enrich",
-    "bm25_search",
-    "boilerplate_flag",
-    "bpe_merges",
-    "collocations_topk",
-    "corpus_curation",
-    "corpus_mix_upsample",
-    "decontaminate_bloom",
-    "dedup_containment_anti",
-    "dedup_edit_verified",
-    "dedup_embedding_cosine",
-    "dedup_keep_longest",
-    "doc_fingerprint",
-    "embedding_pq_codes",
-    "embedding_profile",
-    "event_funnel",
-    "event_gaps",
-    "events_skew_report",
-    "forecast_revenue",
-    "global_shuffle",
-    "heavy_hitters_cms",
-]
-
-# No over-subscription this round: the six new registrations and
-# three rule-2 media re-verifications fit inside the window alongside
-# the 20 mandatory rotations, and the 21 fill slots hold r12-dated
-# rotation.  (The tripwire keeps this list
-# honest: a name may sit here ONLY while it is registered, has no
-# driver row yet, and every window slot is occupied by a mandatory
-# rotation or another never-verified query.)
-#
-# r16 plan (so the next window is predictable): mandatory front = the
-# 28 r12-dated leftovers (the 25 alphabetically-last
-# large_order_customers, late_shipment_priority,
-# length_weighted_sample, local_supplier_volume, multimodal_meta,
-# partition_diff, priority_returned_orders, promotable_suppliers,
-# range_bucket_join, sample_weighted, sax_nearest, similarity_ivf_pq,
-# small_quantity_revenue, supplier_pagerank, supplier_part_variety,
-# surprisal_bigram, table_to_stream_count, temperature_mix,
-# text_langid, token_budget_select, top_supplier, vocab_coverage,
-# volume_shipping, wordpiece_eval, zorder_events, PLUS the three
-# fills the rule-2 media re-admissions displaced:
-# important_part_stock, join_explosion_check, kmeans_clusters);
-# candidate registrations (oracle generators already pytest-pinned
-# engine==oracle unless noted): `media_png_features` (the REAL
-# stdlib-zlib PNG round-trip landed r15 —
-# multimodal.synth_image_features_oracle_sql(kind='png'); the synth
-# cycles filter_type = id % 5, so ONE driver row proves CRC-verified
-# chunk walk, inflate and all five scanline unfilters; a genuinely
-# new claim: the container triad rows prove uncompressed codecs,
-# this proves a COMPRESSED one; `media_gif_features` — the LZW twin,
-# oracle-ready via synth_image_features_oracle_sql(kind='gif') — is
-# the SAME compressed-raster claim family: register AT MOST ONE of
-# png/gif per round, png first for its five-filter coverage), `acf`
-# (landed r15 —
-# timeseries.acf_oracle_sql; per-group rank-lag autocorrelation, Box
-# & Jenkins — the PERIODICITY claim cusum/theil_sen/sax cannot make;
-# one corpus exchange, pure window aggregates, hypothesis-pinned vs
-# an exact integer model), `seasonal_profile` (landed r15 —
-# timeseries.seasonal_profile_oracle_sql; classical additive
-# decomposition + Wang-Smith-Hyndman seasonal STRENGTH — acf DETECTS
-# a period, this PROFILES and SCORES it; same one-exchange pure-
-# window envelope; at most ONE of acf/seasonal_profile should
-# register per round — they share the monitoring family, pick by
-# which claim the window needs), `mmr_diversify` (retrieval.
-# mmr_oracle_sql — Maximal Marginal Relevance re-rank over exact
-# int8 dots, the result-diversification claim hybrid_rrf's fusion
-# cannot make; greedy replayed by a recursive-CTE argmax; needs a
-# _BNLJ_OK entry for the one-row probe broadcast),
-# `weighted_quantiles_by_lang` ONLY if a per-group weighted claim is
-# judged distinct from this round's global `weighted_quantiles` +
-# the driver-green grouped decile family (likely not — default to
-# skipping it), and the standing
-# library-level pool (`graph_local_clustering` is DECIDED
-# library-level permanently — see the census note above; do not
-# re-litigate).  Balance with item-c retirements where a genuine
-# subsumption exists, else let N drift inside the 151..200 band
-# (horizon 3 holds).  Fill = the ~17 alphabetically-first of the 47
-# r13-dated queries, leaving ~30 r13 leftovers toward r17's
-# mandatory front (30 + ~5 new ≤ 50 — the train still moves).
-_DEFERRED_NEW: list[str] = []
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 
-def _rotate_front(d: dict, front: list[str]) -> None:
-    ordered = [k for k in front if k in d] + [k for k in d if k not in front]
-    items = {k: d[k] for k in ordered}
-    d.clear()
-    d.update(items)
+def stalest_first(names, root: str = _REPO_ROOT) -> list[str]:
+    """Order ``names`` so the queries with the oldest correctness
+    evidence come first: the external correctness gate checks only the
+    first 50 registered queries per run.  Evidence is any row in a
+    ``CORRECTNESS_r<N>.json`` under ``root``; a query's age is the
+    ``N`` of its newest row.  Never-verified queries lead, then oldest
+    newest-row; ties (and the no-artifact case) keep the given order."""
+    newest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if m:
+            with open(path) as fh:
+                for q in json.load(fh):
+                    newest[q] = max(newest.get(q, 0), int(m.group(1)))
+    return sorted(names, key=lambda q: newest.get(q, -1))
 
 
-def _check_promoted_registered(front: list[str], registered) -> None:
-    """Every promoted name must resolve to a REGISTERED query: r7's
-    window silently lost two entries ("new" queries that were never
-    registered) because _rotate_front's `if k in d` filter tolerated
-    phantoms — a typo here would leave the intended query outside the
-    driver's hard-evidence window while the comment claims it's in.
-    Fail loudly at import instead.  (ORACLE_SQL is allowed to be a
-    subset: queries without a SQL-expressible oracle get the driver's
-    rows-only check.)"""
-    unknown = set(front) - set(registered)
-    if unknown:
-        raise LookupError(
-            f"_PROMOTED names not registered in QUERIES: "
-            f"{sorted(unknown)} — register the query or remove the "
-            "rotation entry")
+# Reorder in place so every importer — ``plans.QUERIES``,
+# ``plans.queries.QUERIES``, ``__spark_entry__`` — sees the same order.
+_ORDER = stalest_first(list(QUERIES))
+for _registry in (QUERIES, ORACLE_SQL):
+    for _name in _ORDER:
+        if _name in _registry:
+            _registry[_name] = _registry.pop(_name)
 
-
-_check_promoted_registered(_PROMOTED, QUERIES)
-_check_promoted_registered(_DEFERRED_NEW, QUERIES)
-_rotate_front(QUERIES, _PROMOTED)
-_rotate_front(ORACLE_SQL, _PROMOTED)
-
-__all__ = ["QUERIES", "ORACLE_SQL"]
+__all__ = ["QUERIES", "ORACLE_SQL", "stalest_first"]

@@ -19,31 +19,6 @@ from kafkadirect_spark.plans.queries import query
 from kafkadirect_spark.sources.batch import load_table
 
 
-# RETIRED r12 (registration-budget policy item c): `distinct_orders_hll`
-# — GLOBAL HLL distinct count (r9 driver rows green).  Claim carried
-# by the surviving `distinct_users_by_type_hll` (the SAME sketch
-# kernel — sketch.hll_distinct/_grouped share the register pipeline —
-# run grouped, strictly stronger) and `rolling_distinct_hll` (the
-# windowed-merge variant).  The operator and its pytest goldens
-# (test_sketch.py) remain in the library; bench.py's fingerprint-
-# pinned `distinct_orders_hll` suite still calls this function
-# directly.
-def distinct_orders_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate distinct-order count over lineitem via the
-    deterministic HyperLogLog sketch (functions/sketch.py): p=10 →
-    1024 integer registers, portable md5 hashing, pure-integer
-    estimator — an APPROXIMATE algorithm with an EXACT cross-engine
-    oracle (DuckDB replays registers and estimate bit-for-bit).
-
-    Scale: the only exchange carries ≤ m rows per task (map-side
-    partial register-min); sketches from disjoint partitions merge
-    with ``sketch.hll_merge`` without touching raw data again —
-    the 100 TB distinct-count primitive, vs COUNT(DISTINCT)'s full
-    shuffle of every key."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return sketch.hll_distinct(li, "l_orderkey")
-
-
 _H = ("(('0x' || substr(md5('{seed}' || doc_id::VARCHAR), 1, 14))::BIGINT"
       " % 2147483647)")
 
@@ -70,27 +45,6 @@ def global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return curation.shuffle_positions(docs, "doc_id", seed="shuffle")
-
-
-# RETIRED r12 (registration-budget policy item c): `sample_exact_count`
-# — exactly-n GLOBAL uniform sample (r9 driver rows green).  Claim
-# carried by the surviving `sample_exact_per_group` — the SAME
-# operator family (curation.sample_exact_n/_per_group share the
-# salted-hash order) run per-stratum, strictly stronger — and by the
-# incoming `sample_weighted` (integer systematic sampling over the
-# same salted-hash total order, of which the uniform draw is the
-# equal-weights special case).  The operator and its pytest goldens
-# (test_curation.py) remain in the library.
-def sample_exact_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-200 uniform document sample, rerun-stable
-    (functions/curation.py sample_exact_n): the 200 smallest rows in
-    salted-hash order, planned as distributed TakeOrdered (per-task
-    heaps of n) — exact size without sampleByFraction variance or a
-    global sort."""
-    from kafkadirect_spark.functions import curation
-
-    docs = load_table(spark, sf_dir, "documents")
-    return curation.sample_exact_n(docs, "doc_id", 200, seed="sample")
 
 
 @query(
@@ -423,18 +377,6 @@ def value_quantiles_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  lo=0, hi=1_000_000, bins=1000)
 
 
-# RETIRED r9 (registration-budget policy item c, VERDICT r8 item 3):
-# `value_quantiles_by_type` — per-type p50/p99 via the GROUPED
-# histogram sketch (r6 driver rows green).  Its two claims are each
-# carried by a surviving query: the histogram-sketch machinery by
-# `value_quantiles_hist` (global, same registers/extraction), the
-# grouped-quantile machinery by `exact_quantiles_by_type` (grouped
-# narrowing — strictly stronger: exact, not estimate).  The OPERATORS
-# (`sketch.hist_registers_grouped` / `hist_quantiles_grouped`) remain
-# in the library with their pytest goldens (test_sketch.py) — only the
-# redundant registration slot is reclaimed.
-
-
 _KMV_H = "('0x' || substr(md5(t), 1, 12))::BIGINT"
 
 
@@ -692,7 +634,7 @@ def distinct_users_by_type_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows via map-side partial min, never the raw keys, and each
     group's sketch later merges with other days/sources through
     ``hll_merge`` without re-reading events.  Integer-exact end to
-    end (same estimator contract as distinct_orders_hll)."""
+    end."""
     from pyspark.sql import functions as F
 
     ev = load_table(spark, sf_dir, "events")
@@ -700,56 +642,6 @@ def distinct_users_by_type_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select("event_type", "user_id"), "user_id",
         p=_HLL_P, by=("event_type",))
     return sketch.hll_estimate(regs, p=_HLL_P, by=("event_type",))
-
-
-# RETIRED r10 (registration-budget policy item c):
-# `trailing_distinct_hll` — trailing 7-day distinct users via
-# band-bounded HLL register merge (r8 driver rows green).  Claim
-# carried by the surviving `rolling_distinct_hll`: the same
-# grouped-register pass and day×day register-space merge join (the
-# cumulative band instead of the 7-day band — same plan shape, same
-# estimator, same bounded-register contract), plus
-# `distinct_users_by_type_hll` for the grouped-estimate surface.
-
-
-# RETIRED r11 (registration-budget policy item c): the
-# `interval_overlap_join` REGISTRATION (r8 driver rows green).  Claim
-# carried by the surviving `interval_overlap_left`: the identical
-# bucket-quantized interval×interval machinery
-# (operators/rangejoin.py) with the strictly harder left flavor
-# (matches PLUS null-preserved unmatched suppliers); the inner
-# operator also keeps its model-differential property pins in
-# test_properties.py and test_rangejoin.py.  The function stays
-# (unregistered) because bench.py's fingerprint-pinned
-# `interval_overlap_join` suite executes it directly.
-def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval×interval overlap join WITHOUT a nested loop
-    (operators/rangejoin.py interval_overlap_join): each supplier
-    opens the balance band [s_acctbal, +$500), each customer
-    [c_acctbal, +$300); bands that overlap are matched through the
-    same fixed-width bucket quantization as the point-in-interval
-    join, with BOTH sides exploding to their covered buckets and each
-    overlapping pair emitted exactly once at its canonical bucket (max
-    of the two first-buckets) — no DISTINCT pass, no dedup shuffle.
-    Both sides stay hash-partitioned on bucket ids (either may be
-    fact-sized); the oracle is the naive inequality join — same
-    semantics, scale-naive plan."""
-    from pyspark.sql import functions as F
-
-    from kafkadirect_spark.operators import rangejoin
-
-    cents = lambda c: F.floor(F.col(c) * 100).cast("long")  # noqa: E731
-    supp = (load_table(spark, sf_dir, "supplier")
-            .select("s_suppkey", cents("s_acctbal").alias("a_lo"),
-                    (cents("s_acctbal") + 50000).alias("a_hi")))
-    cust = (load_table(spark, sf_dir, "customer")
-            .select("c_custkey", cents("c_acctbal").alias("b_lo"),
-                    (cents("c_acctbal") + 30000).alias("b_hi")))
-    joined = rangejoin.interval_overlap_join(
-        supp, cust, "a_lo", "a_hi", "b_lo", "b_hi", bucket_width=40_000)
-    return (joined.groupBy("s_suppkey")
-            .agg(F.count("*").cast("long").alias("n_overlap"),
-                 F.sum("c_custkey").cast("long").alias("sum_custkey")))
 
 
 @query(
@@ -847,15 +739,6 @@ def range_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (joined.groupBy("s_suppkey")
             .agg(F.count("*").cast("long").alias("n_customers"),
                  F.sum("c_cents").cast("long").alias("sum_cents")))
-
-
-# RETIRED r10 (registration-budget policy item c): `value_outliers` —
-# per-type z-score outliers via the integer cross-multiplied variance
-# test (r7 driver rows green).  Claim carried by the surviving
-# `value_outliers_mad`: the same one-stats-pass-broadcast-back outlier
-# shape with a strictly harder statistic (exact median + MAD via
-# grouped histogram narrowing — robust where z-scores are blown up by
-# the very outliers they hunt).
 
 
 def _zorder_oracle() -> str:
@@ -988,16 +871,6 @@ def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_scaled(edges, "src", "dst", iters=2)
 
 
-# RETIRED r10 (registration-budget policy item c): `exact_value_quantiles`
-# — GLOBAL exact order statistics via iterative histogram narrowing
-# (r8 driver rows green).  Claim carried by the surviving
-# `exact_quantiles_by_type` — the SAME operator family
-# (sketch.exact_quantiles/_grouped share the narrowing kernel) run
-# grouped, which is strictly stronger; the histogram-sketch estimate
-# path stays verified by `value_quantiles_hist`.  The operator and its
-# pytest goldens (test_sketch.py) remain in the library.
-
-
 def _pq_ctes(m: int = 4, k: int = 4, sub: int = 16) -> str:
     """Generated per-subspace replay of the PQ codebook training
     (quantize → seed → assign → truncating-integer centroid means →
@@ -1104,8 +977,7 @@ def ivf_pq_oracle_sql(n: int = 3, nprobe: int = 4,
     """DuckDB replay of ``similarity.ivf_pq_topk(embeddings, ...,
     probes=<probe_pred>)`` — the IVFADC composite: the deterministic
     coarse quantizer's shortlist (the similarity_ann_ivf CTEs) scored
-    by the PQ codebooks' ADC tables (the similarity_pq_adc CTEs),
-    restricted to the shortlist.  Registration-ready for r12."""
+    by the PQ codebooks' ADC tables, restricted to the shortlist."""
     pts = ",".join(f"""
     pt_{j} AS (
       SELECT pr.vec_id AS pid, c.cid,
@@ -1188,34 +1060,6 @@ def ivf_pq_rerank_oracle_sql(n: int = 3, refine: int = 4,
           FROM d)
     WHERE rn <= {n}
     """
-
-
-# RETIRED r12 (registration-budget policy item c): `similarity_pq_adc`
-# — full-scan ADC top-k over the PQ codes (r8 driver rows green).
-# Claim carried by the incoming `similarity_ivf_pq` below, whose
-# IVFADC composite scores THE SAME per-probe ADC distance tables
-# (similarity.pq_topk and ivf_pq_topk share the codebook training and
-# the literal-map T_j[code_j] scoring) restricted to the IVF
-# shortlist — every ADC bit stays driver-checked through the
-# composite; the codebooks/codes themselves stay driver-checked
-# through `embedding_pq_codes`.  The operator and its pytest goldens
-# (test_llm_ops.py) remain in the library.
-def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric-distance PQ search (functions/similarity.py
-    pq_topk): top-3 neighbors for 3 probes scored as Σ_j T_j[code_j]
-    over the compressed codes — the vectors are never touched at
-    query time.  Probe distance tables are exact-integer, computed
-    driver-side (bounded) and embedded as literals; scoring is a
-    row-local projection, one rank window per probe.  The oracle
-    rebuilds codebooks, codes, and tables entirely in SQL."""
-    from pyspark.sql import functions as F
-
-    from kafkadirect_spark.functions import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < 3)
-    return similarity.pq_topk(emb, "vec_id", "embedding", probes,
-                              n=3, m=4, k=4, iters=2)
 
 
 @query("similarity_ivf_pq", oracle=ivf_pq_oracle_sql())
@@ -1358,34 +1202,6 @@ def value_drift_by_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _DECILE_QS = [i * 100 for i in range(1, 10)]
-
-
-# RETIRED r12 (registration-budget policy item c): `value_decile_buckets`
-# — GLOBAL exact equi-depth deciles (r9 driver rows green).  Claim
-# carried by the surviving `value_decile_by_type` — the SAME operator
-# (sketch.bucketize_by_quantiles over the shared histogram-narrowing
-# selection) run per-group, strictly stronger.  The operator and its
-# pytest goldens (test_sketch.py) remain in the library; bench.py's
-# fingerprint-pinned `value_decile_buckets` suite still calls this
-# function directly.
-def value_decile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact equi-depth deciles of the event value
-    (sketch.bucketize_by_quantiles): cuts are true order statistics
-    from the histogram-narrowing selection, assignment is a
-    row-local expression over the broadcast cut literals (the data
-    is never shuffled for the cuts), and the per-bucket report pins
-    the equi-depth property — ~n/10 rows per bucket up to ties."""
-    from pyspark.sql import functions as F
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    base = ev.select(F.floor(F.col("value") * 100).cast("long")
-                     .alias("v"))
-    bk = sketch.bucketize_by_quantiles(base, "v", 10)
-    return (bk.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.min("v").alias("min_v"),
-                 F.max("v").alias("max_v")))
 
 
 @query(

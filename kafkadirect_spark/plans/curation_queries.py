@@ -70,17 +70,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "pred_lang")
 
 
-# RETIRED r10 (registration-budget policy item c): `decontaminate` —
-# exact 8-gram eval-set decontamination via the broadcast shingle-hash
-# semi-join (r9 driver rows green).  Claim carried by the surviving
-# `decontaminate_bloom`: the same contamination semantics and output
-# shape through the FIXED-SIZE Bloom broadcast (the 100 TB path —
-# bounded broadcast no matter how the reference set grows, one-sided
-# errors, every bit position oracle-replayed).  The exact variant's
-# broadcast-plan pin stays in test_plans.py and the operator
-# (curation.decontaminate) keeps its pytest goldens.
-
-
 @query(
     "pack_sequences",
     oracle=f"""
@@ -205,24 +194,6 @@ def boilerplate_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return curation.boilerplate_ratio(docs, "text", "doc_id",
                                       n=10, max_doc_freq=2)
-
-
-# RETIRED r15 (registration-budget policy item c, the r14 plan's
-# named 1:1 pairing): `pii_redaction` — email/SSN/phone masking +
-# total span count over per-doc synthetic injections (registered
-# r3-era, driver-green through D12) is strictly subsumed by
-# `pii_scrub` below, which masks the SAME kinds plus payment-card
-# shape and IPv4, SPLITS card shape matches from Luhn-VALID numbers
-# (the integer fold a compliance audit needs), counts per kind
-# instead of in total, and upgrades the oracle from cross-engine
-# regex replay to the regex-FREE arithmetic form (the synth_media
-# discipline — a green row proves the ENGINE's regexes end to end
-# with no SQL-regex-dialect parity risk).  Carried claims: the
-# zero-shuffle codegen'd regexp-chain plan shape (plan-pinned in
-# test_privacy.py) and the masked-rendering md5 surface.  The
-# operator stays in the library (`text.redact_pii` /
-# `text.pii_count`) with its pytest goldens and its bench
-# fingerprint row.
 
 
 @query("pii_scrub", oracle=privacy.synth_pii_scrub_oracle_sql())
@@ -1032,22 +1003,6 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round 13 registrations (pre-scheduled by the r12 plan, oracle
 # generators pytest-pinned engine==oracle in round 12).
 # ---------------------------------------------------------------------------
-
-
-# RETIRED r14 (registration-budget policy item c, the r13 plan's
-# named 1:1 pairing): `contamination_report` — per-eval-doc distinct
-# 8-gram leakage COUNTS (registered r13, driver-green D13) is
-# strictly subsumed by `contamination_spans` below, which replays the
-# SAME tokenize / positional 8-gram / portable-hash / broadcast-semi
-# membership machinery and then ADDS the span merge (longest leaked
-# run, span count, leaked-token mass) — the measure the GPT-3/PaLM
-# decontamination reports actually use.  Carried claims: the
-# corpus-side-never-shuffles plan shape (still plan-pinned in
-# test_curation.py for BOTH operators), the gram-membership math
-# (spans' n_grams column is the report's denominator surface), and
-# the milli-ratio truncation.  The operator stays in the library
-# (`curation.contamination_report`) with its pytest goldens and the
-# streaming `decontaminate` twin.
 
 
 @query("contamination_spans",

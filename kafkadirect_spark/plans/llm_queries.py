@@ -37,31 +37,6 @@ _SHINGLES_CTE = f"""
 _PERMS_VALUES = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(PERMS))
 
 
-# RETIRED r13 (registration-budget policy item c): `dedup_exact` —
-# whole-document content-hash dedup (r10 driver rows green).  Claims
-# carried by two survivors: `dedup_clusters` (composes the SAME
-# dedup.exact_dedup one-shuffle content-hash groupBy as its prefilter
-# stage, driver-checked through the composite) and the incoming
-# `dedup_exactsubstr` (whole-doc duplicates are the degenerate case
-# of corpus-wide repeated-substring removal — a fully-duplicated doc
-# loses all its tokens, pinned by test_exactsubstr_hand_checked's
-# doc 3).  The operator and its pytest goldens remain in the library.
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup — one shuffle on the 128-bit content hash."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.exact_dedup(docs, "text", "doc_id")
-
-
-# RETIRED r10 (registration-budget policy item c):
-# `dedup_ngram_jaccard` — capped inverted-index exact 3-gram Jaccard
-# pairs (r8 driver rows green).  Claims carried by two survivors:
-# `dedup_jaccard_prefix` (exact Jaccard pairs via the LOSSLESS prefix
-# filter — the strictly stronger uncapped scale path over the same
-# shingle index) and `dedup_verified_pairs` (the candidates→verify
-# composition with exact Jaccard on the verify side).  The operator
-# (dedup.ngram_jaccard_pairs) and its goldens remain in the library.
-
-
 @query(
     "dedup_jaccard_prefix",
     oracle=f"""
@@ -198,14 +173,6 @@ _SIMHASH_CTES = f"""
     )"""
 
 
-# RETIRED r10 (registration-budget policy item c): `dedup_simhash` —
-# per-doc 32-bit SimHash signatures (r7 driver rows green).  Strictly
-# subsumed by the surviving `dedup_simhash_pairs`, whose oracle builds
-# THE SAME signatures (shared _SIMHASH_CTES above) and then verifies
-# the banded Hamming join on top — every signature bit stays
-# driver-checked through the pairs query.
-
-
 # Shared by dedup_simhash_pairs AND (as the candidate CTE)
 # dedup_edit_verified's composed oracle — one definition so the two
 # registered replays can never drift apart.
@@ -295,31 +262,6 @@ def dedup_edit_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
                                bits=32, max_hamming=3, n_bands=4)
     return dedup.edit_verify_pairs(docs, cand, "text", "doc_id",
                                    max_dist_milli=500)
-
-
-# RETIRED r12 (registration-budget policy item c): `text_stats` —
-# per-doc token counts / avg token length / stopword ratio (r8 driver
-# rows green).  Claim carried by the surviving `text_quality` (the
-# SAME per-doc row-local array expressions — token count, stopword
-# ratio — composed into the quality score) and `corpus_stats` (the
-# corpus-level reduction of the same token surface); every expression
-# stays driver-checked through those two.  The operator stays in the
-# library (functions/text.py) with its pytest goldens.
-def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-scoring stats per doc: token counts, avg token length,
-    stopword ratio — all JVM-side array expressions, zero shuffles."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = text.tokens("text")
-    total_len = F.aggregate(
-        F.transform(w, F.length), F.lit(0), lambda acc, x: acc + x)
-    return docs.select(
-        "doc_id",
-        F.size(w).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(w)).cast("long").alias("n_distinct"),
-        F.when(F.size(w) > 0, total_len.cast("double") / F.size(w))
-         .otherwise(F.lit(0.0)).alias("avg_token_len"),
-        text.stopword_ratio(w).alias("stopword_ratio"),
-    )
 
 
 @query(
@@ -572,16 +514,6 @@ def _ann_oracle_sql(probe_radius: int = 0) -> str:
     """
 
 
-# RETIRED r11 (registration-budget policy item c):
-# `similarity_ann_lsh` — random-hyperplane LSH ANN top-3 at probe
-# radius 0 (r10 driver row green).  Claim carried by the surviving
-# `similarity_ann_multiprobe`: the SAME ann_lsh_topk operator, planes,
-# bucket join and oracle generator (_ann_oracle_sql), with
-# probe_radius=1 strictly superset of the radius-0 candidate set —
-# multiprobe subsumes the plain-LSH recall claim.  The operator keeps
-# its recall-vs-brute-force pytest goldens in test_similarity.py.
-
-
 @query(
     "similarity_ann_ivf",
     oracle="""
@@ -766,25 +698,6 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", text.bpe_token_count("text").cast("long").alias("bpe_tokens"))
 
 
-# RETIRED r13 (registration-budget policy item c, the r12 plan's
-# named 1:1 partner): `dedup_spans` — chunk-aligned C4-style span
-# dedup (r10 driver rows green).  Claim carried by the incoming
-# `dedup_exactsubstr`, which strictly subsumes it at the same hash
-# machinery: fixed non-overlapping 8-word chunks cannot catch a
-# duplicated passage that straddles a chunk boundary; the
-# alignment-free sliding-window recipe catches every duplicated
-# 8-token substring corpus-wide, first occurrence wins in both.  The
-# operator and its pytest goldens remain in the library.
-def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span-level exact dedup (C4 recipe): 8-word chunks, global
-    first-occurrence wins, documents rebuilt from surviving spans —
-    functions/dedup.py:span_dedup.  The oracle replays the winner
-    selection with a window rank ordered (doc_id, pos), the same
-    total order as Spark's min(struct(id, pos))."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.span_dedup(docs, "text", "doc_id", span_words=8)
-
-
 @query(
     "embedding_quantize",
     oracle="""
@@ -859,30 +772,6 @@ def semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.assign_clusters(emb, "vec_id", "embedding", k=8)
 
 
-# RETIRED r11 (registration-budget policy item c): the
-# `dedup_containment` REGISTRATION (r8 driver rows green).  Claim
-# carried by the surviving `dedup_containment_anti`: it builds the
-# IDENTICAL capped inverted-index intersection (same containment_pairs
-# call, same oracle CTE chain) and adds the left-anti filtering join on
-# top — the anti query cannot pass without the containment scores being
-# right.  The function itself stays (unregistered) because bench.py's
-# fingerprint-pinned `dedup_containment` suite executes it directly.
-def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed containment near-dup (functions/dedup.py:
-    containment_pairs): short documents subsumed by longer ones —
-    the asymmetric overlap Jaccard's union term drowns.  Same
-    inverted-index shape as dedup_ngram_jaccard; both directions
-    decided from one intersection row."""
-    docs = load_table(spark, sf_dir, "documents")
-    out = dedup.containment_pairs(docs, "text", "doc_id",
-                                  n=3, threshold=0.3, max_doc_freq=50)
-    return out.select(
-        "contained", "container",
-        F.col("common").cast("long").alias("common"),
-        F.col("n_contained").cast("long").alias("n_contained"),
-        "containment")
-
-
 @query(
     "dedup_containment_anti",
     oracle=f"""
@@ -912,8 +801,8 @@ def dedup_containment_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment SURVIVORS (functions/dedup.py containment_pairs,
     how='anti'): every document NOT subsumed by another at ≥ 0.3
     containment — the "keep only unsubsumed docs" curation shape
-    (VERDICT r8 item 5), computed from the same capped inverted-index
-    intersection as dedup_containment plus ONE left-anti hash join
+    computed from the capped shingle inverted-index intersection
+    plus ONE left-anti hash join
     (the contained-id side is the pair table's distinct projection,
     never a second corpus pass)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -997,17 +886,6 @@ def _random_projection_oracle() -> str:
 from kafkadirect_spark.plans.queries import ORACLE_SQL as _ORACLE_SQL  # noqa: E402
 
 _ORACLE_SQL["embedding_random_projection"] = _random_projection_oracle()
-
-
-# RETIRED r11 (registration-budget policy item c):
-# `dedup_exact_normalized` — exact dedup over the canonical text form
-# (r8 driver rows green; its rule-table-generated oracle chain
-# `_normalize_sql` retired with it).  Claims carried by two
-# survivors: `dedup_exact` makes the identical one-shuffle
-# md5-groupBy-keeper claim (the only difference was the
-# normalize_text pre-pass), and the normalize_text regexp chain
-# keeps its canonical-variants goldens in test_curation.py
-# (test_normalize_text_canonicalizes_variants).
 
 
 # ---------------------------------------------------------------------------
@@ -1108,41 +986,12 @@ def dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
         clusters, docs.select("doc_id", "n_chars"), "doc_id", "n_chars")
 
 
-# RETIRED r13 (registration-budget policy item c — "three chunking
-# shapes, keep two"): `bpe_chunks` (r10 driver rows green).  Claims
-# carried by the survivors: `windowed_chunks` (the SAME
-# train→encode→slice assembly under the SAME BPE tokenizer, with the
-# strictly richer overlapping-window slicing) and `unigram_chunk`
-# (the same chunk surface under the second tokenizer family); the
-# BPE trainer itself stays driver-checked through `bpe_merges` and
-# the encode through `bpe_token_lengths`.  The operator and its
-# pytest goldens remain in the library.
-def bpe_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-input assembly under the LEARNED tokenizer
-    (functions/bpe.py bpe_chunk): train → encode → split into
-    ≤40-token chunks, emitted as token arrays (what actually feeds a
-    model; a char/word budget misallocates).  One mapInPandas encode
-    pass + row-local slicing; the oracle restores word order with
-    positional unnest and replays the slices 1-based inclusive.
-
-    The registered surface renders each chunk's token array as an md5
-    over its canonical CSV (tokens are [a-z0-9]+ — comma-free), per
-    the scalar-columns-only rule (enforced by test_plans.py's schema
-    walk); pipelines wanting the arrays call bpe_chunk directly."""
-    docs = load_table(spark, sf_dir, "documents")
-    merges = bpe.learn_bpe(docs, "text", **_BPE_PARAMS)
-    ch = bpe.bpe_chunk(docs, "doc_id", "text", merges, budget=40)
-    return ch.select(
-        "doc_id", "chunk_idx", "n_tokens",
-        F.md5(F.concat_ws(",", "bpe")).alias("bpe_md5"))
-
-
 # ---------------------------------------------------------------------------
 # Unigram-LM tokenizer (functions/unigram.py) — the second tokenizer
 # family's driver-verified claim (VERDICT r9 item 2): train the
-# hard-EM piece inventory, then the same model-input-assembly shape
-# as bpe_chunks.  The oracle replays BOTH Viterbi-EM training rounds
-# and the corpus-wide encode in DuckDB (recursive-CTE Viterbi with
+# hard-EM piece inventory, then encode and split into model-input
+# chunks.  The oracle replays BOTH Viterbi-EM training rounds and
+# the corpus-wide encode in DuckDB (recursive-CTE Viterbi with
 # the DP table carried per word — unigram.chunk_oracle_sql).
 # ---------------------------------------------------------------------------
 
@@ -1289,9 +1138,8 @@ from kafkadirect_spark.functions import retrieval  # noqa: E402
 def dedup_exactsubstr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Alignment-free cross-document repeated-substring dedup — the
     ExactSubstr recipe of Lee et al. 2021, arXiv:2107.06499 §4.1
-    (functions/dedup.py exactsubstr_report — registered r13 per the
-    r12 plan, retiring `dedup_spans` 1:1, whose chunk-aligned claim
-    this strictly subsumes at the same hash machinery): every
+    (functions/dedup.py exactsubstr_report; it subsumes chunk-aligned
+    span dedup at the same hash machinery): every
     non-first occurrence of a duplicated 8-token window marks its
     tokens, overlapping marks merge into maximal spans
     (gaps-and-islands, doc-partitioned windows only), exactly one

@@ -190,14 +190,8 @@ def merge_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# RETIRED r11 (registration-budget policy item c): the `stream_count`
-# REGISTRATION (r7 driver rows green).  Claim carried by the two
-# surviving siblings on the identical null-key-skipping
-# groupByKey path: `stream_reduce` (running fold per key) and
-# `stream_aggregate` (Initializer+Aggregator with an F.count arm) —
-# count() is the degenerate aggregate of either.  The function stays
-# (unregistered) because bench.py's fingerprint-pinned `streamcount`
-# suite executes it directly.
+# Unregistered: perfbench/batch.py and bench.py run it as the
+# ``streamcount`` suite.
 def stream_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """groupByKey().count() — KGroupedStream.java:71 (SimpleBenchmark
     ``streamcount``)."""
@@ -274,54 +268,6 @@ def windowed_count_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("window.start").alias("window_start"),
         F.col("event_type"),
         F.col("count"),
-    )
-
-
-# RETIRED r11 (registration-budget policy item c):
-# `windowed_count_hopping` — hopping-window count,
-# TimeWindows.of(1h).advanceBy(15m) (r7 driver rows green).  Claim
-# carried by the surviving `windowed_avg_hopping`: the identical
-# Windows.hopping("1 hour", "15 minutes") grid expansion and
-# per-(window, key) aggregate — avg is sum/count, so the count arm is
-# computed inside it; the hopping window-assignment itself also keeps
-# its pytest pins in test_properties.py.
-
-
-# RETIRED r11 (registration-budget policy item c): `session_count` —
-# SessionWindows.with(30m) count (r7 driver rows green).  Claim
-# carried by the two surviving siblings on the identical
-# Windows.session("30 minutes") merge path: `session_aggregate`
-# (whose `n` arm IS the session count, alongside the value fold) and
-# `session_reduce`; the session_window end = last-event + gap
-# semantics also stay driver-checked through `sessionize_events`
-# (r10 green).
-
-
-# RETIRED r12 (registration-budget policy item c): `windowed_sum_tumbling`
-# — tumbling-window SUM/MAX fold (r11 driver rows green; VERDICT r11
-# item 3 named the pair).  Claim carried by the surviving
-# `windowed_count_tumbling` (the SAME tumbling plan shape —
-# Stream.group_by().windowed_by(Windows.tumbling()) — cited as §2.5's
-# tumbling evidence) and `windowed_avg_hopping` (whose avg is computed
-# from the same windowed SUM aggregate over the harder overlapping-
-# window expansion).  The operator (TimeWindowedKStream.aggregate
-# beyond count) stays pytest-pinned in test_core/test_streaming.
-def windowed_sum_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed reduce/aggregate — TimeWindowedKStream.aggregate
-    (TimeWindowedKStreamImpl.java:63-112): per-(window, key) fold
-    beyond count."""
-    s = Stream(load_table(spark, sf_dir, "events"), ts="ts")
-    out = (
-        s.group_by("event_type")
-        .windowed_by(Windows.tumbling("1 hour"))
-        .aggregate(
-            F.sum(_dec("value")).cast("double").alias("total"),
-            F.max("value").alias("max_value"),
-        )
-    )
-    return out.select(
-        F.col("window.start").alias("window_start"),
-        "event_type", "total", "max_value",
     )
 
 
@@ -520,30 +466,6 @@ def join_stream_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", "value", "c_name", "c_mktsegment").df
 
 
-# RETIRED r13 (registration-budget policy item c): the interval-join
-# family already consolidated left into inner+outer (r11) — the same
-# subsumption applies here: `join_stream_table` drives the identical
-# Stream.join_table lookup path (core.py:373) at how="inner", and the
-# left-padding semantics (unmatched stream records emit
-# joiner(v, null), KStream.java:1760) stay driver-checked through
-# `join_interval_outer`'s two-sided padding and the KTable⋈KTable
-# outer row.  The operator and its pytest goldens remain in the
-# library.
-def join_stream_table_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left lookup join — unmatched stream records emit joiner(v, null)
-    (KStream.java:1760)."""
-    ev = Stream(load_table(spark, sf_dir, "events"), key="user_id", ts="ts")
-    cust = Table(
-        load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000),
-        key="c_custkey",
-    )
-    out = (
-        ev.filter(F.col("event_type") == "signup")
-        .join_table(cust, on=F.col("user_id") == F.col("c_custkey"), how="left")
-    )
-    return out.select("event_id", "user_id", "c_name").df
-
-
 @query(
     "join_interval_inner",
     oracle="""
@@ -579,16 +501,6 @@ def join_interval_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
         windows=JoinWindows.of("10 minutes"),
     )
     return out.df.select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-
-
-# RETIRED r11 (registration-budget policy item c):
-# `join_interval_left` — KStream.leftJoin interval flavor,
-# KStream.java:1278 (r10 driver rows green).  Claim carried by the two
-# surviving siblings of the same join_interval code path:
-# `join_interval_inner` (the matched rows) and `join_interval_outer`
-# (null-padding of BOTH unmatched sides — a strict superset of left's
-# null-preservation); the how="left" dispatch branch keeps its pytest
-# goldens in test_joins.py.
 
 
 @query(
@@ -921,15 +833,6 @@ def scan_from_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 "2024-01-03 00:00:00")
     return (Stream(travelled, ts="ts").group_by("event_type")
             .count(name="n"))
-
-
-# RETIRED r11 (registration-budget policy item c): `ts_policy_skip` —
-# LogAndSkipOnInvalidTimestamp (r7 driver rows green).  Claim carried
-# by the surviving `ts_policy_previous`, which drives the SAME
-# with_timestamp_policy dispatch (functions/timestamps.py) through its
-# strictly harder branch (previous-valid substitution needs the
-# invalid-row detection that skip is, plus the fill); the skip branch
-# keeps its own pytest goldens in test_timestamps.py.
 
 
 @query(

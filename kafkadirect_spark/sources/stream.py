@@ -32,9 +32,3 @@ def stream_from_dir(
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return Stream(r.load(path), key=key, ts=ts)
-
-
-def text_stream(spark: SparkSession, path: str) -> Stream:
-    """Line-oriented file source (FileStreamSourceTask semantics: one
-    record per line, value = the line)."""
-    return Stream(spark.readStream.text(path), key=None, ts=None)

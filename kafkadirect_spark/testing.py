@@ -32,7 +32,8 @@ def explain_formatted(df: DataFrame) -> str:
     The public explain() prints driver-side, so redirect_stdout
     captures it — unlike the private ``_jvm.PythonSQLUtils`` API,
     which breaks under Spark Connect.  Shared by the plan-contract
-    tests, ``tools/dump_plans.py`` and ``bench.py``'s fingerprints.
+    tests, ``tools/dump_plans.py``, ``tools/bench_one.py --explain`` and
+    ``bench.py``'s fingerprints.
     """
     import contextlib
     import io

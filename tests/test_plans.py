@@ -544,95 +544,41 @@ def test_bucketed_groupby_skips_exchange(spark):
         spark.sql("DROP TABLE IF EXISTS bt_ev_agg")
 
 
-def test_rotation_keeps_driver_rows_fresh():
-    """Rotation-staleness sweep (VERDICT r5 item #3).  The driver's
-    correctness gate samples only the first 50 registered queries per
-    round, so with 100+ registered queries full driver coverage needs a
-    multi-round rotation.  This pins the rotation policy: once the
-    UPCOMING round's window is recorded, no registered query's newest
-    driver CORRECTNESS row may be more than 2 rounds old.  Concretely:
-    a query outside the current first-50 window must have a driver row
-    from one of the last two recorded rounds — otherwise staleness
-    fails loudly here instead of silently accumulating."""
+def test_window_order_is_stalest_first(tmp_path):
+    """The external correctness gate checks only ``list(QUERIES)[:50]``,
+    so the registry order is computed from the CORRECTNESS_r*.json
+    artifacts: never-verified queries first, then the oldest newest
+    row, ties in registration order."""
     import glob
     import json
     import os
 
-    from kafkadirect_spark.plans import QUERIES
+    from kafkadirect_spark.plans import ORACLE_SQL, QUERIES, stalest_first
 
+    names = ["zeta", "alpha", "mid", "old", "new"]
+    assert stalest_first(names, str(tmp_path)) == names  # no artifacts
+    for rnd, rows in ((2, ["old", "zeta", "ghost"]), (5, ["mid"]),
+                      (7, ["zeta", "alpha"])):
+        # any row counts, passing or not; unregistered "ghost" is ignored
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(
+            {q: {"rows_match": False} for q in rows}))
+    assert stalest_first(names, str(tmp_path)) == [
+        "new", "old", "mid", "zeta", "alpha"]
+
+    # the live registry: QUERIES and ORACLE_SQL share the order, and no
+    # query outside the window has older evidence than one inside it
+    assert list(ORACLE_SQL) == [q for q in QUERIES if q in ORACLE_SQL]
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     newest: dict[str, int] = {}
-    rounds: list[int] = []
     for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        rounds.append(rnd)
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
         with open(path) as fh:
             for q in json.load(fh):
                 newest[q] = max(newest.get(q, 0), rnd)
-    if not rounds:
-        pytest.skip("no driver CORRECTNESS artifacts in repo root")
-    upcoming = max(rounds) + 1  # the round whose window is registered now
-    window = set(list(QUERIES)[:50])
-
-    # Freshness horizon, derived from window CAPACITY: the driver
-    # verifies 50 queries per round, so N registered queries can only
-    # round-robin through the window every ceil(N/50) rounds — the
-    # tightest satisfiable bound on a query currently OUTSIDE the
-    # window is a row from cycle−1 rounds back.  That is the
-    # historical 2 while N ≤ 150, and 3 at 151..200: with more than
-    # 150 queries a 2-round bound is mathematically unsatisfiable
-    # (3 rounds × 50 slots < N), not stricter.  The bound therefore
-    # tightens automatically if queries are ever retired.
-    horizon = max(2, -(-len(QUERIES) // 50) - 1)
-
-    # Over-subscription deferral (round 8): a round can register more
-    # never-verified queries than the window has free slots.  Deferral
-    # via plans._DEFERRED_NEW is legal ONLY under strict conditions —
-    # otherwise it would become a loophole around this very test:
-    from kafkadirect_spark import plans
-    deferred = set(getattr(plans, "_DEFERRED_NEW", ()))
-    if deferred:
-        # (a) every deferred name is registered and truly has no
-        #     driver row yet (it is new, not stale);
-        assert not deferred - set(QUERIES), "deferred phantom"
-        assert not [q for q in deferred if q in newest], (
-            f"deferred queries already have driver rows — front them: "
-            f"{sorted(q for q in deferred if q in newest)}")
-        # (b) no deferred query actually sits in the window (else the
-        #     list is stale bookkeeping);
-        assert not deferred & window, "deferred query IS in the window"
-        # (c) the window is saturated: every slot holds a query that
-        #     must be verified THIS round — one that could not simply
-        #     wait a round (newest row still fresh at upcoming+1) —
-        #     or another never-verified query.  A slot whose occupant
-        #     could have been deferred to next round while a new query
-        #     waits is a wasted slot — fail until they swap.  (The
-        #     look-ahead matters: at horizon h a query dated exactly
-        #     upcoming−h is legal OUTSIDE the window today but becomes
-        #     mandatory next round, colliding with next round's own
-        #     mandatory set — scheduling it now is correct, not waste.)
-        wasted = sorted(
-            q for q in window
-            if q in newest and newest[q] >= upcoming + 1 - horizon)
-        assert not wasted, (
-            f"window slots hold fresh-row queries while {sorted(deferred)} "
-            f"defer: {wasted} — swap them")
-
-    stale = sorted(
-        (q, newest.get(q)) for q in QUERIES
-        if q not in window and q not in deferred
-        and newest.get(q, -(10 ** 9)) < upcoming - horizon
-    )
-    assert not stale, (
-        f"{len(stale)} queries are outside the upcoming r{upcoming} window "
-        f"with no driver row newer than r{upcoming - horizon - 1} "
-        f"(capacity horizon {horizon} for {len(QUERIES)} queries): "
-        f"{stale} — promote them in kafkadirect_spark/plans/__init__.py "
-        "_PROMOTED"
-    )
+    window = list(QUERIES)[:50]
+    rest = list(QUERIES)[50:]
+    assert max(newest.get(q, -1) for q in window) <= min(
+        newest.get(q, -1) for q in rest)
 
 
 def test_simhash_oracle_shared_text():
@@ -640,25 +586,9 @@ def test_simhash_oracle_shared_text():
     oracle SQL as its candidate CTE (r12).  Pin that (a) the
     registered simhash oracle IS the shared _SIMHASH_PAIRS_ORACLE
     variable, and (b) the composed oracle embeds that exact text —
-    so the two registered replays can never drift apart, and a future
-    edit to the simhash oracle visibly changes BOTH (rule 2 re-fronts
-    both)."""
+    so the two registered replays can never drift apart."""
     from kafkadirect_spark.plans import ORACLE_SQL
     from kafkadirect_spark.plans.llm_queries import _SIMHASH_PAIRS_ORACLE
 
     assert ORACLE_SQL["dedup_simhash_pairs"] == _SIMHASH_PAIRS_ORACLE
     assert _SIMHASH_PAIRS_ORACLE in ORACLE_SQL["dedup_edit_verified"]
-
-
-def test_promoted_names_all_registered():
-    """Phantom-rotation guard (VERDICT r7 item #1): every _PROMOTED
-    name must resolve to a registered query.  The import-time guard in
-    plans/__init__.py already raises on violations (so importing at
-    all proves the current list); this pins the guard function itself
-    against regression to the silent `if k in d` filter."""
-    from kafkadirect_spark import plans
-    from kafkadirect_spark.plans import QUERIES
-
-    assert not set(plans._PROMOTED) - set(QUERIES)
-    with pytest.raises(LookupError, match="no_such_query"):
-        plans._check_promoted_registered(["no_such_query"], QUERIES)

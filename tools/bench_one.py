@@ -34,6 +34,7 @@ def main() -> int:
     from kafkadirect_spark.functions.dedup import release_caches
     from kafkadirect_spark.session import get_spark
     from kafkadirect_spark.sources.batch import load_table
+    from kafkadirect_spark.testing import explain_formatted
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("kafkadirect-bench-one")
@@ -58,16 +59,11 @@ def main() -> int:
             df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
             if i == 0 and args.explain and name != "consumeproduce":
-                import contextlib
-                import io
-                buf = io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    df.explain("formatted")
                 os.makedirs(args.explain, exist_ok=True)
                 path = os.path.join(args.explain,
                                     f"{name}{args.suffix}.txt")
                 with open(path, "w") as fh:
-                    fh.write(buf.getvalue())
+                    fh.write(explain_formatted(df))
             release_caches()
         spark.sparkContext.setJobDescription(None)
         print(f"{name:32s} best={min(times):7.3f}  "

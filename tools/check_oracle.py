@@ -6,7 +6,9 @@ row count, sorted-by-name column set, and an order-insensitive
 value comparison (exact for non-floats, 1e-9 relative for floats).
 
 Usage:  python tools/check_oracle.py [query ...]
-        python tools/check_oracle.py --first50   # the driver's window
+        python tools/check_oracle.py --first50
+            # the gate's window: the first 50 of queries(), i.e. the 50
+            # with the stalest CORRECTNESS_r*.json evidence
         python tools/check_oracle.py --exact [query ...]
             # driver-faithful mode: pandas fetch on both sides, exact
             # value + dtype hash (no float tolerance) — catches the
@@ -93,8 +95,8 @@ def main(names=None):
 
     qs, oracles = queries(), oracle_sql()
     if names and names[0] == "--first50":
-        # Replicate the driver's sampling exactly: the first 50 in
-        # registration order (plus any extra names passed after).
+        # Replicate the gate's sampling exactly: the first 50 of
+        # queries() (plus any extra names passed after).
         selected = list(qs)[:50] + names[1:]
     else:
         selected = names or sorted(qs)

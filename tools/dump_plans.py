@@ -49,12 +49,6 @@ HEADLINERS = {
     "asof_enrich": "union + ONE hash exchange on the key; partitioned "
                    "window (running last) — no row amplification, no "
                    "range join explosion",
-    "dedup_spans": "explode → hash-agg winner per span hash → shuffle "
-                   "join back → doc-level hash agg; no window functions",
-    "distinct_orders_hll": "HLL: map-side partial min per bucket — the "
-                           "exchange carries ≤1024 rows per task; "
-                           "single-row integer estimate, no COUNT "
-                           "DISTINCT key shuffle",
     "heavy_hitters_cms": "CMS registers (d·w bounded hash-agg) broadcast "
                          "to the probe side; exact top-20 via "
                          "TakeOrderedAndProject",
@@ -88,12 +82,6 @@ HEADLINERS = {
     "scd2_asof_snapshot": "struct-max last-wins hash aggregate with "
                           "map-side partials — no sort, no window; "
                           "as-of bound pushed to the scan",
-    "interval_overlap_join": "both interval sides explode to covered "
-                             "buckets → shuffled equi-join on the "
-                             "bucket id with the canonical-bucket + "
-                             "overlap predicate inside — no nested "
-                             "loop, no DISTINCT dedup pass",
-
     "dedup_jaccard_prefix": "df-ascending prefix explode → equi-join "
                             "on prefix shingles only (hot grams sort "
                             "last, never enter prefixes) → length "
@@ -129,10 +117,6 @@ HEADLINERS = {
     "vocab_drift": "slice filter pushed to the parquet scan; one "
                    "vocabulary-keyed exchange with map-side partial "
                    "sums; broadcast totals; TakeOrdered",
-    "value_decile_buckets": "bucket assignment is a row-local "
-                            "expression over broadcast cut literals "
-                            "— the only exchange is the 10-group "
-                            "report aggregate",
     "events_skew_report": "one per-key count exchange; stats/"
                           "quantiles collected register-sized; "
                           "heavy keys via TakeOrdered",
@@ -141,13 +125,9 @@ HEADLINERS = {
                             "row-local bucket assignment; one "
                             "report aggregate — the data is never "
                             "shuffled on value",
-    "bpe_chunks": "one mapInPandas encode pass (ArrowEvalPython/"
-                  "MapInPandas node) + row-local sequence-slice "
-                  "explode — no shuffle after the word-count "
-                  "training pass",
     "dedup_containment_anti": "capped shingle inverted-index "
-                              "intersection (the dedup_containment "
-                              "pair plan) feeding ONE LeftAnti hash "
+                              "intersection (the containment_pairs "
+                              "plan) feeding ONE LeftAnti hash "
                               "join on the doc id — the survivors "
                               "set without a second corpus pass",
     "nb_langid": "one exploded train exchange collapsed map-side to "
@@ -207,26 +187,7 @@ HEADLINERS = {
 
 def main() -> None:
     from kafkadirect_spark.plans import QUERIES
-    # r11/r12: retired-but-kept suite functions (unregistered near-dup
-    # consolidations whose plans stay headliners/bench suites)
-    from kafkadirect_spark.plans.analytics_queries import (
-        distinct_orders_hll as _distinct_orders_hll_q,
-        interval_overlap_join as _interval_overlap_join_q,
-        value_decile_buckets as _value_decile_buckets_q,
-    )
-    from kafkadirect_spark.plans.llm_queries import (
-        bpe_chunks as _bpe_chunks_q,
-        dedup_spans as _dedup_spans_q,
-    )
     from kafkadirect_spark.session import get_spark
-
-    lookup = dict(QUERIES)
-    lookup["interval_overlap_join"] = _interval_overlap_join_q
-    lookup["distinct_orders_hll"] = _distinct_orders_hll_q
-    lookup["value_decile_buckets"] = _value_decile_buckets_q
-    # r13 retirements whose plans stay headliners
-    lookup["bpe_chunks"] = _bpe_chunks_q
-    lookup["dedup_spans"] = _dedup_spans_q
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("dump-plans")
@@ -240,7 +201,7 @@ def main() -> None:
     from kafkadirect_spark.testing import explain_formatted
 
     for name, note in HEADLINERS.items():
-        df = lookup[name](spark, sf)
+        df = QUERIES[name](spark, sf)
         plan = explain_formatted(df)
         out += [f"## {name}", "", f"*Check:* {note}", "", "```",
                 plan.rstrip(), "```", ""]
