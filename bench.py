@@ -9,9 +9,9 @@ The FINAL stdout line is ONE compact timings-only JSON object:
    "extras_wall_sec": N, "sf": "..."}
 sized a few hundred bytes regardless of suite count, so it always
 fits inside the driver's stdout tail-capture window.  The per-suite
-plan-shape fingerprints (which grew past that window in round 5 and
-left BENCH_r05 unparsed) are written to BENCH_PLANS.json next to
-this file instead of being inlined.
+plan-shape fingerprints (which would outgrow that window) are
+written to BENCH_PLANS.json next to this file instead of being
+inlined.
 
 Each suite materializes fully through the noop sink (no driver
 collect, no column-pruning shortcuts), mirroring SimpleBenchmark's
@@ -29,23 +29,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _cdc_dup_stats_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import dedup
-    from kafkadirect_spark.sources.batch import load_table
-    return dedup.cdc_dup_stats(
-        load_table(spark, sf_dir, "documents"), "text", "doc_id")
-
-
-def _sax_pairs_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import timeseries
-    from kafkadirect_spark.sources.batch import load_table
-    _, pairs, _ = timeseries.sax_pipeline(
-        load_table(spark, sf_dir, "events"), "user_id", "ts", "value",
-        "2024-01-01", "2024-01-31", n_segments=6, permilles=(500,),
-        max_bucket=64)
-    return pairs
-
-
 def _sample_weighted_suite(spark, sf_dir):
     from kafkadirect_spark.functions import curation, text
     from kafkadirect_spark.sources.batch import load_table
@@ -54,31 +37,6 @@ def _sample_weighted_suite(spark, sf_dir):
                         text.bpe_token_count("text").cast("long")
                         .alias("w"))
     return curation.sample_weighted_n(sized, "doc_id", "w", 1000)
-
-
-def _ivf_pq_suite(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from kafkadirect_spark.functions import similarity
-    from kafkadirect_spark.sources.batch import load_table
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < 3)
-    return similarity.ivf_pq_topk(emb, "vec_id", "embedding", probes,
-                                  n=3, centroid_stride=25, nprobe=4,
-                                  m=4, k=4, iters=2)
-
-
-def _ivf_pq_rerank_suite(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from kafkadirect_spark.functions import similarity
-    from kafkadirect_spark.sources.batch import load_table
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < 3)
-    return similarity.ivf_pq_rerank(emb, "vec_id", "embedding",
-                                    probes, n=3, refine=4,
-                                    centroid_stride=25, nprobe=4,
-                                    m=4, k=4, iters=2)
 
 
 def _sample_weighted_group_suite(spark, sf_dir):
@@ -114,7 +72,7 @@ def _theil_sen_suite(spark, sf_dir):
 
 
 def _cusum_suite(spark, sf_dir):
-    # r15 candidate: per-user sequential changepoint — prefix-sum
+    # per-user sequential changepoint — prefix-sum
     # CUSUM closed form, group-partitioned windows only
     from kafkadirect_spark.functions import timeseries
     from kafkadirect_spark.sources.batch import load_table
@@ -125,7 +83,7 @@ def _cusum_suite(spark, sf_dir):
 
 
 def _acf_suite(spark, sf_dir):
-    # r16 candidate (round 15): per-user rank-lag autocorrelation —
+    # per-user rank-lag autocorrelation —
     # one corpus exchange, pure window aggregates, DECIMAL(38,0)
     # accumulation
     from kafkadirect_spark.functions import timeseries
@@ -137,7 +95,7 @@ def _acf_suite(spark, sf_dir):
 
 
 def _seasonal_profile_suite(spark, sf_dir):
-    # r16 candidate (round 15): classical decomposition + seasonal
+    # classical decomposition + seasonal
     # strength — one corpus exchange, pure window aggregates
     from kafkadirect_spark.functions import timeseries
     from kafkadirect_spark.sources.batch import load_table
@@ -148,7 +106,7 @@ def _seasonal_profile_suite(spark, sf_dir):
 
 
 def _mmr_suite(spark, sf_dir):
-    # r15 candidate: diversified top-k — quantize scan + one-row
+    # diversified top-k — quantize scan + one-row
     # probe broadcast + TakeOrdered pool + bounded driver greedy.
     # Like consumeproduce, the measured work happens inside fn (the
     # pool collect + greedy); the returned frame is the k-row result,
@@ -161,7 +119,7 @@ def _mmr_suite(spark, sf_dir):
 
 
 def _twap_suite(spark, sf_dir):
-    # r15 candidate: LOCF time-weighted mean — one group-partitioned
+    # LOCF time-weighted mean — one group-partitioned
     # lead window + one map-side-combined aggregate
     from kafkadirect_spark.functions import timeseries
     from kafkadirect_spark.sources.batch import load_table
@@ -169,16 +127,6 @@ def _twap_suite(spark, sf_dir):
     return timeseries.twap_milli(ev, "user_id", "ts", "value",
                                  "2024-01-01", "2024-01-31",
                                  order_break_col="event_id")
-
-
-def _attribution_suite(spark, sf_dir):
-    # last-touch credit: one user-partitioned window + |types|-row agg
-    from kafkadirect_spark.functions import behavior
-    from kafkadirect_spark.sources.batch import load_table
-    ev = load_table(spark, sf_dir, "events")
-    return behavior.attribution_last_touch(
-        ev, "user_id", "ts", "event_type", "purchase",
-        within_seconds=3600 * 24, order_break_col="event_id")
 
 
 def _contamination_spans_suite(spark, sf_dir):
@@ -192,53 +140,14 @@ def _contamination_spans_suite(spark, sf_dir):
         docs.filter(F.col("doc_id") % 10 == 0), "text", "doc_id")
 
 
-def _media_audio_features_suite(spark, sf_dir):
-    # the r14 media_audio_features candidate: executor-side WAV-PCM16
-    # synthesis -> real decode -> integer features, zero shuffles
-    from kafkadirect_spark.functions import multimodal
-    from kafkadirect_spark.sources.batch import load_table
-    ids = load_table(spark, sf_dir, "documents").select("doc_id")
-    return multimodal.synth_features(ids, "doc_id", kind="wav")
-
-
 def _basket_pairs_suite(spark, sf_dir):
-    # r15 candidate: order/part co-occurrence pairs — basket-keyed
+    # order/part co-occurrence pairs — basket-keyed
     # equi self-join bounded by basket size, one pair-count exchange
     from kafkadirect_spark.functions import basket
     from kafkadirect_spark.sources.batch import load_table
     li = load_table(spark, sf_dir, "lineitem")
     return basket.basket_pairs_topk(li, "l_orderkey", "l_partkey",
                                     k=20, min_support=2)
-
-
-def _pii_scrub_suite(spark, sf_dir):
-    # r15 candidate: JVM-side regex redaction + integer Luhn fold
-    # over synthesized injections — row-local, zero shuffles
-    from kafkadirect_spark.functions import privacy
-    from kafkadirect_spark.sources.batch import load_table
-    ids = load_table(spark, sf_dir, "documents").select("doc_id")
-    return privacy.pii_scrub(
-        privacy.synth_pii_text(ids, "doc_id"), "text", "doc_id")
-
-
-def _media_video_features_suite(spark, sf_dir):
-    # the r15 media_video_features candidate: executor-side YUV4MPEG2
-    # synthesis -> real decode -> integer features incl. scene-cut
-    # localization, zero shuffles
-    from kafkadirect_spark.functions import multimodal
-    from kafkadirect_spark.sources.batch import load_table
-    ids = load_table(spark, sf_dir, "documents").select("doc_id")
-    return multimodal.synth_features(ids, "doc_id", kind="y4m")
-
-
-def _media_image_features_suite(spark, sf_dir):
-    # the registered media_image_features shape: executor-side BMP
-    # synthesis -> real decode -> integer features FUSED in one
-    # Python stage (r16), zero shuffles
-    from kafkadirect_spark.functions import multimodal
-    from kafkadirect_spark.sources.batch import load_table
-    ids = load_table(spark, sf_dir, "documents").select("doc_id")
-    return multimodal.synth_features(ids, "doc_id", kind="bmp")
 
 
 def _media_gif_features_suite(spark, sf_dir):
@@ -299,13 +208,6 @@ def _vocab_coverage_suite(spark, sf_dir):
         ks=(100, 1000, 10000, 100000))
 
 
-def _exactsubstr_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import dedup
-    from kafkadirect_spark.sources.batch import load_table
-    return dedup.exactsubstr_report(
-        load_table(spark, sf_dir, "documents"), "text", "doc_id")
-
-
 def _exactsubstr_incr_suite(spark, sf_dir):
     # the ingest shape: every-20th doc is the new batch, the rest the
     # accepted index (the incremental_lsh split) — pins the
@@ -320,25 +222,6 @@ def _exactsubstr_incr_suite(spark, sf_dir):
         docs.filter(F.col("doc_id") % 20 != 0), "text", "doc_id")
 
 
-def _kmv_slice_matrix_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import sketch
-    from kafkadirect_spark.sources.batch import load_table
-    return sketch.kmv_group_jaccard(
-        load_table(spark, sf_dir, "documents"), "source", "text")
-
-
-def _weighted_quantiles_suite(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from kafkadirect_spark.functions import sketch
-    from kafkadirect_spark.functions.text import token_count
-    from kafkadirect_spark.sources.batch import load_table
-    docs = load_table(spark, sf_dir, "documents")
-    return sketch.weighted_quantiles(
-        docs, F.col("n_chars"), token_count("text"),
-        [100, 500, 900, 990])
-
-
 def _weighted_quantiles_grouped_suite(spark, sf_dir):
     from pyspark.sql import functions as F
 
@@ -349,16 +232,6 @@ def _weighted_quantiles_grouped_suite(spark, sf_dir):
     return sketch.weighted_quantiles_grouped(
         docs, "lang", F.col("n_chars"), token_count("text"),
         [250, 500, 990])
-
-
-def _phash_pairs_suite(spark, sf_dir):
-    # synth rasters executor-side -> real PNM decode -> aHash ->
-    # band-bucket Hamming pairs: the whole multimodal near-dup path
-    from kafkadirect_spark.functions import multimodal
-    from kafkadirect_spark.sources.batch import load_table
-    ids = load_table(spark, sf_dir, "documents").select("doc_id")
-    hashes = multimodal.synth_phash(ids, "doc_id", kind="pnm")
-    return multimodal.phash_pairs(hashes, "doc_id", max_hamming=1)
 
 
 def _local_clustering_suite(spark, sf_dir):
@@ -382,43 +255,12 @@ def _waterfill_suite(spark, sf_dir):
                                     budget=10_000_000)
 
 
-def _triangle_suite(spark, sf_dir):
-    # edge source = the selective MinHash-LSH candidates (255 pairs at
-    # sf0.1), NOT the simhash band graph (2.4M edges on this
-    # synthetic corpus — the same candidate-quality choice as
-    # _edit_verify_suite); the fingerprint pins the orientation +
-    # wedge + closure plan shape
-    from kafkadirect_spark.functions import dedup
-    from kafkadirect_spark.functions.graph import triangle_stats
-    from kafkadirect_spark.sources.batch import load_table
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = dedup.minhash_signatures(docs, "text", "doc_id")
-    return triangle_stats(dedup.lsh_candidate_pairs(sigs, "doc_id"))
-
-
 def _funnel_suite(spark, sf_dir):
     from kafkadirect_spark.functions import behavior
     from kafkadirect_spark.sources.batch import load_table
     return behavior.funnel_steps(
         load_table(spark, sf_dir, "events"), "user_id", "ts",
         "event_type", ["signup", "view", "click", "purchase"])
-
-
-def _path_topk_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import behavior
-    from kafkadirect_spark.sources.batch import load_table
-    return behavior.path_topk(
-        load_table(spark, sf_dir, "events"), "user_id", "ts",
-        "event_type", n=3, k=10, order_break_col="event_id")
-
-
-def _hybrid_rrf_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import retrieval
-    from kafkadirect_spark.sources.batch import load_table
-    return retrieval.hybrid_rank_rrf(
-        load_table(spark, sf_dir, "documents"),
-        load_table(spark, sf_dir, "embeddings"),
-        ["data", "model", "learning"], probe_id=7)
 
 
 def build_suites() -> tuple[dict, dict]:
@@ -464,9 +306,6 @@ def build_suites() -> tuple[dict, dict]:
         "pricing_summary": QUERIES["pricing_summary"],
         "dedup_minhash_lsh": QUERIES["dedup_minhash_lsh"],
         "similarity_topk": QUERIES["similarity_topk"],
-        # r10: the exact-broadcast variant was retired from the
-        # registry; the Bloom variant carries the decontamination
-        # suite (new key — plan_diff reports the swap honestly)
         "decontaminate_bloom": QUERIES["decontaminate_bloom"],
         "corpus_curation": QUERIES["corpus_curation"],
         # relational shapes (TPC-H Q3/Q10-like, rollup) — recorded so a
@@ -475,9 +314,7 @@ def build_suites() -> tuple[dict, dict]:
         "shipping_priority": QUERIES["shipping_priority"],
         "returned_item_report": QUERIES["returned_item_report"],
         "revenue_rollup": QUERIES["revenue_rollup"],
-        # round-5 shapes: bilateral star join (Q7), fact self-agg +
-        # top-k (Q21), outer-join histogram (Q13), inverted-index
-        # importance scores, pure chunk explode
+        # bilateral star join (Q7), fact self-agg + top-k (Q21)
         "volume_shipping": QUERIES["volume_shipping"],
         "lonely_returns": QUERIES["lonely_returns"],
         # Q12 shape: the one fact⋈fact order-key join in the suite —
@@ -485,20 +322,21 @@ def build_suites() -> tuple[dict, dict]:
         # shuffle join on both sides, so its plan counts pin that
         # shape against an accidental broadcast-dependence
         "late_shipment_priority": QUERIES["late_shipment_priority"],
+        # outer-join histogram (Q13), inverted-index importance
+        # scores, pure chunk explode
         "customer_order_distribution": QUERIES["customer_order_distribution"],
         "importance_weights": QUERIES["importance_weights"],
         "doc_chunks": QUERIES["doc_chunks"],
-        # batch-4: the sketch family and the iterative k-means — the
-        # sketches' wall clock is the proof their bounded-register
-        # design works (register exchange, not a data exchange);
-        # k-means times the full quantize → 2×(assign, update) loop
+        # the sketch family and the iterative k-means — the sketches'
+        # wall clock is the proof their bounded-register design works
+        # (register exchange, not a data exchange); k-means times the
+        # full quantize → 2×(assign, update) loop
         "heavy_hitters_cms": QUERIES["heavy_hitters_cms"],
         "kmeans_clusters": QUERIES["kmeans_clusters"],
         "global_shuffle": QUERIES["global_shuffle"],
-        # round-6 shapes: SemDeDup cluster-then-prune, the bucketed
-        # range join (pin: equi-join on buckets, never a nested loop),
-        # cumulative merged HLL (register-space day expansion), and
-        # the integer z-score outlier scan
+        # SemDeDup cluster-then-prune, the bucketed range join (pin:
+        # equi-join on buckets, never a nested loop), cumulative
+        # merged HLL (register-space day expansion)
         "semdedup_prune": QUERIES["semdedup_prune"],
         "range_bucket_join": QUERIES["range_bucket_join"],
         "rolling_distinct_hll": QUERIES["rolling_distinct_hll"],
@@ -512,9 +350,9 @@ def build_suites() -> tuple[dict, dict]:
         # iterative graph shape: 2 unrolled PageRank rounds — one
         # join + one exchange each — over the purchase graph
         "supplier_pagerank": QUERIES["supplier_pagerank"],
-        # final-r8 shapes: the Gopher rule scan (two explode→agg gram
-        # paths rejoined on doc id) and the held-out bigram LM with
-        # backoff (bigram-table joins + one data-sized doc agg)
+        # the Gopher rule scan (two explode→agg gram paths rejoined on
+        # doc id) and the held-out bigram LM with backoff (bigram-table
+        # joins + one data-sized doc agg)
         "quality_gopher": QUERIES["quality_gopher"],
         "surprisal_bigram": QUERIES["surprisal_bigram"],
         # exact global token-budget prefix: the plan pin is the
@@ -538,17 +376,15 @@ def build_suites() -> tuple[dict, dict]:
         # pin "no window, no per-group sort" shapes
         "value_ohlc_daily": QUERIES["value_ohlc_daily"],
         "value_decile_by_type": QUERIES["value_decile_by_type"],
-        # r9: the remaining recent registered shapes, added so EVERY
-        # measured family has a fingerprint row and plan_diff covers
-        # the full bench (VERDICT r8 item 6).  One representative per
-        # plan shape:
+        # one representative per plan shape, so every measured family
+        # has a fingerprint row and plan_diff covers the full bench:
         # - collocations_topk: PMI over the bigram/unigram tables with
         #   the one-row total broadcast
         "collocations_topk": QUERIES["collocations_topk"],
         # - dedup_keep_longest: the full LSH → connected components →
         #   struct-max representative chain
         "dedup_keep_longest": QUERIES["dedup_keep_longest"],
-        # - dedup_containment_anti (new r9): capped inverted-index
+        # - dedup_containment_anti: capped inverted-index
         #   intersection + one left-anti hash join
         "dedup_containment_anti": QUERIES["dedup_containment_anti"],
         # - diagnostics family: one-pass skew report, MAD outliers via
@@ -561,33 +397,28 @@ def build_suites() -> tuple[dict, dict]:
         "join_explosion_check": QUERIES["join_explosion_check"],
         # - grouped exact quantiles via histogram narrowing
         "exact_quantiles_by_type": QUERIES["exact_quantiles_by_type"],
-        # - nb_langid (new r9): trained NB classifier — one exploded
-        #   train exchange + pivoted vocab join + one doc agg
+        # - nb_langid: trained NB classifier — one exploded train
+        #   exchange + pivoted vocab join + one doc agg
         "nb_langid": QUERIES["nb_langid"],
-        # - value_drift_by_slice (new r9): exact numeric drift — one
-        #   register exchange per slice + a bins-sized outer join
+        # - value_drift_by_slice: exact numeric drift — one register
+        #   exchange per slice + a bins-sized outer join
         "value_drift_by_slice": QUERIES["value_drift_by_slice"],
-        # r10: the winnowing family (fingerprint explode + capped
-        #   inverted-index pair join) gets fingerprint rows now that
-        #   the staged winnow_fps form made it bench-able (the
-        #   single-expression form re-hashed every gram per window);
-        #   unigram_chunk is the new tokenizer family's train+encode+
-        #   chunk pipeline; cdc_dup_stats is the content-defined
-        #   chunking dedup (row-local chunking + one chunk-hash
-        #   exchange) — registered r11, benched from its landing round
+        # - the winnowing family (fingerprint explode + capped
+        #   inverted-index pair join); unigram_chunk is the tokenizer
+        #   family's train+encode+chunk pipeline; cdc_dup_stats is the
+        #   content-defined chunking dedup (row-local chunking + one
+        #   chunk-hash exchange)
         "doc_winnow": QUERIES["doc_winnow"],
         "winnow_overlap_pairs": QUERIES["winnow_overlap_pairs"],
         "unigram_chunk": QUERIES["unigram_chunk"],
-        "cdc_dup_stats": _cdc_dup_stats_suite,
+        "cdc_dup_stats": QUERIES["cdc_dup_stats"],
         # sax_pairs: PAA exchange + exact-quantile narrowing + the
-        # capped word-bucket self-join (registered r11, benched from
-        # its landing round)
-        "sax_pairs": _sax_pairs_suite,
-        # r11 library-level operators, benched from their landing
-        # round: edit verification (simhash candidates + two
-        # candidate-sized joins + row-local Levenshtein capped at 256
-        # chars — the cap is the O(n·m) cost envelope) and the
-        # join-free count-of-counts coverage curve
+        # capped word-bucket self-join
+        "sax_pairs": QUERIES["sax_pairs"],
+        # edit verification (LSH candidates + two candidate-sized
+        # joins + row-local Levenshtein capped at 256 chars — the cap
+        # is the O(n·m) cost envelope) and the join-free
+        # count-of-counts coverage curve
         "dedup_edit_verify": _edit_verify_suite,
         "vocab_coverage": _vocab_coverage_suite,
         # wordpiece: third tokenizer family — scored-merge training on
@@ -595,63 +426,60 @@ def build_suites() -> tuple[dict, dict]:
         "wordpiece_pieces": _wordpiece_suite,
         # IVFADC composite: coarse-quantizer shortlist + literal-map
         # ADC scoring over the shared PQ codes
-        "similarity_ivf_pq": _ivf_pq_suite,
+        "similarity_ivf_pq": QUERIES["similarity_ivf_pq"],
         # integer systematic weighted sampling (two-phase shard
         # prefix sums + one bounded broadcast)
         "sample_weighted": _sample_weighted_suite,
-        # r12 library-level operators, benched from their landing
-        # round: IVFADC+R (the ivf_pq plan + one shortlist-sized
-        # refinement join and window), the stratified weighted
-        # sampler (per-(group, shard) partitioned prefix sums), and
-        # the exact per-eval-doc contamination audit (corpus streams
-        # through broadcast semi-join, nothing corpus-sized shuffles)
-        "similarity_ivf_pq_rerank": _ivf_pq_rerank_suite,
+        # IVFADC+R (the ivf_pq plan + one shortlist-sized refinement
+        # join and window), the stratified weighted sampler (per-
+        # (group, shard) partitioned prefix sums), and the exact
+        # per-eval-doc contamination audit (corpus streams through
+        # broadcast semi-join, nothing corpus-sized shuffles)
+        "similarity_ivf_pq_rerank": QUERIES["similarity_ivf_pq_rerank"],
         "sample_weighted_group": _sample_weighted_group_suite,
         "contamination_report": _contamination_report_suite,
-        # r13 additions: span-level leakage (same broadcast semi-join,
-        # plus doc-partitioned island windows) and the registered BMP
-        # round-trip feature pass (mapInPandas, zero shuffles)
+        # span-level leakage (same broadcast semi-join, plus
+        # doc-partitioned island windows) and the media round-trip
+        # feature passes (mapInPandas, zero shuffles)
         "contamination_spans": _contamination_spans_suite,
-        "media_image_features": _media_image_features_suite,
+        "media_image_features": QUERIES["media_image_features"],
         "media_png_features": _media_png_features_suite,
         "media_gif_features": _media_gif_features_suite,
-        "media_audio_features": _media_audio_features_suite,
-        # r14 addition: the registered-surface-ready y4m video
-        # round-trip (mapInPandas, zero shuffles)
-        "media_video_features": _media_video_features_suite,
-        # r14 addition: redaction + Luhn over synthesized injections
-        "pii_scrub": _pii_scrub_suite,
-        # r14 addition: market-basket pair mining over lineitem
+        "media_audio_features": QUERIES["media_audio_features"],
+        "media_video_features": QUERIES["media_video_features"],
+        # redaction + Luhn over synthesized injections
+        "pii_scrub": QUERIES["pii_scrub"],
+        # market-basket pair mining over lineitem
         "basket_pairs": _basket_pairs_suite,
-        # late-r12 library-level operators: alignment-free ExactSubstr
-        # dedup (one gram-hash exchange + doc-partitioned island
-        # windows + row-local HOF rebuild), the KMV corpus-slice
-        # Jaccard matrix (one (slice, hash) distinct + salted min-k +
-        # a |slices|-bounded broadcast pair join), and hybrid BM25 ∪
-        # cosine RRF (two bounded retrievals, ≤ 2·topn-row fusion)
-        "dedup_exactsubstr": _exactsubstr_suite,
+        # alignment-free ExactSubstr dedup (one gram-hash exchange +
+        # doc-partitioned island windows + row-local HOF rebuild), the
+        # KMV corpus-slice Jaccard matrix (one (slice, hash) distinct +
+        # salted min-k + a |slices|-bounded broadcast pair join), and
+        # hybrid BM25 ∪ cosine RRF (two bounded retrievals, ≤ 2·topn-row
+        # fusion)
+        "dedup_exactsubstr": QUERIES["dedup_exactsubstr"],
         "dedup_exactsubstr_incr": _exactsubstr_incr_suite,
-        "kmv_slice_matrix": _kmv_slice_matrix_suite,
-        "hybrid_rrf": _hybrid_rrf_suite,
+        "kmv_slice_matrix": QUERIES["kmv_slice_matrix"],
+        "hybrid_rrf": QUERIES["hybrid_rrf"],
         # behavioral analytics over events: the funnel's filtered-agg
         # cascade (one narrow user exchange per step, zero windows)
         # and the path miner's single user-partitioned lead window +
         # TakeOrdered
         "funnel_steps": _funnel_suite,
-        "path_topk": _path_topk_suite,
-        "attribution_last_touch": _attribution_suite,
+        "path_topk": QUERIES["path_topk"],
+        "attribution_last_touch": QUERIES["attribution_last_touch"],
         "theil_sen": _theil_sen_suite,
-        # r14 addition: sequential changepoint over per-user series
+        # sequential changepoint over per-user series
         "cusum_changepoint": _cusum_suite,
         "acf": _acf_suite,
         "seasonal_profile": _seasonal_profile_suite,
-        # r14 addition: LOCF time-weighted average over the window
+        # LOCF time-weighted average over the window
         "twap": _twap_suite,
-        # r14 addition: MMR diversified retrieval over int8 dots
+        # MMR diversified retrieval over int8 dots
         "mmr_diversify": _mmr_suite,
         # exact triangle census over the LSH candidate graph:
         # (degree, id)-oriented wedge join + semi-join closure
-        "graph_triangles": _triangle_suite,
+        "graph_triangles": QUERIES["graph_triangles"],
         # per-node closure: the same orientation plus the 3-role
         # explode + one node-count exchange
         "graph_local_clustering": _local_clustering_suite,
@@ -660,15 +488,64 @@ def build_suites() -> tuple[dict, dict]:
         "token_waterfill": _waterfill_suite,
         # perceptual image near-dup over real rasters (aHash + band
         # buckets; one (band, byte) exchange, never all-pairs)
-        "media_phash_pairs": _phash_pairs_suite,
+        "media_phash_pairs": QUERIES["media_phash_pairs"],
         # token-weighted order statistics: the histogram-narrowing
         # recursion with weight mass (register-sized exchanges only)
-        "weighted_quantiles": _weighted_quantiles_suite,
+        "weighted_quantiles": QUERIES["weighted_quantiles"],
         # ... and its per-language grouped twin (broadcast range
         # table per round, groups converge independently)
         "weighted_quantiles_grouped": _weighted_quantiles_grouped_suite,
     }
     return suites, extra_suites
+
+
+def plan_stats(df) -> dict[str, int]:
+    """Stable plan-shape fingerprint per suite: if a timing moves
+    but these don't, the movement is machine noise, not a plan
+    regression — and vice versa.  Captures the public
+    ``df.explain("formatted")`` output."""
+    import re
+    from collections import Counter
+
+    from kafkadirect_spark.testing import explain_formatted
+
+    c = Counter(re.findall(r"\(\d+\) (\w+)", explain_formatted(df)))
+    return {
+        "shuffles": c.get("Exchange", 0),
+        "broadcasts": c.get("BroadcastExchange", 0),
+        "scans": c.get("Scan", 0),
+        "joins": sum(v for k, v in c.items() if k.endswith("Join")),
+        "sorts": c.get("Sort", 0),
+    }
+
+
+def run(spark, sf_dir: str, fns: dict[str, callable], reps: int,
+        first=None) -> dict[str, list[float]]:
+    """Per-rep wall seconds of each suite, fully materialized through
+    the noop sink; ``first(name, df)`` sees each suite's first-rep
+    frame.  consumeproduce's work happens in fn itself (the rewrite
+    is the measurement) and its returned frame is a placeholder with
+    no plan worth inspecting, so ``first`` skips it."""
+    from kafkadirect_spark.functions.dedup import release_caches
+
+    out: dict[str, list[float]] = {}
+    for name, fn in fns.items():
+        times = []
+        for i in range(reps):
+            spark.sparkContext.setJobDescription(f"{name} rep{i}")
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            times.append(time.perf_counter() - t0)
+            if i == 0 and first is not None and name != "consumeproduce":
+                first(name, df)
+            # free pipeline-cached intermediates between runs so
+            # suites are measured cold-cache and blocks don't pile up
+            # across the session
+            release_caches()
+        out[name] = times
+    spark.sparkContext.setJobDescription(None)
+    return out
 
 
 def main() -> None:
@@ -685,64 +562,26 @@ def main() -> None:
     # also measures steady state, not first-query JIT).
     load_table(spark, sf_dir, "lineitem").count()
 
-    def plan_stats(df) -> dict[str, int]:
-        """Stable plan-shape fingerprint per suite: if a timing moves
-        but these don't, the movement is machine noise, not a plan
-        regression — and vice versa.  Captures the public
-        ``df.explain("formatted")`` output."""
-        import re
-        from collections import Counter
-
-        from kafkadirect_spark.testing import explain_formatted
-
-        c = Counter(re.findall(r"\(\d+\) (\w+)", explain_formatted(df)))
-        return {
-            "shuffles": c.get("Exchange", 0),
-            "broadcasts": c.get("BroadcastExchange", 0),
-            "scans": c.get("Scan", 0),
-            "joins": sum(v for k, v in c.items() if k.endswith("Join")),
-            "sorts": c.get("Sort", 0),
-        }
-
-    def run(fns: dict[str, callable], reps: int,
-            plans: dict[str, dict]) -> dict[str, float]:
-        from kafkadirect_spark.functions.dedup import release_caches
-
-        out: dict[str, float] = {}
-        for name, fn in fns.items():
-            best = float("inf")
-            for i in range(reps):
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-                if i == 0 and name != "consumeproduce":
-                    # consumeproduce's work happens in fn itself (the
-                    # rewrite is the measurement); its returned frame
-                    # is a placeholder with no plan worth printing.
-                    plans[name] = plan_stats(df)
-                # free pipeline-cached intermediates between runs so
-                # suites are measured cold-cache and blocks don't pile
-                # up across the session
-                release_caches()
-            out[name] = round(best, 3)
-        return out
-
-    # Best-of-N: SimpleBenchmark measures steady state, and single-run
-    # noise on a shared machine is ~2× for the shuffle-heavy extras —
-    # best-of-3 everywhere so single-suite blips (r5's streamtablejoin
-    # 0.36→0.56 with an identical plan) stop looking like regressions.
+    # Best-of-3: SimpleBenchmark measures steady state, and single-run
+    # noise on a shared machine is ~2× for the shuffle-heavy extras.
     plans: dict[str, dict] = {}
-    timings = run(suites, 3, plans)
-    extras = run(extra_suites, 3, plans)
 
-    # Plan fingerprints go to a sidecar artifact, NOT the stdout line:
-    # inlining them pushed round 5's single output line past the
-    # driver's tail-capture window and left BENCH_r05 unparsed.
-    # Before overwriting, diff against the previous run's fingerprints
-    # so plan drift is SELF-reporting in the summary line: a timing
-    # that moved with an unchanged fingerprint is machine noise; a
-    # changed fingerprint names the suite to re-audit.
+    def fingerprint(name, df):
+        plans[name] = plan_stats(df)
+
+    def best_of_3(fns: dict[str, callable]) -> dict[str, float]:
+        times = run(spark, sf_dir, fns, 3, fingerprint)
+        return {name: round(min(ts), 3) for name, ts in times.items()}
+
+    timings = best_of_3(suites)
+    extras = best_of_3(extra_suites)
+
+    # Plan fingerprints go to a sidecar artifact, NOT the stdout line,
+    # whose size must stay bounded.  Before overwriting, diff against
+    # the previous run's fingerprints so plan drift is SELF-reporting
+    # in the summary line: a timing that moved with an unchanged
+    # fingerprint is machine noise; a changed fingerprint names the
+    # suite to re-audit.
     here = os.path.dirname(os.path.abspath(__file__))
     plans_path = os.path.join(here, "BENCH_PLANS.json")
     plan_diff = {"changed": 0, "unchanged": 0, "new": 0}
@@ -768,14 +607,12 @@ def main() -> None:
     with open(plans_path, "w") as fh:
         json.dump({"sf": sf_dir, "plans": plans}, fh, indent=1, sort_keys=True)
 
-    # Output contract (re-learned the hard way in r12): the driver
-    # captures only the LAST ~2000 chars of bench stdout, and the
-    # extras map (70+ suites) outgrew that window — BENCH_r12.json's
-    # tail starts mid-extras and the nine headline suite numbers were
-    # truncated away (VERDICT r12 item 3).  Fix: the fat per-suite
-    # detail prints FIRST, and the FINAL stdout line is a compact
-    # headline JSON (metric / value / the nine reference suites /
-    # plan-diff counts) guaranteed to fit the tail window whole.
+    # Output contract: the driver captures only the LAST ~2000 chars
+    # of bench stdout, which the extras map (80+ suites) outgrows.
+    # So the fat per-suite detail prints FIRST, and the FINAL stdout
+    # line is a compact headline JSON (metric / value / the nine
+    # reference suites / plan-diff counts) that fits the tail window
+    # whole.
     detail = json.dumps({
         "metric": "bench_extras_detail",
         "extras": extras,
@@ -797,7 +634,7 @@ def main() -> None:
     # Hard guard on the output contract: the FINAL line must survive
     # the driver's ~2000-char tail capture with room for the detail
     # line's own tail above it.  Fail LOUDLY instead of shipping a
-    # truncated headline (the silent r5/r12 failure modes).
+    # truncated headline.
     if len(line) >= 1800:  # not an assert: must survive python -O
         raise RuntimeError(
             f"bench headline line grew to {len(line)} bytes — trim it, "

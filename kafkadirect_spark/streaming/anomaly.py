@@ -12,7 +12,7 @@ with no history yet (the first ``min_history`` windows of a key)
 reports ``dev_permille`` against whatever history exists and never
 alerts — cold keys don't page anyone.
 
-Collapse-to-zero IS detected (ADVICE r12): once a key has state, the
+Collapse-to-zero IS detected: once a key has state, the
 watermark closes EVERY window from the key's frontier — windows with
 no arrivals synthesize a zero-count row, so a key whose traffic
 stops scores ``dev_permille = 1000`` against its own median and
@@ -39,25 +39,23 @@ surface; the history-scored alerting on top is beyond parity.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
+from kafkadirect_spark.streaming.util import epoch_ms, event_time_fold
 from kafkadirect_spark.streaming.util import interval_ms as _interval_ms
 
 
 def _upgrade_state(st: dict) -> dict:
     """Checkpoint-compatibility shim: state persisted by versions
-    before the collapse-synthesis round lacks the frontier / zero-run
-    keys.  The frontier must be DERIVED from the pending open windows,
-    not pinned to None (ADVICE r13): with f=None a restored key
-    holding open counts would be ``state.remove()``d on its first
-    timeout (silently dropping the pending window counts), or — if an
-    arrival landed first — re-anchored at the NEW bucket, stranding
-    older open windows below the frontier where the z>=history jump
-    could later walk backward and re-emit already-sealed windows.
+    without collapse synthesis lacks the frontier / zero-run keys.
+    The frontier must be DERIVED from the pending open windows, not
+    pinned to None: with f=None a restored key holding open counts
+    would be ``state.remove()``d on its first timeout (silently
+    dropping the pending window counts), or — if an arrival landed
+    first — re-anchored at the NEW bucket, stranding older open
+    windows below the frontier where the z>=history jump could later
+    walk backward and re-emit already-sealed windows.
     Current-format states pass through unchanged (a persisted state
     always has a non-None frontier — the update path removes the key
     otherwise)."""
@@ -92,36 +90,24 @@ def streaming_rate_alerts(stream_df: DataFrame, key_col: str,
                   "n_events long, baseline_median long, "
                   "dev_permille long, is_alert boolean")
 
-    def fn(key, pdf_iter, state):
-        st = _upgrade_state(
-            json.loads(state.get[0]) if state.exists
-            else {"open": {}, "hist": [], "f": None, "z": 0})
-        wm = state.getCurrentWatermarkMs()
-
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                # vectorized bucketing (VERDICT r12 item 6): one
-                # epoch-ms floordiv + value_counts per Arrow batch,
-                # no per-row python loop
-                w0s = (pdf[ts_col].astype("datetime64[ns]")
-                       .astype("int64") // 1_000_000
-                       // win_ms * win_ms)
-                for w0, cnt in w0s.value_counts().items():
-                    w0 = int(w0)
-                    if w0 + win_ms <= wm:
-                        continue        # late: window already closed
-                    k = str(w0)
-                    st["open"][k] = st["open"].get(k, 0) + int(cnt)
-                    st["f"] = (w0 if st["f"] is None
-                               else min(st["f"], w0))
+    def step(key, st, pdf, wm):
+        st = _upgrade_state(st)
+        if pdf is not None:
+            # one vectorized epoch-ms floordiv + value_counts per
+            # trigger, no per-row python loop
+            w0s = epoch_ms(pdf[ts_col]) // win_ms * win_ms
+            for w0, cnt in w0s.value_counts().items():
+                w0 = int(w0)
+                if w0 + win_ms <= wm:
+                    continue            # late: window already closed
+                k = str(w0)
+                st["open"][k] = st["open"].get(k, 0) + int(cnt)
+                st["f"] = w0 if st["f"] is None else min(st["f"], w0)
 
         # seal: close EVERY window from the frontier the watermark
         # has passed — windows with no arrivals synthesize n=0, so
-        # traffic collapse scores and alerts (ADVICE r12).  Two
-        # bounds keep the pass small and the baseline honest
-        # (round-13 review findings):
+        # traffic collapse scores and alerts.  Two bounds keep the
+        # pass small and the baseline honest:
         # - zero-count closes never enter `hist` (the baseline stays
         #   the median of windows that HAD traffic, so a sparse key
         #   firing every few windows is not scored against a
@@ -134,16 +120,14 @@ def streaming_rate_alerts(stream_df: DataFrame, key_col: str,
         #   iterate per window across years (≤ |open|·(history+1)
         #   iterations per pass), and a fully idle key expires.
         rows = []
-        dead = False
         w0 = st["f"]
         while w0 is not None and w0 + win_ms <= wm:
             k = str(w0)
             if k not in st["open"] and st["z"] >= history:
                 if not st["open"]:
-                    dead = True     # long-idle: nothing pending
-                    break
-                nxt = min(int(x) for x in st["open"])
-                w0 = nxt            # aligned by construction
+                    # long-idle: `history` zeros closed, nothing pending
+                    return None, None, rows
+                w0 = min(int(x) for x in st["open"])  # aligned
                 continue
             n = st["open"].pop(k, 0)
             h = sorted(st["hist"])
@@ -165,26 +149,16 @@ def streaming_rate_alerts(stream_df: DataFrame, key_col: str,
                 st["z"] += 1
             w0 += win_ms
         st["f"] = w0
+        if w0 is None:
+            # a fresh key whose every arrival was late never opened a
+            # window; keeping (and never timing out) its empty state
+            # would leak a zombie row
+            return None, None, rows
+        # wake at the next close even with no arrivals — this is what
+        # lets silent windows synthesize their zeros
+        return st, w0 + win_ms, rows
 
-        if dead or st["f"] is None:
-            # dead: `history` zeros closed with nothing pending.
-            # f None: a fresh key whose every arrival was late — it
-            # never opened a window, so keeping (and never timing
-            # out) its empty state would leak a zombie row.
-            state.remove()
-        else:
-            state.update((json.dumps(st),))
-            # wake at the next close even with no arrivals — this
-            # is what lets silent windows synthesize their zeros
-            state.setTimeoutTimestamp(max(st["f"] + win_ms, wm + 1))
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return (stream_df
-            .filter(F.col(key_col).isNotNull())
-            .select(key_col, ts_col)
-            .withWatermark(ts_col, grace)
-            .groupBy(key_col)
-            .applyInPandasWithState(
-                fn, out_fields, "state string", "append",
-                GroupStateTimeout.EventTimeTimeout))
+    return event_time_fold(
+        stream_df.filter(F.col(key_col).isNotNull()).select(key_col, ts_col),
+        [key_col], ts_col, grace, out_fields,
+        lambda: {"open": {}, "hist": [], "f": None, "z": 0}, step)

@@ -43,11 +43,10 @@ per-trigger delta, not the history.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafkadirect_spark.streaming.util import epoch_ms, event_time_fold
 
 _SIDE = "__asof_side"
 _TS = "__asof_ts"
@@ -113,7 +112,7 @@ def streaming_asof_join(
           for c in l_data],
         *[F.col(c) for c in value_cols],
     )
-    u = l.unionByName(r).withWatermark(_TS, grace)
+    u = l.unionByName(r)
 
     in_cols = u.columns
     ts_like = {c for c in left_cols
@@ -134,25 +133,17 @@ def streaming_asof_join(
             v = v.item()
         return None if v is pd.NaT else v
 
-    def fn(key, pdf_iter, state):
-        st = (json.loads(state.get[0]) if state.exists
-              else {"R": [], "L": [], "seq": 0})
-        wm = state.getCurrentWatermarkMs()
-
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                for row in pdf.itertuples(index=False):
-                    rd = dict(zip(in_cols, row))
-                    ts_ms = int(pd.Timestamp(rd[_TS]).value // 1_000_000)
-                    if rd[_SIDE] == 0:
-                        pay = {c: _py(rd[c]) for c in value_cols}
-                        st["R"].append([ts_ms, st["seq"], pay])
-                        st["seq"] += 1
-                    else:
-                        if ts_ms <= wm:
-                            continue  # late left: dropped, never rewritten
-                        st["L"].append(
-                            [ts_ms, {c: _py(rd[c]) for c in l_data}])
+    def step(key, st, pdf, wm):
+        if pdf is not None:
+            for ts_ms, row in zip(epoch_ms(pdf[_TS]).tolist(),
+                                  pdf.itertuples(index=False)):
+                rd = dict(zip(in_cols, row))
+                if rd[_SIDE] == 0:
+                    pay = {c: _py(rd[c]) for c in value_cols}
+                    st["R"].append([ts_ms, st["seq"], pay])
+                    st["seq"] += 1
+                elif ts_ms > wm:  # a late left is dropped, never rewritten
+                    st["L"].append([ts_ms, {c: _py(rd[c]) for c in l_data}])
 
         st["R"].sort()
         due = sorted(lr for lr in st["L"] if lr[0] <= wm)
@@ -173,7 +164,7 @@ def streaming_asof_join(
                           if c in ts_like and v is not None else v)
             for c in value_cols:
                 out[c] = match[2][c] if match is not None else None
-            rows.append(out)
+            rows.append({c: out[c] for c in left_cols + value_cols})
 
         # prune: drop every right version ≤ wm except the newest one —
         # the only one a future (ts > wm) left row can still match
@@ -181,20 +172,10 @@ def streaming_asof_join(
         st["R"] = ([below[-1]] if below else []) + \
             [rr for rr in st["R"] if rr[0] > wm]
 
-        if st["L"] or st["R"]:
-            state.update((json.dumps(st),))
-            nxt = (min(lr[0] for lr in st["L"]) if st["L"]
-                   else wm + _IDLE_REVISIT_MS)
-            state.setTimeoutTimestamp(max(nxt, wm + 1))
-        else:
-            state.remove()
+        if not (st["L"] or st["R"]):
+            return None, None, rows
+        return st, (min(lr[0] for lr in st["L"]) if st["L"]
+                    else wm + _IDLE_REVISIT_MS), rows
 
-        if rows:
-            yield pd.DataFrame(rows)[left_cols + value_cols]
-
-    return (
-        u.groupBy(*keys)
-        .applyInPandasWithState(
-            fn, out_fields, "s string", "append",
-            GroupStateTimeout.EventTimeTimeout)
-    )
+    return event_time_fold(u, keys, _TS, grace, out_fields,
+                           lambda: {"R": [], "L": [], "seq": 0}, step)

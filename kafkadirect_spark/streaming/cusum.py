@@ -47,12 +47,12 @@ optimal statistic).
 
 from __future__ import annotations
 
-import json
 import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafkadirect_spark.streaming.util import epoch_ms, event_time_fold
 
 
 def streaming_cusum_alerts(stream_df: DataFrame, key_col: str,
@@ -74,26 +74,15 @@ def streaming_cusum_alerts(stream_df: DataFrame, key_col: str,
     out_fields = (f"`{key_col}` {ktype}, alarm_ts timestamp, "
                   "direction string, stat_milli long, ref_milli long")
 
-    def fn(key, pdf_iter, state):
-        st = (json.loads(state.get[0]) if state.exists
-              else {"buf": [], "warm": [], "ref": None,
-                    "sp": 0, "sn": 0, "f": None})
-        wm = state.getCurrentWatermarkMs()
-
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                ms = (pdf[ts_col].astype("datetime64[ns]")
-                      .astype("int64") // 1_000_000)
-                f = st["f"]
-                for ts_ms, v in zip(ms.tolist(),
-                                    pdf[value_col].tolist()):
-                    if f is not None and ts_ms <= f:
-                        continue            # late: behind the seal
-                    # the batch operator's F.floor(value * 1000)
-                    st["buf"].append([ts_ms,
-                                      int(math.floor(v * 1000))])
+    def step(key, st, pdf, wm):
+        if pdf is not None:
+            f = st["f"]
+            for ts_ms, v in zip(epoch_ms(pdf[ts_col]).tolist(),
+                                pdf[value_col].tolist()):
+                if f is not None and ts_ms <= f:
+                    continue                # late: behind the seal
+                # the batch operator's F.floor(value * 1000)
+                st["buf"].append([ts_ms, int(math.floor(v * 1000))])
 
         sealed = sorted([e for e in st["buf"] if e[0] <= wm])
         st["buf"] = [e for e in st["buf"] if e[0] > wm]
@@ -118,26 +107,18 @@ def streaming_cusum_alerts(stream_df: DataFrame, key_col: str,
                     "stat_milli": max(st["sp"], st["sn"]),
                     "ref_milli": st["ref"]})
                 st["sp"] = st["sn"] = 0     # re-arm, same reference
-        # ADVICE r14: never pin the frontier at 0 via `or 0` — a
-        # first-batch key with no prior seal takes the watermark
-        # itself (Spark starts it at 0 anyway, so the ≥1970 epoch
-        # assumption below is structural, not widened here).
+        # never pin the frontier at 0 via `or 0`: a first-batch key
+        # with no prior seal takes the watermark itself (Spark starts
+        # it at 0 anyway, so the ≥1970 epoch assumption is structural)
         st["f"] = wm if st["f"] is None else max(wm, st["f"])
+        # keys never expire; the timer wakes only for buffered points
+        return st, min((e[0] for e in st["buf"]), default=None), rows
 
-        state.update((json.dumps(st),))
-        if st["buf"]:
-            next_due = min(e[0] for e in st["buf"])
-            state.setTimeoutTimestamp(max(next_due, wm + 1))
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return (stream_df
-            .filter(F.col(key_col).isNotNull()
-                    & F.col(ts_col).isNotNull()
-                    & F.col(value_col).isNotNull())
-            .select(key_col, ts_col, value_col)
-            .withWatermark(ts_col, grace)
-            .groupBy(key_col)
-            .applyInPandasWithState(
-                fn, out_fields, "state string", "append",
-                GroupStateTimeout.EventTimeTimeout))
+    return event_time_fold(
+        stream_df.filter(F.col(key_col).isNotNull()
+                         & F.col(ts_col).isNotNull()
+                         & F.col(value_col).isNotNull())
+        .select(key_col, ts_col, value_col),
+        [key_col], ts_col, grace, out_fields,
+        lambda: {"buf": [], "warm": [], "ref": None,
+                 "sp": 0, "sn": 0, "f": None}, step)

@@ -39,14 +39,12 @@ windowed operators' late-record policy.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from kafkadirect_spark.functions.dedup import (N_BANDS, ROWS_PER_BAND,
                                                with_row_signatures)
+from kafkadirect_spark.streaming.util import epoch_ms, event_time_fold
 from kafkadirect_spark.streaming.util import interval_ms as _interval_ms
 
 
@@ -77,55 +75,35 @@ def streaming_lsh_candidates(
                    for r in range(ROWS_PER_BAND)])
         for b in range(N_BANDS)])
     exploded = (sigs.select("d_id", "d_ts", F.explode(bands).alias("bk"))
-                .select("d_id", "d_ts", "bk.*")
-                .withWatermark("d_ts", grace))
+                .select("d_id", "d_ts", "bk.*"))
 
     id_type = stream_df.schema[id_col].dataType.simpleString()
     out_fields = (f"id_new {id_type}, id_prior {id_type}, "
                   f"band int, ts timestamp")
 
-    def fn(key, pdf_iter, state):
+    def step(key, members, pdf, wm):
         import pandas as pd
 
-        members = json.loads(state.get[0]) if state.exists else []
-        wm = state.getCurrentWatermarkMs()
         rows = []
-
-        if not state.hasTimedOut:
-            chunks = [c for c in pdf_iter if len(c)]
-            for pdf in ([pd.concat(chunks).sort_values(
-                    "d_ts", kind="stable")] if chunks else []):
-                for r in pdf.itertuples(index=False):
-                    ts_ms = int(pd.Timestamp(r.d_ts).value // 1_000_000)
-                    if ts_ms <= wm:
-                        continue  # late doc: dropped, like late records
-                    for pid, pts in members:
-                        if pts >= ts_ms - horizon_ms:
-                            rows.append({"id_new": r.d_id,
-                                         "id_prior": pid,
-                                         "band": int(key[0]),
-                                         "ts": pd.Timestamp(ts_ms,
-                                                            unit="ms")})
-                    if len(members) < bucket_cap:
-                        did = r.d_id
-                        # numpy scalars don't json-serialize
-                        members.append(
-                            [did.item() if hasattr(did, "item") else did,
-                             ts_ms])
-                    # at cap: bucket is degenerate; stop accumulating
+        if pdf is not None:
+            pdf = pdf.sort_values("d_ts", kind="stable")
+            for did, ts_ms in zip(pdf["d_id"].tolist(),
+                                  epoch_ms(pdf["d_ts"]).tolist()):
+                if ts_ms <= wm:
+                    continue  # late doc: dropped, like late records
+                for pid, pts in members:
+                    if pts >= ts_ms - horizon_ms:
+                        rows.append({"id_new": did, "id_prior": pid,
+                                     "band": int(key[0]),
+                                     "ts": pd.Timestamp(ts_ms, unit="ms")})
+                if len(members) < bucket_cap:
+                    members.append([did, ts_ms])
+                # at cap: bucket is degenerate; stop accumulating
 
         members = [m for m in members if m[1] > wm - horizon_ms]
-        if members:
-            state.update((json.dumps(members),))
-            state.setTimeoutTimestamp(
-                max(min(m[1] for m in members) + horizon_ms, wm + 1))
-        else:
-            state.remove()
+        if not members:
+            return None, None, rows
+        return members, min(m[1] for m in members) + horizon_ms, rows
 
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return (exploded.groupBy(*key_cols)
-            .applyInPandasWithState(
-                fn, out_fields, "members string", "append",
-                GroupStateTimeout.EventTimeTimeout))
+    return event_time_fold(exploded, key_cols, "d_ts", grace, out_fields,
+                           list, step)

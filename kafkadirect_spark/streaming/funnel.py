@@ -2,13 +2,13 @@
 ``behavior.funnel_steps``: per user, emit one milestone row the
 moment a funnel step completes, with EVENT-TIME semantics identical
 to the batch cascade for every non-late record whose timestamp is
-millisecond-distinct from its predecessor step's.  Precision notes
-(ADVICE r12): the conversion-window check truncates lags to WHOLE
-SECONDS, exactly like the batch cascade's ``unix_timestamp``
-difference; the strictly-after comparison runs at millisecond
-granularity (state keys are epoch-ms), so two step events inside the
-same millisecond — microsecond-apart in batch — tie here and the
-later one is skipped.
+millisecond-distinct from its predecessor step's.  Precision notes:
+the conversion-window check truncates lags to WHOLE SECONDS, exactly
+like the batch cascade's ``unix_timestamp`` difference; the
+strictly-after comparison runs at millisecond granularity (state
+keys are epoch-ms), so two step events inside the same millisecond
+— microsecond-apart in batch — tie here and the later one is
+skipped.
 
 Out-of-order safety: arriving events buffer in per-user state and
 fold through the step machine ONLY once the watermark passes them
@@ -31,11 +31,10 @@ window folds.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafkadirect_spark.streaming.util import epoch_ms, event_time_fold
 
 
 def streaming_funnel(stream_df: DataFrame, user_col: str,
@@ -63,26 +62,14 @@ def streaming_funnel(stream_df: DataFrame, user_col: str,
     out_fields = (f"`{user_col}` {utype}, step long, "
                   "event_type string, step_ts timestamp")
 
-    def fn(key, pdf_iter, state):
-        st = (json.loads(state.get[0]) if state.exists
-              else {"buf": [], "done": [], "f": None})
-        wm = state.getCurrentWatermarkMs()
-
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                # vectorized epoch-ms conversion (the anomaly-module
-                # fix, r13): one astype per Arrow batch, no per-row
-                # pd.Timestamp construction
-                ms = (pdf[ts_col].astype("datetime64[ns]")
-                      .astype("int64") // 1_000_000)
-                f = st["f"]
-                for ts_ms, ty in zip(ms.tolist(),
-                                     pdf[type_col].tolist()):
-                    if f is not None and ts_ms <= f:
-                        continue            # late: behind the seal
-                    st["buf"].append([ts_ms, ty])
+    def step(key, st, pdf, wm):
+        if pdf is not None:
+            f = st["f"]
+            for ts_ms, ty in zip(epoch_ms(pdf[ts_col]).tolist(),
+                                 pdf[type_col].tolist()):
+                if f is not None and ts_ms <= f:
+                    continue                # late: behind the seal
+                st["buf"].append([ts_ms, ty])
 
         # seal: fold every buffered event the watermark has passed,
         # in event-time order — identical to the batch cascade
@@ -96,9 +83,8 @@ def streaming_funnel(stream_df: DataFrame, user_col: str,
             if k > 0 and ts_ms <= st["done"][-1]:
                 continue                    # not strictly after k-1
             # whole-second lag, matching the batch cascade's
-            # unix_timestamp truncation exactly (ADVICE r12): the
-            # window check must not disagree with batch on
-            # subsecond timestamps
+            # unix_timestamp truncation exactly: the window check
+            # must not disagree with batch on subsecond timestamps
             if (within_seconds is not None and k > 0
                     and ts_ms // 1000 - st["done"][0] // 1000
                     > within_seconds):
@@ -110,20 +96,13 @@ def streaming_funnel(stream_df: DataFrame, user_col: str,
         # the frontier is exactly "everything <= f has been folded":
         # wm after every seal pass (arrivals at or behind it are late)
         st["f"] = max(wm, st["f"] or 0)
-
-        state.update((json.dumps(st),))
-        if st["buf"]:
-            next_due = min(e[0] for e in st["buf"])
-            state.setTimeoutTimestamp(max(next_due, wm + 1))
-        if rows:
-            yield pd.DataFrame(rows)
+        # progress is kept after conversion so replays never re-emit;
+        # the timer wakes only for buffered events
+        return st, min((e[0] for e in st["buf"]), default=None), rows
 
     relevant = F.col(type_col).isin(list(steps))
-    return (stream_df
-            .filter(F.col(user_col).isNotNull() & relevant)
-            .select(user_col, ts_col, type_col)
-            .withWatermark(ts_col, grace)
-            .groupBy(user_col)
-            .applyInPandasWithState(
-                fn, out_fields, "state string", "append",
-                GroupStateTimeout.EventTimeTimeout))
+    return event_time_fold(
+        stream_df.filter(F.col(user_col).isNotNull() & relevant)
+        .select(user_col, ts_col, type_col),
+        [user_col], ts_col, grace, out_fields,
+        lambda: {"buf": [], "done": [], "f": None}, step)

@@ -31,13 +31,11 @@ batch widens longs to float64; cast to string JVM-side first).
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
+from kafkadirect_spark.streaming.util import epoch_ms, event_time_fold
 from kafkadirect_spark.streaming.util import interval_ms as _interval_ms
 
 
@@ -73,70 +71,50 @@ def streaming_session_aggregate(
         + ["window_start timestamp", "window_end timestamp", agg_fields])
     in_cols = stream_df.columns
 
-    def fn(key, pdf_iter, state):
-        sessions = json.loads(state.get[0]) if state.exists else []
-        wm = state.getCurrentWatermarkMs()
-        closed = []
-
-        if not state.hasTimedOut:
+    def step(key, sessions, pdf, wm):
+        if pdf is not None:
             # one sort across ALL arrow chunks of the trigger: a
             # per-chunk sort would still feed a non-commutative
             # aggregator cross-chunk out-of-order folds
-            chunks = [c for c in pdf_iter if len(c)]
-            for pdf in ([pd.concat(chunks).sort_values(
-                    ts_col, kind="stable")] if chunks else []):
-                for row in pdf.itertuples(index=False):
-                    rd = dict(zip(in_cols, row))
-                    ts_ms = int(pd.Timestamp(rd[ts_col]).value // 1_000_000)
-                    # findMergedWindow: collect every open session this
-                    # record touches (inclusive gap boundary, matching
-                    # F.session_window / the batch oracle convention).
-                    touch = [s for s in sessions
-                             if s["s"] - gap_ms <= ts_ms <= s["e"] + gap_ms]
-                    lo = min([ts_ms, *(s["s"] for s in touch)])
-                    hi = max([ts_ms, *(s["e"] for s in touch)])
-                    if hi + gap_ms <= wm:
-                        # The MERGED window is already closed — the
-                        # reference drops the record after computing
-                        # the merge (mergedWindow.end < closeTime,
-                        # KStreamSessionWindowAggregate.java:107-141);
-                        # touched stale sessions close unmodified below.
-                        continue
-                    rest = [s for s in sessions if s not in touch]
-                    agg = initializer()
-                    for s in sorted(touch, key=lambda s: s["s"]):
-                        agg = merger(agg, s["a"])
-                    agg = aggregator(agg, rd)
-                    sessions = rest + [{"s": lo, "e": hi, "a": agg}]
+            pdf = pdf.sort_values(ts_col, kind="stable")
+            for ts_ms, row in zip(epoch_ms(pdf[ts_col]).tolist(),
+                                  pdf.itertuples(index=False)):
+                rd = dict(zip(in_cols, row))
+                # findMergedWindow: collect every open session this
+                # record touches (inclusive gap boundary, matching
+                # F.session_window / the batch oracle convention).
+                touch = [s for s in sessions
+                         if s["s"] - gap_ms <= ts_ms <= s["e"] + gap_ms]
+                lo = min([ts_ms, *(s["s"] for s in touch)])
+                hi = max([ts_ms, *(s["e"] for s in touch)])
+                if hi + gap_ms <= wm:
+                    # The MERGED window is already closed — the
+                    # reference drops the record after computing the
+                    # merge (mergedWindow.end < closeTime,
+                    # KStreamSessionWindowAggregate.java:107-141);
+                    # touched stale sessions close unmodified below.
+                    continue
+                rest = [s for s in sessions if s not in touch]
+                agg = initializer()
+                for s in sorted(touch, key=lambda s: s["s"]):
+                    agg = merger(agg, s["a"])
+                agg = aggregator(agg, rd)
+                sessions = rest + [{"s": lo, "e": hi, "a": agg}]
 
-        still_open = []
-        for s in sessions:
-            if s["e"] + gap_ms <= wm:
-                closed.append(s)
-            else:
-                still_open.append(s)
+        closed = sorted((s for s in sessions if s["e"] + gap_ms <= wm),
+                        key=lambda s: s["s"])
+        still_open = [s for s in sessions if s["e"] + gap_ms > wm]
+        rows = []
+        for s in closed:
+            out = dict(zip(keys, key))
+            out["window_start"] = pd.Timestamp(s["s"], unit="ms")
+            out["window_end"] = pd.Timestamp(s["e"] + gap_ms, unit="ms")
+            out.update(finisher(s["a"]))
+            rows.append(out)
+        if not still_open:
+            return None, None, rows
+        return (still_open, min(s["e"] + gap_ms for s in still_open),
+                rows)
 
-        if still_open:
-            state.update((json.dumps(still_open),))
-            next_due = min(s["e"] + gap_ms for s in still_open)
-            state.setTimeoutTimestamp(max(next_due, wm + 1))
-        else:
-            state.remove()
-
-        if closed:
-            rows = []
-            for s in sorted(closed, key=lambda s: s["s"]):
-                out = dict(zip(keys, key))
-                out["window_start"] = pd.Timestamp(s["s"], unit="ms")
-                out["window_end"] = pd.Timestamp(s["e"] + gap_ms, unit="ms")
-                out.update(finisher(s["a"]))
-                rows.append(out)
-            yield pd.DataFrame(rows)
-
-    return (
-        stream_df.withWatermark(ts_col, grace)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            fn, out_fields, "sessions string", "append",
-            GroupStateTimeout.EventTimeTimeout)
-    )
+    return event_time_fold(stream_df, keys, ts_col, grace, out_fields,
+                           list, step)

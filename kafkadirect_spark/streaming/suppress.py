@@ -25,8 +25,8 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
-from pyspark.sql.streaming.state import GroupStateTimeout
 
+from kafkadirect_spark.streaming.util import epoch_ms, event_time_fold
 from kafkadirect_spark.streaming.util import interval_ms as _parse_duration_ms
 
 
@@ -326,7 +326,6 @@ def suppress_bounded_distributed(
         + ["window_start timestamp", "window_end timestamp"]
         + [f"`{c}` {'bigint' if spec == 'count' else 'double'}"
            for c, spec in aggs.items()])
-    state_schema = "buf string"
 
     def _merge(cur: dict, row) -> dict:
         for c, spec in aggs.items():
@@ -354,24 +353,7 @@ def suppress_bounded_distributed(
         # same accounting as the driver-side buffer, one definition
         return _entry_bytes(tuple(e["k"]), e["agg"])
 
-    def _emit_frame(evicted: list[dict]):
-        cols: dict[str, list] = {k: [] for k in keys}
-        cols["window_start"], cols["window_end"] = [], []
-        for c in aggs:
-            cols[c] = []
-        for e in evicted:
-            for k, v in zip(keys, e["k"]):
-                cols[k].append(v)
-            cols["window_start"].append(
-                pd.Timestamp(e["ws"], unit="ms"))
-            cols["window_end"].append(pd.Timestamp(e["we"], unit="ms"))
-            for c in aggs:
-                cols[c].append(e["agg"].get(c))
-        return pd.DataFrame(cols)
-
-    def fn(key, pdf_iter, state):
-        st = (_json.loads(state.get[0]) if state.exists
-              else {"e": {}, "time": None})
+    def step(key, st, pdf, wm):
         entries, out = st["e"], []
         # Running byte accounting (only when the bound needs it):
         # recomputing the total per insert would be O(rows × entries).
@@ -392,75 +374,68 @@ def suppress_bounded_distributed(
                 if _due_ms(entries[ek]) <= clock_ms:
                     out.append(pop(ek))
 
-        if state.hasTimedOut:
+        if pdf is None:
             # The watermark is already delayed by grace (withWatermark),
             # but _due_ms adds grace too (it compares against raw
             # observed stream time on the data path).  Reconstruct
             # stream time so an idle bucket emits at end + grace, not
             # end + 2x grace.
-            evict_due(state.getCurrentWatermarkMs() + grace_ms)
+            evict_due(wm + grace_ms)
         else:
             # sort once across all arrow chunks — record order must be
             # the trigger's event-time order, not per-chunk order
-            chunks = [c for c in pdf_iter if len(c)]
-            for pdf in ([pd.concat(chunks).sort_values(
-                    ts_col, kind="stable")] if chunks else []):
-                for row in pdf.itertuples(index=False):
-                    rd = row._asdict()
-                    ts_ms = int(pd.Timestamp(rd[ts_col]).value // 1_000_000)
-                    if st["time"] is None or ts_ms > st["time"]:
-                        st["time"] = ts_ms
-                    ws = (ts_ms // size_ms) * size_ms
-                    kv = [rd[k] for k in keys]
-                    ek = _json.dumps([*kv, ws])
-                    e = entries.get(ek)
-                    if e is None:
-                        e = {"k": kv, "ws": ws, "we": ws + size_ms,
-                             "t": ts_ms, "agg": {}}
-                        entries[ek] = e
-                    else:
-                        e["t"] = ts_ms  # re-time: latest update wins
-                    e["agg"] = _merge(e["agg"], rd)
-                    if max_bytes is not None:
-                        total -= sizes.get(ek, 0)
-                        sizes[ek] = _entry_size(e)
-                        total += sizes[ek]
-                    while ((max_records is not None
-                            and len(entries) > max_records)
-                           or (max_bytes is not None
-                               and total > max_bytes)):
-                        if on_full == "shutdown":
-                            raise BufferFullError(
-                                f"suppression buffer full "
-                                f"({len(entries)} records) with "
-                                "shutDownWhenFull")
-                        oldest = min(entries,
-                                     key=lambda k: entries[k]["t"])
-                        out.append(pop(oldest))
+            pdf = pdf.sort_values(ts_col, kind="stable")
+            for ts_ms, row in zip(epoch_ms(pdf[ts_col]).tolist(),
+                                  pdf.itertuples(index=False)):
+                # by column name: namedtuple fields rename columns that
+                # are not identifiers ('class', 'my key')
+                rd = dict(zip(pdf.columns, row))
+                if st["time"] is None or ts_ms > st["time"]:
+                    st["time"] = ts_ms
+                ws = (ts_ms // size_ms) * size_ms
+                kv = [rd[k] for k in keys]
+                ek = _json.dumps([*kv, ws])
+                e = entries.get(ek)
+                if e is None:
+                    e = {"k": kv, "ws": ws, "we": ws + size_ms,
+                         "t": ts_ms, "agg": {}}
+                    entries[ek] = e
+                else:
+                    e["t"] = ts_ms  # re-time: latest update wins
+                e["agg"] = _merge(e["agg"], rd)
+                if max_bytes is not None:
+                    total -= sizes.get(ek, 0)
+                    sizes[ek] = _entry_size(e)
+                    total += sizes[ek]
+                while ((max_records is not None
+                        and len(entries) > max_records)
+                       or (max_bytes is not None
+                           and total > max_bytes)):
+                    if on_full == "shutdown":
+                        raise BufferFullError(
+                            f"suppression buffer full "
+                            f"({len(entries)} records) with "
+                            "shutDownWhenFull")
+                    oldest = min(entries,
+                                 key=lambda k: entries[k]["t"])
+                    out.append(pop(oldest))
             # One eviction sweep per batch (emission is batch-granular
             # anyway): a per-row sweep would rescan the whole buffer
             # for every input row — O(rows x entries log entries).
             evict_due(st["time"])
 
-        if entries:
-            state.update((_json.dumps(st),))
-            wm = state.getCurrentWatermarkMs()
-            # Timeouts fire on the grace-delayed watermark clock, so
-            # translate the stream-time due back by grace (see the
-            # hasTimedOut branch for the inverse).
-            next_due = min(_due_ms(e) for e in entries.values()) - grace_ms
-            state.setTimeoutTimestamp(max(next_due, wm + 1))
-        else:
-            state.remove()
-        if out:
-            yield _emit_frame(out)
+        rows = [{**dict(zip(keys, e["k"])),
+                 "window_start": pd.Timestamp(e["ws"], unit="ms"),
+                 "window_end": pd.Timestamp(e["we"], unit="ms"),
+                 **{c: e["agg"].get(c) for c in aggs}} for e in out]
+        if not entries:
+            return None, None, rows
+        # Timeouts fire on the grace-delayed watermark clock, so
+        # translate the stream-time due back by grace (see the
+        # timeout branch for the inverse).
+        return st, min(_due_ms(e) for e in entries.values()) - grace_ms, rows
 
     bucket = F.pmod(F.hash(*keys), F.lit(n_buckets))
-    return (
-        stream_df.withWatermark(ts_col, grace)
-        .withColumn("__bucket", bucket)
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_fields, state_schema, "append",
-            GroupStateTimeout.EventTimeTimeout)
-    )
+    return event_time_fold(stream_df.withColumn("__bucket", bucket),
+                           ["__bucket"], ts_col, grace, out_fields,
+                           lambda: {"e": {}, "time": None}, step)

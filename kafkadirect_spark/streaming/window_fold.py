@@ -29,19 +29,18 @@ aggregator that STRING-RENDERS or hashes values (``str(v)``) can
 silently diverge from a JVM-side rendering of the same column
 (``str(5.0) != "5"``).  Cast such columns to string JVM-side before
 the fold — ``streaming/sketch.py``'s ``_stringify`` is the pattern
-(round-13 regression: tests/test_sketch.py's null-mixed window).
+(pinned by tests/test_sketch.py's null-mixed window).
 Numeric folds (+, min, max, counts) are unaffected: integers stay
 exact through float64 up to 2^53 and the output schema casts back.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 
+from kafkadirect_spark.streaming.util import epoch_ms, event_time_fold
 from kafkadirect_spark.streaming.util import interval_ms as _interval_ms
 
 
@@ -90,56 +89,32 @@ def streaming_windowed_aggregate(
             s -= adv_ms
         return starts
 
-    def fn(key, pdf_iter, state):
-        open_w = json.loads(state.get[0]) if state.exists else {}
-        wm = state.getCurrentWatermarkMs()
-
-        if not state.hasTimedOut:
+    def step(key, open_w, pdf, wm):
+        if pdf is not None:
             # fold in event-time order across ALL arrow chunks so a
             # non-commutative user aggregator sees records in order
-            chunks = [c for c in pdf_iter if len(c)]
-            for pdf in ([pd.concat(chunks).sort_values(
-                    ts_col, kind="stable")] if chunks else []):
-                for row in pdf.itertuples(index=False):
-                    rd = dict(zip(in_cols, row))
-                    ts_ms = int(pd.Timestamp(rd[ts_col]).value // 1_000_000)
-                    for ws in windows_for(ts_ms):
-                        if ws + size_ms <= wm:
-                            continue  # window closed: late record drop
-                        k = str(ws)
-                        agg = open_w.get(k)
-                        open_w[k] = aggregator(
-                            initializer() if agg is None else agg, rd)
+            pdf = pdf.sort_values(ts_col, kind="stable")
+            for ts_ms, row in zip(epoch_ms(pdf[ts_col]).tolist(),
+                                  pdf.itertuples(index=False)):
+                rd = dict(zip(in_cols, row))
+                for ws in windows_for(ts_ms):
+                    if ws + size_ms <= wm:
+                        continue  # window closed: late record drop
+                    k = str(ws)
+                    agg = open_w.get(k)
+                    open_w[k] = aggregator(
+                        initializer() if agg is None else agg, rd)
 
-        closed, still_open = [], {}
-        for k, agg in open_w.items():
-            ws = int(k)
-            if ws + size_ms <= wm:
-                closed.append((ws, agg))
-            else:
-                still_open[k] = agg
+        rows = []
+        for ws in sorted(int(k) for k in open_w if int(k) + size_ms <= wm):
+            out = dict(zip(keys, key))
+            out["window_start"] = pd.Timestamp(ws, unit="ms")
+            out["window_end"] = pd.Timestamp(ws + size_ms, unit="ms")
+            out.update(finisher(open_w.pop(str(ws))))
+            rows.append(out)
+        if not open_w:
+            return None, None, rows
+        return open_w, min(int(k) for k in open_w) + size_ms, rows
 
-        if still_open:
-            state.update((json.dumps(still_open),))
-            next_due = min(int(k) + size_ms for k in still_open)
-            state.setTimeoutTimestamp(max(next_due, wm + 1))
-        else:
-            state.remove()
-
-        if closed:
-            rows = []
-            for ws, agg in sorted(closed):
-                out = dict(zip(keys, key))
-                out["window_start"] = pd.Timestamp(ws, unit="ms")
-                out["window_end"] = pd.Timestamp(ws + size_ms, unit="ms")
-                out.update(finisher(agg))
-                rows.append(out)
-            yield pd.DataFrame(rows)
-
-    return (
-        stream_df.withWatermark(ts_col, grace)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            fn, out_fields, "windows string", "append",
-            GroupStateTimeout.EventTimeTimeout)
-    )
+    return event_time_fold(stream_df, keys, ts_col, grace, out_fields,
+                           dict, step)

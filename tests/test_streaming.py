@@ -311,6 +311,34 @@ def test_suppress_distributed_final_results_on_window_close(spark, tmpdir):
         q.stop()
 
 
+def test_suppress_distributed_non_identifier_column_names(spark, tmpdir):
+    """Key and value columns whose names are not Python identifiers
+    ('class', 'my val') reach the fold under their own names."""
+    schema = "class string, `my val` int, ts timestamp"
+
+    def write(rows, n):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "overwrite").parquet(f"{tmpdir}/in/b{n}")
+
+    write([("a", 1, t("00:00:10")), ("a", 2, t("00:00:40"))], 0)
+    src = spark.readStream.schema(schema).parquet(f"{tmpdir}/in/*")
+    out = suppress.suppress_bounded_distributed(
+        src, key_cols=["class"], ts_col="ts", window="1 minute",
+        agg={"n": "count", "tot": ("sum", "my val")}, n_buckets=2)
+    q = (out.writeStream.outputMode("append").format("memory")
+         .queryName("sup_names")
+         .option("checkpointLocation", f"{tmpdir}/ckpt_names").start())
+    try:
+        q.processAllAvailable()
+        write([("b", 5, t("00:02:30"))], 1)
+        q.processAllAvailable()
+        rows = {(r["class"], r.n, r.tot) for r in spark.sql(
+            "SELECT * FROM sup_names").collect()}
+        assert rows == {("a", 2, 3.0)}
+    finally:
+        q.stop()
+
+
 def test_suppress_distributed_emit_early_when_full(spark, tmpdir):
     """emitEarlyWhenFull: a third distinct (key, window) entry in a
     1-bucket buffer with max_records=2 force-evicts the earliest."""
@@ -1255,6 +1283,136 @@ def test_interval_ms_grammar():
     for bad in ("1.5 hours", "10 fortnights", "seconds", ""):
         with pytest.raises(ValueError):
             interval_ms(bad)
+
+
+class _FakeGroupState:
+    """The slice of pyspark's GroupState that event_time_fold touches,
+    recording every call."""
+
+    def __init__(self, blob=None, wm=0, timed_out=False):
+        self.blob, self.wm, self.hasTimedOut = blob, wm, timed_out
+        self.removed, self.timer = False, None
+
+    @property
+    def exists(self):
+        return self.blob is not None
+
+    @property
+    def get(self):
+        return (self.blob,)
+
+    def getCurrentWatermarkMs(self):
+        return self.wm
+
+    def update(self, row):
+        self.blob = row[0]
+
+    def remove(self):
+        self.blob, self.removed = None, True
+
+    def setTimeoutTimestamp(self, ms):
+        self.timer = ms
+
+
+def _fold_fn(step, init):
+    """The per-key function event_time_fold hands to Spark, captured
+    from a stand-in DataFrame: no Spark job runs."""
+    from kafkadirect_spark.streaming.util import event_time_fold
+
+    captured = {}
+
+    class _Df:
+        def withWatermark(self, ts_col, grace):
+            captured["watermark"] = (ts_col, grace)
+            return self
+
+        def groupBy(self, *keys):
+            return self
+
+        def applyInPandasWithState(self, fn, out, state, mode, timeout):
+            captured.update(fn=fn, state=state, mode=mode)
+            return self
+
+    event_time_fold(_Df(), ["k"], "ts", "5 seconds", "k string", init, step)
+    assert captured["watermark"] == ("ts", "5 seconds")
+    assert captured["state"] == "state string"
+    assert captured["mode"] == "append"
+    return captured["fn"]
+
+
+def test_event_time_fold_protocol():
+    """The skeleton's contract with each operator's step: a timeout
+    passes pdf=None, a None state removes the key, a due below the
+    watermark arms at wm + 1, due=None stores the state with no timer,
+    and rows are emitted only when non-empty."""
+    import json
+
+    calls = []
+
+    def step(key, st, pdf, wm):
+        calls.append((key, dict(st), pdf, wm))
+        return st.get("next", st), st.get("due"), st.get("rows", [])
+
+    fn = _fold_fn(step, init=lambda: {"fresh": 1})
+
+    # timeout: pdf is None exactly here; due below the watermark is
+    # armed at wm + 1 and the re-encoded state is stored
+    gs = _FakeGroupState(json.dumps({"due": 3}), wm=10, timed_out=True)
+    assert list(fn(("a",), iter([]), gs)) == []
+    assert calls[-1][2] is None and calls[-1][3] == 10
+    assert gs.timer == 11 and json.loads(gs.blob) == {"due": 3}
+    # a due above the watermark is armed as given
+    gs = _FakeGroupState(json.dumps({"due": 50}), wm=10, timed_out=True)
+    list(fn(("a",), iter([]), gs))
+    assert gs.timer == 50
+
+    # data call on a fresh key: init() seeds the state; pdf is the
+    # non-empty chunks concatenated in arrival order, unsorted
+    gs = _FakeGroupState(wm=7)
+    chunks = [pd.DataFrame({"v": [3, 1]}), pd.DataFrame({"v": []}),
+              pd.DataFrame({"v": [2]})]
+    assert list(fn(("b",), iter(chunks), gs)) == []
+    key, st, pdf, wm = calls[-1]
+    assert key == ("b",) and st == {"fresh": 1} and wm == 7
+    assert pdf["v"].tolist() == [3, 1, 2]
+    # due=None: the state is updated and no timer is armed
+    assert json.loads(gs.blob) == {"fresh": 1} and gs.timer is None
+
+    # a None state calls remove(); non-empty rows are yielded
+    gs = _FakeGroupState(json.dumps({"next": None, "rows": [{"k": "c"}]}),
+                         wm=0, timed_out=True)
+    out = list(fn(("c",), iter([]), gs))
+    assert gs.removed and gs.timer is None
+    assert len(out) == 1 and out[0].to_dict("records") == [{"k": "c"}]
+
+
+def test_epoch_ms_floors_nanoseconds():
+    from kafkadirect_spark.streaming.util import epoch_ms
+
+    s = pd.Series([pd.Timestamp("1970-01-01 00:00:00.0019"),
+                   pd.Timestamp("1969-12-31 23:59:59.9995"),
+                   pd.Timestamp("2024-01-01 00:00:01")])
+    assert epoch_ms(s).tolist() == [1, -1, 1_704_067_201_000]
+    assert epoch_ms(s).tolist() == [int(pd.Timestamp(x).value // 1_000_000)
+                                    for x in s]
+
+
+def test_stateful_operators_share_one_state_skeleton():
+    """Only the skeleton (util.py) and the public Processor API
+    wrapper (transform.py) call applyInPandasWithState: every other
+    streaming operator builds on event_time_fold."""
+    import ast
+    import pathlib
+
+    import kafkadirect_spark.streaming as pkg
+
+    callers = set()
+    for path in pathlib.Path(pkg.__file__).parent.glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Attribute)
+                    and node.attr == "applyInPandasWithState"):
+                callers.add(path.name)
+    assert callers == {"util.py", "transform.py"}
 
 
 def test_streaming_windowed_topk_final_ranks(spark, tmpdir):

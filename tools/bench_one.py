@@ -3,11 +3,11 @@ each expensive query with the noop sink so you time the computation,
 not the sink — and not its neighbors).
 
 Usage:  python tools/bench_one.py [-n REPS] [--explain DIR] suite [suite ...]
-        python tools/bench_one.py --top N        # N slowest from BENCH_PLANS order
 
-Uses exactly the bench's own suite callables (bench.build_suites) at
-$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]; prints per-rep and
-best-of timings, and optionally dumps .explain("formatted") per suite.
+Uses exactly the bench's own suite callables (bench.build_suites)
+and timing loop (bench.run) at $SPARK_GRAFT_SF_DIR on
+local[$SPARK_GRAFT_CPUS]; prints per-rep and best-of timings, and
+optionally dumps .explain("formatted") per suite.
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,7 +30,6 @@ def main() -> int:
     args = ap.parse_args()
 
     import bench
-    from kafkadirect_spark.functions.dedup import release_caches
     from kafkadirect_spark.session import get_spark
     from kafkadirect_spark.sources.batch import load_table
     from kafkadirect_spark.testing import explain_formatted
@@ -47,25 +45,17 @@ def main() -> int:
         print(f"unknown suites: {unknown}; known: {sorted(all_suites)}")
         return 1
 
+    def dump(name, df):
+        os.makedirs(args.explain, exist_ok=True)
+        path = os.path.join(args.explain, f"{name}{args.suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(explain_formatted(df))
+
     load_table(spark, sf_dir, "lineitem").count()  # JVM warmup
 
     for name in args.suites:
-        fn = all_suites[name]
-        times = []
-        for i in range(args.reps):
-            spark.sparkContext.setJobDescription(f"{name} rep{i}")
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-            if i == 0 and args.explain and name != "consumeproduce":
-                os.makedirs(args.explain, exist_ok=True)
-                path = os.path.join(args.explain,
-                                    f"{name}{args.suffix}.txt")
-                with open(path, "w") as fh:
-                    fh.write(explain_formatted(df))
-            release_caches()
-        spark.sparkContext.setJobDescription(None)
+        times = bench.run(spark, sf_dir, {name: all_suites[name]}, args.reps,
+                          dump if args.explain else None)[name]
         print(f"{name:32s} best={min(times):7.3f}  "
               + " ".join(f"{t:.3f}" for t in times))
     return 0
