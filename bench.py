@@ -24,70 +24,61 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _sample_weighted_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import curation, text
-    from kafkadirect_spark.sources.batch import load_table
-    docs = load_table(spark, sf_dir, "documents")
-    sized = docs.select("doc_id",
-                        text.bpe_token_count("text").cast("long")
-                        .alias("w"))
-    return curation.sample_weighted_n(sized, "doc_id", "w", 1000)
+from pyspark.sql import functions as F  # noqa: E402
 
+from kafkadirect_spark.functions import (  # noqa: E402
+    curation, dedup, multimodal, retrieval, sketch, timeseries, wordpiece)
+from kafkadirect_spark.functions.graph import local_clustering  # noqa: E402
+from kafkadirect_spark.functions.text import token_count  # noqa: E402
+from kafkadirect_spark.plans import QUERIES  # noqa: E402
+from kafkadirect_spark.plans.queries import stream_count  # noqa: E402
+from kafkadirect_spark.sources.batch import load_table  # noqa: E402
 
-def _sample_weighted_group_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import curation, text
-    from kafkadirect_spark.sources.batch import load_table
-    docs = load_table(spark, sf_dir, "documents")
-    sized = docs.select("lang", "doc_id",
-                        text.bpe_token_count("text").cast("long")
-                        .alias("w"))
-    return curation.sample_weighted_n_per_group(sized, "lang",
-                                                "doc_id", "w", 200)
+# Bench-only shapes: each extras suite below has no registered query
+# of its name.  Every other suite runs its registered query itself.
 
 
 def _contamination_report_suite(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from kafkadirect_spark.functions import curation
-    from kafkadirect_spark.sources.batch import load_table
     docs = load_table(spark, sf_dir, "documents")
     return curation.contamination_report(
         docs.filter(F.col("doc_id") % 10 != 0),
         docs.filter(F.col("doc_id") % 10 == 0), "text", "doc_id")
 
 
-def _theil_sen_suite(spark, sf_dir):
-    # robust per-user trend: capped pair join + group windows
-    from kafkadirect_spark.functions import timeseries
-    from kafkadirect_spark.sources.batch import load_table
+def _theil_sen_per_user_suite(spark, sf_dir):
+    # pins per-user_id groups (registered theil_sen: per event_type)
     ev = load_table(spark, sf_dir, "events")
     return timeseries.theil_sen_milli(ev, "user_id", "ts", "value",
                                       max_points=16,
                                       order_break_col="event_id")
 
 
-def _cusum_suite(spark, sf_dir):
-    # per-user sequential changepoint — prefix-sum
-    # CUSUM closed form, group-partitioned windows only
-    from kafkadirect_spark.functions import timeseries
-    from kafkadirect_spark.sources.batch import load_table
+def _cusum_per_user_suite(spark, sf_dir):
+    # pins per-user_id groups (registered cusum_changepoint: per event_type)
     ev = load_table(spark, sf_dir, "events")
     return timeseries.cusum_changepoint_milli(
         ev, "user_id", "ts", "value", h_milli=20_000,
         order_break_col="event_id")
 
 
+def _twap_per_user_suite(spark, sf_dir):
+    # pins per-user_id groups (registered twap: per event_type)
+    ev = load_table(spark, sf_dir, "events")
+    return timeseries.twap_milli(ev, "user_id", "ts", "value",
+                                 "2024-01-01", "2024-01-31",
+                                 order_break_col="event_id")
+
+
 def _acf_suite(spark, sf_dir):
     # per-user rank-lag autocorrelation —
     # one corpus exchange, pure window aggregates, DECIMAL(38,0)
     # accumulation
-    from kafkadirect_spark.functions import timeseries
-    from kafkadirect_spark.sources.batch import load_table
     ev = load_table(spark, sf_dir, "events")
     return timeseries.acf_milli(ev, "user_id", "ts", "value",
                                 lags=(1, 2, 4, 8), max_points=512,
@@ -97,8 +88,6 @@ def _acf_suite(spark, sf_dir):
 def _seasonal_profile_suite(spark, sf_dir):
     # classical decomposition + seasonal
     # strength — one corpus exchange, pure window aggregates
-    from kafkadirect_spark.functions import timeseries
-    from kafkadirect_spark.sources.batch import load_table
     ev = load_table(spark, sf_dir, "events")
     return timeseries.seasonal_profile_milli(
         ev, "user_id", "ts", "value", period=5, max_points=512,
@@ -111,51 +100,15 @@ def _mmr_suite(spark, sf_dir):
     # Like consumeproduce, the measured work happens inside fn (the
     # pool collect + greedy); the returned frame is the k-row result,
     # so its fingerprint pins a LocalTableScan shape.
-    from kafkadirect_spark.functions import retrieval
-    from kafkadirect_spark.sources.batch import load_table
     emb = load_table(spark, sf_dir, "embeddings")
     return retrieval.mmr_diversify_topk(emb, "vec_id", "embedding",
                                         probe_id=7, n=20, k=5)
-
-
-def _twap_suite(spark, sf_dir):
-    # LOCF time-weighted mean — one group-partitioned
-    # lead window + one map-side-combined aggregate
-    from kafkadirect_spark.functions import timeseries
-    from kafkadirect_spark.sources.batch import load_table
-    ev = load_table(spark, sf_dir, "events")
-    return timeseries.twap_milli(ev, "user_id", "ts", "value",
-                                 "2024-01-01", "2024-01-31",
-                                 order_break_col="event_id")
-
-
-def _contamination_spans_suite(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from kafkadirect_spark.functions import curation
-    from kafkadirect_spark.sources.batch import load_table
-    docs = load_table(spark, sf_dir, "documents")
-    return curation.contamination_spans(
-        docs.filter(F.col("doc_id") % 10 != 0),
-        docs.filter(F.col("doc_id") % 10 == 0), "text", "doc_id")
-
-
-def _basket_pairs_suite(spark, sf_dir):
-    # order/part co-occurrence pairs — basket-keyed
-    # equi self-join bounded by basket size, one pair-count exchange
-    from kafkadirect_spark.functions import basket
-    from kafkadirect_spark.sources.batch import load_table
-    li = load_table(spark, sf_dir, "lineitem")
-    return basket.basket_pairs_topk(li, "l_orderkey", "l_partkey",
-                                    k=20, min_support=2)
 
 
 def _media_gif_features_suite(spark, sf_dir):
     # unregistered bench-only synth_features shape: executor-side GIF
     # synthesis -> sub-block LZW decode -> palette expansion ->
     # integer features, zero shuffles
-    from kafkadirect_spark.functions import multimodal
-    from kafkadirect_spark.sources.batch import load_table
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
     return multimodal.synth_features(ids, "doc_id", kind="gif")
 
@@ -165,15 +118,11 @@ def _media_png_features_suite(spark, sf_dir):
     # synthesis (filter cycles id % 5) -> CRC-verified chunk walk ->
     # zlib inflate -> all-five-filter unfilter -> integer features,
     # zero shuffles
-    from kafkadirect_spark.functions import multimodal
-    from kafkadirect_spark.sources.batch import load_table
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
     return multimodal.synth_features(ids, "doc_id", kind="png")
 
 
 def _wordpiece_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import wordpiece
-    from kafkadirect_spark.sources.batch import load_table
     docs = load_table(spark, sf_dir, "documents")
     merges = wordpiece.learn_wordpiece(docs, "text", n_merges=12,
                                        min_count=2,
@@ -191,8 +140,6 @@ def _edit_verify_suite(spark, sf_dir):
     # verification stage's plan is what this row pins; candidate
     # QUALITY deciding verification cost is exactly the operator's
     # documented cost envelope (candidates × max_chars²).
-    from kafkadirect_spark.functions import dedup
-    from kafkadirect_spark.sources.batch import load_table
     docs = load_table(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures(docs, "text", "doc_id")
     cand = dedup.lsh_candidate_pairs(sigs, "doc_id")
@@ -200,34 +147,7 @@ def _edit_verify_suite(spark, sf_dir):
                                    max_dist_milli=500, max_chars=256)
 
 
-def _vocab_coverage_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import curation
-    from kafkadirect_spark.sources.batch import load_table
-    return curation.vocab_coverage(
-        load_table(spark, sf_dir, "documents"), "text",
-        ks=(100, 1000, 10000, 100000))
-
-
-def _exactsubstr_incr_suite(spark, sf_dir):
-    # the ingest shape: every-20th doc is the new batch, the rest the
-    # accepted index (the incremental_lsh split) — pins the
-    # distinct-hash index exchange + semi/anti membership plan
-    from pyspark.sql import functions as F
-
-    from kafkadirect_spark.functions import dedup
-    from kafkadirect_spark.sources.batch import load_table
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.exactsubstr_incremental(
-        docs.filter(F.col("doc_id") % 20 == 0),
-        docs.filter(F.col("doc_id") % 20 != 0), "text", "doc_id")
-
-
 def _weighted_quantiles_grouped_suite(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from kafkadirect_spark.functions import sketch
-    from kafkadirect_spark.functions.text import token_count
-    from kafkadirect_spark.sources.batch import load_table
     docs = load_table(spark, sf_dir, "documents")
     return sketch.weighted_quantiles_grouped(
         docs, "lang", F.col("n_chars"), token_count("text"),
@@ -235,47 +155,18 @@ def _weighted_quantiles_grouped_suite(spark, sf_dir):
 
 
 def _local_clustering_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import dedup
-    from kafkadirect_spark.functions.graph import local_clustering
-    from kafkadirect_spark.sources.batch import load_table
     docs = load_table(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures(docs, "text", "doc_id")
     return local_clustering(dedup.lsh_candidate_pairs(sigs, "doc_id"))
-
-
-def _waterfill_suite(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from kafkadirect_spark.functions import curation
-    from kafkadirect_spark.sources.batch import load_table
-    totals = (load_table(spark, sf_dir, "documents")
-              .groupBy("lang")
-              .agg(F.sum("n_chars").cast("long").alias("avail")))
-    return curation.token_waterfill(totals, "lang", "avail",
-                                    budget=10_000_000)
-
-
-def _funnel_suite(spark, sf_dir):
-    from kafkadirect_spark.functions import behavior
-    from kafkadirect_spark.sources.batch import load_table
-    return behavior.funnel_steps(
-        load_table(spark, sf_dir, "events"), "user_id", "ts",
-        "event_type", ["signup", "view", "click", "purchase"])
 
 
 def build_suites() -> tuple[dict, dict]:
     """The (reference suites, extra suites) tables — shared between
     ``main`` and tools/bench_one.py so a single suite can be re-measured
     in isolation with exactly the bench's own callables."""
-    from kafkadirect_spark.plans import QUERIES
-    from kafkadirect_spark.plans.queries import stream_count as _stream_count_q
-    from kafkadirect_spark.sources.batch import load_table
-
     # Suite → query shape (BASELINE.md "BENCH mapping" table).
     def consume(spark, sf):
         return load_table(spark, sf, "lineitem")
-
-    import tempfile
 
     out_dir = tempfile.mkdtemp(prefix="kds-bench-")
 
@@ -293,7 +184,7 @@ def build_suites() -> tuple[dict, dict]:
         "consume": consume,
         "consumeproduce": consumeproduce,
         "streamprocess": QUERIES["filter_project"],
-        "streamcount": _stream_count_q,
+        "streamcount": stream_count,
         "streamcountwindowed": QUERIES["windowed_count_tumbling"],
         "streamtablejoin": QUERIES["join_stream_table"],
         "streamstreamjoin": QUERIES["join_interval_inner"],
@@ -420,7 +311,7 @@ def build_suites() -> tuple[dict, dict]:
         # is the O(n·m) cost envelope) and the join-free
         # count-of-counts coverage curve
         "dedup_edit_verify": _edit_verify_suite,
-        "vocab_coverage": _vocab_coverage_suite,
+        "vocab_coverage": QUERIES["vocab_coverage"],
         # wordpiece: third tokenizer family — scored-merge training on
         # the bounded type table + the longest-match mapInPandas encode
         "wordpiece_pieces": _wordpiece_suite,
@@ -429,19 +320,19 @@ def build_suites() -> tuple[dict, dict]:
         "similarity_ivf_pq": QUERIES["similarity_ivf_pq"],
         # integer systematic weighted sampling (two-phase shard
         # prefix sums + one bounded broadcast)
-        "sample_weighted": _sample_weighted_suite,
+        "sample_weighted": QUERIES["sample_weighted"],
         # IVFADC+R (the ivf_pq plan + one shortlist-sized refinement
         # join and window), the stratified weighted sampler (per-
         # (group, shard) partitioned prefix sums), and the exact
         # per-eval-doc contamination audit (corpus streams through
         # broadcast semi-join, nothing corpus-sized shuffles)
         "similarity_ivf_pq_rerank": QUERIES["similarity_ivf_pq_rerank"],
-        "sample_weighted_group": _sample_weighted_group_suite,
+        "sample_weighted_group": QUERIES["sample_weighted_group"],
         "contamination_report": _contamination_report_suite,
         # span-level leakage (same broadcast semi-join, plus
         # doc-partitioned island windows) and the media round-trip
         # feature passes (mapInPandas, zero shuffles)
-        "contamination_spans": _contamination_spans_suite,
+        "contamination_spans": QUERIES["contamination_spans"],
         "media_image_features": QUERIES["media_image_features"],
         "media_png_features": _media_png_features_suite,
         "media_gif_features": _media_gif_features_suite,
@@ -450,7 +341,7 @@ def build_suites() -> tuple[dict, dict]:
         # redaction + Luhn over synthesized injections
         "pii_scrub": QUERIES["pii_scrub"],
         # market-basket pair mining over lineitem
-        "basket_pairs": _basket_pairs_suite,
+        "basket_pairs": QUERIES["basket_pairs"],
         # alignment-free ExactSubstr dedup (one gram-hash exchange +
         # doc-partitioned island windows + row-local HOF rebuild), the
         # KMV corpus-slice Jaccard matrix (one (slice, hash) distinct +
@@ -458,23 +349,23 @@ def build_suites() -> tuple[dict, dict]:
         # hybrid BM25 ∪ cosine RRF (two bounded retrievals, ≤ 2·topn-row
         # fusion)
         "dedup_exactsubstr": QUERIES["dedup_exactsubstr"],
-        "dedup_exactsubstr_incr": _exactsubstr_incr_suite,
+        "dedup_exactsubstr_incr": QUERIES["dedup_exactsubstr_incr"],
         "kmv_slice_matrix": QUERIES["kmv_slice_matrix"],
         "hybrid_rrf": QUERIES["hybrid_rrf"],
         # behavioral analytics over events: the funnel's filtered-agg
         # cascade (one narrow user exchange per step, zero windows)
         # and the path miner's single user-partitioned lead window +
         # TakeOrdered
-        "funnel_steps": _funnel_suite,
+        "funnel_steps": QUERIES["funnel_steps"],
         "path_topk": QUERIES["path_topk"],
         "attribution_last_touch": QUERIES["attribution_last_touch"],
-        "theil_sen": _theil_sen_suite,
+        "theil_sen_per_user": _theil_sen_per_user_suite,
         # sequential changepoint over per-user series
-        "cusum_changepoint": _cusum_suite,
+        "cusum_changepoint_per_user": _cusum_per_user_suite,
         "acf": _acf_suite,
         "seasonal_profile": _seasonal_profile_suite,
         # LOCF time-weighted average over the window
-        "twap": _twap_suite,
+        "twap_per_user": _twap_per_user_suite,
         # MMR diversified retrieval over int8 dots
         "mmr_diversify": _mmr_suite,
         # exact triangle census over the LSH candidate graph:
@@ -485,7 +376,7 @@ def build_suites() -> tuple[dict, dict]:
         "graph_local_clustering": _local_clustering_suite,
         # max-min fair budget allocation: one corpus agg + windows
         # over the |strata|-row totals frame
-        "token_waterfill": _waterfill_suite,
+        "token_waterfill": QUERIES["token_waterfill"],
         # perceptual image near-dup over real rasters (aHash + band
         # buckets; one (band, byte) exchange, never all-pairs)
         "media_phash_pairs": QUERIES["media_phash_pairs"],
@@ -550,7 +441,6 @@ def run(spark, sf_dir: str, fns: dict[str, callable], reps: int,
 
 def main() -> None:
     from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("kafkadirect-bench")

@@ -149,7 +149,7 @@ def frame_sample(media: DataFrame, every_n: int = 2) -> DataFrame:
     return media.mapInPandas(batches, schema=out_schema)
 
 
-def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads: fills the
     decoded width/height/n_frames metadata and a per-payload checksum
     feature.  Arrow-batched; one Python roundtrip per record batch,

@@ -177,8 +177,8 @@ def windows_oracle_sql(budget: int, stride: int,
     """
 
 
-def unigram_eval_oracle_sql(by: str, vocab_size: int, budget_unused=None,
-                            rounds: int = 2, max_piece_len: int = 8,
+def unigram_eval_oracle_sql(by: str, vocab_size: int, rounds: int = 2,
+                            max_piece_len: int = 8,
                             min_count: int = 2,
                             max_word_types: int = 1 << 16,
                             seed_factor: int = 4) -> str:

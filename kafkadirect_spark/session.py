@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "kafkadirect-spark",
@@ -66,6 +68,11 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers unpickle UDFs that reference package functions
+        # by module, so they must import kafkadirect_spark wherever the
+        # driver was started; Spark merges this with the workers' own
+        # PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     # Diagnostic knob (guide §1/§7): with no UI in headless sandboxes,
     # the event log is the only way to attribute wall time to jobs/

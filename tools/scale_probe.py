@@ -1,1152 +1,465 @@
-"""Scale probe — measure how the heavy operators grow with corpus
-size, reproducibly.
+"""Scale probe — how bench suites and the heavy operators grow with
+corpus size, reproducibly.
 
-Two growth modes:
+Generic mode times any bench suite or registered query
+(``bench.build_suites()`` and ``QUERIES``) over replicated copies of
+the sf directory through ``bench.run``, the loop bench.py times with
+(parquet scan, noop sink):
 
-- **replicate** (default): union id-shifted copies of the corpus
-  (distinct doc_ids, same text).  Every duplicate relationship is
-  replicated too, so cross-replica duplicate/contamination pairs grow
-  ~k² — faster than any organic corpus; see SCALE.md for the
-  interpretation caveats.
-- **organic** (``--organic``): replicas beyond the first get every
-  word suffixed with a per-replica tag, making their text (and all
-  its shingles) globally fresh while preserving the length/word-count
-  distribution and each replica's INTERNAL duplicate structure.  The
-  corpus-wide duplicate rate stays fixed as the corpus grows — the
-  growth curve a real corpus shows — so near-linear scaling here is
-  meaningful, not an artifact.
+    python tools/scale_probe.py [--organic] [--ops a,b,c] [--start N]
+        [sf_dir] [max_repl]
 
-Prints one JSON line per (operator, replication):
-  {"op": "...", "mode": "...", "repl": N, "docs": M, "sec": T}
-
-Usage:  python tools/scale_probe.py [--organic] [--ops a,b,c]
-            [--start N] [sf_dir] [max_repl]
-
-``--ops`` restricts to a comma-separated probe subset; ``--start``
-skips replication factors below N (e.g. ``--start 64 ... 256`` runs
-just the 64× and 256× points, giving a same-session step ratio
+It prints one JSON line per (suite, replication factor):
+  {"op": "...", "mode": "replicate|organic", "repl": N, "docs": M,
+   "sec": T}
+Factors run 1, 4, 16, ... up to ``max_repl``; ``--start`` skips those
+below N (``--start 64 ... 256`` gives a same-session step ratio
 without re-measuring the small points).
+
+``replicate`` writes ``k`` id-shifted replicas of documents, events,
+lineitem and embeddings as parquet into a scratch sf directory (the
+other tables are linked unchanged).  Tag schemes:
+
+- ``none`` (default): exact copies under fresh ids.  Every duplicate
+  relationship replicates too, so cross-replica duplicate pairs grow
+  ~k², faster than any organic corpus.
+- ``alnum`` (``--organic``): replica i > 0 suffixes every alphanumeric
+  run of the text with ``q<i>``, offsets event values per replica and
+  shifts one embedding dimension.  The tag survives ``text.tokens``,
+  so token counts per doc are unchanged while every word, shingle and
+  event series is fresh: the corpus-wide duplicate rate stays fixed as
+  the corpus grows.
+- ``fan``: every word of every replica gets an
+  ``x<xxhash64(word, doc_id) % fan>`` suffix, minting ~31·fan word
+  types: type tables far beyond what per-replica tags reach.
+
+Bespoke probes report what a suite timing cannot (a recall, a phase
+split, a parameter sweep), each over the helper's output:
+
+    python tools/scale_probe.py --probe NAME [sf_dir]
+
+with NAME one of semdedup, ivf_pq, bpe, bpe_dist, unigram, unigram_big,
+wordpiece, vocab_coverage, nb_classes, sax.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: E402
+
+import bench  # noqa: E402
+from kafkadirect_spark.functions import (  # noqa: E402
+    bpe, curation, similarity, timeseries, unigram, wordpiece)
+from kafkadirect_spark.functions.text import tokens  # noqa: E402
+from kafkadirect_spark.sources.batch import TABLES, load_table  # noqa: E402
+
+SHIFT = 10_000_000  # replica i adds i * SHIFT to every id column
+_IDS = {"documents": ("doc_id",), "events": ("event_id", "user_id"),
+        "lineitem": ("l_orderkey",), "embeddings": ("vec_id",)}
 
 
-def _replicate_embeddings(base, repl: int):
-    """Union direction-perturbed copies: one shifted dimension per
-    replica changes the cosine DIRECTION (a uniform scale would not)
-    while keeping cluster geometry balanced.  Shared by every
-    embedding probe so the perturbation scheme cannot drift between
-    probes."""
-    df = base
-    for i in range(1, repl):
-        copy = (base.withColumn(
-            "vec_id", F.col("vec_id") + F.lit(i * 10_000_000))
-            .withColumn("embedding", F.transform(
-                "embedding",
-                lambda x, j: F.when(j == F.lit(i % 64),
-                                    x + 0.05 * ((i % 7) + 1))
-                              .otherwise(x))))
-        df = df.unionByName(copy)
+def _replica(name: str, df, i: int, tag: str, fan: int):
+    for c in _IDS[name]:
+        df = df.withColumn(c, F.col(c) + i * SHIFT)
+    if tag == "alnum" and i > 0:
+        if name == "documents":
+            df = df.withColumn("text", F.regexp_replace(
+                "text", "([A-Za-z0-9]+)", f"$1q{i}"))
+        if name == "events":
+            df = df.withColumn("value", F.col("value") + float(37 * (i % 11)))
+        if name == "embeddings":
+            # one shifted dimension per replica changes the cosine
+            # direction (a uniform scale would not) while keeping the
+            # cluster geometry balanced
+            df = df.withColumn("embedding", F.transform(
+                "embedding", lambda x, j: F.when(
+                    j == i % 64, (x + 0.05 * (i % 7 + 1)).cast("float"))
+                .otherwise(x)))
+    if tag == "fan" and name == "documents":
+        df = df.withColumn("text", F.concat_ws(" ", F.transform(
+            F.split("text", " "), lambda w: F.concat(
+                w, F.lit("x"),
+                F.pmod(F.xxhash64(w, "doc_id"), F.lit(fan)).cast("string")))))
     return df
 
 
-def semdedup_probe(sf_dir: str = "/root/testdata/sf0.1",
-                   steps: tuple[int, ...] = (1, 4, 16),
-                   base_k: int = 8) -> None:
-    """SemDeDup scale-k probe (VERDICT r6 #5 / r7 #4): replicate the
-    embeddings 1×/4×/16× with direction-perturbed copies (a shifted
-    dimension per replica, so copies are near- but not exact
-    duplicates and clusters stay balanced), and run the prune twice
-    per size:
+def replicate(spark, sf_dir: str, out_dir: str, k: int,
+              tag: str = "none", fan: int = 0) -> str:
+    """Write ``k`` replicas of the four grown tables into ``out_dir``,
+    one append per replica (tag schemes in the module docstring), link
+    the other tables, and return ``out_dir``: an sf directory
+    ``load_table`` reads."""
+    os.makedirs(out_dir, exist_ok=True)
+    for name in TABLES:
+        dst = os.path.join(out_dir, f"{name}.parquet")
+        if name not in _IDS:
+            os.symlink(os.path.abspath(f"{sf_dir}/{name}.parquet"), dst)
+            continue
+        base = load_table(spark, sf_dir, name)
+        for i in range(k):
+            _replica(name, base, i, tag, fan).write.mode("append").parquet(dst)
+    return out_dir
 
-    - **scaled k** (k ∝ data, the paper's operating recipe): cluster
-      size stays ~constant, so total prune work Σ n_c² ≈ cluster·N is
-      LINEAR in corpus size — wall time should track the ~4× data
-      step, not 16×;
-    - **fixed k** (the contrast cell): cluster size grows with the
-      corpus, Σ n_c² ≈ N²/k — wall time should grow ~quadratically,
-      demonstrating that k, not corpus size, is the knob that bounds
-      the cost (cost model at functions/similarity.py semdedup_prune).
-    """
-    from kafkadirect_spark.functions import similarity
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
 
-    spark = get_spark("semdedup-scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "embeddings")
+@contextlib.contextmanager
+def replicas(spark, sf_dir: str, k: int, tag: str = "none", fan: int = 0):
+    """``replicate`` into a temporary directory removed on exit."""
+    with tempfile.TemporaryDirectory(prefix="kds-scale-") as d:
+        yield replicate(spark, sf_dir, d, k, tag, fan)
 
+
+def timed(spark, sf_dir: str, fn, name: str = "probe"):
+    """Seconds of one ``bench.run`` of ``fn(spark, sf_dir)``, and the
+    frame it returned."""
+    got = {}
+    sec = bench.run(spark, sf_dir, {name: fn}, 1,
+                    lambda _, df: got.setdefault("df", df))[name][0]
+    return round(sec, 2), got.get("df")
+
+
+def _emit(**row) -> None:
+    print(json.dumps(row), flush=True)
+
+
+def _n_types(spark, sf_dir: str) -> int:
+    return bpe.word_type_counts(load_table(spark, sf_dir, "documents"),
+                                "text", min_count=2,
+                                max_word_types=1 << 16).count()
+
+
+def semdedup(spark, sf_dir: str = "/root/testdata/sf0.1",
+             steps: tuple[int, ...] = (1, 4, 16), base_k: int = 8) -> None:
+    """SemDeDup at k ∝ data (the paper's recipe: cluster size stays
+    ~constant, so Σ n_c² ≈ cluster·N is linear in corpus size) against
+    a fixed k (cluster size grows with the corpus, Σ n_c² ≈ N²/k grows
+    quadratically) — k, not corpus size, is the knob that bounds the
+    cost (functions/similarity.py semdedup_prune)."""
     for repl in steps:
-        emb = _replicate_embeddings(base, repl).persist()
-        n = emb.count()
-        for mode, k in (("scaled_k", base_k * repl), ("fixed_k", base_k)):
-            t0 = time.perf_counter()
-            similarity.semdedup_prune(emb, "vec_id", "embedding",
-                                      k=k, iters=2) \
-                .write.format("noop").mode("overwrite").save()
-            sec = round(time.perf_counter() - t0, 2)
-            print(json.dumps({"op": "semdedup_prune", "mode": mode,
-                              "repl": repl, "rows": n, "k": k,
-                              "sec": sec}), flush=True)
-        emb.unpersist()
-    spark.stop()
+        with replicas(spark, sf_dir, repl, "alnum") as d:
+            for mode, k in (("scaled_k", base_k * repl), ("fixed_k", base_k)):
+                sec, _ = timed(spark, d, lambda s, sf: (
+                    similarity.semdedup_prune(
+                        load_table(s, sf, "embeddings"), "vec_id",
+                        "embedding", k=k, iters=2)))
+                _emit(op="semdedup_prune", mode=mode, repl=repl, k=k, sec=sec)
 
 
-def pq_probe(sf_dir: str = "/root/testdata/sf0.1",
-             steps: tuple[int, ...] = (1, 4, 16)) -> None:
-    """PQ scale probe: replicate the embeddings with direction-
-    perturbed copies (same scheme as the semdedup probe) and time the
-    full pq_encode (codebook training + code projection).  Cost model:
-    each training iteration is one scan with O(m·k·sub) ≡ O(k·dim)
-    expression ops per row plus a bounded m·k·sub-row collect — wall
-    time should track the data factor linearly, with no growth in
-    driver state."""
-    from kafkadirect_spark.functions import similarity
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
-
-    spark = get_spark("pq-scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "embeddings")
-
-    for repl in steps:
-        emb = _replicate_embeddings(base, repl).persist()
-        n = emb.count()
-        t0 = time.perf_counter()
-        similarity.pq_encode(emb, "vec_id", "embedding",
-                             m=4, k=16, iters=2) \
-            .write.format("noop").mode("overwrite").save()
-        sec = round(time.perf_counter() - t0, 2)
-        print(json.dumps({"op": "pq_encode", "repl": repl, "rows": n,
-                          "m": 4, "k": 16, "sec": sec}), flush=True)
-        emb.unpersist()
-    spark.stop()
-
-
-def ivf_pq_probe(sf_dir: str = "/root/testdata/sf0.1",
-                 n: int = 10,
-                 nprobes: tuple[int, ...] = (1, 2, 4, 8)) -> None:
-    """IVFADC recall + wall probe (VERDICT r11 item 6): at each
-    nprobe, compare ivf_pq_topk's neighbor sets against TWO
-    baselines on the full sf0.1 embeddings —
-
-    * ``recall_vs_blas``: exact cosine top-n (cosine_topk_blas) —
-      end-to-end recall, paying BOTH the PQ quantization loss and
-      the shortlist loss (and the cosine-vs-L2 metric gap on these
-      unnormalized vectors);
-    * ``recall_vs_pq``: full-scan ADC top-n (pq_topk, the same
-      codebooks/metric) — isolates the SHORTLIST loss alone: the
-      fraction of what full ADC would return that the nprobe-bounded
-      inverted lists still reach.
-
-    Walls are printed for all three so the probe shows what the
-    shortlist buys: ivf_pq scoring touches |probed lists| × m code
-    rows per probe vs pq_topk's whole-index ADC scan.  Collects are
-    probe-sized (≤ 64·n rows per arm)."""
-    from kafkadirect_spark.functions import similarity
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
-
-    spark = get_spark("ivf-pq-probe")
-    spark.sparkContext.setLogLevel("ERROR")
+def ivf_pq(spark, sf_dir: str = "/root/testdata/sf0.1", n: int = 10,
+           nprobes: tuple[int, ...] = (1, 2, 4, 8)) -> None:
+    """IVFADC and IVFADC+R recall per nprobe against two baselines:
+    exact cosine top-n (``recall_vs_blas``: the PQ quantization loss,
+    the shortlist loss and the cosine-vs-L2 gap together) and the
+    full-scan ADC top-n over the same codebooks (``recall_vs_pq``: the
+    shortlist loss alone).  Collects are probe-sized (≤ 64·n rows per
+    arm); each arm's wall includes its collect."""
     emb = load_table(spark, sf_dir, "embeddings").persist()
-    emb.count()
     # % 37 keeps the probe set under the 64-probe ADC literal-table
-    # cap at sf0.1 (2000 vectors → 55 probes; % 31 gave 65)
+    # cap at sf0.1 (2000 vectors → 55 probes)
     probes = emb.filter(F.col("vec_id") % 37 == 0)
 
-    def topsets(rows):
+    def topsets(build):
+        t0 = time.perf_counter()
         out: dict[int, set] = {}
-        for r in rows:
+        for r in build().select("vec_id", "neighbor_id").collect():
             out.setdefault(r[0], set()).add(r[1])
-        return out
-
-    t0 = time.perf_counter()
-    blas = topsets(similarity.cosine_topk_blas(
-        emb, "vec_id", "embedding", k=n, probes=probes)
-        .select("vec_id", "neighbor_id").collect())
-    blas_sec = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    full_adc = topsets(similarity.pq_topk(
-        emb, "vec_id", "embedding", probes, n=n, m=4, k=16, iters=2)
-        .select("vec_id", "neighbor_id").collect())
-    pq_sec = round(time.perf_counter() - t0, 2)
-    print(json.dumps({"op": "ivf_pq_recall", "arm": "baselines",
-                      "probes": len(blas), "n": n,
-                      "blas_sec": blas_sec, "pq_full_sec": pq_sec}),
-          flush=True)
+        return out, round(time.perf_counter() - t0, 2)
 
     def recall(got: dict, want: dict) -> float:
         hit = sum(len(got.get(p, set()) & s) for p, s in want.items())
         tot = sum(len(s) for s in want.values())
         return round(hit / tot, 3) if tot else 1.0
 
+    blas, blas_sec = topsets(lambda: similarity.cosine_topk_blas(
+        emb, "vec_id", "embedding", k=n, probes=probes))
+    full, pq_sec = topsets(lambda: similarity.pq_topk(
+        emb, "vec_id", "embedding", probes, n=n, m=4, k=16, iters=2))
+    _emit(op="ivf_pq_recall", arm="baselines", probes=len(blas), n=n,
+          blas_sec=blas_sec, pq_full_sec=pq_sec)
+    ivf = dict(centroid_stride=25, m=4, k=16, iters=2)
     for nprobe in nprobes:
-        t0 = time.perf_counter()
-        got = topsets(similarity.ivf_pq_topk(
-            emb, "vec_id", "embedding", probes, n=n,
-            centroid_stride=25, nprobe=nprobe, m=4, k=16, iters=2)
-            .select("vec_id", "neighbor_id").collect())
-        sec = round(time.perf_counter() - t0, 2)
-        print(json.dumps({"op": "ivf_pq_recall", "nprobe": nprobe,
-                          "n": n, "sec": sec,
-                          "recall_vs_blas": recall(got, blas),
-                          "recall_vs_pq": recall(got, full_adc)}),
-              flush=True)
-        # IVFADC+R arm: same shortlist, exact refinement at refine=4 —
-        # the recall it buys back over raw ADC ranking is the
-        # operator's whole claim
-        t0 = time.perf_counter()
-        rr = topsets(similarity.ivf_pq_rerank(
-            emb, "vec_id", "embedding", probes, n=n, refine=4,
-            centroid_stride=25, nprobe=nprobe, m=4, k=16, iters=2)
-            .select("vec_id", "neighbor_id").collect())
-        rsec = round(time.perf_counter() - t0, 2)
-        print(json.dumps({"op": "ivf_pq_rerank_recall",
-                          "nprobe": nprobe, "n": n, "refine": 4,
-                          "sec": rsec,
-                          "recall_vs_blas": recall(rr, blas),
-                          "recall_vs_pq": recall(rr, full_adc)}),
-              flush=True)
+        for op, fn, extra in (
+                ("ivf_pq_recall", similarity.ivf_pq_topk, {}),
+                ("ivf_pq_rerank_recall", similarity.ivf_pq_rerank,
+                 {"refine": 4})):
+            got, sec = topsets(lambda: fn(emb, "vec_id", "embedding", probes,
+                                          n=n, nprobe=nprobe, **ivf, **extra))
+            _emit(op=op, nprobe=nprobe, n=n, **extra, sec=sec,
+                  recall_vs_blas=recall(got, blas),
+                  recall_vs_pq=recall(got, full))
     emb.unpersist()
-    spark.stop()
 
 
-def bpe_probe(sf_dir: str = "/root/testdata/sf0.1",
+def bpe_split(spark, sf_dir: str = "/root/testdata/sf0.1",
               steps: tuple[int, ...] = (1, 16, 64)) -> None:
-    """BPE training scale probe, two growth regimes per step:
-
-    - ``replicated``: copies share the word types — the type table is
-      CONSTANT while token occurrences grow ×k.  Claim under test:
-      only the word-count pass (one map-side-combined exchange)
-      tracks corpus size; merge learning is corpus-size-independent.
-    - ``organic``: every replica's words are suffix-tagged (fresh
-      types, same distribution) — the type table grows ×k.  Claim:
-      learning cost tracks the TYPE table (the `max_word_types` cap
-      is the knob that bounds it at any corpus size).
-    """
-    from kafkadirect_spark.functions import bpe
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
-
-    spark = get_spark("bpe-scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "documents")
-
-    def replicate(k: int, organic: bool):
-        df = base
-        for i in range(1, k):
-            copy = base.withColumn(
-                "doc_id", F.col("doc_id") + F.lit(i * 10_000_000))
-            if organic:
-                # alphanumeric tag — it must SURVIVE tokenization to
-                # mint fresh word types (a '~i' tag splits off)
-                tag = F.lit(f"q{i}")
-                copy = copy.withColumn(
-                    "text",
-                    F.concat_ws(" ", F.transform(
-                        F.split(F.col("text"), " "),
-                        lambda w: F.concat(w, tag))))
-            df = df.unionByName(copy)
-        return df
-
+    """BPE training's phase split per growth regime: ``replicated``
+    copies share word types (the type table is constant, token
+    occurrences grow ×k), ``organic`` ones mint fresh types (the table
+    grows ×k).  Claim: only the word-count pass tracks corpus size;
+    merge learning tracks the type table, bounded by
+    ``max_word_types``."""
     for repl in steps:
-        for variant in ("replicated", "organic"):
-            docs = replicate(repl, variant == "organic").persist()
-            docs.count()
-            t0 = time.perf_counter()
-            wt = bpe.word_type_counts(docs, "text", min_count=2,
-                                      max_word_types=1 << 16).collect()
-            count_sec = round(time.perf_counter() - t0, 2)
-            t0 = time.perf_counter()
-            merges = bpe._py_learn(
-                [(r["word"], int(r["n"])) for r in wt], 12)
-            learn_sec = round(time.perf_counter() - t0, 3)
-            print(json.dumps({"op": "learn_bpe", "variant": variant,
-                              "repl": repl, "types": len(wt),
-                              "n_merges": len(merges),
-                              "count_sec": count_sec,
-                              "learn_sec": learn_sec}), flush=True)
-            docs.unpersist()
-    spark.stop()
+        for variant, tag in (("replicated", "none"), ("organic", "alnum")):
+            with replicas(spark, sf_dir, repl, tag) as d:
+                t0 = time.perf_counter()
+                wt = bpe.word_type_counts(
+                    load_table(spark, d, "documents"), "text", min_count=2,
+                    max_word_types=1 << 16).collect()
+                count_sec = round(time.perf_counter() - t0, 2)
+                t0 = time.perf_counter()
+                merges = bpe._py_learn([(r["word"], int(r["n"])) for r in wt],
+                                       12)
+                _emit(op="learn_bpe", variant=variant, repl=repl,
+                      types=len(wt), n_merges=len(merges),
+                      count_sec=count_sec,
+                      learn_sec=round(time.perf_counter() - t0, 3))
 
 
-def bpe_dist_probe(sf_dir: str = "/root/testdata/sf0.01",
-                   steps: tuple[int, ...] = (1, 4, 8),
-                   n_merges: int = 200) -> None:
-    """BPE DISTRIBUTED-regime probe at a realistic merge count
-    (VERDICT r8 item 4): ``learn_bpe(mode="distributed")`` end to end
-    — the O(n_merges) job chain (per round: one vocabulary-sized pair
-    count, a 1-row TakeOrdered, a row-local checkpointed rewrite) —
-    over organically-grown type tables.  The claim under test is that
-    per-round cost is flat in the round index (plan depth stays O(1)
-    via the per-round localCheckpoint; without it the nested fold
-    lineage OOMed an 8 GB driver near 25 merges) and tracks only the
-    TYPE table size.  Also cross-checks driver==distributed equality
-    at the full merge count on the 1× corpus."""
-    from kafkadirect_spark.functions import bpe
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
-
-    spark = get_spark("bpe-dist-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "documents")
-
-    def organic(k: int):
-        df = base
-        for i in range(1, k):
-            tag = F.lit(f"q{i}")
-            copy = (base.withColumn(
-                        "doc_id", F.col("doc_id") + F.lit(i * 10_000_000))
-                    .withColumn("text", F.concat_ws(" ", F.transform(
-                        F.split(F.col("text"), " "),
-                        lambda w: F.concat(w, tag)))))
-            df = df.unionByName(copy)
-        return df
+def bpe_dist(spark, sf_dir: str = "/root/testdata/sf0.01",
+             steps: tuple[int, ...] = (1, 4, 8), n_merges: int = 200) -> None:
+    """``learn_bpe(mode="distributed")`` at a realistic merge count
+    over organically grown type tables: per round one vocabulary-sized
+    pair count, a 1-row TakeOrdered and a checkpointed rewrite.  Claim:
+    per-round cost is flat in the round index (the per-round
+    localCheckpoint keeps plan depth O(1); without it the nested fold
+    lineage ran an 8 GB driver out of memory near 25 merges) and tracks
+    only the type table.  Also checks driver == distributed on the 1×
+    corpus."""
+    def learn(mode):
+        return lambda s, sf: bpe.learn_bpe(
+            load_table(s, sf, "documents"), "text", n_merges=n_merges,
+            min_count=2, max_word_types=1 << 16, mode=mode)
 
     for k in steps:
-        docs = organic(k).persist()
-        docs.count()
-        n_types = bpe.word_type_counts(
-            docs, "text", min_count=2, max_word_types=1 << 16).count()
-        t0 = time.perf_counter()
-        m = bpe.learn_bpe(docs, "text", n_merges=n_merges, min_count=2,
-                          max_word_types=1 << 16,
-                          mode="distributed").collect()
-        print(json.dumps({"op": "learn_bpe_distributed", "repl": k,
-                          "types": n_types, "n_merges": len(m),
-                          "requested": n_merges,
-                          "sec": round(time.perf_counter() - t0, 1)}),
-              flush=True)
-        docs.unpersist()
-
-    docs = organic(1).persist()
-    docs.count()
-    md = bpe.learn_bpe(docs, "text", n_merges=n_merges,
-                       mode="driver").collect()
-    mx = bpe.learn_bpe(docs, "text", n_merges=n_merges,
-                       mode="distributed").collect()
-    print(json.dumps({"op": "learn_bpe_regimes_equal",
-                      "n_merges": n_merges,
-                      "equal": [tuple(r) for r in md]
-                      == [tuple(r) for r in mx]}), flush=True)
-    spark.stop()
+        with replicas(spark, sf_dir, k, "alnum") as d:
+            sec, merges = timed(spark, d, learn("distributed"))
+            _emit(op="learn_bpe_distributed", repl=k,
+                  types=_n_types(spark, d), n_merges=merges.count(),
+                  requested=n_merges, sec=sec)
+    md, mx = (learn(m)(spark, sf_dir).collect()
+              for m in ("driver", "distributed"))
+    _emit(op="learn_bpe_regimes_equal", n_merges=n_merges,
+          equal=[tuple(r) for r in md] == [tuple(r) for r in mx])
 
 
-def unigram_probe(sf_dir: str = "/root/testdata/sf0.01",
-                  steps: tuple[int, ...] = (1, 4, 16),
-                  vocab_size: int = 64, rounds: int = 2,
-                  seed_factor: int = 4) -> None:
-    """Unigram-LM trainer scale probe (organic growth: fresh word
-    types per replica, so the type table AND the substring seed space
-    grow ×k).  Claim under test: training wall tracks the TYPE table
-    (the corpus is touched once, in word-type counting); each EM round
-    is one mapInPandas pass over the bounded type table plus an
-    inventory-sized exchange.
-
-    ``--unigram-big`` (VERDICT r9 item 3) is the separate
-    ``unigram_big_probe`` below — suffix-TAG replicas mint types too
-    slowly for a ≥1e5 seed inventory (128 replicas ⇒ only ~14k
-    distinct substrings), so the big regime hash-fans the word types
-    instead."""
-    from kafkadirect_spark.functions import bpe, unigram
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
-
-    spark = get_spark("unigram-scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "documents")
-
-    def organic(k: int):
-        df = base
-        for i in range(1, k):
-            tag = F.lit(f"q{i}")
-            copy = (base.withColumn(
-                        "doc_id", F.col("doc_id") + F.lit(i * 10_000_000))
-                    .withColumn("text", F.concat_ws(" ", F.transform(
-                        F.split(F.col("text"), " "),
-                        lambda w: F.concat(w, tag)))))
-            df = df.unionByName(copy)
-        return df
-
+def unigram_train(spark, sf_dir: str = "/root/testdata/sf0.01",
+                  steps: tuple[int, ...] = (1, 4, 16), vocab_size: int = 64,
+                  rounds: int = 2, seed_factor: int = 4) -> None:
+    """Unigram-LM training over organic replicas (the type table and
+    the substring seed space grow ×k).  Claim: training wall tracks
+    the type table: the corpus is touched once, in word-type counting,
+    and each EM round is one mapInPandas pass over the bounded type
+    table plus an inventory-sized exchange."""
     for k in steps:
-        docs = organic(k).persist()
-        docs.count()
-        n_types = bpe.word_type_counts(
-            docs, "text", min_count=2, max_word_types=1 << 16).count()
-        n_seeds = (bpe.word_type_counts(docs, "text", 2, 1 << 16)
-                   .select(F.explode(F.expr(
-                       "flatten(transform(sequence(1, length(word)), "
-                       "i -> transform(sequence(i, least(length(word), "
-                       "i + 7)), j -> substring(word, i, j - i + 1))))"))
-                       .alias("p"))
-                   .distinct().count())
-        t0 = time.perf_counter()
-        inv = unigram.learn_unigram(docs, "text", vocab_size=vocab_size,
-                                    rounds=rounds, min_count=2,
-                                    seed_factor=seed_factor).count()
-        print(json.dumps({"op": "learn_unigram", "repl": k,
-                          "types": n_types, "seed_space": n_seeds,
-                          "inventory": inv,
-                          "vocab_size": vocab_size, "rounds": rounds,
-                          "seed_factor": seed_factor,
-                          "sec": round(time.perf_counter() - t0, 1)}),
-              flush=True)
-        docs.unpersist()
-    spark.stop()
+        with replicas(spark, sf_dir, k, "alnum") as d:
+            docs = load_table(spark, d, "documents")
+            n_seeds = (bpe.word_type_counts(docs, "text", 2, 1 << 16)
+                       .select(F.explode(F.expr(
+                           "flatten(transform(sequence(1, length(word)), "
+                           "i -> transform(sequence(i, least(length(word), "
+                           "i + 7)), j -> substring(word, i, j - i + 1))))"))
+                           .alias("p"))
+                       .distinct().count())
+            sec, inv = timed(spark, d, lambda s, sf: unigram.learn_unigram(
+                load_table(s, sf, "documents"), "text", vocab_size=vocab_size,
+                rounds=rounds, min_count=2, seed_factor=seed_factor))
+            _emit(op="learn_unigram", repl=k, types=_n_types(spark, d),
+                  seed_space=n_seeds, inventory=inv.count(),
+                  vocab_size=vocab_size, rounds=rounds,
+                  seed_factor=seed_factor, sec=sec)
 
 
-def unigram_big_probe(sf_dir: str = "/root/testdata/sf0.01",
-                      steps: tuple[tuple[int, int], ...] = (
-                          (4, 1024), (16, 4096)),
-                      vocab_size: int = 1024,
-                      seed_factor: int = 100, rounds: int = 2) -> None:
-    """Unigram trainer at a REALISTIC inventory (VERDICT r9 item 3:
-    real tokenizers prune ~1e6 seeds to 32k pieces; the r9 probe
-    stopped at 496 types / vocab 64).  Word types are hash-fanned —
-    every token gets a ``x<xxhash64(word, doc_id) % M>`` suffix over
-    ``k`` corpus replicas, minting ~31·M candidate types whose counts
-    stay >= min_count because k grows with M — so at (16, 4096) the
-    capped type table saturates max_word_types=65536 and the seed
-    inventory exceeds 1e5.  Claims under test at that scale: the
-    seed TakeOrdered cap, the seed_factor·vocab_size-row inventory
-    exchange per EM round, and the ~1e5-entry integer score dict
-    shipped in every segmentation task's closure."""
-    from kafkadirect_spark.functions import bpe, unigram
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
-
-    spark = get_spark("unigram-big-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "documents")
-
-    def fanned(k: int, m: int):
-        df = base
-        for i in range(1, k):
-            df = df.unionByName(base.withColumn(
-                "doc_id", F.col("doc_id") + F.lit(i * 10_000_000)))
-        return df.withColumn("text", F.concat_ws(" ", F.transform(
-            F.split(F.col("text"), " "),
-            lambda w: F.concat(
-                w, F.lit("x"),
-                F.pmod(F.xxhash64(w, F.col("doc_id")),
-                       F.lit(m)).cast("string")))))
-
+def unigram_big(spark, sf_dir: str = "/root/testdata/sf0.01",
+                steps: tuple[tuple[int, int], ...] = ((4, 1024), (16, 4096)),
+                vocab_size: int = 1024, seed_factor: int = 100,
+                rounds: int = 2) -> None:
+    """Unigram training at a realistic inventory (real tokenizers
+    prune ~1e6 seeds to 32k pieces).  Per-replica tags mint types too
+    slowly for that (128 replicas give ~14k distinct substrings), so
+    types are hash-fanned: at (16, 4096) the capped type table
+    saturates max_word_types=65536 and the seed inventory exceeds 1e5.
+    Claims at that scale: the seed TakeOrdered cap, the
+    seed_factor·vocab_size-row inventory exchange per EM round, and
+    the ~1e5-entry integer score dict shipped in every segmentation
+    task's closure."""
     for k, m in steps:
-        docs = fanned(k, m).persist()
-        docs.count()
-        n_types = bpe.word_type_counts(
-            docs, "text", min_count=2, max_word_types=1 << 16).count()
-        t0 = time.perf_counter()
-        inv = unigram.learn_unigram(
-            docs, "text", vocab_size=vocab_size, rounds=rounds,
-            min_count=2, seed_factor=seed_factor).count()
-        print(json.dumps({"op": "learn_unigram_big", "repl": k,
-                          "fan": m, "types": n_types,
-                          "inventory_cap": seed_factor * vocab_size,
-                          "survivors": inv, "vocab_size": vocab_size,
-                          "rounds": rounds,
-                          "sec": round(time.perf_counter() - t0, 1)}),
-              flush=True)
-        docs.unpersist()
-    spark.stop()
+        with replicas(spark, sf_dir, k, "fan", m) as d:
+            sec, inv = timed(spark, d, lambda s, sf: unigram.learn_unigram(
+                load_table(s, sf, "documents"), "text", vocab_size=vocab_size,
+                rounds=rounds, min_count=2, seed_factor=seed_factor))
+            _emit(op="learn_unigram_big", repl=k, fan=m,
+                  types=_n_types(spark, d),
+                  inventory_cap=seed_factor * vocab_size,
+                  survivors=inv.count(), vocab_size=vocab_size,
+                  rounds=rounds, sec=sec)
 
 
-def wordpiece_probe(sf_dir: str = "/root/testdata/sf0.01",
+def wordpiece_train(spark, sf_dir: str = "/root/testdata/sf0.01",
                     steps: tuple[tuple[int, int], ...] = (
                         (1, 0), (4, 1024), (16, 4096)),
                     n_merges: int = 12) -> None:
-    """WordPiece distributed-trainer scale probe (round 11), hash-
-    fanned types exactly like unigram_big_probe: each step mints
-    ~31·M candidate word types over k corpus replicas (m=0 leaves the
-    corpus organic).  Claims under test: per round, the symbol-count
-    and pair-count aggregates stay type-table-bounded, the scored
-    argmax join is bounded by the pair space, DECIMAL(38,0) scoring
-    adds no measurable cost over BPE's raw-count argmax, and the
-    per-round checkpoint keeps plan depth O(1) — so wall per merge
-    round should track the type-table size, not the corpus."""
-    from kafkadirect_spark.functions import bpe, wordpiece
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
-
-    spark = get_spark("wordpiece-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "documents")
-
-    def fanned(k: int, m: int):
-        df = base
-        for i in range(1, k):
-            df = df.unionByName(base.withColumn(
-                "doc_id", F.col("doc_id") + F.lit(i * 10_000_000)))
-        if m == 0:
-            return df
-        return df.withColumn("text", F.concat_ws(" ", F.transform(
-            F.split(F.col("text"), " "),
-            lambda w: F.concat(
-                w, F.lit("x"),
-                F.pmod(F.xxhash64(w, F.col("doc_id")),
-                       F.lit(m)).cast("string")))))
+    """Distributed WordPiece training over hash-fanned types (fan 0
+    leaves the corpus as is).  Claims: per round the symbol-count and
+    pair-count aggregates stay type-table-bounded, the scored argmax
+    join is bounded by the pair space, DECIMAL(38,0) scoring costs
+    nothing measurable over BPE's raw-count argmax, and the per-round
+    checkpoint keeps plan depth O(1), so wall per round tracks the
+    type table, not the corpus.  At fan 0 the driver regime must give
+    the same merges."""
+    def learn(mode):
+        return lambda s, sf: wordpiece.learn_wordpiece(
+            load_table(s, sf, "documents"), "text", n_merges, min_count=2,
+            max_word_types=1 << 16, mode=mode)
 
     for k, m in steps:
-        docs = fanned(k, m).persist()
-        docs.count()
-        n_types = bpe.word_type_counts(
-            docs, "text", min_count=2, max_word_types=1 << 16).count()
-        t0 = time.perf_counter()
-        merges = wordpiece.learn_wordpiece(
-            docs, "text", n_merges, min_count=2,
-            max_word_types=1 << 16, mode="distributed")
-        n_m = merges.count()
-        wall = round(time.perf_counter() - t0, 1)
-        # regime equivalence at the organic point (types fit driver)
-        if m == 0:
-            drv = [tuple(r) for r in wordpiece.learn_wordpiece(
-                docs, "text", n_merges, min_count=2,
-                max_word_types=1 << 16).collect()]
-            dist = [tuple(r) for r in merges.collect()]
-            assert dist == drv, "regime divergence"
-        print(json.dumps({"op": "learn_wordpiece", "repl": k,
-                          "hash_fan": m, "types": n_types,
-                          "merges": n_m, "sec": wall,
-                          "sec_per_round": round(wall / n_merges, 2)}),
-              flush=True)
-        docs.unpersist()
-    spark.stop()
+        with replicas(spark, sf_dir, k, "fan" if m else "none", m) as d:
+            wall, merges = timed(spark, d, learn("distributed"))
+            if m == 0:
+                if merges.collect() != learn("driver")(spark, d).collect():
+                    raise RuntimeError("wordpiece regime divergence")
+            _emit(op="learn_wordpiece", repl=k, hash_fan=m,
+                  types=_n_types(spark, d), merges=merges.count(),
+                  sec=wall,
+                  sec_per_round=round(wall / n_merges, 2))
 
 
-def vocab_coverage_probe(sf_dir: str = "/root/testdata/sf0.01",
-                         steps: tuple[tuple[int, int], ...] = (
-                             (1, 0), (4, 1024), (16, 8192))) -> None:
-    """vocab_coverage scale probe (round 11): hash-fan word types
-    (the tokenizer probes' scheme) and measure the operator's REAL
-    bound — the count-of-counts frame (distinct count values), which
-    the single-partition cumulative window runs over.  Claim: levels
-    ≪ vocabulary (O(√total_tokens) under Zipf), so the walk stays
-    register-ish while the vocabulary grows unbounded; wall tracks
-    the one word-count exchange."""
-    from kafkadirect_spark.functions import curation
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
-    from kafkadirect_spark.functions.text import tokens as _tokens
-
-    spark = get_spark("vocab-coverage-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "documents")
-
-    def fanned(k: int, m: int):
-        df = base
-        for i in range(1, k):
-            df = df.unionByName(base.withColumn(
-                "doc_id", F.col("doc_id") + F.lit(i * 10_000_000)))
-        if m == 0:
-            return df
-        return df.withColumn("text", F.concat_ws(" ", F.transform(
-            F.split(F.col("text"), " "),
-            lambda w: F.concat(
-                w, F.lit("x"),
-                F.pmod(F.xxhash64(w, F.col("doc_id")),
-                       F.lit(m)).cast("string")))))
-
+def vocab_coverage(spark, sf_dir: str = "/root/testdata/sf0.01",
+                   steps: tuple[tuple[int, int], ...] = (
+                       (1, 0), (4, 1024), (16, 8192))) -> None:
+    """vocab_coverage's real bound is the count-of-counts frame
+    (distinct count values) its single-partition cumulative window
+    runs over.  Claim: levels ≪ vocabulary (O(√tokens) under Zipf), so
+    the walk stays register-sized while hash-fanned vocabularies grow;
+    wall tracks the one word-count exchange."""
     for k, m in steps:
-        docs = fanned(k, m).persist()
-        docs.count()
-        vocab = (docs.select(F.explode(_tokens("text")).alias("w"))
-                 .groupBy("w").count())
-        n_vocab = vocab.count()
-        n_levels = vocab.select("count").distinct().count()
-        t0 = time.perf_counter()
-        out = curation.vocab_coverage(
-            docs, "text", ks=(100, 1000, 10000, 100000)).collect()
-        wall = round(time.perf_counter() - t0, 1)
-        print(json.dumps({"op": "vocab_coverage", "repl": k,
-                          "hash_fan": m, "vocab": n_vocab,
-                          "count_levels": n_levels,
-                          "rows": len(out), "sec": wall}),
-              flush=True)
-        docs.unpersist()
-    spark.stop()
+        with replicas(spark, sf_dir, k, "fan" if m else "none", m) as d:
+            vocab = (load_table(spark, d, "documents")
+                     .select(F.explode(tokens("text")).alias("w"))
+                     .groupBy("w").count())
+            sec, out = timed(spark, d, lambda s, sf: curation.vocab_coverage(
+                load_table(s, sf, "documents"), "text",
+                ks=(100, 1000, 10000, 100000)))
+            _emit(op="vocab_coverage", repl=k, hash_fan=m,
+                  vocab=vocab.count(),
+                  count_levels=vocab.select("count").distinct().count(),
+                  rows=out.count(), sec=sec)
 
 
-def nb_probe(sf_dir: str = "/root/testdata/sf0.1",
-             steps: tuple[int, ...] = (1, 4, 16)) -> None:
-    """Naive Bayes classifier scale probe (organic growth: suffix-
-    tagged replicas mint fresh word types AND fresh documents, so both
-    the vocabulary pivot table and the scoring exchange grow).  Claims
-    under test: train+score wall tracks corpus size at-or-under
-    linearly (one exploded train exchange, one vocab-wide join, one
-    doc agg — no pair/class row explosion), and the driver never holds
-    more than C+1 class rows."""
-    from kafkadirect_spark.functions import curation
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
+def nb_classes(spark, sf_dir: str = "/root/testdata/sf0.1",
+               fans: tuple[int, ...] = (1, 4, 16)) -> None:
+    """Naive Bayes over a fixed corpus with C fanned out by
+    sub-labeling lang with doc_id % fan (C = 5·fan).  Claim: a wide
+    taxonomy adds compute, not shuffle — one exploded train exchange,
+    one vocab-sized pivot join and one doc aggregate at every C, with
+    the per-class bits as pivot-column expressions, so wall grows
+    sub-linearly in C."""
+    def labeled(s, sf, fan):
+        return load_table(s, sf, "documents").withColumn("cls", F.concat_ws(
+            "_", "lang", (F.col("doc_id") % fan).cast("string")))
 
-    spark = get_spark("nb-scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "documents")
-
-    def organic(k: int):
-        df = base
-        for i in range(1, k):
-            tag = F.lit(f"q{i}")
-            copy = (base.withColumn(
-                        "doc_id", F.col("doc_id") + F.lit(i * 10_000_000))
-                    .withColumn("text", F.concat_ws(" ", F.transform(
-                        F.split(F.col("text"), " "),
-                        lambda w: F.concat(w, tag)))))
-            df = df.unionByName(copy)
-        return df
-
-    for k in steps:
-        docs = organic(k).persist()
-        n = docs.count()
-        t0 = time.perf_counter()
-        out = curation.nb_classify(
-            docs.filter(F.col("doc_id") % 2 == 0), docs,
-            "doc_id", "text", "lang")
-        out.write.format("noop").mode("overwrite").save()
-        print(json.dumps({"op": "nb_classify", "repl": k, "docs": n,
-                          "sec": round(time.perf_counter() - t0, 1)}),
-              flush=True)
-        docs.unpersist()
-    spark.stop()
-
-
-def nb_classes_probe(sf_dir: str = "/root/testdata/sf0.1",
-                     fans: tuple[int, ...] = (1, 4, 16)) -> None:
-    """NB class-cardinality probe (VERDICT r9 item 4): fixed corpus,
-    C fanned out by sub-labeling lang with doc_id % fan (C = 5·fan,
-    so 5 → 20 → 80 classes).  Claim under test: a wide taxonomy adds
-    COMPUTE, not shuffle — the plan keeps one exploded train exchange,
-    one vocab-sized pivot join and one doc aggregate at every C; the
-    per-class bits are pivot-column expressions (C-way `least` chain),
-    so wall grows sub-linearly in C, never with a C-way row blowup."""
-    from kafkadirect_spark.functions import curation
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
-
-    spark = get_spark("nb-classes-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = load_table(spark, sf_dir, "documents").persist()
-    n = docs.count()
     for fan in fans:
-        labeled = docs.withColumn(
-            "cls", F.concat_ws("_", "lang",
-                               (F.col("doc_id") % fan).cast("string")))
-        c = labeled.select("cls").distinct().count()
-        t0 = time.perf_counter()
-        out = curation.nb_classify(
-            labeled.filter(F.col("doc_id") % 2 == 0), labeled,
-            "doc_id", "text", "cls", max_classes=128)
-        out.write.format("noop").mode("overwrite").save()
-        print(json.dumps({"op": "nb_classify_classes", "fan": fan,
-                          "classes": c, "docs": n,
-                          "sec": round(time.perf_counter() - t0, 1)}),
-              flush=True)
-    docs.unpersist()
-    spark.stop()
+        def fn(s, sf, fan=fan):
+            docs = labeled(s, sf, fan)
+            return curation.nb_classify(docs.filter(F.col("doc_id") % 2 == 0),
+                                        docs, "doc_id", "text", "cls",
+                                        max_classes=128)
+        sec, _ = timed(spark, sf_dir, fn)
+        _emit(op="nb_classify_classes", fan=fan,
+              classes=labeled(spark, sf_dir, fan).select("cls").distinct()
+              .count(), sec=sec)
 
 
-def sax_probe(sf_dir: str = "/root/testdata/sf0.1",
-              steps: tuple[int, ...] = (1, 4, 16)) -> None:
-    """Time-series SAX search scale probe (organic growth: replicas
-    mint FRESH users with value series shifted by a replica-specific
-    offset, so their PAA words differ and bucket sizes track the true
-    collision rate, not the replication factor).  Claims under test:
-    the PAA exchange carries users·segments partial sums (wall tracks
-    the event scan), and pair work stays bucket-bounded."""
-    from kafkadirect_spark.functions import timeseries
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
-
-    spark = get_spark("sax-scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "events")
-
-    def organic(k: int):
-        df = base
-        for i in range(1, k):
-            df = df.unionByName(
-                base.withColumn("user_id",
-                                F.col("user_id") + F.lit(i * 10_000_000))
-                    .withColumn("value",
-                                F.col("value") + F.lit(float(37 * (i % 11)))))
-        return df
-
+def sax(spark, sf_dir: str = "/root/testdata/sf0.1",
+        steps: tuple[int, ...] = (1, 4, 16)) -> None:
+    """SAX search over organic replicas (fresh users with value series
+    offset per replica, so their PAA words differ and bucket sizes
+    track the true collision rate, not the factor).  Claims: the PAA
+    exchange carries users·segments partial sums, and pair work stays
+    bucket-bounded.  ``a4s8`` is the sizing-rule point: 4^8 = 65,536
+    words ≫ users, uncapped, so pair output must stay near the
+    collision bound and wall must track the PAA exchange."""
     for k in steps:
-        ev = organic(k).persist()
-        n = ev.count()
-        for mode, perms, cap, segs in (
-                ("binary_capped", (500,), 64, 6),
-                ("quartile_uncapped", (250, 500, 750), None, 6),
-                # the SIZING-RULE operating point (VERDICT r10 item
-                # 5): alphabet^segments = 4^8 = 65,536 words >> users,
-                # uncapped — pair output must stay near-collision-
-                # bounded and wall must track the PAA exchange, not a
-                # word-saturation quadratic
-                ("discriminating_a4s8", (250, 500, 750), None, 8)):
-            t0 = time.perf_counter()
-            words, pairs, bks = timeseries.sax_pipeline(
-                ev, "user_id", "ts", "value",
-                "2024-01-01", "2024-01-31", n_segments=segs,
-                permilles=perms, max_bucket=cap)
-            n_pairs = pairs.count()
-            n_users = words.count()
-            print(json.dumps({"op": "sax_pipeline", "mode": mode,
-                              "repl": k, "events": n,
-                              "users": n_users, "pairs": n_pairs,
-                              "sec": round(time.perf_counter() - t0,
-                                           1)}),
-                  flush=True)
-        ev.unpersist()
-    spark.stop()
+        with replicas(spark, sf_dir, k, "alnum") as d:
+            for mode, perms, cap, segs in (
+                    ("binary_capped", (500,), 64, 6),
+                    ("quartile_uncapped", (250, 500, 750), None, 6),
+                    ("discriminating_a4s8", (250, 500, 750), None, 8)):
+                frames = {}
+
+                def pairs(s, sf):
+                    frames["words"], frames["pairs"], _ = (
+                        timeseries.sax_pipeline(
+                            load_table(s, sf, "events"), "user_id", "ts",
+                            "value", "2024-01-01", "2024-01-31",
+                            n_segments=segs, permilles=perms,
+                            max_bucket=cap))
+                    return frames["pairs"]
+                sec, _ = timed(spark, d, pairs)
+                _emit(op="sax_pipeline", mode=mode, repl=k,
+                      users=frames["words"].count(),
+                      pairs=frames["pairs"].count(), sec=sec)
 
 
-def main(sf_dir: str = "/root/testdata/sf0.1", max_repl: int = 16,
-         organic: bool = False, ops: list[str] | None = None,
-         start: int = 1) -> None:
-    from kafkadirect_spark.functions import curation, dedup
-    from kafkadirect_spark.functions.dedup import release_caches
-    from kafkadirect_spark.session import get_spark
-    from kafkadirect_spark.sources.batch import load_table
+PROBES = {"semdedup": semdedup, "ivf_pq": ivf_pq, "bpe": bpe_split,
+          "bpe_dist": bpe_dist, "unigram": unigram_train,
+          "unigram_big": unigram_big, "wordpiece": wordpiece_train,
+          "vocab_coverage": vocab_coverage, "nb_classes": nb_classes,
+          "sax": sax}
 
-    spark = get_spark("scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = load_table(spark, sf_dir, "documents")
-    n_base = base.count()
 
-    def replicate(k: int):
-        df = base
-        for i in range(1, k):
-            copy = base.withColumn(
-                "doc_id", F.col("doc_id") + F.lit(i * 10_000_000))
-            if organic:
-                # suffix every word with the replica tag: all shingles
-                # of this replica are fresh (no cross-replica dups),
-                # length/word-count distribution unchanged
-                tag = F.lit(f"~{i}")
-                copy = copy.withColumn(
-                    "text",
-                    F.concat_ws(" ", F.transform(
-                        F.split(F.col("text"), " "),
-                        lambda w: F.concat(w, tag))))
-            df = df.unionByName(copy)
-        return df
+def main(spark, sf_dir: str, max_repl: int, organic: bool,
+         ops: list[str], start: int) -> None:
+    from kafkadirect_spark.plans import QUERIES
 
-    def probe_minhash(docs):
-        sigs = dedup.minhash_signatures(docs, "text", "doc_id")
-        return dedup.lsh_candidate_pairs(sigs, "doc_id")
-
-    def probe_span_dedup(docs):
-        return dedup.span_dedup(docs, "text", "doc_id")
-
-    def probe_cdc(docs):
-        # content-defined chunking dup stats: row-local chunking +
-        # ONE chunk-hash exchange + one doc agg — wall should track
-        # corpus bytes linearly (organic replicas mint fresh chunks)
-        return dedup.cdc_dup_stats(docs, "text", "doc_id")
-
-    def probe_decontaminate(docs):
-        ev = base.filter(F.col("doc_id") % 10 == 0)  # fixed eval set
-        return curation.decontaminate(docs, ev, "text", "doc_id", n=8)
-
-    def probe_importance(docs):
-        return curation.importance_scores(
-            docs, "doc_id", "text", target=F.col("lang") == "en")
-
-    def probe_sketches(docs):
-        # the full report: HLL distinct + histogram quantiles — both
-        # should be scan-bound (register exchanges are constant-size)
-        from kafkadirect_spark.functions import sketch
-        reg = sketch.hll_registers(docs, "doc_id")
-        lens = docs.select(F.length("text").cast("long").alias("n"))
-        h = sketch.hist_registers(lens, "n", 0, 20_000, 200)
-        return sketch.hll_estimate(reg).unionByName(
-            sketch.hist_quantiles(h, [500, 990], 0, 20_000, 200)
-            .select(F.lit(0).cast("long").alias("m"),
-                    F.lit(0).cast("long").alias("nonzero_buckets"),
-                    F.col("q_permille").alias("sum_pow"),
-                    F.col("est_value").alias("est_distinct")))
-
-    def probe_jaccard_prefix(docs):
-        return dedup.jaccard_prefix_pairs(docs, "text", "doc_id", n=3)
-
-    def probe_containment(docs):
-        return dedup.containment_pairs(docs, "text", "doc_id", n=3,
-                                       threshold=0.3, max_doc_freq=50)
-
-    def probe_containment_anti(docs):
-        return dedup.containment_pairs(docs, "text", "doc_id", n=3,
-                                       threshold=0.3, max_doc_freq=50,
-                                       how="anti")
-
-    def probe_incremental(docs):
-        # fixed 5% "daily drop" fraction — the index side grows with
-        # the corpus, the new side with the drop; at scale the cost
-        # should track the index's band rows (one exchange), never
-        # pairs within the index
-        sigs = dedup.minhash_signatures(docs, "text", "doc_id")
-        new = sigs.filter(F.col("doc_id") % 20 == 0)
-        index = sigs.filter(F.col("doc_id") % 20 != 0)
-        return dedup.incremental_lsh_candidates(new, index, "doc_id")
-
-    def probe_surprisal(docs):
-        return curation.surprisal_scores(docs, "doc_id", "text")
-
-    def probe_gopher(docs):
-        return curation.gopher_quality(docs, "doc_id", "text")
-
-    def probe_bigram_surprisal(docs):
-        # held-out form, as registered: LM from the even-id half —
-        # both sides grow with the corpus, the realistic worst case
-        lm = docs.filter(F.col("doc_id") % 2 == 0)
-        return curation.bigram_surprisal_scores(docs, "doc_id", "text",
-                                                lm_df=lm)
-
-    def probe_cluster_split(docs):
-        sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=3)
-        pairs = dedup.lsh_candidate_pairs(sigs, "doc_id")
-        return curation.cluster_safe_split(
-            docs, "doc_id", pairs,
-            {"train": 0.90, "val": 0.05, "test": 0.05})
-
-    def probe_contamination(docs):
-        # FIXED eval set (the base corpus's every-20th doc) audited
-        # against the GROWING corpus — the production shape: the eval
-        # benchmark stays MB-scale while the train side scales; wall
-        # should track the corpus scan, the eval-sided exchanges are
-        # constant
-        ev = base.filter(F.col("doc_id") % 20 == 0)
-        return curation.contamination_report(docs, ev, "text",
-                                             "doc_id", n=8)
-
-    def probe_contamination_spans(docs):
-        # span-level twin of probe_contamination: same fixed eval set
-        # vs the growing corpus; the extra work over the report is
-        # eval-sided only (hit positions + doc-partitioned island
-        # windows), so wall should stay report-shaped — corpus-scan
-        # bound
-        ev = base.filter(F.col("doc_id") % 20 == 0)
-        return curation.contamination_spans(docs, ev, "text",
-                                            "doc_id", n=8)
-
-    def probe_weighted_group(docs):
-        # per-language token budgets over the growing corpus: one
-        # (group, shard) exchange + a |groups|·shards broadcast —
-        # wall should track the corpus scan
-        sized = docs.select("lang", "doc_id",
-                            F.length("text").cast("long").alias("w"))
-        return curation.sample_weighted_n_per_group(
-            sized, "lang", "doc_id", "w", 500)
-
-    def probe_bm25(docs):
-        return curation.bm25_rank(docs, "doc_id", "text",
-                                  ["spark", "dup", "window"], k=15)
-
-    def probe_vocab_drift(docs):
-        return curation.vocab_drift(docs, "text", "lang", "en", "de",
-                                    k=20)
-
-    def probe_skew(docs):
-        from kafkadirect_spark.functions import diagnostics
-        return diagnostics.skew_report(docs, "source", parts=64)
-
-    def probe_exactsubstr(docs):
-        # alignment-free ExactSubstr: organic replicas mint fresh
-        # grams (constant dup density), so wall should track the
-        # gram-hash exchange ∝ corpus tokens; the island windows and
-        # the HOF rebuild are doc-partitioned / row-local
-        return dedup.exactsubstr_report(docs, "text", "doc_id")
-
-    ev_base = load_table(spark, sf_dir, "events")
-
-    def _replicate_events(docs):
-        # mirror the docs ladder's factor (docs is persisted — the
-        # count is cheap); organic user growth: each replica mints
-        # fresh user ids, so per-user event density (the funnel
-        # cascade's and the path window's envelope) stays constant
-        # while users scale
-        k = max(1, docs.count() // n_base)
-        df = ev_base
-        for i in range(1, k):
-            df = df.unionByName(ev_base.withColumn(
-                "user_id", F.col("user_id") + F.lit(i * 10_000_000)))
-        return df
-
-    def probe_funnel(docs):
-        from kafkadirect_spark.functions import behavior
-        return behavior.funnel_steps(
-            _replicate_events(docs), "user_id", "ts",
-            "event_type", ["signup", "view", "click", "purchase"])
-
-    def probe_path_topk(docs):
-        from kafkadirect_spark.functions import behavior
-        return behavior.path_topk(
-            _replicate_events(docs), "user_id", "ts",
-            "event_type", n=3, k=10, order_break_col="event_id")
-
-    def probe_attribution(docs):
-        # last-touch credit assignment: one user-partitioned window
-        # pass + a |types|-row aggregate — the sessionization envelope
-        from kafkadirect_spark.functions import behavior
-        return behavior.attribution_last_touch(
-            _replicate_events(docs), "user_id", "ts", "event_type",
-            "purchase", within_seconds=3600 * 24,
-            order_break_col="event_id")
-
-    def probe_theil_sen(docs):
-        # robust per-user trend: the selection window caps each group
-        # at max_points, so pair work is |groups|*max_points^2 and the
-        # corpus pays only the scan + the group-partitioned window
-        from kafkadirect_spark.functions import timeseries
-        return timeseries.theil_sen_milli(
-            _replicate_events(docs), "user_id", "ts", "value",
-            max_points=16, order_break_col="event_id")
-
-    def probe_cusum(docs):
-        # sequential changepoint: two group-partitioned window passes
-        # + one group-keyed ref join — organic user growth keeps the
-        # per-user window task-local, so wall should track the scan
-        from kafkadirect_spark.functions import timeseries
-        return timeseries.cusum_changepoint_milli(
-            _replicate_events(docs), "user_id", "ts", "value",
-            h_milli=20_000, order_break_col="event_id")
-
-    def probe_video_features(docs):
-        # y4m synth -> real decode -> integer features: zero-shuffle
-        # mapInPandas both ways, wall should be id-count linear
-        from kafkadirect_spark.functions import multimodal
-        return multimodal.video_features(
-            multimodal.synth_media(docs.select("doc_id"), "doc_id",
-                                   kind="y4m"))
-
-    def probe_basket(docs):
-        # market-basket pairs: the self-join is basket-keyed and each
-        # basket's pair count is C(|basket|, 2) with |basket| bounded
-        # by the cap — organic order growth (fresh order keys per
-        # replica) should read linear-at-worst
-        from kafkadirect_spark.functions import basket
-        k = max(1, docs.count() // n_base)
-        li_base = load_table(spark, sf_dir, "lineitem")
-        li = li_base
-        for i in range(1, k):
-            li = li.unionByName(li_base.withColumn(
-                "l_orderkey",
-                F.col("l_orderkey") + F.lit(i * 1_000_000_000)))
-        return basket.basket_pairs_topk(li, "l_orderkey", "l_partkey",
-                                        k=20, min_support=2)
-
-    def probe_twap(docs):
-        # LOCF time-weighted mean: one user-partitioned lead window
-        # + one aggregate — wall should track the scan like cusum
-        from kafkadirect_spark.functions import timeseries
-        return timeseries.twap_milli(
-            _replicate_events(docs), "user_id", "ts", "value",
-            "2024-01-01", "2024-01-31", order_break_col="event_id")
-
-    def probe_png_features(docs):
-        # PNG synth (filter cycles id % 5) -> CRC walk -> inflate ->
-        # unfilter -> integer features: zero-shuffle mapInPandas both
-        # ways, wall should be id-count linear like video_features
-        from kafkadirect_spark.functions import multimodal
-        return multimodal.image_features(
-            multimodal.synth_media(docs.select("doc_id"), "doc_id",
-                                   kind="png"))
-
-    def probe_gif_features(docs):
-        # GIF synth -> sub-block LZW decode -> palette expansion ->
-        # integer features: zero-shuffle mapInPandas both ways, wall
-        # should be id-count linear like png/video
-        from kafkadirect_spark.functions import multimodal
-        return multimodal.image_features(
-            multimodal.synth_media(docs.select("doc_id"), "doc_id",
-                                   kind="gif"))
-
-    def probe_acf(docs):
-        # rank-lag autocorrelation: ONE corpus exchange (the rank
-        # window), everything downstream is window aggregates over
-        # the same hash(g) partitioning — organic user growth keeps
-        # the per-user sort task-local, wall should track the scan
-        from kafkadirect_spark.functions import timeseries
-        return timeseries.acf_milli(
-            _replicate_events(docs), "user_id", "ts", "value",
-            lags=(1, 2, 4, 8), max_points=512,
-            order_break_col="event_id")
-
-    def probe_seasonal(docs):
-        # classical decomposition + strength: like acf, ONE corpus
-        # exchange and pure window aggregates — organic user growth
-        # keeps every per-user sort task-local, wall tracks the scan
-        from kafkadirect_spark.functions import timeseries
-        return timeseries.seasonal_profile_milli(
-            _replicate_events(docs), "user_id", "ts", "value",
-            period=5, max_points=512, order_break_col="event_id")
-
-    def probe_pii(docs):
-        # regex redaction + Luhn fold: all row-local Catalyst
-        # expressions, wall should be scan-bound
-        from kafkadirect_spark.functions import privacy
-        return privacy.pii_scrub(
-            privacy.synth_pii_text(docs.select("doc_id"), "doc_id"),
-            "text", "doc_id")
-
-    def probe_exactsubstr_incr(docs):
-        # fixed new batch (base every-20th) vs the growing corpus as
-        # the index — the production ingest shape: wall should track
-        # the index's distinct-hash pass, the new side is constant
-        new = base.filter(F.col("doc_id") % 20 == 0)
-        return dedup.exactsubstr_incremental(new, docs, "text",
-                                             "doc_id")
-
-    def probe_kmv_matrix(docs):
-        # per-slice KMV min-k over 20 sources: the (slice, hash)
-        # distinct grows with the corpus, the pair join stays a
-        # 190-row broadcast NL — wall should track the distinct
-        from kafkadirect_spark.functions import sketch
-        return sketch.kmv_group_jaccard(docs, "source", "text")
-
-    def probe_hybrid_rrf(docs):
-        # both retrieval arms are scan-bound (BM25 filter-before-
-        # explode; one-probe BLAS matmul); fusion is ≤ 2·topn rows —
-        # wall should track the two scans
-        from kafkadirect_spark.functions import retrieval
-        emb = load_table(spark, sf_dir, "embeddings")
-        return retrieval.hybrid_rank_rrf(
-            docs, emb, ["spark", "dup", "window"], probe_id=7)
-
-    probes = {"minhash_lsh": probe_minhash,
-              "exactsubstr": probe_exactsubstr,
-              "exactsubstr_incr": probe_exactsubstr_incr,
-              "funnel": probe_funnel,
-              "path_topk": probe_path_topk,
-              "attribution": probe_attribution,
-              "theil_sen": probe_theil_sen,
-              "cusum": probe_cusum,
-              "twap": probe_twap,
-              "video_features": probe_video_features,
-              "png_features": probe_png_features,
-              "gif_features": probe_gif_features,
-              "acf": probe_acf,
-              "seasonal_profile": probe_seasonal,
-              "pii": probe_pii,
-              "basket": probe_basket,
-              "kmv_matrix": probe_kmv_matrix,
-              "hybrid_rrf": probe_hybrid_rrf,
-              "bm25": probe_bm25,
-              "vocab_drift": probe_vocab_drift,
-              "skew": probe_skew,
-              "span_dedup": probe_span_dedup,
-              "cdc": probe_cdc,
-              "decontaminate": probe_decontaminate,
-              "importance": probe_importance,
-              "sketches": probe_sketches,
-              "jaccard_prefix": probe_jaccard_prefix,
-              "containment": probe_containment,
-              "containment_anti": probe_containment_anti,
-              "incremental_lsh": probe_incremental,
-              "surprisal": probe_surprisal,
-              "gopher": probe_gopher,
-              "bigram_surprisal": probe_bigram_surprisal,
-              "cluster_split": probe_cluster_split,
-              "contamination": probe_contamination,
-              "contamination_spans": probe_contamination_spans,
-              "weighted_group": probe_weighted_group}
-    if ops:
-        unknown = set(ops) - set(probes)
-        if unknown:
-            raise SystemExit(f"unknown --ops {sorted(unknown)}; "
-                             f"choose from {sorted(probes)}")
-        probes = {k: v for k, v in probes.items() if k in ops}
-
+    suites, extras = bench.build_suites()
+    table = {**QUERIES, **suites, **extras}
+    unknown = sorted(set(ops) - set(table))
+    if unknown:
+        raise SystemExit(f"unknown --ops {unknown}; choose bench suites "
+                         "or registered queries")
+    n_docs = load_table(spark, sf_dir, "documents").count()
     repl = 1
     while repl < start:
         repl *= 4
+    tag, mode = ("alnum", "organic") if organic else ("none", "replicate")
     while repl <= max_repl:
-        docs = replicate(repl).persist()
-        n = docs.count()
-        for op, fn in probes.items():
-            t0 = time.perf_counter()
-            fn(docs).write.format("noop").mode("overwrite").save()
-            sec = round(time.perf_counter() - t0, 2)
-            release_caches()
-            print(json.dumps(
-                {"op": op, "mode": "organic" if organic else "replicate",
-                 "repl": repl, "docs": n, "sec": sec}), flush=True)
-        docs.unpersist()
+        with replicas(spark, sf_dir, repl, tag) as d:
+            for op in ops:
+                sec, _ = timed(spark, d, table[op], op)
+                _emit(op=op, mode=mode, repl=repl, docs=n_docs * repl,
+                      sec=sec)
         repl *= 4
-    spark.stop()
 
 
 if __name__ == "__main__":
+    from kafkadirect_spark.session import get_spark
+
     args = sys.argv[1:]
-    if "--semdedup" in args:
-        args.remove("--semdedup")
-        semdedup_probe(args[0] if args else "/root/testdata/sf0.1")
-        sys.exit(0)
-    if "--pq" in args:
-        args.remove("--pq")
-        pq_probe(args[0] if args else "/root/testdata/sf0.1")
-        sys.exit(0)
-    if "--ivf-pq" in args:
-        args.remove("--ivf-pq")
-        ivf_pq_probe(args[0] if args else "/root/testdata/sf0.1")
-        sys.exit(0)
-    if "--bpe" in args:
-        args.remove("--bpe")
-        bpe_probe(args[0] if args else "/root/testdata/sf0.1")
-        sys.exit(0)
-    if "--bpe-dist" in args:
-        args.remove("--bpe-dist")
-        bpe_dist_probe(args[0] if args else "/root/testdata/sf0.01")
-        sys.exit(0)
-    if "--nb" in args:
-        args.remove("--nb")
-        nb_probe(args[0] if args else "/root/testdata/sf0.1")
-        sys.exit(0)
-    if "--unigram" in args:
-        args.remove("--unigram")
-        unigram_probe(args[0] if args else "/root/testdata/sf0.01")
-        sys.exit(0)
-    if "--unigram-big" in args:
-        args.remove("--unigram-big")
-        unigram_big_probe(args[0] if args else "/root/testdata/sf0.01")
-        sys.exit(0)
-    if "--vocab-coverage" in args:
-        args.remove("--vocab-coverage")
-        vocab_coverage_probe(args[0] if args else "/root/testdata/sf0.01")
-        sys.exit(0)
-    if "--wordpiece" in args:
-        args.remove("--wordpiece")
-        wordpiece_probe(args[0] if args else "/root/testdata/sf0.01")
-        sys.exit(0)
-    if "--sax" in args:
-        args.remove("--sax")
-        sax_probe(args[0] if args else "/root/testdata/sf0.1")
-        sys.exit(0)
-    if "--nb-classes" in args:
-        args.remove("--nb-classes")
-        nb_classes_probe(args[0] if args else "/root/testdata/sf0.1")
-        sys.exit(0)
+    opts = {}
+    for flag in ("--probe", "--ops", "--start"):
+        if flag in args:
+            i = args.index(flag)
+            opts[flag] = args[i + 1]
+            del args[i:i + 2]
     organic = "--organic" in args
     args = [a for a in args if a != "--organic"]
-    ops: list[str] | None = None
-    if "--ops" in args:
-        i = args.index("--ops")
-        ops = args[i + 1].split(",")
-        del args[i:i + 2]
-    start = 1
-    if "--start" in args:
-        i = args.index("--start")
-        start = int(args[i + 1])
-        del args[i:i + 2]
-    main(args[0] if args else "/root/testdata/sf0.1",
-         int(args[1]) if len(args) > 1 else 16,
-         organic=organic, ops=ops, start=start)
+    if "--probe" in opts and opts["--probe"] not in PROBES:
+        raise SystemExit(f"unknown --probe; choose from {sorted(PROBES)}")
+    if "--probe" not in opts and "--ops" not in opts:
+        raise SystemExit(__doc__)
+    spark = get_spark("scale-probe")
+    spark.sparkContext.setLogLevel("ERROR")
+    if "--probe" in opts:
+        PROBES[opts["--probe"]](spark, *args[:1])
+    else:
+        main(spark, args[0] if args else "/root/testdata/sf0.1",
+             int(args[1]) if len(args) > 1 else 16, organic,
+             opts["--ops"].split(","), int(opts.get("--start", 1)))
+    spark.stop()
