@@ -168,13 +168,13 @@ def build_suites() -> tuple[dict, dict]:
     def consume(spark, sf):
         return load_table(spark, sf, "lineitem")
 
-    out_dir = tempfile.mkdtemp(prefix="kds-bench-")
-
     def consumeproduce(spark, sf):
         # scan → rewrite (SimpleBenchmark consumeproduce); the write IS
         # the measurement, so return a trivial frame for the noop sink.
-        load_table(spark, sf, "lineitem").write.mode("overwrite").parquet(
-            f"{out_dir}/lineitem_copy")
+        # The copy is deleted as soon as it is written.
+        with tempfile.TemporaryDirectory(prefix="kds-bench-") as out_dir:
+            load_table(spark, sf, "lineitem").write.mode(
+                "overwrite").parquet(f"{out_dir}/lineitem_copy")
         return spark.range(1)
 
     # The BASELINE.md-mapped reference suites — the 2× gate compares
@@ -383,8 +383,8 @@ def build_suites() -> tuple[dict, dict]:
         # token-weighted order statistics: the histogram-narrowing
         # recursion with weight mass (register-sized exchanges only)
         "weighted_quantiles": QUERIES["weighted_quantiles"],
-        # ... and its per-language grouped twin (broadcast range
-        # table per round, groups converge independently)
+        # ... and its per-language grouped twin (groups converge
+        # independently)
         "weighted_quantiles_grouped": _weighted_quantiles_grouped_suite,
     }
     return suites, extra_suites

@@ -823,24 +823,24 @@ def containment_pairs(
         # Persist the CAPPED index too (see ngram_jaccard_pairs): its
         # three consumers otherwise re-run the freq join each.
         #
-        # Dictionary-encode the shingle key while building it (r16,
-        # guide §2.3 "narrower types"): the cap join already exchanges
-        # the corpus index by the shingle STRING once — unavoidable —
-        # but the SELF-JOIN below re-exchanges the capped index twice
-        # more and the string is pure routing there (never read
-        # downstream).  Assign each surviving shingle a dense 8-byte
-        # id instead: ``monotonically_increasing_id`` AFTER a
-        # ``sortWithinPartitions`` makes the assignment DETERMINISTIC
-        # (partition = hash(shingle) within the executed plan, offset
-        # = rank in the sorted partition), so a recomputed cache
-        # partition reproduces the same ids — exact, collision-free,
-        # and no extra exchange (the sort rides the freq aggregate's
-        # existing partitioning).  Pair counts are identical by
-        # bijection; the persisted index also shrinks to (id, sid).
+        # Dictionary-encode the shingle key while building it: the cap
+        # join already exchanges the corpus index by the shingle STRING
+        # once — unavoidable — but the SELF-JOIN below re-exchanges the
+        # capped index twice more and the string is pure routing there
+        # (never read downstream).  Assign each surviving shingle a
+        # dense 8-byte id instead: ``monotonically_increasing_id``
+        # numbers rows by (partition, offset), so the sorted capped
+        # keys are persisted first.  Every numbering then reads the same
+        # cached partitions in the same order, and a recompute under
+        # another shuffle layout or AQE coalescing cannot renumber a
+        # shingle — exact, collision-free, and no extra exchange (the
+        # sort rides the freq aggregate's existing partitioning).  Pair
+        # counts are identical by bijection; the persisted index also
+        # shrinks to (id, sid).
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        keys = (freq.filter(F.col("df") <= max_doc_freq)
-                .select("shingle")
-                .sortWithinPartitions("shingle")
+        keys = (_persist(freq.filter(F.col("df") <= max_doc_freq)
+                         .select("shingle")
+                         .sortWithinPartitions("shingle"))
                 .withColumn("__sid", F.monotonically_increasing_id()))
         sh = _persist(sh.join(keys, "shingle")
                       .select(F.col(id_col), "__sid"))

@@ -41,18 +41,16 @@ def skew_report(df: DataFrame, key_col: str, parts: int = 200,
         raise ValueError("parts must be >= 1")
     if top_k < 1:
         raise ValueError("top_k must be >= 1")
-    from kafkadirect_spark.functions.sketch import _exact_quantiles_from
+    from kafkadirect_spark.functions.sketch import _select
 
     spark = df.sparkSession
     counts = (df.groupBy(F.col(key_col).cast("string").alias("__k"))
               .agg(F.count(F.lit(1)).alias("__cnt"))
               .persist())
     try:
-        # One stats pass serves BOTH the scalar stats and the quantile
-        # kernel (r16, guide §1.2): min joins the aggregate the report
-        # already pays, and the narrowing loop runs directly on the
-        # persisted counts frame — the kernel's own persist + stats
-        # job (a full re-aggregation of the same cache) is gone.
+        # One stats pass serves both the scalar stats and the quantile
+        # selection, which runs directly on the persisted counts frame
+        # (no second persist and stats job over the same cache).
         s = counts.agg(F.sum("__cnt").alias("total"),
                        F.count(F.lit(1)).alias("n_keys"),
                        F.min("__cnt").alias("mn"),
@@ -60,16 +58,15 @@ def skew_report(df: DataFrame, key_col: str, parts: int = 200,
         if s["total"] is None:
             raise ValueError("skew_report: input has no rows")
         total, n_keys, mx = int(s["total"]), int(s["n_keys"]), int(s["mx"])
-        qs = _exact_quantiles_from(
-            counts.select(F.col("__cnt").alias("__v")),
-            n_keys, int(s["mn"]), mx, [500, 990],
-            label="skew_report quantiles")
+        qs = _select(counts.select(F.lit(0).alias("__g"),
+                                   F.col("__cnt").alias("__v")),
+                     {0: (n_keys, int(s["mn"]), mx)}, [500, 990])
         stats = [
             ("total_rows", None, total),
             ("distinct_keys", None, n_keys),
             ("max_key_rows", None, mx),
-            ("p50_key_rows", None, qs[500]),
-            ("p99_key_rows", None, qs[990]),
+            ("p50_key_rows", None, qs[0, 500]),
+            ("p99_key_rows", None, qs[0, 990]),
             ("top1_share_ppm", None, 1_000_000 * mx // total),
             ("suggested_salt", None, (mx * parts + total - 1) // total),
         ]
@@ -107,7 +104,7 @@ def mad_outliers(df: DataFrame, group_col: str, value_col: str,
 
     Scale ledger: one fused grouped histogram-narrowing kernel
     (``sketch.grouped_median_mad`` — register-sized exchanges and
-    ≤ groups·bins collects, never a sort; the MAD pass rides the
+    budget-bounded collects, never a sort; the MAD pass rides the
     median pass's cached (group, value) frame and derives its stats
     from pass 1's), and ONE ≤ groups-row (med, mad) broadcast joined
     back; the data itself is scanned, never reshuffled.  Returns the
@@ -118,7 +115,7 @@ def mad_outliers(df: DataFrame, group_col: str, value_col: str,
     if k < 1:
         raise ValueError("k must be >= 1")
     base = df.filter(F.col(value_col).isNotNull())
-    # Fused kernel (r15): one persisted (group, value) cache serves
+    # Fused kernel: one persisted (group, value) cache serves
     # BOTH selections (the deviation pass is a row-local broadcast
     # derivation of it, and pass 2's stats job is derived from pass
     # 1's), and the two stat columns come back in ONE ≤ groups-row
@@ -218,18 +215,16 @@ def embedding_profile(df: DataFrame, vec_col: str,
 
     One scan; every aggregate is register-sized.
     """
-    from kafkadirect_spark.functions.sketch import _exact_quantiles_from
+    from kafkadirect_spark.functions.sketch import _select
 
     v = F.col(vec_col)
     sumsq = F.aggregate(
         F.transform(v, lambda x: x.cast("double") * x.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
-    # Persist the narrow projection (r16, guide §1.2/§5): the norm
-    # fold over every vector is the expensive per-row work, and it
-    # previously ran TWICE — once for the scalar aggregate, once
-    # inside the quantile kernel's own persist+stats pass.  One cache
-    # (3 narrow columns), one stats aggregate extended with the
-    # kernel's n/lo/hi, and the narrowing rounds scan the cache.
+    # Persist the narrow projection: the norm fold over every vector
+    # is the expensive per-row work.  One cache (3 narrow columns)
+    # serves one stats aggregate, which also yields the selection's
+    # n/lo/hi, and the narrowing rounds scan the cache.
     base = df.select(
         v.isNull().cast("int").alias("__isnull"),
         F.size(v).alias("__dim"),
@@ -249,14 +244,16 @@ def embedding_profile(df: DataFrame, vec_col: str,
             F.count("__norm").alias("__qn"),
             F.min("__norm").alias("__qlo"),
             F.max("__norm").alias("__qhi")).collect()[0]
-        qs = _exact_quantiles_from(
-            base.filter(F.col("__norm").isNotNull())
-                .select(F.col("__norm").alias("__v")),
-            int(s["__qn"]), s["__qlo"], s["__qhi"], [500, 990],
-            label="embedding_profile quantiles")
+        n = int(s["__qn"])
+        qs = _select(base.filter(F.col("__norm").isNotNull())
+                     .select(F.lit(0).alias("__g"),
+                             F.col("__norm").alias("__v")),
+                     {0: (n, s["__qlo"], s["__qhi"])} if n else {},
+                     [500, 990])
         row = [(int(s["n_vectors"]), int(s["null_vectors"]),
                 int(s["dim_min"]), int(s["dim_max"]),
-                int(s["zero_vectors"]), qs.get(500), qs.get(990))]
+                int(s["zero_vectors"]), qs.get((0, 500)),
+                qs.get((0, 990)))]
         return df.sparkSession.createDataFrame(
             row, "n_vectors long, null_vectors long, dim_min long, "
                  "dim_max long, zero_vectors long, norm_p50 long, "

@@ -43,7 +43,7 @@ contract stays on the raw estimator.
 
 from __future__ import annotations
 
-import os
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -51,21 +51,16 @@ from pyspark.sql import functions as F
 P_DEFAULT = 10
 W_FIELD = 32
 
-# Per-round driver-transfer budget for the exact-selection kernels:
-# the max (pending_groups × bins) histogram rows one narrowing round
-# may collect.  r16 re-tune (guide §1.2 "measure again"): the r15
-# 64Ki budget optimized transfer bytes, but each narrowing round is a
-# FULL SCAN of the persisted value frame plus 2-3 driver-coordinated
-# jobs — the serial term that dominates these suites (joblog: ~300 ms
-# per round-scan at sf0.1 against a ~10 ms register transfer).  A
-# same-session sweep (64Ki / 1M / 4M / 16M, best-of-5 per suite)
-# measured 4M best: value_outliers_mad 3.16→1.93 s, value_decile
-# 2.21→1.66 s, exact_quantiles_by_type 1.52→1.21 s; 16M is past the
-# knee (bigger aggregate hash tables, no rounds left to remove).
-# 4M rows ≈ 64 MB of Arrow — fixed driver state, independent of data
-# size.  Env-overridable for small-driver deployments.
-_ROUND_BUDGET = int(os.environ.get(
-    "SPARK_GRAFT_SKETCH_ROUND_BUDGET", str(1 << 22)))
+# Per-round driver budget of the exact-selection loop (``_select``):
+# the most (group, bucket) histogram rows one narrowing round may
+# collect.  Each round is a full scan of the persisted value frame plus
+# 2-3 driver-coordinated jobs, which costs far more than the transfer
+# of a wide histogram (4M rows is about 64 MB of Arrow), so a wide round
+# that saves a scan pays.  ``_round_budget`` lowers it to what
+# ``spark.driver.maxResultSize`` admits at ``_ROW_BYTES`` per row (a
+# group key and four longs, with headroom for a string key).
+_ROUND_BUDGET = 1 << 22
+_ROW_BYTES = 64
 
 
 def _m(p: int) -> int:
@@ -532,124 +527,170 @@ def py_hist_quantiles(counts: dict[int, int], qs_permille: list[int],
     return out
 
 
-def _histogram_bins(span: int, bins: int, n_groups: int = 1) -> int:
-    """Adaptive histogram resolution for the exact-selection kernels
-    (r15, re-tuned r16): the MINIMAL bin count that achieves the
-    MINIMAL round count within the per-round driver-transfer budget
-    ``_ROUND_BUDGET`` (see its comment for the r16 sweep that set it —
-    every round REMOVED is a full scan of the persisted value frame
-    plus 2-3 sequential driver jobs saved, which dwarfs the register
-    transfer it widens).  Rounds = ceil(log_bins(span)), so widening
-    bins only pays when it removes a round.  The budget caps a
-    round's collected rows at pending_groups × bins, never below the
-    caller's ``bins`` so a many-group call keeps its requested
-    resolution.  Results are identical at any resolution — selection
-    is exact by construction; only the scan count moves."""
-    cap = max(bins, _ROUND_BUDGET // max(n_groups, 1))
-    span = max(span, 1)
-    r = 1
-    while True:
-        # minimal b with b**r >= span (integer nth-root ceiling;
-        # float pow seeds it, integer checks pin it)
-        b = max(int(round(span ** (1.0 / r))), 1)
-        while b > 1 and (b - 1) ** r >= span:
-            b -= 1
-        while b ** r < span:
-            b += 1
-        if b <= cap:
-            return max(b, 2)
-        r += 1
+def _round_budget(spark) -> int:
+    """``_ROUND_BUDGET``, lowered so one round's histogram fits in
+    ``spark.driver.maxResultSize`` (0 there means no limit)."""
+    limit = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.maxResultSize", "1g")
+    return min(_ROUND_BUDGET, limit // _ROW_BYTES) if limit else _ROUND_BUDGET
 
 
-def _global_select(vals: DataFrame, state: dict, bins: int,
-                   max_rounds: int, weighted: bool = False) -> dict:
-    """The shared GLOBAL histogram-narrowing loop (ungrouped twin of
-    ``_grouped_select``): ``vals`` is a (``__v``[, ``__w``]) frame —
-    persisted by the caller, or a row-local derivation of one —
-    ``state[q] = [remaining rank (row count or weight mass), lo,
-    hi]``.  Each round histograms every distinct pending range with
-    one filtered scan (quantiles share a round's histogram until
-    their ranges diverge) and narrows; EXACT selection by
-    construction at any resolution.  Returns ``done[q] = value``;
-    the caller raises on keys missing after ``max_rounds``."""
-    mass = (F.sum("__w") if weighted else F.count(F.lit(1))).alias("m")
-    done: dict[int, int] = {}
-    for _ in range(max_rounds):
-        pend = {q: s for q, s in state.items() if q not in done}
-        if not pend:
-            break
-        ranges: dict[tuple[int, int], list[int]] = {}
-        for q, (_, lo, hi) in pend.items():
-            ranges.setdefault((lo, hi), []).append(q)
-        for (lo, hi), group in ranges.items():
-            width = hi - lo + 1
-            w = max(1, -(-width // bins))  # ceil
-            # toPandas, not collect(): the Arrow path makes a
-            # span-wide histogram (up to _ROUND_BUDGET rows) a
-            # cheap transfer, where Row materialization cost more
-            # than the scans the wide histogram saves (measured —
-            # guide §6 Arrow-for-driver)
-            hpdf = (vals.filter(F.col("__v").between(lo, hi))
-                    .groupBy(F.expr(f"(__v - {lo}) DIV {w}")
-                             .alias("b"))
-                    .agg(mass)
-                    .toPandas())
-            hist = dict(zip((int(x) for x in hpdf["b"]),
-                            (int(x) for x in hpdf["m"])))
-            cum_at = sorted(hist)
-            for q in group:
-                k = state[q][0]
-                cum = 0
-                for b in cum_at:
-                    if cum + hist[b] >= k:
-                        blo = lo + b * w
-                        if w == 1:
-                            done[q] = blo
-                        else:
-                            state[q] = [k - cum, blo,
-                                        min(blo + w - 1, hi)]
-                        break
-                    cum += hist[b]
+def _long(c: Column | str) -> Column:
+    return (F.col(c) if isinstance(c, str) else c).cast("long")
+
+
+def _select(vals: DataFrame, stats: dict, qs_permille: list[int]) -> dict:
+    """The exact-selection loop shared by every order-statistics
+    kernel.  ``vals`` is a (``__g``, ``__v``[, ``__w``]) frame,
+    persisted by the caller or a row-local derivation of one;
+    ``stats[g] = (mass, lo, hi)`` covers group ``g``'s values, where
+    mass is the row count, or the weight sum when ``__w`` is present.
+    Returns ``{(g, q): value}``: the least ``v`` whose cumulative mass
+    in ``g`` reaches ``ceil(q·mass/1000)``.
+
+    Each round histograms ``(__g, shiftright(__v, k))`` into (mass,
+    min, max) per bucket and walks every pending target's cumulative
+    mass to the bucket holding its rank; a bucket whose min equals
+    its max is the answer.  Power-of-two buckets nest, so each child
+    bucket lies inside one parent bucket of the last round, and
+    shifting never overflows.  The first round reads the whole frame;
+    a later one semi-joins the pending (group, parent bucket) pairs.
+    The driver picks k as the least one whose histogram fits each
+    pending group's share of ``_round_budget``, counting at most
+    ``(hi >> k) - (lo >> k) + 1`` rows per parent and no more than
+    its mass (a row carries at least one unit), but always below the
+    last round's k.  So the pending width at least halves every
+    round, and a k = 0 round leaves one value per bucket.  The result
+    is exact at any k; the budget only moves the round count."""
+    spark = vals.sparkSession
+    budget = _round_budget(spark)
+    mass = (F.sum("__w") if "__w" in vals.columns
+            else F.count(F.lit(1))).alias("m")
+    gtype = dict(vals.dtypes)["__g"]
+    # pend[(g, q)] = (rank left inside the parent, parent bucket at
+    # shift s); parent None is the whole group.  under[(g, p)] is the
+    # (mass, lo, hi) inside parent p.
+    pend = {(g, q): (max((q * m + 999) // 1000, 1), None)
+            for g, (m, _, _) in stats.items() for q in qs_permille}
+    under = {(g, None): st for g, st in stats.items()}
+    done: dict[tuple, int] = {}
+    s = 64
+    while pend:
+        parents = {(g, p) for (g, _), (_, p) in pend.items()}
+        share = max(budget // len({g for g, _ in parents}), 2)
+
+        def rows(k: int) -> int:
+            per: dict = {}
+            for g, p in parents:
+                m, lo, hi = under[g, p]
+                per[g] = per.get(g, 0) + min(m, (hi >> k) - (lo >> k) + 1)
+            return max(per.values())
+
+        low, k = 0, s - 1
+        while low < k:
+            mid = (low + k) // 2
+            if rows(mid) <= share:
+                k = mid
+            else:
+                low = mid + 1
+        scan = vals
+        if s < 64:
+            keys = spark.createDataFrame(list(parents),
+                                         f"__pg {gtype}, __p long")
+            scan = vals.join(F.broadcast(keys),
+                             (F.col("__g") == F.col("__pg"))
+                             & (F.shiftright("__v", s) == F.col("__p")),
+                             "left_semi")
+        # toPandas, not collect(): Arrow keeps a budget-sized histogram
+        # a cheap transfer, where Row materialization cost more than
+        # the scans a wide round saves
+        hist = (scan.groupBy("__g", F.shiftright("__v", k).alias("__b"))
+                .agg(mass, F.min("__v").alias("lo"),
+                     F.max("__v").alias("hi"))
+                .toPandas())
+        kids: dict[tuple, list] = {}
+        for g, *bucket in zip(hist["__g"], hist["__b"], hist["m"],
+                              hist["lo"], hist["hi"]):
+            b, m, lo, hi = map(int, bucket)
+            parent = b >> (s - k) if s < 64 else None
+            kids.setdefault((g, parent), []).append((b, m, lo, hi))
+        for v in kids.values():
+            v.sort()
+        nxt, under = {}, {}
+        for (g, q), (r, p) in pend.items():
+            for b, m, lo, hi in kids.get((g, p), ()):
+                if r <= m:
+                    break
+                r -= m
+            else:
+                raise RuntimeError(
+                    "selection input changed between rounds; persist "
+                    "it or derive it row-locally from a persisted frame")
+            if lo == hi:
+                done[g, q] = lo
+            else:
+                nxt[g, q], under[g, b] = (r, b), (m, lo, hi)
+        pend, s = nxt, k
     return done
 
 
-def _exact_quantiles_from(vals: DataFrame, n: int, glo: int, ghi: int,
-                          qs_permille: list[int], bins: int = 1024,
-                          max_rounds: int = 8,
-                          label: str = "exact_quantiles") -> dict:
-    """Narrowing selection over an ALREADY-AVAILABLE single-column
-    (``__v``) frame with PRECOMPUTED stats — the fused entry for
-    callers that already pay a stats aggregate over (a persisted
-    superset of) the same frame, so the kernel's own persist + stats
-    job would be pure recompute (guide §1.2 "don't compute things you
-    throw away"; r16 — ``skew_report`` and ``embedding_profile`` fold
-    the kernel stats into the scan they already run).  ``n`` is the
-    non-null row count, ``[glo, ghi]`` a COVERING range (covering
-    moves the round count, never the exact result).  Returns
-    ``{q_permille: value}``; empty when ``n`` is falsy."""
-    if not n:
-        return {}
-    if ghi - glo > (1 << 62):
-        raise ValueError(
-            f"value range [{glo}, {ghi}] spans more than 2^62; "
-            "narrow the domain (in-plan bucket arithmetic "
-            "would overflow)")
-    bins = _histogram_bins(ghi - glo + 1, bins)
-    state = {q: [max((q * n + 999) // 1000, 1), glo, ghi]
-             for q in qs_permille}
-    done = _global_select(vals, state, bins, max_rounds)
-    missing = [q for q in qs_permille if q not in done]
-    if missing:
-        raise RuntimeError(
-            f"{label} did not converge in {max_rounds} "
-            f"rounds for q={missing} (range [{glo}, {ghi}], "
-            f"bins={bins}) — raise max_rounds or bins")
-    return {q: int(done[q]) for q in qs_permille}
+@contextmanager
+def _selection(df: DataFrame, group_col: str | None, col: Column | str,
+               qs_permille: list[int], weight_col: Column | str | None = None,
+               max_groups: int = 1):
+    """Shared prologue of the selection kernels.  Checks the
+    permilles, persists the (``__g``, ``__v``[, ``__w``]) frame (``__g``
+    is a constant when ``group_col`` is None; null groups, null values
+    and non-positive weights carry no mass and are dropped), collects
+    ``stats[g] = (mass, lo, hi)`` and raises past ``max_groups``
+    groups, since a round's driver state grows with the group count.
+    Yields ``(vals, stats)`` and unpersists on exit."""
+    bad_q = [q for q in qs_permille if not 0 < q <= 1000]
+    if bad_q:
+        raise ValueError(f"q_permille out of (0, 1000]: {bad_q}")
+    cols = [(F.col(group_col) if group_col else F.lit(0)).alias("__g"),
+            _long(col).alias("__v")]
+    keep = F.col("__g").isNotNull() & F.col("__v").isNotNull()
+    mass = F.count(F.lit(1))
+    if weight_col is not None:
+        cols.append(_long(weight_col).alias("__w"))
+        keep &= F.col("__w") > 0
+        mass = F.sum("__w")
+    vals = df.select(*cols).filter(keep).persist()
+    try:
+        rows = (vals.groupBy("__g")
+                .agg(mass.alias("m"), F.min("__v").alias("lo"),
+                     F.max("__v").alias("hi"))
+                .limit(max_groups + 1).collect())
+        if len(rows) > max_groups:
+            raise ValueError(
+                f"more than max_groups={max_groups} groups: per-round "
+                "driver state grows with the group count; aggregate to "
+                "coarser segments or raise the cap consciously")
+        yield vals, {r["__g"]: (r["m"], r["lo"], r["hi"]) for r in rows}
+    finally:
+        vals.unpersist()
+
+
+def _quantiles(df: DataFrame, group_col: str | None, col: Column | str,
+               qs_permille: list[int], weight_col: Column | str | None = None,
+               max_groups: int = 1) -> DataFrame:
+    with _selection(df, group_col, col, qs_permille, weight_col,
+                    max_groups) as (vals, stats):
+        done = _select(vals, stats, qs_permille)
+        gtype = dict(vals.dtypes)["__g"]
+    spark = df.sparkSession
+    if group_col is None:
+        return spark.createDataFrame(
+            [(q, done[0, q]) for q in qs_permille] if done else [],
+            "q_permille int, value long")
+    return spark.createDataFrame(
+        [(g, q, v) for (g, q), v in done.items()],
+        f"{group_col} {gtype}, q_permille int, value long")
 
 
 def exact_quantiles(df: DataFrame, col: Column | str,
-                    qs_permille: list[int], bins: int = 1024,
-                    max_rounds: int = 8) -> DataFrame:
+                    qs_permille: list[int]) -> DataFrame:
     """EXACT quantiles of an integer column at any scale — no sort, no
     data collect, no approximation.  Where ``hist_quantiles`` returns
     a fixed-grid estimate, this returns the true order statistic: the
@@ -658,216 +699,51 @@ def exact_quantiles(df: DataFrame, col: Column | str,
     to ``ORDER BY v OFFSET k-1 LIMIT 1``.
 
     Algorithm: iterative histogram narrowing (the classic
-    distributed-selection recursion).  Each round histograms the
-    current candidate range into ``bins`` buckets (one filtered
-    column scan, register-sized exchange, ≤ ``bins`` rows collected),
-    walks the cumulative counts to the bucket containing the target
-    rank, and recurses into it.  The range shrinks ×``bins`` per
-    round, so an s-bit integer domain needs ⌈s / log2 bins⌉ rounds
-    (64-bit worst case: 7 with the default 1024); when the range
-    itself fits in ``bins`` buckets the histogram is per-value and
-    the walk reads off the exact answer.  Driver state is O(bins)
-    per round — never data-sized.
-
-    All requested quantiles share each round's histogram until their
-    candidate ranges diverge (they start identical), so the common
-    case (a few permilles over a moderate value domain) is 2–3 scans
-    total, not 2–3 per quantile.
+    distributed-selection recursion, ``_select``).  Each round is one
+    scan of the persisted column into a power-of-two-bucket histogram
+    of at most the driver budget's rows; the walk over cumulative
+    counts finds the bucket holding each target rank and recurses
+    into it.  A column whose row count or value span fits the budget
+    (4M rows, less under a small ``spark.driver.maxResultSize``)
+    finishes in one round; a wider one narrows by the budget's factor
+    per round.  All requested quantiles share each round's scan.
 
     Returns ``(q_permille, value)``.  Nulls are excluded.  The
     column must be integral (cast upstream — for doubles use the
-    repo's ``floor(value·1000)`` milli convention); ranges within
-    2^62 of Long extrema are rejected to keep in-plan ``v − lo``
-    arithmetic overflow-free.
+    repo's ``floor(value·1000)`` milli convention); any long range
+    works.
 
     Reference analogue: none (SURVEY.md §2 — the reference has no
     order statistics at all); beyond-parity analytics.
     """
-    bad_q = [q for q in qs_permille if not 0 < q <= 1000]
-    if bad_q:
-        raise ValueError(f"q_permille out of (0, 1000]: {bad_q}")
-    c = (F.col(col) if isinstance(col, str) else col).cast("long")
-    vals = df.select(c.alias("__v")).filter(F.col("__v").isNotNull())
-    vals = vals.persist()
-    try:
-        agg = vals.agg(F.count(F.lit(1)).alias("n"),
-                       F.min("__v").alias("lo"),
-                       F.max("__v").alias("hi")).collect()[0]
-        n, glo, ghi = agg["n"], agg["lo"], agg["hi"]
-        # Adaptive resolution + the shared loop (_global_select):
-        # each round is a full scan of the persisted column — pick
-        # the cheapest resolution that still hits the minimal round
-        # count (docstring of _histogram_bins; a span-sized histogram
-        # finishes in ONE round when the span fits the driver budget).
-        done = _exact_quantiles_from(vals, n, glo, ghi, qs_permille,
-                                     bins, max_rounds)
-        rows = [(int(q), done[q]) for q in qs_permille] if done else []
-        spark = df.sparkSession
-        return spark.createDataFrame(rows, "q_permille int, value long")
-    finally:
-        vals.unpersist()
-
-
-def _grouped_select(vals: DataFrame, state: dict, bins: int,
-                    max_rounds: int, weighted: bool = False) -> dict:
-    """The shared grouped histogram-narrowing loop: ``vals`` is the
-    (``__g``, ``__v``[, ``__w``]) frame (persisted by the caller, or
-    a cheap row-local derivation of one), ``state[(gkey, q)] =
-    [remaining rank (row count, or weight mass when ``weighted``),
-    lo, hi]`` the selection targets.  Each round broadcasts the
-    per-group candidate ranges onto one scan of ``vals``, histograms
-    (group, bucket) with map-side combine, and narrows every pending
-    target — EXACT selection by construction at any resolution (a
-    starting range only has to COVER the group's values; bins/ranges
-    move the round count, never the result).  Returns
-    ``done[(gkey, q)] = value``; raises if ``max_rounds`` is hit."""
-    spark = vals.sparkSession
-    mass = (F.sum("__w") if weighted else F.count(F.lit(1))).alias("m")
-    done: dict[tuple, int] = {}
-    for _ in range(max_rounds):
-        pend = {key: s for key, s in state.items() if key not in done}
-        if not pend:
-            break
-        # one (group, lo, bw) range table per distinct pending range
-        # (bucket width named __bw: __w is the WEIGHT on the scan)
-        ranges: dict[tuple, list] = {}
-        for (gkey, q), (_, lo, hi) in pend.items():
-            width = hi - lo + 1
-            w = max(1, -(-width // bins))
-            ranges.setdefault((gkey, lo, hi, w), []).append(q)
-        rng_rows = [(gk, lo, hi, w) for (gk, lo, hi, w) in ranges]
-        gtype = dict(vals.dtypes)["__g"]
-        rng = spark.createDataFrame(
-            rng_rows, f"__g {gtype}, __lo long, __hi long, __bw long")
-        # toPandas, not collect(): Arrow keeps the wide-histogram
-        # round's groups×bins rows a cheap transfer (see
-        # exact_quantiles — Row materialization dominated)
-        hist = (vals.join(F.broadcast(rng), "__g")
-                .filter(F.col("__v").between(F.col("__lo"),
-                                             F.col("__hi")))
-                .groupBy("__g", "__lo", "__bw",
-                         F.expr("(__v - __lo) DIV __bw").alias("b"))
-                .agg(mass)
-                .toPandas())
-        by_range: dict[tuple, dict[int, int]] = {}
-        for g, lo_, w_, b_, c_ in zip(
-                hist["__g"], hist["__lo"], hist["__bw"],
-                hist["b"], hist["m"]):
-            by_range.setdefault((g, int(lo_), int(w_)),
-                                {})[int(b_)] = int(c_)
-        for (gkey, lo, hi, w), group_qs in ranges.items():
-            h = by_range.get((gkey, lo, w), {})
-            for q in group_qs:
-                k = state[(gkey, q)][0]
-                cum = 0
-                for b in sorted(h):
-                    if cum + h[b] >= k:
-                        blo = lo + b * w
-                        if w == 1:
-                            done[(gkey, q)] = blo
-                        else:
-                            state[(gkey, q)] = [
-                                k - cum, blo, min(blo + w - 1, hi)]
-                        break
-                    cum += h[b]
-    missing = sorted(key for key in state if key not in done)
-    if missing:
-        raise RuntimeError(
-            f"grouped selection did not converge in "
-            f"{max_rounds} rounds for {missing[:5]} — raise "
-            "max_rounds or bins")
-    return done
-
-
-def _grouped_stats(vals: DataFrame, max_groups: int,
-                   weighted: bool = False) -> list:
-    """Shared prologue of the grouped selection kernels (r16, ADVICE
-    consolidation): the per-group (mass ``m``, lo, hi) stats collect
-    over the (``__g``, ``__v``[, ``__w``]) frame, the ``max_groups``
-    driver guard, and the 2^62 in-plan-arithmetic range check — one
-    place, so the guard logic cannot drift between kernels.  ``m`` is
-    the row count, or the weight sum when ``weighted``."""
-    mass = (F.sum("__w") if weighted else F.count(F.lit(1))).alias("m")
-    stats = (vals.groupBy("__g")
-             .agg(mass, F.min("__v").alias("lo"),
-                  F.max("__v").alias("hi"))
-             .limit(max_groups + 1).collect())
-    if len(stats) > max_groups:
-        raise ValueError(
-            f"more than max_groups={max_groups} groups: per-round "
-            "driver state is O(groups·bins); aggregate to coarser "
-            "segments or raise the cap consciously")
-    for r in stats:
-        if r["hi"] - r["lo"] > (1 << 62):
-            raise ValueError(
-                f"group {r['__g']!r} value range spans more than "
-                "2^62 (in-plan bucket arithmetic would overflow)")
-    return stats
+    return _quantiles(df, None, col, qs_permille)
 
 
 def exact_quantiles_grouped(df: DataFrame, group_col: str,
                             col: Column | str, qs_permille: list[int],
-                            bins: int = 1024,
-                            max_rounds: int = 8,
                             max_groups: int = 100_000) -> DataFrame:
     """Per-group EXACT quantiles — :func:`exact_quantiles` generalized
     to one true order statistic per (group, q): the per-segment p50 /
     p99 report (latency by event type, doc length by language) with
     no sort and no data-sized collect.
 
-    Same iterative histogram narrowing, run for all groups at once:
-    each round broadcasts the per-group candidate range [lo, w] onto
-    the scan, histograms (group, bucket) with map-side combine, and
-    collects ≤ |pending groups|·bins register rows.  Groups converge
-    independently (a group whose range reaches width 1 drops out of
-    later rounds' broadcast table), so the round count is driven by
-    the widest group's domain, ≤ ⌈64 / log2 bins⌉.  Driver state is
-    O(groups·bins) per round — ``max_groups`` guards the driver the
-    way MAX_PROBES guards the BLAS paths: beyond it, raise, don't
+    Same narrowing, run for all groups at once: every round is one
+    scan histogramming (group, bucket) with map-side combine, and the
+    driver budget is split across the groups still pending.  Groups
+    converge independently; later rounds scan only the pending
+    (group, bucket) cells through a broadcast semi-join.  Driver state
+    grows with the group count, so ``max_groups`` guards the driver
+    the way MAX_PROBES guards the BLAS paths: beyond it, raise, don't
     OOM.  Null group keys and null values are excluded.
 
     Returns ``(group_col, q_permille, value)``.
     """
-    bad_q = [q for q in qs_permille if not 0 < q <= 1000]
-    if bad_q:
-        raise ValueError(f"q_permille out of (0, 1000]: {bad_q}")
-    c = (F.col(col) if isinstance(col, str) else col).cast("long")
-    g = F.col(group_col)
-    vals = df.select(g.alias("__g"), c.alias("__v")) \
-        .filter(F.col("__v").isNotNull() & F.col("__g").isNotNull())
-    vals = vals.persist()
-    try:
-        stats = _grouped_stats(vals, max_groups)
-        # Adaptive resolution (r15 — see _histogram_bins): the
-        # minimal bin count hitting the minimal round count for the
-        # WIDEST group (groups converge independently; the widest
-        # drives the round count), with the per-round driver budget
-        # divided across groups — many-group calls keep the caller's
-        # resolution.  Result-identical at any resolution; only the
-        # scan count moves.
-        if stats:
-            widest = max(r["hi"] - r["lo"] + 1 for r in stats)
-            bins = _histogram_bins(widest, bins, len(stats))
-        # state[(gkey, q)] = [remaining rank, lo, hi]
-        state: dict[tuple, list[int]] = {}
-        for r in stats:
-            for q in qs_permille:
-                state[(r["__g"], q)] = [
-                    max((q * r["m"] + 999) // 1000, 1), r["lo"], r["hi"]]
-        done = _grouped_select(vals, state, bins, max_rounds)
-        gtype = dict(vals.dtypes)["__g"]
-        spark = df.sparkSession
-        rows = [(gkey, int(q), int(v)) for (gkey, q), v in done.items()]
-        return spark.createDataFrame(
-            rows, f"{group_col} {gtype}, q_permille int, value long")
-    finally:
-        vals.unpersist()
+    return _quantiles(df, group_col, col, qs_permille,
+                      max_groups=max_groups)
 
 
 def grouped_median_mad(df: DataFrame, group_col: str,
                        col: Column | str,
-                       bins: int = 1024,
-                       max_rounds: int = 8,
                        max_groups: int = 100_000) -> DataFrame:
     """Per-group (median, MAD) in ONE kernel invocation — the fused
     form ``mad_outliers`` needs.  Two separate
@@ -879,8 +755,9 @@ def grouped_median_mad(df: DataFrame, group_col: str,
     non-null exactly where v is), and its range is covered by
     ``[0, max(hi − med, med − lo)]`` from pass 1's stats — so the
     second stats job disappears entirely.  Both selections are the
-    same exact rank-``⌈n/2⌉`` cover as ``exact_quantiles_grouped([500])``
-    (a covering range changes the round count, never the result).
+    same exact rank-``⌈n/2⌉`` cover as ``exact_quantiles_grouped([500])``.
+    A group whose values span more than 2^62 is rejected: ``|v − med|``
+    could overflow a long.
 
     Returns ``(group_col, med, mad)``.  Null group keys and null
     values are excluded, as in the grouped kernel.  NOTE the
@@ -890,53 +767,28 @@ def grouped_median_mad(df: DataFrame, group_col: str,
     trunc(|v − med|) — pass an already-integral column (the repo's
     cents/milli convention) as every caller does.
     """
-    c = (F.col(col) if isinstance(col, str) else col).cast("long")
-    g = F.col(group_col)
-    vals = df.select(g.alias("__g"), c.alias("__v")) \
-        .filter(F.col("__v").isNotNull() & F.col("__g").isNotNull())
-    vals = vals.persist()
-    try:
-        spark = df.sparkSession
+    spark = df.sparkSession
+    with _selection(df, group_col, col, [500],
+                    max_groups=max_groups) as (vals, stats):
+        for g, (_, lo, hi) in stats.items():
+            if hi - lo > (1 << 62):
+                raise ValueError(
+                    f"group {g!r} value range spans more than 2^62 "
+                    "(|v - median| would overflow)")
         gtype = dict(vals.dtypes)["__g"]
-        stats = _grouped_stats(vals, max_groups)
-        if not stats:
-            return spark.createDataFrame(
-                [], f"{group_col} {gtype}, med long, mad long")
-        rank = {r["__g"]: max((500 * r["m"] + 999) // 1000, 1)
-                for r in stats}
-
-        med_bins = _histogram_bins(
-            max(r["hi"] - r["lo"] + 1 for r in stats), bins, len(stats))
-        med = _grouped_select(
-            vals,
-            {(r["__g"], 500): [rank[r["__g"]], r["lo"], r["hi"]]
-             for r in stats},
-            med_bins, max_rounds)
-        med = {gkey: v for (gkey, _), v in med.items()}
-
+        med = {g: v for (g, _), v in _select(vals, stats, [500]).items()}
         # deviation pass rides the SAME cache: row-local |v − med|
         # over a broadcast of the ≤ groups-row median table
-        med_df = spark.createDataFrame(
-            [(gkey, int(v)) for gkey, v in med.items()],
-            f"__g {gtype}, __med long")
+        med_df = spark.createDataFrame(list(med.items()),
+                                       f"__g {gtype}, __med long")
         dev = (vals.join(F.broadcast(med_df), "__g")
                .select("__g",
                        F.abs(F.col("__v") - F.col("__med")).alias("__v")))
-        bound = {r["__g"]: max(r["hi"] - med[r["__g"]],
-                               med[r["__g"]] - r["lo"]) for r in stats}
-        mad_bins = _histogram_bins(
-            max(b + 1 for b in bound.values()), bins, len(stats))
-        mad = _grouped_select(
-            dev,
-            {(gkey, 500): [rank[gkey], 0, b]
-             for gkey, b in bound.items()},
-            mad_bins, max_rounds)
-        rows = [(gkey, int(v), int(mad[(gkey, 500)]))
-                for gkey, v in med.items()]
-        return spark.createDataFrame(
-            rows, f"{group_col} {gtype}, med long, mad long")
-    finally:
-        vals.unpersist()
+        mad = _select(dev, {g: (m, 0, max(hi - med[g], med[g] - lo))
+                            for g, (m, lo, hi) in stats.items()}, [500])
+    return spark.createDataFrame(
+        [(g, v, mad[g, 500]) for g, v in med.items()],
+        f"{group_col} {gtype}, med long, mad long")
 
 
 def bucketize_by_quantiles(df: DataFrame, col: Column | str,
@@ -960,7 +812,7 @@ def bucketize_by_quantiles(df: DataFrame, col: Column | str,
     """
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
-    c = (F.col(col) if isinstance(col, str) else col).cast("long")
+    c = _long(col)
     qs = [i * 1000 // n_buckets for i in range(1, n_buckets)]
     cuts = [int(r["value"]) for r in
             exact_quantiles(df, c, sorted(set(qs))).collect()]
@@ -996,7 +848,7 @@ def bucketize_by_quantiles_grouped(df: DataFrame, group_col: str,
     """
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
-    c = (F.col(col) if isinstance(col, str) else col).cast("long")
+    c = _long(col)
     qs = sorted(set(i * 1000 // n_buckets for i in range(1, n_buckets)))
     qres = exact_quantiles_grouped(df, group_col, c, qs,
                                    max_groups=max_groups)
@@ -1143,8 +995,7 @@ def kmv_group_jaccard_oracle_sql(group_col: str = "lang",
 
 def weighted_quantiles(df: DataFrame, col: Column | str,
                        weight_col: Column | str,
-                       qs_permille: list[int], bins: int = 1024,
-                       max_rounds: int = 8) -> DataFrame:
+                       qs_permille: list[int]) -> DataFrame:
     """EXACT weight-mass quantiles of an integer column — the
     ``exact_quantiles`` recursion with row counts replaced by integer
     weight mass: the q-permille value is
@@ -1155,57 +1006,17 @@ def weighted_quantiles(df: DataFrame, col: Column | str,
     document of length X" is the token-weighted length quantile, not
     the document-count quantile (long docs hold most of the mass).
 
-    Same scale ledger as the unweighted form: one filtered column
-    scan per round, register-sized (≤ bins rows) exchanges and
-    collects, ranges shrink ×bins per round, quantiles share each
-    round's histogram until their ranges diverge.  Weights must be
-    integral; rows with NULL or non-positive weight carry no mass
-    and are excluded (documented, not an error — a zero-token doc
-    holds no tokens).  Returns ``(q_permille, value)``.
+    Same scale ledger as the unweighted form: one column scan per
+    round, budget-bounded exchanges and collects, quantiles share
+    each round's scan.  Weights must be integral; rows with NULL or
+    non-positive weight carry no mass and are excluded (documented,
+    not an error — a zero-token doc holds no tokens).  Returns
+    ``(q_permille, value)``.
 
     Reference analogue: none (SURVEY.md §2); beyond-parity order
     statistics beside ``exact_quantiles``.
     """
-    bad_q = [q for q in qs_permille if not 0 < q <= 1000]
-    if bad_q:
-        raise ValueError(f"q_permille out of (0, 1000]: {bad_q}")
-    c = (F.col(col) if isinstance(col, str) else col).cast("long")
-    wc = (F.col(weight_col) if isinstance(weight_col, str)
-          else weight_col).cast("long")
-    vals = (df.select(c.alias("__v"), wc.alias("__w"))
-            .filter(F.col("__v").isNotNull() & (F.col("__w") > 0)))
-    vals = vals.persist()
-    try:
-        agg = vals.agg(F.sum("__w").alias("tw"),
-                       F.min("__v").alias("lo"),
-                       F.max("__v").alias("hi")).collect()[0]
-        tw, glo, ghi = agg["tw"], agg["lo"], agg["hi"]
-        rows = []
-        if tw:
-            if ghi - glo > (1 << 62):
-                raise ValueError(
-                    f"value range [{glo}, {ghi}] spans more than 2^62; "
-                    "narrow the domain (in-plan bucket arithmetic "
-                    "would overflow)")
-            # adaptive resolution (r15 — see _histogram_bins) + the
-            # shared narrowing loop with weight mass as the rank unit
-            bins = _histogram_bins(ghi - glo + 1, bins)
-            state = {q: [max((q * tw + 999) // 1000, 1), glo, ghi]
-                     for q in qs_permille}
-            done = _global_select(vals, state, bins, max_rounds,
-                                  weighted=True)
-            missing = [q for q in qs_permille if q not in done]
-            if missing:
-                raise RuntimeError(
-                    f"weighted_quantiles did not converge in "
-                    f"{max_rounds} rounds for q={missing} (range "
-                    f"[{glo}, {ghi}], bins={bins}) — raise max_rounds "
-                    "or bins")
-            rows = [(int(q), int(done[q])) for q in qs_permille]
-        spark = df.sparkSession
-        return spark.createDataFrame(rows, "q_permille int, value long")
-    finally:
-        vals.unpersist()
+    return _quantiles(df, None, col, qs_permille, weight_col)
 
 
 def weighted_quantiles_oracle_sql(qs_permille: list[int],
@@ -1240,7 +1051,6 @@ def weighted_quantiles_grouped(df: DataFrame, group_col: str,
                                col: Column | str,
                                weight_col: Column | str,
                                qs_permille: list[int],
-                               bins: int = 1024, max_rounds: int = 8,
                                max_groups: int = 100_000) -> DataFrame:
     """Per-group EXACT weight-mass quantiles — the fourth cell of the
     order-statistics matrix (global/grouped × row-count/weighted):
@@ -1248,44 +1058,13 @@ def weighted_quantiles_grouped(df: DataFrame, group_col: str,
     median ENGLISH token live").  Same narrowing recursion as
     :func:`exact_quantiles_grouped` with row counts replaced by
     integer weight mass (:func:`weighted_quantiles` semantics per
-    group), same driver guards (``max_groups`` × bins register state,
-    2^62 range check), same independent per-group convergence.  Rows
-    with NULL group/value or non-positive weight carry no mass.
+    group), the same ``max_groups`` driver guard and the same
+    independent per-group convergence.  Rows with NULL group/value or
+    non-positive weight carry no mass.
     Returns ``(group_col, q_permille, value)``.
     """
-    bad_q = [q for q in qs_permille if not 0 < q <= 1000]
-    if bad_q:
-        raise ValueError(f"q_permille out of (0, 1000]: {bad_q}")
-    c = (F.col(col) if isinstance(col, str) else col).cast("long")
-    wc = (F.col(weight_col) if isinstance(weight_col, str)
-          else weight_col).cast("long")
-    vals = (df.select(F.col(group_col).alias("__g"), c.alias("__v"),
-                      wc.alias("__w"))
-            .filter(F.col("__v").isNotNull()
-                    & F.col("__g").isNotNull() & (F.col("__w") > 0)))
-    vals = vals.persist()
-    try:
-        stats = _grouped_stats(vals, max_groups, weighted=True)
-        # adaptive resolution (r15 — see _histogram_bins), widest
-        # group drives the round count, budget split across groups
-        if stats:
-            widest = max(r["hi"] - r["lo"] + 1 for r in stats)
-            bins = _histogram_bins(widest, bins, len(stats))
-        state: dict[tuple, list[int]] = {}
-        for r in stats:
-            for q in qs_permille:
-                state[(r["__g"], q)] = [
-                    max((q * r["m"] + 999) // 1000, 1),
-                    r["lo"], r["hi"]]
-        done = _grouped_select(vals, state, bins, max_rounds,
-                               weighted=True)
-        spark = df.sparkSession
-        gtype = dict(vals.dtypes)["__g"]
-        rows = [(gkey, int(q), int(v)) for (gkey, q), v in done.items()]
-        return spark.createDataFrame(
-            rows, f"{group_col} {gtype}, q_permille int, value long")
-    finally:
-        vals.unpersist()
+    return _quantiles(df, group_col, col, qs_permille, weight_col,
+                      max_groups)
 
 
 def weighted_quantiles_grouped_oracle_sql(

@@ -1115,9 +1115,9 @@ def exact_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_quantiles_grouped): exact p50/p99 of event milli-values per
     event type — the per-segment latency/size report, computed by the
     same iterative histogram narrowing run for all groups at once
-    (per round: one scan with the per-group candidate ranges
-    broadcast on, a (group, bucket) register aggregate, and a
-    ≤groups·bins-row collect; converged groups drop out)."""
+    (per round: one scan, a (group, power-of-two bucket) register
+    aggregate and a budget-bounded collect; a later round semi-joins
+    only the pending buckets, so converged groups drop out)."""
     from pyspark.sql import functions as F
 
     from kafkadirect_spark.functions import diagnostics, sketch
@@ -1670,10 +1670,9 @@ def weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle test pins that the answers genuinely differ).  Scale
     shape: the exact_quantiles iterative histogram narrowing with
     row counts replaced by integer weight mass — per round one
-    filtered column scan, a ≤ bins-row register aggregate and
-    collect, ranges shrink ×bins per round (the register-sized-
-    collect convention); quantiles share each round's histogram
-    until ranges diverge.  The oracle replays the naive running-
+    column scan, a budget-bounded register aggregate and collect
+    (the register-sized-collect convention); quantiles share each
+    round's scan.  The oracle replays the naive running-
     weight walk the recursion must equal, with the token weight
     computed identically on both sides."""
     from kafkadirect_spark.functions.text import token_count

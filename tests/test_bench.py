@@ -1,5 +1,7 @@
+import glob
 import os
 import sys
+import tempfile
 from itertools import chain
 
 from pyspark.sql import functions as F
@@ -60,3 +62,14 @@ def test_organic_replicas_keep_token_counts_with_fresh_tokens(spark,
     times = bench.run(spark, d, {"doc_surprisal": QUERIES["doc_surprisal"],
                                  "funnel_steps": QUERIES["funnel_steps"]}, 1)
     assert all(len(t) == 1 and t[0] > 0 for t in times.values())
+
+
+def test_build_suites_leaves_no_temp_dir(spark):
+    """Building the suite table makes no directory, and consumeproduce
+    deletes the copy it writes."""
+    pattern = os.path.join(tempfile.gettempdir(), "kds-bench-*")
+    before = set(glob.glob(pattern))
+    bench.build_suites()
+    suites, _ = bench.build_suites()
+    bench.run(spark, SF, {"consumeproduce": suites["consumeproduce"]}, 1)
+    assert set(glob.glob(pattern)) <= before

@@ -764,6 +764,36 @@ def test_containment_anti_matches_python_model(spark):
     assert {r.doc_id for r in out.collect()} == want == {1, 4, 5, 6}
 
 
+def test_containment_ids_survive_recompute(spark):
+    """The capped index numbers shingles with monotonically_increasing_id;
+    unpersisting and recomputing under another shuffle layout and AQE
+    coalescing gives the same pairs."""
+    words = [f"w{i}" for i in range(40)]
+    rows = [(d, " ".join(words[(d * 3) % 17:(d * 3) % 17 + 12 + d % 5]))
+            for d in range(24)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = dedup.containment_pairs(df, "text", "doc_id", n=3,
+                                    threshold=0.5, max_doc_freq=6)
+    first = sorted(tuple(r) for r in pairs.collect())
+    assert first
+    dedup.release_caches()
+    conf = {"spark.sql.shuffle.partitions": "7",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        again = dedup.containment_pairs(df, "text", "doc_id", n=3,
+                                        threshold=0.5, max_doc_freq=6)
+        assert sorted(tuple(r) for r in again.collect()) == first
+        dedup.release_caches()
+        assert sorted(tuple(r) for r in pairs.collect()) == first
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+        dedup.release_caches()
+
+
 def test_containment_how_rejects_unknown(spark):
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with pytest.raises(ValueError, match="how must be"):

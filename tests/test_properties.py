@@ -641,8 +641,7 @@ def test_exact_quantiles_match_sorted_model(spark, values, q):
 
     df = spark.createDataFrame([(v,) for v in values], "x long")
     out = {r.q_permille: r.value for r in
-           sketch.exact_quantiles(df, "x", [q], bins=16,
-                                  max_rounds=16).collect()}
+           sketch.exact_quantiles(df, "x", [q]).collect()}
     s = sorted(values)
     k = max((q * len(s) + 999) // 1000, 1)
     assert out == {q: s[k - 1]}

@@ -509,18 +509,17 @@ def test_exact_quantiles_match_sorted_model(spark):
     df = spark.createDataFrame([(v,) for v in values], "x long")
     qs = [1, 250, 500, 990, 1000]
     out = {r.q_permille: r.value for r in
-           sketch.exact_quantiles(df, "x", qs, bins=64).collect()}
+           sketch.exact_quantiles(df, "x", qs).collect()}
     assert out == {q: _kth_model(values, q) for q in qs}
 
 
 def test_exact_quantiles_wide_range_converges(spark):
-    # 40-bit spread with bins=16 forces many narrowing rounds
+    # 40-bit spread: a span far wider than the row count
     values = [(i * 2_654_435_761) % (1 << 40) - (1 << 39)
               for i in range(2000)]
     df = spark.createDataFrame([(v,) for v in values], "x long")
     out = {r.q_permille: r.value for r in
-           sketch.exact_quantiles(df, "x", [500], bins=16,
-                                  max_rounds=16).collect()}
+           sketch.exact_quantiles(df, "x", [500]).collect()}
     assert out == {500: _kth_model(values, 500)}
 
 
@@ -533,11 +532,15 @@ def test_exact_quantiles_nulls_and_empty(spark):
     assert sketch.exact_quantiles(empty, "x", [500]).collect() == []
 
 
-def test_exact_quantiles_rejects_overflowing_range(spark):
-    df = spark.createDataFrame(
-        [(-(1 << 62),), ((1 << 62),)], "x long")
-    with pytest.raises(ValueError):
-        sketch.exact_quantiles(df, "x", [500])
+def test_exact_quantiles_full_long_range(spark):
+    # power-of-two buckets never subtract an origin, so a span past
+    # 2^62 (up to the whole long range) cannot overflow in the plan
+    values = [-(1 << 62), 1 << 62, -(1 << 63), (1 << 63) - 1, 0, 3]
+    df = spark.createDataFrame([(v,) for v in values], "x long")
+    qs = [1, 200, 500, 501, 1000]
+    out = {r.q_permille: r.value for r in
+           sketch.exact_quantiles(df, "x", qs).collect()}
+    assert out == {q: _kth_model(values, q) for q in qs}
 
 
 def test_exact_quantiles_grouped_matches_model(spark):
@@ -549,8 +552,7 @@ def test_exact_quantiles_grouped_matches_model(spark):
     df = spark.createDataFrame(rows, "g string, x long")
     qs = [250, 500, 990]
     out = {(r.g, r.q_permille): r.value for r in
-           sketch.exact_quantiles_grouped(df, "g", "x", qs,
-                                          bins=32).collect()}
+           sketch.exact_quantiles_grouped(df, "g", "x", qs).collect()}
     from collections import defaultdict
     groups = defaultdict(list)
     for g, x in rows:
@@ -996,3 +998,75 @@ def test_grouped_median_mad_matches_two_kernel_calls(spark):
                dev, "g", "d", [500]).collect()}
     assert fused == {g: (med[g], mad[g]) for g in med}
     assert set(fused) == {"a", "b", "c"} and fused["b"][1] == 0
+
+
+def test_grouped_median_mad_rejects_overflowing_range(spark):
+    # |v - median| of a group spanning more than 2^62 can overflow
+    df = spark.createDataFrame(
+        [("a", -(1 << 62)), ("a", (1 << 62) + 1), ("b", 1)],
+        "g string, v long")
+    with pytest.raises(ValueError, match="2\\^62"):
+        sketch.grouped_median_mad(df, "g", "v")
+
+
+def _weighted_model(pairs, q):
+    """Least v whose cumulative weight reaches ceil(q·W/1000)."""
+    pairs = sorted(pairs)
+    k = max((q * sum(w for _, w in pairs) + 999) // 1000, 1)
+    cum = 0
+    for v, w in pairs:
+        cum += w
+        if cum >= k:
+            return v
+
+
+_SELECTION_INPUTS = {
+    "all_equal": [7] * 40,
+    "dominant": [3] * 60 + [1 << e for e in range(10, 30, 2)]
+    + [((i * 7919) % 2001 - 1000) << 20 for i in range(20)],
+    "long_extremes": [-(1 << 62), 1 << 62, -(1 << 63), (1 << 63) - 1]
+    + [(i * 7919) % 201 - 100 for i in range(30)],
+    # q 490 is negative and q 510 is not, in every group: they land in
+    # the adjacent buckets -1 and 0, so later rounds narrow two parents
+    # of one group side by side
+    "straddle": [v for v in range(-30, 30) for _ in (0, 1)]
+    + [-(1 << 20), 1 << 20],
+}
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+@pytest.mark.parametrize("grouped", [False, True])
+@pytest.mark.parametrize("name", sorted(_SELECTION_INPUTS))
+def test_selection_exact_over_narrowing_rounds(spark, monkeypatch, name,
+                                               grouped, weighted):
+    """Every kernel shape stays exact when a small round budget forces
+    at least three narrowing rounds."""
+    values = _SELECTION_INPUTS[name]
+    rows = [(i % 2 if grouped else 0, v, 1 + i % 3 if weighted else 1)
+            for i, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "g int, v long, w long")
+    qs = [1, 490, 500, 510, 1000]
+    monkeypatch.setattr(sketch, "_ROUND_BUDGET", 8)
+    rounds = []  # one histogram collect per round
+    cls = type(df)
+    to_pandas = cls.toPandas
+    monkeypatch.setattr(cls, "toPandas",
+                        lambda self: rounds.append(1) or to_pandas(self))
+    if grouped and weighted:
+        out = sketch.weighted_quantiles_grouped(df, "g", "v", "w", qs)
+    elif grouped:
+        out = sketch.exact_quantiles_grouped(df, "g", "v", qs)
+    elif weighted:
+        out = sketch.weighted_quantiles(df, "v", "w", qs).withColumn(
+            "g", F.lit(0))
+    else:
+        out = sketch.exact_quantiles(df, "v", qs).withColumn("g", F.lit(0))
+    got = {(r.g, r.q_permille): r.value for r in out.collect()}
+    by = {}
+    for g, v, w in rows:
+        by.setdefault(g, []).append((v, w))
+    assert got == {(g, q): _weighted_model(p, q)
+                   for g, p in by.items() for q in qs}
+    assert len(rounds) >= 3 or name == "all_equal"
+    if name == "straddle":
+        assert all(got[g, 490] < 0 <= got[g, 510] for g in by)
