@@ -1,10 +1,9 @@
 """Real multimodal pipeline demo — the codec-free formats end to end:
-mint genuine WAV-PCM, µ-law Sun-AU, binary-PNM, 24-bit BMP, REAL
-PNG (stdlib-zlib DEFLATE) and REAL LZW GIF payloads (round 15)
-executor-side
-(functions/multimodal.py synth_media), then
-run the REAL decode / feature-extract / block-mean-resize passes,
-all zero-shuffle mapInPandas over Arrow batches.
+mint genuine WAV-PCM, µ-law Sun-AU, binary-PNM, 24-bit BMP, PNG
+(stdlib-zlib DEFLATE) and LZW GIF payloads executor-side
+(functions/multimodal.py synth_media), then run the REAL decode /
+feature-extract / block-mean-resize passes, each one zero-shuffle
+mapInPandas stage over Arrow batches.
 
 No reference analogue (SURVEY.md §2 — the reference has no media
 model); this demos the beyond-parity multimodal column surface.

@@ -1086,8 +1086,10 @@ def pq_topk(df: DataFrame, id_col: str, vec_col: str,
     ADC is an approximation of true distance (quantization error);
     the pytest pins exact agreement with a python PQ model (probes
     excluded before ranking, as in cosine_topk, so ranks 1..n are
-    contiguous).  Unlike the BLAS paths' 100k probe cap, each probe
-    here adds an m×k LITERAL table to the plan — the cap is small.
+    contiguous).  Unlike the BLAS paths' 100k probe cap, the cap is
+    small: the driver computes every probe's m×k table and ships them
+    all inside the plan as one literal array, and each probe multiplies
+    the scored rows by the corpus size before the top-n window.
     """
     dim = _vec_dim(df, vec_col)
     if dim % m:
@@ -1113,29 +1115,33 @@ def pq_topk(df: DataFrame, id_col: str, vec_col: str,
              for j in range(m)]
         tables.append((prow[id_col], t))
 
-    def adc(t) -> Column:
-        return sum(
-            (F.element_at(F.array(*[F.lit(int(x)).cast("long")
-                                    for x in t[j]]),
-                          F.element_at("codes", j + 1) + 1)
-             for j in range(m)),
-            start=F.lit(0).cast("long"))
-
+    # every probe's table in ONE literal array, probe i at offset
+    # i·m·k, so the generated code holds m lookups whatever the probe
+    # count; a literal array per probe puts m lookups per probe into
+    # one generated method, which passes Java's 64 KB method limit at
+    # about 50 probes (m=4, k=16)
+    import numpy as np
+    flat = F.lit(np.array([x for _, t in tables for tj in t for x in tj],
+                          dtype=np.int64))
     id_type = dict(df.dtypes)[id_col]
     scored = codes.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col(id_col).alias("neighbor_id"), "codes",
         F.explode(F.array(*[
             F.struct(F.lit(pid).cast(id_type).alias("pid"),
-                     adc(t).alias("d"))
-            for pid, t in tables])).alias("e"))
+                     F.lit(i * m * k).alias("off"))
+            for i, (pid, _) in enumerate(tables)])).alias("e"))
+    adc = sum((F.element_at(flat, F.col("e.off") + j * k
+                            + F.element_at("codes", j + 1) + 1)
+               for j in range(m)), start=F.lit(0).cast("long"))
     w = Window.partitionBy("e.pid").orderBy(
-        F.col("e.d").asc(), F.col("neighbor_id").asc())
+        F.col("d").asc(), F.col("neighbor_id").asc())
     return (scored
             .filter(F.col("e.pid") != F.col("neighbor_id"))
+            .withColumn("d", adc)
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= n)
             .select(F.col("e.pid").alias(id_col), "neighbor_id",
-                    "rank", F.col("e.d").alias("adc_dist")))
+                    "rank", F.col("d").alias("adc_dist")))
 
 
 def ivf_pq_topk(df: DataFrame, id_col: str, vec_col: str,

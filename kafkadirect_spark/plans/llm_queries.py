@@ -593,36 +593,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b")
 
 
-@query(
-    "multimodal_meta",
-    oracle="""
-    WITH ch AS (
-      SELECT doc_id,
-             CAST(SUM(ascii(substr(text, g, 1))) % 2147483647 AS BIGINT)
-               AS checksum
-      FROM (SELECT doc_id, text, unnest(generate_series(1, length(text))) AS g
-            FROM documents)
-      GROUP BY doc_id
-    )
-    SELECT d.doc_id, 'image' AS media_type,
-           CAST(strlen(d.text) AS BIGINT) AS n_bytes,
-           CAST((strlen(d.text) % 640) + 1 AS INTEGER) AS width,
-           CAST(((strlen(d.text) // 640) % 480) + 1 AS INTEGER) AS height,
-           CAST(1 AS INTEGER) AS n_frames,
-           ch.checksum
-    FROM documents d JOIN ch USING (doc_id)
-    """,
-)
-def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing end-to-end: text bytes → binary payload +
-    metadata struct → Arrow-batched mapInPandas decode-stub feature
-    extraction.  The checksum/size/shape outputs are deterministic, so
-    the whole Python-boundary path is oracle-verified."""
-    docs = load_table(spark, sf_dir, "documents")
-    media = multimodal.attach_payload(docs, "doc_id", "text", media_type="image")
-    return multimodal.extract_features(media)
-
-
 _KEEP_GATE_SQL = f"""length(text) >= 200 AND len({_TOK}) > 0
       AND CAST(len(list_filter({_TOK}, x -> list_contains({_STOPWORDS_SQL}, x))) AS DOUBLE)
           / len({_TOK}) >= 0.02"""
@@ -1188,22 +1158,20 @@ def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
        oracle=multimodal.synth_image_features_oracle_sql("bmp"))
 def media_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image-container round-trip, driver-verified end to end
-    (functions/multimodal.py — registered r13 per the r12 plan):
-    deterministic 24-bit BMP payloads are SYNTHESIZED executor-side
-    from doc ids (mapInPandas — the object-store media-source
-    stand-in: scan → batch → encode), then DECODED by the real BMP
-    parser (BGR order, 4-byte row padding) and reduced to integer
-    features (width, height, channels, truncating mean_milli,
-    min/max pixel).  Zero shuffles end to end.  A green row proves
-    the encoder, the decoder AND the feature math agree with the
-    oracle's from-scratch SQL replay of the gradient synthesis +
-    feature arithmetic — the container round-trip itself is the
-    claim.  (The P5/PNM twin is driven through media_phash_pairs;
-    JPEG/PNG remain labeled strict-raising stubs — env-blocked.)
-    r16: synth → decode → features run FUSED in one Python stage
-    (multimodal.synth_features — same per-id formulas by
-    construction; the payload no longer round-trips through the JVM
-    between two chained Python stages, guide §4.1)."""
+    (functions/multimodal.py): deterministic 24-bit BMP payloads are
+    SYNTHESIZED executor-side from doc ids (the object-store
+    media-source stand-in: scan → batch → encode), then DECODED by
+    the real BMP parser (BGR order, 4-byte row padding) and reduced
+    to integer features (width, height, channels, truncating
+    mean_milli, min/max pixel).  Zero shuffles end to end.  A green
+    row proves the encoder, the decoder AND the feature math agree
+    with the oracle's from-scratch SQL replay of the gradient
+    synthesis + feature arithmetic — the container round-trip itself
+    is the claim.  (The P5/PNM twin is driven through
+    media_phash_pairs.)  Synthesis, decode and features run in ONE
+    Python stage (multimodal.synth_features), so the payload never
+    round-trips through the JVM between two chained Python
+    stages."""
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.synth_features(docs.select("doc_id"), "doc_id",
                                      kind="bmp")
@@ -1214,21 +1182,19 @@ def media_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
            kind="pnm", max_hamming=1))
 def media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-duplicate pairs over REAL P5 rasters
-    (functions/multimodal.py — registered r13 per the r12 plan):
-    synthesize genuine PGM payloads from doc ids, decode with the
-    real PNM parser, integer-exact 64-bit average-hash (8×8 cell
-    means vs global mean), then Hamming-≤1 pairs via simhash-style
-    byte bands — candidates bucket on the hash's 8 BYTES, recall is
-    pigeonhole-EXACT for max_hamming < 8, each band collision pays
-    one row-local bit_count(xor).  Shuffles: one (band, byte) bucket
-    exchange — never all-pairs.  max_hamming=1 keeps the result
-    driver-sized (the r12 plan's measured fatness note: ≤2 → 42.7k
-    rows at 5k ids).  The oracle replays synthesis → gray → cells →
+    (functions/multimodal.py): synthesize genuine PGM payloads from
+    doc ids, decode with the real PNM parser, integer-exact 64-bit
+    average-hash (8×8 cell means vs global mean), then Hamming-≤1
+    pairs via simhash-style byte bands — candidates bucket on the
+    hash's 8 BYTES, recall is pigeonhole-EXACT for max_hamming < 8,
+    each band collision pays one row-local bit_count(xor).
+    Shuffles: one (band, byte) bucket exchange — never all-pairs.
+    max_hamming=1 keeps the result driver-sized (≤2 gives 42.7k rows
+    at 5k ids).  The oracle replays synthesis → gray → cells →
     threshold bits → halves → bands → bucket pairs → Hamming
     entirely in SQL — a green row proves the perceptual-dedup
-    pipeline AND the container round-trip.  r16: synth → decode →
-    aHash run FUSED in one Python stage (multimodal.synth_phash —
-    same per-id formulas by construction, guide §4.1)."""
+    pipeline AND the container round-trip.  Synthesis, decode and
+    aHash run in ONE Python stage (multimodal.synth_phash)."""
     docs = load_table(spark, sf_dir, "documents")
     hashes = multimodal.synth_phash(docs.select("doc_id"), "doc_id",
                                     kind="pnm")
@@ -1247,11 +1213,10 @@ from kafkadirect_spark.functions.graph import (  # noqa: E402
 @query("media_audio_features",
        oracle=multimodal.synth_audio_features_oracle_sql())
 def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio-container round-trip — the WAV twin of the
-    driver-green `media_image_features` (functions/multimodal.py —
-    registered r14 per the r13 plan): deterministic PCM16 triangle
-    waves are SYNTHESIZED executor-side from doc ids (mapInPandas,
-    the object-store media-source stand-in), then DECODED by the
+    """REAL audio-container round-trip — the WAV twin of
+    `media_image_features` (functions/multimodal.py): deterministic
+    PCM16 triangle waves are SYNTHESIZED executor-side from doc ids
+    (the object-store media-source stand-in), then DECODED by the
     real RIFF/WAVE parser (chunk walk, fmt/data extraction,
     little-endian int16 samples) and reduced to integer features
     (sample_rate, channels, n_samples, duration_ms, peak, truncating
@@ -1260,10 +1225,8 @@ def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle synthesis + feature arithmetic from scratch — the WAV
     container is exercised on the ENGINE side only, so a green row
     proves the PCM16 encode/decode round-trip bit-exactly.
-    (MP3/compressed codecs remain labeled strict-raising stubs —
-    env-blocked.)  r16: synth → decode → features run FUSED in one
-    Python stage (multimodal.synth_features — same per-id formulas
-    by construction, guide §4.1)."""
+    Synthesis, decode and features run in ONE Python stage
+    (multimodal.synth_features)."""
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.synth_features(docs.select("doc_id"), "doc_id",
                                      kind="wav")
@@ -1329,11 +1292,11 @@ def dedup_exactsubstr_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
        oracle=multimodal.synth_video_features_oracle_sql())
 def media_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video-container round-trip — the YUV4MPEG2 leg that
-    completes the driver-verified image (BMP/PNM, D13) / audio (WAV,
-    D14) / video triad (functions/multimodal.py — registered r15 per
-    the r14 plan): deterministic luma-gradient frame stacks with a
-    mid-stream +96 jump are SYNTHESIZED executor-side from doc ids
-    (mapInPandas, the object-store media-source stand-in), ENCODED
+    completes the driver-verified image (BMP/PNM) / audio (WAV) /
+    video triad (functions/multimodal.py): deterministic
+    luma-gradient frame stacks with a mid-stream +96 jump are
+    SYNTHESIZED executor-side from doc ids (the object-store
+    media-source stand-in), ENCODED
     through the real y4m writer (header tags, FRAME markers, planar
     luma), DECODED back by the real parser, and reduced to integer
     features — dims, frame count, fps, duration_ms, mean luma, and
@@ -1342,11 +1305,9 @@ def media_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the gradient synthesis + feature arithmetic from
     scratch — the y4m container is exercised on the ENGINE side
     only, so a green row proves the encode/decode round-trip
-    bit-exactly including the cut frame.  (JPEG/MP4-class compressed
-    codecs remain labeled strict-raising stubs — env-blocked.)
-    r16: synth → encode → decode → features run FUSED in one Python
-    stage (multimodal.synth_features — same per-id formulas by
-    construction, guide §4.1)."""
+    bit-exactly including the cut frame.  Synthesis, encode, decode
+    and features run in ONE Python stage
+    (multimodal.synth_features)."""
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.synth_features(docs.select("doc_id"), "doc_id",
                                      kind="y4m")
