@@ -388,6 +388,39 @@ def ann_lsh_topk(df: DataFrame, id_col: str, vec_col: str, dim: int,
     )
 
 
+def _ivf_ranked(df: DataFrame, frame: DataFrame, id_col: str,
+                vec_col: str, centroid_stride: int,
+                max_rank: int) -> DataFrame:
+    """``(id, _cid, _pr)``: each of ``frame``'s vectors ranked against
+    the IVF coarse centroids (every ``centroid_stride``-th vector of
+    ``df`` by id, broadcast), cosine descending, ties to the lower
+    centroid id, ranks ≤ ``max_rank`` kept.
+
+    Norms are STAGED as columns on each side: cosine(a, b) evaluates
+    three interpreted HOF aggregates per pair (dot and both norms; HOFs
+    sit outside whole-stage codegen), while dot/(_vn·_cn) computes the
+    identical float expression (same sequential sums, same sqrt, same
+    multiply, so ranks cannot flip) with one HOF per pair.  Callers
+    ``_widen`` an index-sized ``frame``: the scoring feeds a tiny
+    window exchange that AQE coalesces to one partition, so without
+    the widen the whole n×c scoring runs in one task (3.4 s → 1.0 s
+    at sf0.1 for the assignment pass)."""
+    cent = F.broadcast(
+        df.filter(F.col(id_col) % centroid_stride == 0)
+        .select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cvec"),
+                norm(F.col(vec_col)).alias("_cn")))
+    w = Window.partitionBy(id_col).orderBy(F.col("_ccos").desc(), F.col("_cid"))
+    return (
+        frame.withColumn("_vn", norm(F.col(vec_col)))
+        .join(cent)
+        .withColumn("_ccos", dot(F.col(vec_col), F.col("_cvec"))
+                    / (F.col("_vn") * F.col("_cn")))
+        .withColumn("_pr", F.row_number().over(w))
+        .filter(F.col("_pr") <= max_rank)
+        .select(F.col(id_col), "_cid", "_pr")
+    )
+
+
 def ivf_topk(
     df: DataFrame,
     id_col: str,
@@ -411,35 +444,13 @@ def ivf_topk(
     The candidate join then shuffles on centroid id — list sizes, not
     |index|², bound the work, the same skew profile as LSH buckets.
     """
-    # Norms are STAGED as columns on each side (r15, guide §4.2 spirit):
-    # cosine(a, b) re-evaluates THREE interpreted HOF aggregates per
-    # pair (dot + both norms — HOFs sit outside whole-stage codegen);
-    # dot/(_vn·_cn) computes the identical float expression (same
-    # sequential sums, same sqrt, same multiply — bit-identical, so
-    # ranks can't flip) with ONE HOF per pair.  ``_widen`` keeps the
-    # per-pair HOF work cluster-wide: the scoring feeds a tiny window
-    # exchange that AQE coalesces to one partition, so without the
-    # widen the whole n×c scoring ran single-task (measured 3.4 s →
-    # 1.0 s at sf0.1 for the assignment pass).
-    cent = F.broadcast(
-        df.filter(F.col(id_col) % centroid_stride == 0)
-        .select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cvec"),
-                norm(F.col(vec_col)).alias("_cn")))
-    vecs = df.select(F.col(id_col), F.col(vec_col))
     # ONE scoring pass over index × broadcast(centroids); rank 1 is the
     # inverted-list assignment, ranks ≤ nprobe are the probe set.  The
     # persisted frame is int-only (id, cid, rank) — the vectors never
     # flow through the ranking shuffle.
-    pw = Window.partitionBy(id_col).orderBy(F.col("_ccos").desc(), F.col("_cid"))
-    ranked_cent = _persist(
-        _widen(vecs).withColumn("_vn", norm(F.col(vec_col)))
-        .join(cent)
-        .withColumn("_ccos", dot(F.col(vec_col), F.col("_cvec"))
-                    / (F.col("_vn") * F.col("_cn")))
-        .withColumn("_pr", F.row_number().over(pw))
-        .filter(F.col("_pr") <= max(nprobe, 1))
-        .select(F.col(id_col), "_cid", "_pr")
-    )
+    vecs = df.select(F.col(id_col), F.col(vec_col))
+    ranked_cent = _persist(_ivf_ranked(df, _widen(vecs), id_col, vec_col,
+                                       centroid_stride, max(nprobe, 1)))
     assign = (ranked_cent.filter(F.col("_pr") == 1)
               .select(F.col(id_col).alias("_nid"), "_cid"))
     probes = ranked_cent.select(F.col(id_col).alias("_pid"), "_cid")
@@ -449,7 +460,7 @@ def ivf_topk(
         .select("_pid", "_nid")
     )
     # staged norms again: one HOF aggregate per candidate pair instead
-    # of three, float-identical (see the assignment comment above)
+    # of three, float-identical (see _ivf_ranked)
     cands = (
         pairs
         .join(vecs.select(F.col(id_col).alias("_pid"),
@@ -529,8 +540,8 @@ def assign_clusters(df: DataFrame, id_col: str, vec_col: str,
     reorders the double summation; near-tie assignments would flip
     against the sequential-sum oracle).  For large-k space partition
     use ``kmeans_quantized`` (integer distances are exact under any
-    summation order, so its ``assign="blas"`` path stays
-    bit-identical) — the SemDeDup pipeline already does.
+    summation order, so its broadcast int64-matmul argmin stays
+    bit-identical to the oracle) — the SemDeDup pipeline already does.
     """
     rows = (df.select(id_col, vec_col).orderBy(id_col).limit(k).collect())
     cents = [(r[0], [float(x) for x in r[1]]) for r in rows]
@@ -553,8 +564,7 @@ def assign_clusters(df: DataFrame, id_col: str, vec_col: str,
 def kmeans_quantized(df: DataFrame, id_col: str, vec_col: str,
                      k: int = 4, iters: int = 2,
                      scale: int = 10_000,
-                     keep_qvec: bool = False,
-                     assign: str = "auto") -> DataFrame:
+                     keep_qvec: bool = False) -> DataFrame:
     """Distributed Lloyd's k-means over GLOBALLY quantized embeddings —
     iterative clustering whose every step is integer arithmetic, so the
     final assignment is hash-exact across engines (the float version
@@ -565,34 +575,16 @@ def kmeans_quantized(df: DataFrame, id_col: str, vec_col: str,
     which distances are integer L2² (``Σ(q−c)²``, fits int64 up to
     ~10^11 rows/cluster at scale=10^4) and centroid updates are
     elementwise ``sum // count`` floor division.  Seeding follows
-    ``assign_clusters``: the k smallest ids (deterministic, no RNG).
-    An emptied cluster keeps its previous centroid.
+    ``assign_clusters``: the k smallest ids (deterministic, no RNG);
+    fewer than k rows raise ValueError.  An emptied cluster keeps its
+    previous centroid.
 
-    Scale ledger per iteration: assignment never joins and never
-    shuffles — the centroids ride to the data, in one of two
-    equivalent forms picked by ``assign``:
-
-    - ``"expr"``: literal-centroid argmin expressions (zero Python,
-      whole-stage codegen) — Catalyst evaluates O(k·dim) expression
-      ops per row, the right trade for small k;
-    - ``"blas"``: the centroid matrix goes out as a Spark broadcast
-      into a ``mapInPandas`` pass that computes all k distances per
-      Arrow batch with one int64 matmul (|q|² − 2q·C + |c|²) and
-      argmins vectorized.  The expression path's per-row cost is
-      LINEAR IN k (measured: k=128 over 32k rows spends 42 of 43 s
-      in assignment), so at SemDeDup-scale k (the paper runs k≈10⁵)
-      only the matrix form works — same integer arithmetic, same
-      (dist, lowest-cid) tie-break, bit-identical output (equality
-      pytest-pinned);
-    - ``"auto"`` (default): ``"expr"`` for k ≤ 8 (trivial either way,
-      and literals compose into surrounding codegen), ``"blas"``
-      above — measured crossover on dim-64 embeddings is below k=8
-      (k=32 over 8k rows: 9.5 s expr vs 0.7 s blas).
-
-    The update is one posexplode + groupBy(cluster, pos) whose output
-    is exactly k·dim rows — collected to the driver (bounded by
-    construction, the MLlib pattern) to become the next iteration's
-    centroid state.
+    This is product quantization's codebook training at one subspace
+    (``_pq_train`` with m=1): each iteration's assignment is the one
+    broadcast int64-matmul argmin pass (``_pq_assigned``) — never a
+    join or a shuffle — and the update collects exactly k·dim rows
+    (bounded by construction, the MLlib pattern) as the next
+    iteration's centroid state.
 
     Returns ``(id_col, cluster_id, dist_sq)`` for the final
     assignment (plus the quantized vector as ``qvec`` when
@@ -602,122 +594,20 @@ def kmeans_quantized(df: DataFrame, id_col: str, vec_col: str,
     (SURVEY.md §2.4); this is the Spark-side primitive SemDeDup-style
     pipelines need above ``assign_clusters``'s fixed seeding.
     """
-    mode = ("blas" if k > 8 else "expr") if assign == "auto" else assign
-    if mode not in ("expr", "blas"):
-        raise ValueError(f"unsupported assign mode {assign!r}")
-
-    q = _persist(df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col),
-                    lambda v: F.floor(v.cast("double") * scale)
-                    .cast("long")).alias("__qv")))
-
-    seed_rows = q.orderBy(id_col).limit(k).collect()
-    cents: dict[int, list[int]] = {
-        i: list(r["__qv"]) for i, r in enumerate(seed_rows)}
-
-    id_type = dict(q.dtypes)[id_col]
-
-    def blas_assigned(cur_cents: dict[int, list[int]],
-                      bc_out: list | None = None) -> DataFrame:
-        """(id, __qv, __c, __d) via one broadcast int64 matmul per
-        Arrow batch — integer-exact, ties to the lowest cid (sorted
-        centroid order + argmin-first-occurrence).  The broadcast
-        handle is appended to ``bc_out`` so training iterations can
-        release it after their action — at SemDeDup-scale k the
-        centroid matrix is ~50 MB and an unreleased copy per
-        iteration would pin memory for the application lifetime
-        (round-8 self-review finding)."""
-        import numpy as np
-        import pandas as pd
-
-        cids = sorted(cur_cents)
-        bc = q.sparkSession.sparkContext.broadcast(
-            (np.array(cids, dtype=np.int64),
-             np.array([cur_cents[c] for c in cids], dtype=np.int64)))
-        if bc_out is not None:
-            bc_out.append(bc)
-
-        def part(batches):
-            cid_arr, C = bc.value
-            cn2 = np.einsum("ij,ij->i", C, C)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                Q = np.array(pdf["__qv"].tolist(), dtype=np.int64)
-                # |q−c|² = |q|² − 2·q·c + |c|² — every term int64-exact
-                d = (np.einsum("ij,ij->i", Q, Q)[:, None]
-                     - 2 * (Q @ C.T) + cn2[None, :])
-                idx = np.argmin(d, axis=1)
-                yield pd.DataFrame({
-                    id_col: pdf[id_col],
-                    "__qv": pdf["__qv"],
-                    "__c": cid_arr[idx],
-                    "__d": d[np.arange(len(idx)), idx]})
-
-        return q.mapInPandas(
-            part, schema=(f"{id_col} {id_type}, __qv array<bigint>, "
-                          "__c bigint, __d bigint"))
-
-    def lit_vec(vals):
-        return F.array(*[F.lit(int(x)).cast("long") for x in vals])
-
-    def dist_sq(cv):
-        return F.aggregate(
-            F.zip_with(F.col("__qv"), lit_vec(cv),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-    def best_expr():
-        # struct(d, cid) lexicographic min ≡ (dist asc, cid asc) argmin
-        structs = [
-            F.struct(dist_sq(cv).alias("d"),
-                     F.lit(cid).cast("long").alias("cid"))
-            for cid, cv in sorted(cents.items())]
-        # F.least demands ≥2 args; k=1 is a legal degenerate call
-        return structs[0] if len(structs) == 1 else F.least(*structs)
-
-    for _ in range(max(0, iters - 1)):
-        bcs: list = []
-        assigned = (blas_assigned(cents, bcs) if mode == "blas"
-                    else q.withColumn("__c", best_expr()["cid"]))
-        upd = (assigned
-               .select("__c", F.posexplode("__qv").alias("__p", "__x"))
-               .groupBy("__c", "__p")
-               .agg(F.expr("CAST(SUM(__x) DIV COUNT(*) AS LONG)")
-                    .alias("__v"))
-               .collect())  # exactly k·dim rows — bounded by construction
-        for b in bcs:  # iteration's centroid copy is consumed — release
-            b.unpersist(blocking=False)
-        new_cents: dict[int, list[int]] = {}
-        for r in upd:
-            new_cents.setdefault(int(r["__c"]),
-                                 [0] * len(cents[0]))[int(r["__p"])] = \
-                int(r["__v"])
-        cents = {cid: new_cents.get(cid, cv) for cid, cv in cents.items()}
-
-    if mode == "blas":
-        fin = blas_assigned(cents)
-        extra = [F.col("__qv").alias("qvec")] if keep_qvec else []
-        return fin.select(
-            F.col(id_col),
-            F.col("__c").alias("cluster_id"),
-            F.col("__d").alias("dist_sq"),
-            *extra)
-    best = best_expr()
+    q = _persist(_pq_quantize(df, id_col, vec_col, scale))
+    cents = _pq_train(q, id_col, 1, k, iters)
     extra = [F.col("__qv").alias("qvec")] if keep_qvec else []
-    return q.select(
+    return _pq_assigned(q, id_col, cents).select(
         F.col(id_col),
-        best["cid"].alias("cluster_id"),
-        best["d"].alias("dist_sq"),
+        F.col("__c0").alias("cluster_id"),
+        F.col("__d").alias("dist_sq"),
         *extra)
 
 
 def semdedup_prune(df: DataFrame, id_col: str, vec_col: str,
                    k: int = 4, iters: int = 2, scale: int = 10_000,
                    tau_num: int = 9, tau_den: int = 20,
-                   block_rows: int = 2048,
-                   assign: str = "auto") -> DataFrame:
+                   block_rows: int = 2048) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, public): k-means the embedding
     space, then mark as semantic duplicates the vectors that have a
     LOWER-id cluster-mate with cosine ≥ tau (tau = tau_num/tau_den) —
@@ -755,7 +645,7 @@ def semdedup_prune(df: DataFrame, id_col: str, vec_col: str,
 
     assigned = kmeans_quantized(
         df, id_col, vec_col, k=k, iters=iters, scale=scale,
-        keep_qvec=True, assign=assign).drop("dist_sq")
+        keep_qvec=True).drop("dist_sq")
     tn2, td2 = tau_num * tau_num, tau_den * tau_den
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -865,109 +755,98 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int:
 # ---------------------------------------------------------------------------
 
 
-def _pq_subv(j: int, sub: int) -> Column:
-    return F.slice(F.col("__qv"), j * sub + 1, sub)
+def _pq_quantize(df: DataFrame, id_col: str, vec_col: str,
+                 scale: int) -> DataFrame:
+    return df.select(
+        F.col(id_col),
+        F.transform(F.col(vec_col),
+                    lambda v: F.floor(v.cast("double") * scale)
+                    .cast("long")).alias("__qv"))
 
 
-def _pq_assigned(q: DataFrame, id_col: str,
-                 cents: dict[int, dict[int, list[int]]],
-                 m: int, sub: int, mode: str,
+def _pq_assigned(q: DataFrame, id_col: str, cents: list,
                  bc_out: list | None = None) -> DataFrame:
-    """``(id, __qv, __c0..__c{m-1})`` — every subspace's argmin code
-    in ONE pass over the quantized frame, by either engine:
+    """``(id, __qv, __c0..__c{m-1}, __d)`` — every subspace's argmin
+    code and the summed squared distance to the chosen centroids, in
+    ONE pass over the quantized frame.
 
-    - ``expr``: literal-centroid argmin expressions (whole-stage
-      codegen, zero Python) — O(m·k·sub) ≡ O(k·dim) expression ops
-      per row, the right trade for small k;
-    - ``blas``: the m centroid matrices go out as one Spark broadcast
-      into a ``mapInPandas`` pass computing every subspace's distances
-      per Arrow batch with int64 matmuls (|q|² − 2·q·C + |c|², each
-      term exact) and vectorized argmins — per-row cost amortized by
-      BLAS, the only regime that works at PQ-typical k=256.  Sorted
-      centroid order + argmin-first-occurrence reproduces the expr
-      path's (dist, lowest-cid) tie-break, so the two modes are
-      bit-identical (pytest-pinned).
+    ``cents`` holds one int64 (k, sub) codebook per subspace.  They go
+    out as one Spark broadcast into a ``mapInPandas`` pass that
+    computes every subspace's distances per Arrow batch with int64
+    matmuls (|q|² − 2·q·C + |c|², each term exact) and argmins them
+    vectorized: one matmul per subspace and batch whatever k is, so
+    the same kernel serves k=4 and the SemDeDup/PQ-typical k ≥ 256.
+    argmin's first occurrence breaks ties to the lowest centroid id.
+    The broadcast handle is appended to ``bc_out`` so
+    training iterations can release it after their action: at
+    SemDeDup-scale k the codebook is ~50 MB, and an unreleased copy
+    per iteration would pin memory for the application's lifetime.
     """
-    if mode == "expr":
-        def lit_vec(vals):
-            return F.array(*[F.lit(int(x)).cast("long") for x in vals])
-
-        def dist_sq(j, cv):
-            return F.aggregate(
-                F.zip_with(_pq_subv(j, sub), lit_vec(cv),
-                           lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-        def best(j):
-            structs = [
-                F.struct(dist_sq(j, cv).alias("d"),
-                         F.lit(cid).cast("long").alias("cid"))
-                for cid, cv in sorted(cents[j].items())]
-            return structs[0] if len(structs) == 1 else F.least(*structs)
-
-        return q.select(
-            F.col(id_col), "__qv",
-            *[best(j)["cid"].alias(f"__c{j}") for j in range(m)])
-
     import numpy as np
     import pandas as pd
 
+    m = len(cents)
     id_type = dict(q.dtypes)[id_col]
-    mats = []
-    for j in range(m):
-        cids = sorted(cents[j])
-        mats.append((np.array(cids, dtype=np.int64),
-                     np.array([cents[j][c] for c in cids],
-                              dtype=np.int64)))
-    bc = q.sparkSession.sparkContext.broadcast(mats)
+    bc = q.sparkSession.sparkContext.broadcast(cents)
     if bc_out is not None:
         bc_out.append(bc)
 
     def part(batches):
-        tabs = bc.value
+        books = bc.value
+        sub = books[0].shape[1]
+        cn2 = [np.einsum("ij,ij->i", C, C) for C in books]
         for pdf in batches:
             if not len(pdf):
                 continue
             Q = np.array(pdf["__qv"].tolist(), dtype=np.int64)
             out = {id_col: pdf[id_col], "__qv": pdf["__qv"]}
-            for j, (cid_arr, C) in enumerate(tabs):
+            rows = np.arange(len(Q))
+            total = np.zeros(len(Q), dtype=np.int64)
+            for j, C in enumerate(books):
                 Qj = Q[:, j * sub:(j + 1) * sub]
                 d = (np.einsum("ij,ij->i", Qj, Qj)[:, None]
-                     - 2 * (Qj @ C.T)
-                     + np.einsum("ij,ij->i", C, C)[None, :])
-                out[f"__c{j}"] = cid_arr[np.argmin(d, axis=1)]
+                     - 2 * (Qj @ C.T) + cn2[j][None, :])
+                idx = np.argmin(d, axis=1)
+                out[f"__c{j}"] = idx
+                total += d[rows, idx]
+            out["__d"] = total
             yield pd.DataFrame(out)
 
     schema = (f"{id_col} {id_type}, __qv array<bigint>, "
-              + ", ".join(f"__c{j} bigint" for j in range(m)))
+              + "".join(f"__c{j} bigint, " for j in range(m))
+              + "__d bigint")
     return q.mapInPandas(part, schema=schema)
 
 
-def _pq_train(q: DataFrame, id_col: str, m: int, sub: int, k: int,
-              iters: int, mode: str) -> dict[int, dict[int, list[int]]]:
+def _pq_train(q: DataFrame, id_col: str, m: int, k: int,
+              iters: int) -> list:
     """Per-subspace integer k-means codebooks over the pre-quantized
-    ``__qv`` frame.  Seeding mirrors ``kmeans_quantized``: the k
-    smallest ids seed every subspace (one bounded k-row collect total).
-    Each refinement iteration is ONE corpus scan: all m subspace
-    assignments come from ``_pq_assigned`` (zero joins, zero pre-agg
-    shuffles), and the centroid update explodes (subspace, code,
-    position) with map-side partial sums — exactly m·k·sub rows
-    collected (bounded by construction).  Empty clusters keep their
-    previous centroid."""
-    seed_rows = q.orderBy(id_col).limit(k).collect()
-    if len(seed_rows) < k:
+    ``__qv`` frame: one int64 (k, dim/m) array per subspace.  The k
+    smallest ids seed every subspace (one bounded k-row collect; fewer
+    than k rows raise).  Each refinement iteration is ONE corpus scan:
+    all m subspace assignments come from ``_pq_assigned`` (zero joins,
+    zero pre-agg shuffles), and the centroid update explodes
+    (subspace, code, position) with map-side partial sums — at most
+    m·k·sub rows collected (bounded by construction).  Empty clusters
+    keep their previous centroid."""
+    import numpy as np
+
+    seed = [r["__qv"] for r in q.orderBy(id_col).limit(k).collect()]
+    if len(seed) < k:
         raise ValueError(f"need at least k={k} rows to seed codebooks")
-    cents: dict[int, dict[int, list[int]]] = {
-        j: {c: list(seed_rows[c]["__qv"])[j * sub:(j + 1) * sub]
-            for c in range(k)}
-        for j in range(m)}
+    dim = len(seed[0])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    sub = dim // m
+    S = np.array(seed, dtype=np.int64)
+    cents = [S[:, j * sub:(j + 1) * sub].copy() for j in range(m)]
 
     for _ in range(max(0, iters - 1)):
         bcs: list = []
-        assigned = _pq_assigned(q, id_col, cents, m, sub, mode, bcs)
+        assigned = _pq_assigned(q, id_col, cents, bcs)
         entries = F.array(*[
             F.struct(F.lit(j).alias("j"), F.col(f"__c{j}").alias("c"),
-                     _pq_subv(j, sub).alias("sv"))
+                     F.slice("__qv", j * sub + 1, sub).alias("sv"))
             for j in range(m)])
         upd = (assigned
                .select(F.explode(entries).alias("e"))
@@ -979,60 +858,23 @@ def _pq_train(q: DataFrame, id_col: str, m: int, sub: int, k: int,
                .collect())  # ≤ m·k·sub rows — bounded by construction
         for b in bcs:  # iteration's codebook copy is consumed — release
             b.unpersist(blocking=False)
-        new: dict[int, dict[int, list[int]]] = {}
+        cents = [C.copy() for C in cents]
         for r in upd:
-            new.setdefault(int(r["j"]), {}).setdefault(
-                int(r["c"]), [0] * sub)[int(r["p"])] = int(r["v"])
-        cents = {j: {c: new.get(j, {}).get(c, cv)
-                     for c, cv in cents[j].items()}
-                 for j in range(m)}
+            cents[r["j"]][r["c"], r["p"]] = r["v"]
     return cents
 
 
-def _pq_quantize(df: DataFrame, id_col: str, vec_col: str,
-                 scale: int) -> DataFrame:
-    return df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col),
-                    lambda v: F.floor(v.cast("double") * scale)
-                    .cast("long")).alias("__qv"))
-
-
-def _pq_mode(k: int, assign: str, m: int = 4) -> str:
-    # auto: the expr path compiles m·k argmin struct expressions, so
-    # the switch is on the PRODUCT, not k alone — measured at sf0.1
-    # (2k rows, dim 64, m=4, iters=2): expr 8.3/10.2/18.8 s at
-    # k=8/16/32 (linear in m·k, codegen-compile dominated) vs blas
-    # 2.6/0.9/0.9 s.  r15 re-measure at m·k=16 (the registered
-    # embedding_pq_codes / ivf_pq shape): expr 2.24 s vs blas 0.66 s
-    # (pq_encode), 4.7 vs 2.5 s (ivf_pq_topk) — blas wins everywhere
-    # above trivial m·k, and its per-row cost is the BLAS matmul vs
-    # O(m·k·sub) interpreted ops, so the crossover only moves DOWN at
-    # scale.  The two modes are bit-identical (pytest-pinned).
-    mode = ("blas" if m * k > 8 else "expr") if assign == "auto" else assign
-    if mode not in ("expr", "blas"):
-        raise ValueError(f"unsupported assign mode {assign!r}")
-    if mode == "expr" and k > 64:
-        raise ValueError(
-            f"k={k} exceeds the literal-expression regime (64); use "
-            "assign='blas' (or 'auto')")
-    return mode
-
-
-def _pq_codes_frame(q: DataFrame, id_col: str,
-                    cents: dict[int, dict[int, list[int]]],
-                    m: int, sub: int, mode: str) -> DataFrame:
+def _pq_codes_frame(q: DataFrame, id_col: str, cents: list) -> DataFrame:
     """(id, codes array<int>) from trained codebooks."""
-    a = _pq_assigned(q, id_col, cents, m, sub, mode)
-    return a.select(
+    return _pq_assigned(q, id_col, cents).select(
         F.col(id_col),
-        F.array(*[F.col(f"__c{j}").cast("int") for j in range(m)])
+        F.array(*[F.col(f"__c{j}").cast("int") for j in range(len(cents))])
         .alias("codes"))
 
 
 def pq_encode(df: DataFrame, id_col: str, vec_col: str,
               m: int = 4, k: int = 4, iters: int = 2,
-              scale: int = 10_000, assign: str = "auto") -> DataFrame:
+              scale: int = 10_000) -> DataFrame:
     """PQ-encode embeddings: ``(id, codes array<int> of length m)``.
 
     Classic product quantization (Jégou et al. 2011) on the repo's
@@ -1045,31 +887,73 @@ def pq_encode(df: DataFrame, id_col: str, vec_col: str,
 
     Integer arithmetic end to end ⇒ codes replay bit-exactly in the
     SQL oracle (the float version cannot: centroid means are
-    summation-order dependent).  ``assign`` picks the per-row argmin
-    engine — ``expr`` literal expressions (small k, whole-stage
-    codegen) or ``blas`` broadcast int64 matmuls per Arrow batch
-    (PQ-typical k=256; bit-identical tie-breaks, pytest-pinned);
-    ``auto`` switches at m·k > 32 (the expr path compiles m·k argmin
-    structs — the product, not k, is the cost).
+    summation-order dependent).  The per-row argmin is one broadcast
+    int64 matmul per subspace and Arrow batch (``_pq_assigned``),
+    ties to the lowest code.
 
     Reference analogue: none (SURVEY.md §2 — no vector compute);
     beyond-parity ANN machinery.
     """
-    dim = _vec_dim(df, vec_col)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    mode = _pq_mode(k, assign, m)
     q = _persist(_pq_quantize(df, id_col, vec_col, scale))
-    cents = _pq_train(q, id_col, m, sub, k, iters, mode)
-    return _pq_codes_frame(q, id_col, cents, m, sub, mode)
+    return _pq_codes_frame(q, id_col, _pq_train(q, id_col, m, k, iters))
+
+
+def _adc_tables(probes: DataFrame, id_col: str, vec_col: str,
+                cents: list, scale: int, max_probes: int):
+    """``(flat, pids)`` literals: every probe's exact integer m×k
+    distance tables to the codebooks, probe i's table at offset i·m·k
+    of ``flat`` (subspace j, code c at + j·k + c), and the probe ids in
+    the same order.  The probe set is bounded: it is collected to the
+    driver and every table ships inside the plan.  One literal array
+    keeps the generated code at m lookups whatever the probe count (a
+    literal per probe passes Java's 64 KB method limit at about 50
+    probes, m=4, k=16).  An empty probe frame gives empty literals,
+    which score nothing."""
+    import numpy as np
+
+    pdf = (probes.select(id_col, vec_col)
+           .limit(max_probes + 1).toPandas())
+    if len(pdf) > max_probes:
+        raise ValueError(
+            f"probe set exceeds max_probes={max_probes}: ADC embeds "
+            "one m×k literal table per probe; bound the probe frame")
+    sub = cents[0].shape[1]
+    X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+    P = np.floor(X.reshape(len(pdf), len(cents) * sub) * scale).astype(np.int64)
+    tables = np.stack([((P[:, None, j * sub:(j + 1) * sub] - C[None]) ** 2)
+                       .sum(axis=2) for j, C in enumerate(cents)], axis=1)
+    id_type = dict(probes.dtypes)[id_col]
+    return (F.lit(tables.ravel()),
+            F.lit(pdf[id_col].to_numpy().astype(np.int64))
+            .cast(f"array<{id_type}>"))
+
+
+def _adc_topn(pairs: DataFrame, flat: Column, pids: Column, id_col: str,
+              m: int, k: int, n: int) -> DataFrame:
+    """Per-probe ADC top-``n`` over ``pairs (_pid, _nid, codes)``:
+    ``Σ_j flat[off + j·k + code_j]`` with the probe's table offset
+    ``off`` found by its position in ``pids`` — a row-local projection,
+    then one per-probe window.  Output ``(id_col, neighbor_id, rank,
+    adc_dist)``, ascending distance, ties to the lower neighbor id."""
+    off = (F.array_position(pids, F.col("_pid")).cast("int") - 1) * (m * k)
+    adc = sum((F.element_at(flat, off + j * k
+                            + F.element_at("codes", j + 1) + 1)
+               for j in range(m)), start=F.lit(0).cast("long"))
+    w = Window.partitionBy("_pid").orderBy(F.col("_d").asc(),
+                                           F.col("_nid").asc())
+    return (pairs.withColumn("_d", adc)
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= n)
+            .select(F.col("_pid").alias(id_col),
+                    F.col("_nid").alias("neighbor_id"),
+                    "rank", F.col("_d").alias("adc_dist")))
 
 
 def pq_topk(df: DataFrame, id_col: str, vec_col: str,
             probes: DataFrame, n: int = 3,
             m: int = 4, k: int = 4, iters: int = 2,
             scale: int = 10_000,
-            max_probes: int = 64, assign: str = "auto") -> DataFrame:
+            max_probes: int = 64) -> DataFrame:
     """Asymmetric-distance (ADC) top-``n`` over PQ codes: for each
     probe, score every vector as ``Σ_j T_j[code_j]`` where ``T_j`` is
     the probe's integer distance table to subspace ``j``'s codebook —
@@ -1079,69 +963,27 @@ def pq_topk(df: DataFrame, id_col: str, vec_col: str,
 
     The probe set is bounded (``max_probes`` guard, same contract as
     the BLAS paths): each probe's m×k table is computed driver-side
-    in exact integer arithmetic and embedded as literal arrays, so
-    scoring is a pure row-local projection over the codes frame —
-    zero joins before the per-probe top-n window.
+    in exact integer arithmetic and embedded in one literal array
+    (``_adc_tables``), so scoring is a pure row-local projection over
+    the codes frame — zero joins before the per-probe top-n window.
 
     ADC is an approximation of true distance (quantization error);
     the pytest pins exact agreement with a python PQ model (probes
     excluded before ranking, as in cosine_topk, so ranks 1..n are
     contiguous).  Unlike the BLAS paths' 100k probe cap, the cap is
     small: the driver computes every probe's m×k table and ships them
-    all inside the plan as one literal array, and each probe multiplies
-    the scored rows by the corpus size before the top-n window.
+    all inside the plan, and each probe multiplies the scored rows by
+    the corpus size before the top-n window.
     """
-    dim = _vec_dim(df, vec_col)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    mode = _pq_mode(k, assign, m)
     q = _persist(_pq_quantize(df, id_col, vec_col, scale))
-    cents = _pq_train(q, id_col, m, sub, k, iters, mode)
-    codes = _pq_codes_frame(q, id_col, cents, m, sub, mode)
-
-    probe_pdf = (probes.select(id_col, vec_col)
-                 .limit(max_probes + 1).toPandas())
-    if len(probe_pdf) > max_probes:
-        raise ValueError(
-            f"probe set exceeds max_probes={max_probes}: ADC embeds "
-            "one m×k literal table per probe; bound the probe frame")
-    import math
-    tables = []  # (probe_id, [m][k] int table)
-    for _, prow in probe_pdf.iterrows():
-        qv = [math.floor(float(v) * scale) for v in prow[vec_col]]
-        t = [[sum((qv[j * sub + p] - cv[p]) ** 2 for p in range(sub))
-              for _, cv in sorted(cents[j].items())]
-             for j in range(m)]
-        tables.append((prow[id_col], t))
-
-    # every probe's table in ONE literal array, probe i at offset
-    # i·m·k, so the generated code holds m lookups whatever the probe
-    # count; a literal array per probe puts m lookups per probe into
-    # one generated method, which passes Java's 64 KB method limit at
-    # about 50 probes (m=4, k=16)
-    import numpy as np
-    flat = F.lit(np.array([x for _, t in tables for tj in t for x in tj],
-                          dtype=np.int64))
-    id_type = dict(df.dtypes)[id_col]
-    scored = codes.select(
-        F.col(id_col).alias("neighbor_id"), "codes",
-        F.explode(F.array(*[
-            F.struct(F.lit(pid).cast(id_type).alias("pid"),
-                     F.lit(i * m * k).alias("off"))
-            for i, (pid, _) in enumerate(tables)])).alias("e"))
-    adc = sum((F.element_at(flat, F.col("e.off") + j * k
-                            + F.element_at("codes", j + 1) + 1)
-               for j in range(m)), start=F.lit(0).cast("long"))
-    w = Window.partitionBy("e.pid").orderBy(
-        F.col("d").asc(), F.col("neighbor_id").asc())
-    return (scored
-            .filter(F.col("e.pid") != F.col("neighbor_id"))
-            .withColumn("d", adc)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= n)
-            .select(F.col("e.pid").alias(id_col), "neighbor_id",
-                    "rank", F.col("d").alias("adc_dist")))
+    cents = _pq_train(q, id_col, m, k, iters)
+    flat, pids = _adc_tables(probes, id_col, vec_col, cents, scale,
+                             max_probes)
+    pairs = (_pq_codes_frame(q, id_col, cents)
+             .select(F.col(id_col).alias("_nid"), "codes",
+                     F.explode(pids).alias("_pid"))
+             .filter(F.col("_pid") != F.col("_nid")))
+    return _adc_topn(pairs, flat, pids, id_col, m, k, n)
 
 
 def ivf_pq_topk(df: DataFrame, id_col: str, vec_col: str,
@@ -1149,9 +991,9 @@ def ivf_pq_topk(df: DataFrame, id_col: str, vec_col: str,
                 centroid_stride: int = 25, nprobe: int = 4,
                 m: int = 4, k: int = 4, iters: int = 2,
                 scale: int = 10_000,
-                max_probes: int = 64, assign: str = "auto") -> DataFrame:
-    """IVF-PQ — the production ANN composite (round 11; Jégou et al.
-    2011's IVFADC): the IVF coarse quantizer SHORTLISTS (each probe
+                max_probes: int = 64) -> DataFrame:
+    """IVF-PQ — the production ANN composite (Jégou et al. 2011's
+    IVFADC): the IVF coarse quantizer SHORTLISTS (each probe
     scores only the vectors assigned to its ``nprobe`` nearest
     centroids' inverted lists), and ADC over PQ codes SCORES the
     shortlist (the raw vectors are never touched at query time).
@@ -1171,92 +1013,31 @@ def ivf_pq_topk(df: DataFrame, id_col: str, vec_col: str,
     ONE (id, cid) row per indexed vector); codes are one bounded
     projection pass; the candidate join shuffles on centroid id
     (list sizes bound the work, the LSH-bucket skew profile); ADC
-    tables are driver-computed exact integers embedded as literal
-    MAPs keyed by probe id, so scoring is row-local codegen after
-    the candidate-codes hash join; one per-probe top-n window over
-    candidate-sized input."""
+    tables are driver-computed exact integers in one literal array
+    (``_adc_tables``, shared with ``pq_topk``), so scoring is
+    row-local codegen after the candidate-codes hash join; one
+    per-probe top-n window over candidate-sized input."""
     if n < 1:
         raise ValueError("n must be >= 1")
     if nprobe < 1:
         raise ValueError("nprobe must be >= 1")
-    dim = _vec_dim(df, vec_col)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    mode = _pq_mode(k, assign, m)
-
-    # --- IVF coarse structure (the ivf_topk recipe; norms staged and
-    # the index scan widened exactly as there — bit-identical floats,
-    # one HOF per pair instead of three, scoring cluster-wide) ---
-    cent = F.broadcast(
-        df.filter(F.col(id_col) % centroid_stride == 0)
-        .select(F.col(id_col).alias("_cid"),
-                F.col(vec_col).alias("_cvec"),
-                norm(F.col(vec_col)).alias("_cn")))
     vecs = df.select(F.col(id_col), F.col(vec_col))
-    aw = Window.partitionBy(id_col).orderBy(F.col("_ccos").desc(),
-                                            F.col("_cid"))
-    staged_cos = (dot(F.col(vec_col), F.col("_cvec"))
-                  / (F.col("_vn") * F.col("_cn")))
-    assigned = (_widen(vecs).withColumn("_vn", norm(F.col(vec_col)))
-                .join(cent)
-                .withColumn("_ccos", staged_cos)
-                .withColumn("_r", F.row_number().over(aw))
-                .filter(F.col("_r") == 1)
+    assigned = (_ivf_ranked(df, _widen(vecs), id_col, vec_col,
+                            centroid_stride, 1)
                 .select(F.col(id_col).alias("_nid"), "_cid"))
-    plists = (probes.select(F.col(id_col), F.col(vec_col))
-              .withColumn("_vn", norm(F.col(vec_col)))
-              .join(cent)
-              .withColumn("_ccos", staged_cos)
-              .withColumn("_r", F.row_number().over(aw))
-              .filter(F.col("_r") <= nprobe)
+    plists = (_ivf_ranked(df, probes.select(id_col, vec_col), id_col,
+                          vec_col, centroid_stride, nprobe)
               .select(F.col(id_col).alias("_pid"), "_cid"))
-    cand = (plists.join(assigned, "_cid")
-            .filter(F.col("_pid") != F.col("_nid"))
-            .select("_pid", "_nid"))
 
-    # --- PQ codes over the index (shared machinery) ---
     q = _persist(_pq_quantize(df, id_col, vec_col, scale))
-    cents = _pq_train(q, id_col, m, sub, k, iters, mode)
-    codes = _pq_codes_frame(q, id_col, cents, m, sub, mode)
-
-    # --- per-probe exact-integer ADC tables as literal maps ---
-    probe_pdf = (probes.select(id_col, vec_col)
-                 .limit(max_probes + 1).toPandas())
-    if len(probe_pdf) > max_probes:
-        raise ValueError(
-            f"probe set exceeds max_probes={max_probes}: ADC embeds "
-            "one m×k literal table per probe; bound the probe frame")
-    import math
-    id_type = dict(df.dtypes)[id_col]
-    maps = []
-    entries: list[list] = [[] for _ in range(m)]
-    for _, prow in probe_pdf.iterrows():
-        qv = [math.floor(float(v) * scale) for v in prow[vec_col]]
-        for j in range(m):
-            t = [sum((qv[j * sub + p] - cv[p]) ** 2 for p in range(sub))
-                 for _, cv in sorted(cents[j].items())]
-            entries[j] += [F.lit(prow[id_col]).cast(id_type),
-                           F.array(*[F.lit(int(x)).cast("long")
-                                     for x in t])]
-    for j in range(m):
-        maps.append(F.create_map(*entries[j]))
-
-    joined = cand.join(
-        codes.select(F.col(id_col).alias("_nid"), "codes"), "_nid")
-    d = sum(
-        (F.element_at(F.element_at(maps[j], F.col("_pid")),
-                      F.element_at("codes", j + 1) + 1)
-         for j in range(m)),
-        start=F.lit(0).cast("long"))
-    w = Window.partitionBy("_pid").orderBy(F.col("_d").asc(),
-                                           F.col("_nid").asc())
-    return (joined.withColumn("_d", d)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= n)
-            .select(F.col("_pid").alias(id_col),
-                    F.col("_nid").alias("neighbor_id"),
-                    "rank", F.col("_d").alias("adc_dist")))
+    cents = _pq_train(q, id_col, m, k, iters)
+    flat, pids = _adc_tables(probes, id_col, vec_col, cents, scale,
+                             max_probes)
+    pairs = (plists.join(assigned, "_cid")
+             .filter(F.col("_pid") != F.col("_nid"))
+             .join(_pq_codes_frame(q, id_col, cents)
+                   .select(F.col(id_col).alias("_nid"), "codes"), "_nid"))
+    return _adc_topn(pairs, flat, pids, id_col, m, k, n)
 
 
 def ivf_pq_rerank(df: DataFrame, id_col: str, vec_col: str,
@@ -1264,9 +1045,8 @@ def ivf_pq_rerank(df: DataFrame, id_col: str, vec_col: str,
                   centroid_stride: int = 25, nprobe: int = 4,
                   m: int = 4, k: int = 4, iters: int = 2,
                   scale: int = 10_000,
-                  max_probes: int = 64,
-                  assign: str = "auto") -> DataFrame:
-    """IVFADC+R — re-ranked IVF-PQ (round 12; Jégou et al. 2011 §VI's
+                  max_probes: int = 64) -> DataFrame:
+    """IVFADC+R — re-ranked IVF-PQ (Jégou et al. 2011 §VI's
     refinement stage): ``ivf_pq_topk`` shortlists the top ``n·refine``
     candidates per probe by approximate ADC distance, then ONLY those
     candidates are re-scored with the EXACT squared L2 distance on the
@@ -1305,7 +1085,7 @@ def ivf_pq_rerank(df: DataFrame, id_col: str, vec_col: str,
     short = ivf_pq_topk(df, id_col, vec_col, probes, n=n * refine,
                         centroid_stride=centroid_stride, nprobe=nprobe,
                         m=m, k=k, iters=iters, scale=scale,
-                        max_probes=max_probes, assign=assign)
+                        max_probes=max_probes)
     nb = _pq_quantize(df, id_col, vec_col, scale).select(
         F.col(id_col).alias("neighbor_id"), F.col("__qv").alias("__qb"))
     pr = F.broadcast(

@@ -172,10 +172,10 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed integer-exact Lloyd's k-means (k=4, 2 iterations)
     over globally-quantized embeddings — an ITERATIVE algorithm with a
     bit-exact SQL oracle (functions/similarity.py kmeans_quantized):
-    quantize → literal-centroid argmin → integer centroid means →
-    reassign, every step replayed unrolled in DuckDB.  Assignment is a
-    zero-shuffle projection; the per-iteration update collects exactly
-    k·dim rows (bounded by construction)."""
+    quantize → broadcast int64-matmul argmin → integer centroid means →
+    reassign, every step replayed unrolled in DuckDB.  Assignment is
+    one zero-shuffle Python stage; the per-iteration update collects
+    exactly k·dim rows (bounded by construction)."""
     from kafkadirect_spark.functions import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -515,8 +515,9 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison is integer arithmetic over the globally-quantized
     vectors, evaluated in DECIMAL(38,0)/HUGEINT (the squared products
     exceed int64), so the APPROXIMATE pipeline has an EXACT oracle.
-    Scale: zero-shuffle assignment + one self-join on cluster_id
-    (functions/similarity.py semdedup_prune)."""
+    Scale: zero-shuffle assignment + one shuffle grouping each
+    cluster for a BLAS Gram pass (functions/similarity.py
+    semdedup_prune)."""
     from kafkadirect_spark.functions import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -950,8 +951,8 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     store.  All-integer training (truncating-division centroid
     means) makes the codes hash-exact; the oracle replays all four
     subspace chains unrolled.  Engine side: one scan per training
-    iteration for ALL subspaces (single projection of literal-
-    centroid argmins, zero joins; update collects ≤ m·k·sub rows).
+    iteration for ALL subspaces (one broadcast int64-matmul argmin
+    pass, zero joins; update collects ≤ m·k·sub rows).
 
     The registered surface flattens the m=4 codes to scalar
     ``code_0..code_3`` INT columns: the driver's correctness gate

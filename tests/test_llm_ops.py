@@ -524,49 +524,61 @@ def test_semdedup_exact_at_threshold_boundary(spark):
     assert above == {0: False, 1: False, 2: False}
 
 
-def test_kmeans_blas_assignment_bit_identical(spark):
-    """The broadcast-matmul assignment path ('blas', auto-selected at
-    k > 32 — the SemDeDup-scale form; the literal-expression path's
-    per-row cost is linear in k) must be BIT-IDENTICAL to the
-    expression path: same integer distances, same (dist, lowest-cid)
-    tie-break, through the full iterate-update loop."""
+def _kmeans_python_model(rows, k, iters, scale=10_000):
+    """kmeans_quantized is PQ at one subspace: the PQ model at m=1
+    gives each id's (cluster_id, dist_sq)."""
+    dim = len(rows[0][1])
+    qv, cents, codes = _pq_python_model(rows, dim, 1, k, iters, scale)
+    return {i: (c[0], sum((x - y) ** 2
+                          for x, y in zip(qv[i], cents[0][c[0]])))
+            for i, c in codes.items()}
+
+
+def test_kmeans_matches_python_model(spark):
+    """Cluster ids and integer distances equal the python model,
+    through the full iterate-update loop, including the tie case:
+    identical seed vectors break to the lowest cluster id."""
     from kafkadirect_spark.sources.batch import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    for k, iters in ((5, 2), (8, 1)):
-        a = similarity.kmeans_quantized(
-            emb, "vec_id", "embedding", k=k, iters=iters,
-            assign="expr").collect()
-        b = similarity.kmeans_quantized(
-            emb, "vec_id", "embedding", k=k, iters=iters,
-            assign="blas").collect()
-        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    # ties: identical seed vectors must break to the lowest cid in
-    # both paths (the empty-cluster scenario exercises this)
+    rows = [(r.vec_id, list(r.embedding)) for r in emb.collect()]
     pts = [(0, [0.0, 0.0]), (1, [0.0, 0.0]),
            (2, [5.0, 5.0]), (3, [5.1, 5.0])]
-    df = spark.createDataFrame(pts, "vec_id long, v array<double>")
-    a = similarity.kmeans_quantized(df, "vec_id", "v", k=2, iters=3,
-                                    assign="expr").collect()
-    b = similarity.kmeans_quantized(df, "vec_id", "v", k=2, iters=3,
-                                    assign="blas").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    with pytest.raises(ValueError, match="assign mode"):
-        similarity.kmeans_quantized(df, "vec_id", "v", k=2,
-                                    assign="nope").collect()
+    ties = spark.createDataFrame(pts, "vec_id long, embedding array<double>")
+    for df, data, k, iters in ((emb, rows, 5, 2), (emb, rows, 8, 1),
+                               (ties, pts, 2, 3)):
+        got = {r.vec_id: (r.cluster_id, r.dist_sq) for r in
+               similarity.kmeans_quantized(df, "vec_id", "embedding",
+                                           k=k, iters=iters).collect()}
+        assert got == _kmeans_python_model(data, k, iters), (k, iters)
+    with pytest.raises(ValueError, match="at least k=5"):
+        similarity.kmeans_quantized(ties, "vec_id", "embedding", k=5)
 
 
-def test_semdedup_blas_assignment_matches(spark):
-    """semdedup_prune's full output is invariant to the assignment
-    path choice."""
+def test_semdedup_matches_python_model(spark):
+    """semdedup_prune's clusters are the python k-means model's, and
+    its flags are the exact integer cosine test within them."""
+    import itertools
+    import math
+
     from kafkadirect_spark.sources.batch import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    a = similarity.semdedup_prune(emb, "vec_id", "embedding",
-                                  k=4, iters=2, assign="expr").collect()
-    b = similarity.semdedup_prune(emb, "vec_id", "embedding",
-                                  k=4, iters=2, assign="blas").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    rows = [(r.vec_id, list(r.embedding)) for r in emb.collect()]
+    got = {r.vec_id: (r.cluster_id, r.is_dup) for r in
+           similarity.semdedup_prune(emb, "vec_id", "embedding",
+                                     k=4, iters=2).collect()}
+    cluster = {i: c for i, (c, _) in _kmeans_python_model(rows, 4, 2).items()}
+    q = {i: [math.floor(float(x) * 10_000) for x in v] for i, v in rows}
+    n2 = {i: sum(x * x for x in v) for i, v in q.items()}
+    dup = set()
+    for a, b in itertools.combinations(sorted(q), 2):
+        if cluster[a] != cluster[b]:
+            continue
+        dot = sum(x * y for x, y in zip(q[a], q[b]))
+        if dot > 0 and 400 * dot * dot >= 81 * n2[a] * n2[b]:
+            dup.add(b)
+    assert got == {i: (cluster[i], i in dup) for i in q}
 
 
 # ---------------------------------------------------------------------------
@@ -878,16 +890,18 @@ def _pq_python_model(rows, dim, m, k, iters, scale):
 
 def test_pq_encode_matches_python_model(spark):
     import random
-    rng = random.Random(3)
-    DIM, M, K, IT, SC = 8, 4, 3, 2, 1000
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(DIM)])
-            for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r.vec_id: list(r.codes) for r in
-           similarity.pq_encode(df, "vec_id", "embedding",
-                                m=M, k=K, iters=IT, scale=SC).collect()}
-    _, _, want = _pq_python_model(rows, DIM, M, K, IT, SC)
-    assert got == want
+    DIM, SC = 8, 1000
+    for seed, M, K, IT, n_rows in ((3, 4, 3, 2, 60), (9, 4, 5, 3, 80)):
+        rng = random.Random(seed)
+        rows = [(i, [rng.uniform(-1, 1) for _ in range(DIM)])
+                for i in range(n_rows)]
+        df = spark.createDataFrame(rows,
+                                   "vec_id long, embedding array<double>")
+        got = {r.vec_id: list(r.codes) for r in
+               similarity.pq_encode(df, "vec_id", "embedding",
+                                    m=M, k=K, iters=IT, scale=SC).collect()}
+        _, _, want = _pq_python_model(rows, DIM, M, K, IT, SC)
+        assert got == want, (M, K)
 
 
 def test_pq_topk_adc_matches_python_model(spark):
@@ -958,41 +972,19 @@ def test_pq_identical_vectors_share_codes(spark):
     assert got[0] != got[10]
 
 
-def test_pq_blas_assignment_bit_identical(spark):
-    import random
-    rng = random.Random(9)
-    DIM, M, K, IT, SC = 8, 4, 5, 3, 1000
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(DIM)])
-            for i in range(80)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ex = {r.vec_id: list(r.codes) for r in
-          similarity.pq_encode(df, "vec_id", "embedding", m=M, k=K,
-                               iters=IT, scale=SC,
-                               assign="expr").collect()}
-    bl = {r.vec_id: list(r.codes) for r in
-          similarity.pq_encode(df, "vec_id", "embedding", m=M, k=K,
-                               iters=IT, scale=SC,
-                               assign="blas").collect()}
-    assert ex == bl  # same (dist, lowest-cid) tie-break, both engines
-
-
 def test_pq_large_k_uses_blas(spark):
     import random
     rng = random.Random(13)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)])
             for i in range(300)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # k=128 is far beyond the literal-expression regime: auto must
-    # route to blas and produce a full valid encoding
+    # PQ-typical large k: the broadcast-matmul argmin produces a full
+    # valid encoding
     out = similarity.pq_encode(df, "vec_id", "embedding",
                                m=2, k=128, iters=2).collect()
     assert len(out) == 300
     assert all(len(r.codes) == 2 and all(0 <= c < 128 for c in r.codes)
                for r in out)
-    # explicit expr at large k refuses instead of degrading
-    with pytest.raises(ValueError):
-        similarity.pq_encode(df, "vec_id", "embedding",
-                             m=2, k=128, assign="expr")
 
 
 def test_keep_best_per_cluster_picks_quality_then_min_id(spark):
@@ -1759,6 +1751,25 @@ def test_ivf_pq_rerank_guards(spark):
     with pytest.raises(ValueError, match="refine"):
         similarity.ivf_pq_rerank(emb, "vec_id", "embedding", emb,
                                  refine=0)
+
+
+def test_adc_topn_empty_probe_set(spark):
+    """An empty probe frame scores nothing: every ADC top-n is empty
+    rather than an analysis error over empty literal tables."""
+    import random
+
+    rng = random.Random(17)
+    df = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<double>")
+    none = df.filter(F.col("vec_id") < 0)
+    kw = dict(n=3, m=2, k=2, iters=2)
+    assert similarity.pq_topk(df, "vec_id", "embedding", none,
+                              **kw).collect() == []
+    assert similarity.ivf_pq_topk(df, "vec_id", "embedding", none,
+                                  centroid_stride=10, **kw).collect() == []
+    assert similarity.ivf_pq_rerank(df, "vec_id", "embedding", none,
+                                    centroid_stride=10, **kw).collect() == []
 
 
 # ---------------------------------------------------------------------------

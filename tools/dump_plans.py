@@ -53,9 +53,9 @@ HEADLINERS = {
     "heavy_hitters_cms": "CMS registers (d·w bounded hash-agg) broadcast "
                          "to the probe side; exact top-20 via "
                          "TakeOrderedAndProject",
-    "kmeans_clusters": "assignment is a literal-centroid projection "
-                       "(zero joins); the k·dim update aggregate is the "
-                       "only exchange per iteration",
+    "kmeans_clusters": "assignment is one broadcast int64-matmul "
+                       "MapInPandas stage (zero joins); the k·dim update "
+                       "aggregate is the only exchange per iteration",
     "global_shuffle": "shard-partitioned rank windows + broadcast offset "
                       "table — NO range partitioning, no single-reducer "
                       "sort",
@@ -68,7 +68,7 @@ HEADLINERS = {
                          "on the bucket id with exact containment "
                          "re-check — NO BroadcastNestedLoopJoin, no "
                          "cartesian (both sides may be fact-sized)",
-    "semdedup_prune": "zero-shuffle literal-centroid assignment, then "
+    "semdedup_prune": "zero-shuffle broadcast-matmul assignment, then "
                       "ONE shuffle groups clusters for the Arrow/BLAS "
                       "applyInPandas Gram pass — no pair self-join, no "
                       "per-pair expression dots",
@@ -106,10 +106,9 @@ HEADLINERS = {
                            "exact global prefix sum with NO range "
                            "partitioning and no single-reducer sort",
     "embedding_pq_codes": "codebook training collects only m·k·sub "
-                          "register rows per iteration; the code "
-                          "projection is literal-argmin expressions "
-                          "(or one broadcast int64-matmul Arrow pass "
-                          "at large m·k) — zero joins either way",
+                          "register rows per iteration; the codes "
+                          "come from one broadcast int64-matmul "
+                          "Arrow pass — zero joins",
     "bm25_search": "query-term filter BEFORE the explode (the "
                    "(doc, term) exchange is ∝ matches, never corpus "
                    "tokens); one-row corpus stats broadcast "
