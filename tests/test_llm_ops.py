@@ -890,18 +890,32 @@ def _pq_python_model(rows, dim, m, k, iters, scale):
 
 def test_pq_encode_matches_python_model(spark):
     import random
-    DIM, SC = 8, 1000
-    for seed, M, K, IT, n_rows in ((3, 4, 3, 2, 60), (9, 4, 5, 3, 80)):
-        rng = random.Random(seed)
-        rows = [(i, [rng.uniform(-1, 1) for _ in range(DIM)])
-                for i in range(n_rows)]
-        df = spark.createDataFrame(rows,
-                                   "vec_id long, embedding array<double>")
-        got = {r.vec_id: list(r.codes) for r in
-               similarity.pq_encode(df, "vec_id", "embedding",
-                                    m=M, k=K, iters=IT, scale=SC).collect()}
-        _, _, want = _pq_python_model(rows, DIM, M, K, IT, SC)
-        assert got == want, (M, K)
+    rng = random.Random(3)
+    DIM, M, K, IT, SC = 8, 4, 3, 2, 1000
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(DIM)])
+            for i in range(60)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {r.vec_id: list(r.codes) for r in
+           similarity.pq_encode(df, "vec_id", "embedding",
+                                m=M, k=K, iters=IT, scale=SC).collect()}
+    _, _, want = _pq_python_model(rows, DIM, M, K, IT, SC)
+    assert got == want
+
+
+def test_pq_blas_assignment_bit_identical(spark):
+    # the broadcast int64 matmul argmin gives the same codes as the
+    # python model's (dist, lowest-cid) argmin, three iterations deep
+    import random
+    rng = random.Random(9)
+    DIM, M, K, IT, SC = 8, 4, 5, 3, 1000
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(DIM)])
+            for i in range(80)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {r.vec_id: list(r.codes) for r in
+           similarity.pq_encode(df, "vec_id", "embedding", m=M, k=K,
+                                iters=IT, scale=SC).collect()}
+    _, _, want = _pq_python_model(rows, DIM, M, K, IT, SC)
+    assert got == want
 
 
 def test_pq_topk_adc_matches_python_model(spark):
