@@ -394,7 +394,9 @@ def plan_stats(df) -> dict[str, int]:
     """Stable plan-shape fingerprint per suite: if a timing moves
     but these don't, the movement is machine noise, not a plan
     regression — and vice versa.  Captures the public
-    ``df.explain("formatted")`` output."""
+    ``df.explain("formatted")`` output.  ``python`` counts the
+    Python-worker nodes (``*InPandas``, ``*InArrow``, ``*EvalPython``),
+    so work moving between codegen and a Python stage shows."""
     import re
     from collections import Counter
 
@@ -407,6 +409,8 @@ def plan_stats(df) -> dict[str, int]:
         "scans": c.get("Scan", 0),
         "joins": sum(v for k, v in c.items() if k.endswith("Join")),
         "sorts": c.get("Sort", 0),
+        "python": sum(v for k, v in c.items() if k.endswith(
+            ("InPandas", "InArrow", "EvalPython"))),
     }
 
 

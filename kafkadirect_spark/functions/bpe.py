@@ -15,20 +15,11 @@ Spark):
    table (~1e7-1e8 rows); capping it by frequency is what every
    production tokenizer trainer does — merges are learned from
    aggregated counts, never from the raw corpus.
-2. **Merge learning over the type table**, two regimes (the same
-   split as dedup.connected_components):
-   - ``mode="driver"`` (default): collect the capped type table
-     (bounded by ``max_word_types``, hard-guarded at
-     ``MAX_DRIVER_TYPES``) and run the exact greedy loop in plain
-     Python — zero Spark jobs per merge.
-   - ``mode="distributed"``: the type table never leaves the
-     cluster; each merge round is one vocabulary-sized
-     explode→groupBy (pair counts), a 1-row TakeOrdered collect
-     (the argmax), and a row-local fold rewriting every word's
-     symbol array.  O(n_merges) jobs — the price of unbounded
-     vocabularies.
-   Both regimes are bit-identical (pytest-pinned): pair counts are
-   exact integers, ties break (count DESC, lhs ASC, rhs ASC).
+2. **Merge learning over the type table**: one bounded collect of
+   the capped table (``max_word_types``, hard-guarded at
+   ``MAX_DRIVER_TYPES``) and the exact greedy loop in plain Python —
+   zero Spark jobs per merge.  Pair counts are exact integers, ties
+   break (count DESC, lhs ASC, rhs ASC).
 3. **Encoding** (``bpe_encode``) applies the learned merges in rank
    order with one ``mapInPandas`` pass — merges broadcast via task
    closure (n_merges rows), per-task word→segmentation memo, so each
@@ -47,13 +38,13 @@ LLM data pipeline.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafkadirect_spark.functions.text import tokens
 
-#: ``mode="driver"`` refuses type tables above this — the greedy loop
-#: is O(types · merges); past this, use ``mode="distributed"``.
+#: merge learning refuses type tables above this — the greedy loop
+#: holds the table in driver memory and is O(types · merges)
 MAX_DRIVER_TYPES = 5_000_000
 
 _MERGES_SCHEMA = ("merge_rank long, lhs string, rhs string, "
@@ -83,20 +74,34 @@ def word_type_counts(df: DataFrame, text_col: str, min_count: int = 2,
             .limit(max_word_types))
 
 
+def _collect_types(df: DataFrame, text_col: str, min_count: int,
+                   max_word_types: int) -> list:
+    """The capped type table as ``[(word, count), ...]`` — the one
+    bounded collect both merge trainers learn from."""
+    if max_word_types > MAX_DRIVER_TYPES:
+        raise ValueError(f"max_word_types={max_word_types} exceeds "
+                         f"MAX_DRIVER_TYPES={MAX_DRIVER_TYPES}")
+    wt = word_type_counts(df, text_col, min_count, max_word_types)
+    return [(r["word"], int(r["n"])) for r in wt.collect()]
+
+
 # ---------------------------------------------------------------------------
-# the greedy merge step (one Python definition, used by the driver
-# regime, bpe_encode, and the tests' independent checks)
+# the greedy merge step (one Python definition, used by both trainers,
+# bpe_encode and the tests' independent checks)
 # ---------------------------------------------------------------------------
 
-def _py_apply(sym: tuple, lhs: str, rhs: str) -> tuple:
-    """Left-to-right non-overlapping rewrite of adjacent
-    (lhs, rhs) → lhs+rhs over a symbol tuple."""
+def _py_apply(sym: tuple, lhs: str, rhs: str,
+              product: str | None = None) -> tuple:
+    """Left-to-right non-overlapping rewrite of adjacent (lhs, rhs) →
+    ``product`` over a symbol tuple (default ``lhs + rhs`` — BPE;
+    WordPiece strips the right side's continuation prefix)."""
+    ab = lhs + rhs if product is None else product
     out = []
     i = 0
     n = len(sym)
     while i < n:
         if i + 1 < n and sym[i] == lhs and sym[i + 1] == rhs:
-            out.append(lhs + rhs)
+            out.append(ab)
             i += 2
         else:
             out.append(sym[i])
@@ -134,182 +139,20 @@ def _py_learn(types: list, n_merges: int) -> list:
 
 
 # ---------------------------------------------------------------------------
-# the distributed regime's row-local pieces
-# ---------------------------------------------------------------------------
-
-#: char-split of a ``word`` column — textually mirrors the oracle's
-#: ``list_transform(generate_series(1, length(word)), g -> substr(...))``
-_SYMBOLS_EXPR = ("transform(sequence(1, length(word)), "
-                 "g -> substring(word, g, 1))")
-
-
-def _apply_merge(sym_col: str, lhs: str, rhs: str,
-                 product: str | None = None) -> Column:
-    """Row-local greedy rewrite of a symbol-array column: one
-    ``aggregate`` fold with a skip flag (an index consumed as the
-    second half of a merge emits nothing) — no UDF, stays in
-    codegen.  ``product`` overrides the merged symbol (default
-    ``lhs + rhs`` — BPE; WordPiece strips the continuation prefix)."""
-    s = F.col(sym_col)
-    a, b = F.lit(lhs), F.lit(rhs)
-    ab = F.lit(lhs + rhs if product is None else product)
-
-    def step(acc: Column, i: Column) -> Column:
-        hit = ((i < F.size(s))
-               & (F.element_at(s, i) == a)
-               & (F.element_at(s, i + F.lit(1)) == b))
-        return (F.when(acc["skip"],
-                       F.struct(acc["o"].alias("o"),
-                                F.lit(False).alias("skip")))
-                .when(hit,
-                      F.struct(F.concat(acc["o"], F.array(ab)).alias("o"),
-                               F.lit(True).alias("skip")))
-                .otherwise(
-                    F.struct(F.concat(acc["o"],
-                                      F.array(F.element_at(s, i))).alias("o"),
-                             F.lit(False).alias("skip"))))
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.size(s)),
-        F.struct(F.array().cast("array<string>").alias("o"),
-                 F.lit(False).alias("skip")),
-        step,
-        lambda acc: acc["o"])
-
-
-# ---------------------------------------------------------------------------
 # training
 # ---------------------------------------------------------------------------
 
 def learn_bpe(df: DataFrame, text_col: str, n_merges: int,
-              min_count: int = 2, max_word_types: int = 1 << 16,
-              mode: str = "driver",
-              checkpoint_dir: str | None = None) -> DataFrame:
+              min_count: int = 2,
+              max_word_types: int = 1 << 16) -> DataFrame:
     """Learn ``n_merges`` BPE merges from a text column.  Returns
     ``(merge_rank, lhs, rhs, pair_count)`` ordered by rank — ≤
-    ``n_merges`` rows (early exhaustion emits fewer).  See the
-    module docstring for the two regimes; they are bit-identical.
-
-    Fault-tolerance tradeoff (distributed mode): the per-round
-    ``localCheckpoint`` stores blocks on executors with TRUNCATED
-    lineage, so losing any executor mid-training fails the job
-    unrecoverably — acceptable for short runs, a real caveat for a
-    long cluster run over a big type table.  Pass ``checkpoint_dir``
-    to use reliable ``checkpoint()`` into that path instead (HDFS/
-    object-store durable; survives executor loss at the cost of one
-    type-table write per round).
-
-    Reliable-checkpoint hygiene (ADVICE r10): each round checkpoints
-    into its own ``<checkpoint_dir>/bpe-round-k`` subdirectory and the
-    PREVIOUS round's subdirectory is deleted as soon as the new
-    checkpoint has materialized (round k's snapshot is self-contained,
-    so round k−1's files are dead weight) — a 200-merge run holds at
-    most two type-table snapshots on storage, not 200.  All managed
-    subdirectories are removed when training finishes.  Side effect:
-    ``checkpoint_dir`` routes through the SESSION-GLOBAL
-    ``SparkContext.setCheckpointDir``; the previous global setting is
-    restored (best-effort) on exit."""
+    ``n_merges`` rows (early exhaustion emits fewer)."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    if mode not in ("driver", "distributed"):
-        raise ValueError(f"unknown mode {mode!r}")
-    spark = df.sparkSession
-    wt = word_type_counts(df, text_col, min_count, max_word_types)
-
-    if mode == "driver":
-        if max_word_types > MAX_DRIVER_TYPES:
-            raise ValueError(
-                f"max_word_types={max_word_types} exceeds "
-                f"MAX_DRIVER_TYPES={MAX_DRIVER_TYPES} — use "
-                "mode='distributed'")
-        # bounded by max_word_types (≤ MAX_DRIVER_TYPES) by construction
-        types = [(r["word"], int(r["n"])) for r in wt.collect()]
-        merges = _py_learn(types, n_merges)
-        return spark.createDataFrame(merges, _MERGES_SCHEMA)
-
-    # Checkpoint per round, NOT persist: persist materializes but
-    # does not truncate the logical plan, so round k's analyzed tree
-    # still nests k _apply_merge folds (each a large struct expression)
-    # — analysis/canonicalization cost and driver heap grow O(k²) and
-    # an 8 GB driver OOMs near 25 merges.  Checkpointing cuts the
-    # lineage to a LogicalRDD each round (the connected_components
-    # pattern), making every round's plan one fold — O(n_merges) jobs
-    # AND O(1) plan depth, measured to 200+ merges (SCALE.md).
-    # localCheckpoint (executor blocks) by default; reliable
-    # checkpoint() when checkpoint_dir is set (see docstring).  In
-    # the reliable regime every round gets its OWN subdirectory and
-    # round k−1's files are deleted once round k has materialized —
-    # the eager checkpoint is self-contained, so only the newest
-    # snapshot is ever live (ADVICE r10: without this a long run
-    # accumulates one type-table snapshot per merge on HDFS unless
-    # spark.cleaner.referenceTracking.cleanCheckpoints happens to be
-    # enabled).
-    sc = spark.sparkContext
-    prior_dir = None
-    if checkpoint_dir is not None:
-        opt = sc._jsc.sc().getCheckpointDir()
-        prior_dir = opt.get() if opt.isDefined() else None
-    ck = {"round": 0, "live": None}
-
-    def _rmdir(p: str) -> None:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(p)
-        fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
-
-    def _cut(frame: DataFrame) -> DataFrame:
-        if checkpoint_dir is None:
-            return frame.localCheckpoint(eager=True)
-        ck["round"] += 1
-        d = f"{checkpoint_dir.rstrip('/')}/bpe-round-{ck['round']}"
-        sc.setCheckpointDir(d)
-        out = frame.checkpoint(eager=True)  # reads old files, writes d
-        if ck["live"] is not None:
-            _rmdir(ck["live"])
-        ck["live"] = d
-        return out
-
-    try:
-        t = _cut(wt.withColumn("s", F.expr(_SYMBOLS_EXPR))
-                 .select("word", "n", "s"))
-        merges = []
-        for rank in range(1, n_merges + 1):
-            top = (t.filter(F.size("s") >= 2)
-                   .select("n",
-                           F.explode(
-                               F.sequence(F.lit(1), F.size("s") - 1))
-                           .alias("i"),
-                           "s")
-                   .select("n",
-                           F.element_at("s", F.col("i")).alias("lhs"),
-                           F.element_at("s", F.col("i") + 1).alias("rhs"))
-                   .groupBy("lhs", "rhs")
-                   .agg(F.sum("n").alias("c"))
-                   .orderBy(F.col("c").desc(), F.col("lhs").asc(),
-                            F.col("rhs").asc())
-                   .limit(1).collect())  # exactly one row — the argmax
-            if not top:
-                break
-            lhs, rhs, c = top[0]["lhs"], top[0]["rhs"], int(top[0]["c"])
-            merges.append((rank, lhs, rhs, c))
-            # eager: materialize the rewrite now; in the local regime
-            # the previous round's blocks are reclaimed by the
-            # ContextCleaner once this rebinding drops the last
-            # reference (type-table-sized blocks — ≤ max_word_types
-            # rows — so even the transient overlap is register-scale,
-            # not data-scale); in the reliable regime _cut deletes
-            # the previous round's subdirectory explicitly
-            t = _cut(t.withColumn("s", _apply_merge("s", lhs, rhs)))
-        # the result is a driver-local merge list — nothing references
-        # the final checkpoint either
-        return spark.createDataFrame(merges, _MERGES_SCHEMA)
-    finally:
-        if checkpoint_dir is not None:
-            if ck["live"] is not None:
-                _rmdir(ck["live"])
-            try:  # best-effort: restore the session-global setting
-                sc.setCheckpointDir(prior_dir)
-            except Exception:
-                pass
+    types = _collect_types(df, text_col, min_count, max_word_types)
+    return df.sparkSession.createDataFrame(_py_learn(types, n_merges),
+                                           _MERGES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -16,8 +16,8 @@ What distinguishes it, and what this module implements exactly:
    min(cnt_lhs, cnt_rhs) ⇒ key ≤ 10^18, BIGINT-safe; the products run
    in DECIMAL(38,0) / HUGEINT so nothing overflows at corpus counts),
    ties broken (key DESC, pair DESC, lhs ASC, rhs ASC).  This integer
-   quantization IS the published semantics of the operator — both
-   regimes and the DuckDB oracle compute the identical argmax.
+   quantization IS the published semantics of the operator — the
+   trainer and the DuckDB oracle compute the identical argmax.
 2. **Continuation symbols.**  A word char-splits as ``w[0], ##w[1],
    …``; merging ``(a, ##b)`` yields ``a+b``, merging ``(##a, ##b)``
    yields ``##ab`` — the merged symbol strips the right side's
@@ -30,14 +30,9 @@ What distinguishes it, and what this module implements exactly:
    BERT's inference rule.  The vocabulary is the training table's
    observed chars (plain + continuation) plus every merge product.
 
-Regimes mirror ``learn_bpe`` exactly: ``mode="driver"`` collects the
-capped word-TYPE table (Heaps-law bounded; hard-guarded) and runs the
-loop in python; ``mode="distributed"`` keeps the table on the cluster
-— per round one symbol-count aggregate, one pair-count aggregate, a
-bounded join of the two, a 1-row argmax collect, and a row-local
-rewrite fold, with the same per-round checkpoint lineage cut (and the
-same ``checkpoint_dir`` reliable-checkpoint hygiene) as BPE.  Both
-regimes are bit-identical (pytest-pinned).
+Training mirrors ``learn_bpe``: one bounded collect of the capped
+word-TYPE table (Heaps-law bounded; hard-guarded at
+``MAX_DRIVER_TYPES``) and the exact loop in Python.
 
 Reference analogue: none (SURVEY.md §2 — no document model);
 beyond-parity tokenizer machinery.  The encode frame satisfies the
@@ -51,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafkadirect_spark.functions.bpe import (
-    MAX_DRIVER_TYPES, _apply_merge, word_type_counts,
+    _collect_types, _py_apply, word_type_counts,
 )
 
 #: the score quantization: key = pair·SCALE DIV (cnt_lhs·cnt_rhs)
@@ -75,27 +70,9 @@ def _wp_symbols(word: str) -> tuple:
     return tuple([word[0]] + ["##" + ch for ch in word[1:]])
 
 
-def _py_apply(sym: tuple, lhs: str, rhs: str) -> tuple:
-    """Left-to-right non-overlapping rewrite of adjacent (lhs, rhs) →
-    the ##-stripped product (same walk as bpe._py_apply, different
-    merged symbol)."""
-    out = []
-    i = 0
-    n = len(sym)
-    prod = _merge_product(lhs, rhs)
-    while i < n:
-        if i + 1 < n and sym[i] == lhs and sym[i + 1] == rhs:
-            out.append(prod)
-            i += 2
-        else:
-            out.append(sym[i])
-            i += 1
-    return tuple(out)
-
-
 def _py_learn(types: list, n_merges: int) -> list:
     """Exact WordPiece training over a ``[(word, count), ...]`` type
-    table — the one python definition both regimes and the tests'
+    table — the one python definition the trainer and the tests'
     independent checks share.  Returns ``[(rank, lhs, rhs,
     pair_count, score_key), ...]``."""
     segs = {w: _wp_symbols(w) for w, _ in types}
@@ -123,7 +100,8 @@ def _py_learn(types: list, n_merges: int) -> list:
             # every symbol is (##?)+substring, so an adjacent hit
             # implies the stripped concatenation is a substring
             if pat in w:
-                segs[w] = _py_apply(segs[w], lhs, rhs)
+                segs[w] = _py_apply(segs[w], lhs, rhs,
+                                    _merge_product(lhs, rhs))
     return merges
 
 
@@ -134,112 +112,20 @@ _WP_SYMBOLS_EXPR = (
     "CASE WHEN g = 1 THEN substring(word, 1, 1) "
     "ELSE concat('##', substring(word, g, 1)) END)")
 
-_SCORE_KEY_EXPR = (
-    f"CAST((CAST(c AS DECIMAL(38,0)) * {SCALE}) DIV "
-    "(CAST(la AS DECIMAL(38,0)) * CAST(lb AS DECIMAL(38,0))) AS BIGINT)")
-
 
 def learn_wordpiece(df: DataFrame, text_col: str, n_merges: int,
-                    min_count: int = 2, max_word_types: int = 1 << 16,
-                    mode: str = "driver",
-                    checkpoint_dir: str | None = None) -> DataFrame:
+                    min_count: int = 2,
+                    max_word_types: int = 1 << 16) -> DataFrame:
     """Learn ``n_merges`` WordPiece merges from a text column.
     Returns ``(merge_rank, lhs, rhs, pair_count, score_key)`` ordered
     by rank — ≤ ``n_merges`` rows (early exhaustion emits fewer).
-    Regimes and checkpoint semantics mirror ``bpe.learn_bpe``
-    (docstring there); the only differences are the scored argmax and
-    the ##-stripped merge product."""
+    The same type-table collect as ``bpe.learn_bpe``; only the scored
+    argmax and the ##-stripped merge product differ."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    if mode not in ("driver", "distributed"):
-        raise ValueError(f"unknown mode {mode!r}")
-    spark = df.sparkSession
-    wt = word_type_counts(df, text_col, min_count, max_word_types)
-
-    if mode == "driver":
-        if max_word_types > MAX_DRIVER_TYPES:
-            raise ValueError(
-                f"max_word_types={max_word_types} exceeds "
-                f"MAX_DRIVER_TYPES={MAX_DRIVER_TYPES} — use "
-                "mode='distributed'")
-        types = [(r["word"], int(r["n"])) for r in wt.collect()]
-        return spark.createDataFrame(_py_learn(types, n_merges),
-                                     _MERGES_SCHEMA)
-
-    # distributed regime — per-round checkpoint lineage cut exactly as
-    # learn_bpe (same O(1)-plan-depth rationale, same reliable-
-    # checkpoint per-round-subdir hygiene)
-    sc_ctx = spark.sparkContext
-    prior_dir = None
-    if checkpoint_dir is not None:
-        opt = sc_ctx._jsc.sc().getCheckpointDir()
-        prior_dir = opt.get() if opt.isDefined() else None
-    ck = {"round": 0, "live": None}
-
-    def _rmdir(p: str) -> None:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(p)
-        fs = jpath.getFileSystem(sc_ctx._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
-
-    def _cut(frame: DataFrame) -> DataFrame:
-        if checkpoint_dir is None:
-            return frame.localCheckpoint(eager=True)
-        ck["round"] += 1
-        d = f"{checkpoint_dir.rstrip('/')}/wordpiece-round-{ck['round']}"
-        sc_ctx.setCheckpointDir(d)
-        out = frame.checkpoint(eager=True)
-        if ck["live"] is not None:
-            _rmdir(ck["live"])
-        ck["live"] = d
-        return out
-
-    try:
-        t = _cut(wt.withColumn("s", F.expr(_WP_SYMBOLS_EXPR))
-                 .select("word", "n", "s"))
-        merges = []
-        for rank in range(1, n_merges + 1):
-            # symbol counts in the current segmentation (bounded:
-            # ≤ Σ|word| distinct symbols over the capped table)
-            syms = (t.select(F.explode("s").alias("sym"), "n")
-                    .groupBy("sym").agg(F.sum("n").alias("cnt")))
-            pairs = (t.filter(F.size("s") >= 2)
-                     .select("n",
-                             F.explode(
-                                 F.sequence(F.lit(1), F.size("s") - 1))
-                             .alias("i"),
-                             "s")
-                     .select("n",
-                             F.element_at("s", F.col("i")).alias("lhs"),
-                             F.element_at("s", F.col("i") + 1).alias("rhs"))
-                     .groupBy("lhs", "rhs")
-                     .agg(F.sum("n").alias("c")))
-            scored = (pairs
-                      .join(syms.select(F.col("sym").alias("lhs"),
-                                        F.col("cnt").alias("la")), "lhs")
-                      .join(syms.select(F.col("sym").alias("rhs"),
-                                        F.col("cnt").alias("lb")), "rhs")
-                      .withColumn("k", F.expr(_SCORE_KEY_EXPR)))
-            top = (scored
-                   .orderBy(F.col("k").desc(), F.col("c").desc(),
-                            F.col("lhs").asc(), F.col("rhs").asc())
-                   .limit(1).collect())  # exactly one row — the argmax
-            if not top:
-                break
-            lhs, rhs = top[0]["lhs"], top[0]["rhs"]
-            merges.append((rank, lhs, rhs, int(top[0]["c"]),
-                           int(top[0]["k"])))
-            t = _cut(t.withColumn(
-                "s", _apply_merge("s", lhs, rhs,
-                                  product=_merge_product(lhs, rhs))))
-        return spark.createDataFrame(merges, _MERGES_SCHEMA)
-    finally:
-        if checkpoint_dir is not None:
-            if ck["live"] is not None:
-                _rmdir(ck["live"])
-            try:
-                sc_ctx.setCheckpointDir(prior_dir)
-            except Exception:
-                pass
+    types = _collect_types(df, text_col, min_count, max_word_types)
+    return df.sparkSession.createDataFrame(_py_learn(types, n_merges),
+                                           _MERGES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

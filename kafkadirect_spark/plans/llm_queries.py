@@ -89,8 +89,8 @@ _MINHASH_BANDS_CTES = f"""{_SHINGLES_CTE},
     )"""
 
 
-# Shared with the r14 graph-registration candidates (the
-# _SIMHASH_PAIRS_ORACLE pattern): graph.triangle_stats_oracle_sql /
+# Shared with the graph registrations (the _SIMHASH_PAIRS_ORACLE
+# pattern): graph.triangle_stats_oracle_sql /
 # local_clustering_oracle_sql compose THIS text as their edge CTE, so
 # the registered pair replay and the graph replay can never drift
 # apart (byte-identity pinned in tests/test_graph.py).
@@ -246,8 +246,8 @@ def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_edit_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Levenshtein verification of the SimHash candidate pairs
-    (functions/dedup.py edit_verify_pairs — registered r12 per the
-    r11 plan): the candidates→verify composition with the STRONGEST
+    (functions/dedup.py edit_verify_pairs): the candidates→verify
+    composition with the STRONGEST
     verifier — true edit distance over the canonical ASCII token
     surface capped at max_chars (the stated-and-enforced O(n·m) cost
     envelope), emitting the truncating dist_milli = 1000·lev DIV
@@ -394,7 +394,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (k=5 char-grams, window w=4): any shared
     substring ≥ 8 chars between docs shares a fingerprint — the
-    partial-overlap detector.  r10: uses the STAGED ``text.winnow_fps``
+    partial-overlap detector.  Uses the STAGED ``text.winnow_fps``
     form (gram hashes materialized as a projection column before the
     window lambda) — the single-expression ``text.winnow`` re-hashed
     all n grams per window (codegen CSE does not reach into lambdas),
@@ -646,7 +646,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     only, one semijoin back — no all-pairs stage anywhere."""
     docs = load_table(spark, sf_dir, "documents")
     w = text.tokens("text")
-    # kept is persisted (r15): it feeds exact_dedup AND the keeper
+    # kept is persisted: it feeds exact_dedup AND the keeper
     # join's left side, and the gate's tokenize + stopword-ratio pass
     # is the expensive part — without the cache it ran twice
     # (measured 4.05 s → 3.17 s best-of-3 at sf0.1, guide §5 persist
@@ -958,7 +958,7 @@ def dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Unigram-LM tokenizer (functions/unigram.py) — the second tokenizer
-# family's driver-verified claim (VERDICT r9 item 2): train the
+# family's driver-verified claim: train the
 # hard-EM piece inventory, then encode and split into model-input
 # chunks.  The oracle replays BOTH Viterbi-EM training rounds and
 # the corpus-wide encode in DuckDB (recursive-CTE Viterbi with
@@ -999,7 +999,7 @@ def unigram_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Content-defined chunking (functions/dedup.py cdc_*) — the CDC
-# family's driver-verified claim (VERDICT r10 item 2): LBFS-style
+# family's driver-verified claim: LBFS-style
 # content-defined boundaries make sub-document dedup insertion-proof
 # where fixed-width spans all shift after one edit.
 # ---------------------------------------------------------------------------
@@ -1019,7 +1019,7 @@ def cdc_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Tokenizer consumers (functions/tokeval.py) — shared by BOTH
-# tokenizer families (VERDICT r10 item 2): sliding-window model-input
+# tokenizer families: sliding-window model-input
 # assembly and the per-slice tokenizer-quality report over the
 # TRAINED unigram encode.
 # ---------------------------------------------------------------------------
@@ -1074,8 +1074,8 @@ _WP_PARAMS = dict(n_merges=10, min_count=2, max_word_types=4096)
        oracle=wordpiece.eval_oracle_sql(by="lang", **_WP_PARAMS))
 def wordpiece_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language tokenizer-quality report over the TRAINED
-    WordPiece encode (functions/wordpiece.py — registered r12 per the
-    r11 plan): the THIRD tokenizer family driven through the SAME
+    WordPiece encode (functions/wordpiece.py): the THIRD tokenizer
+    family driven through the SAME
     tokeval consumer contract the unigram-backed `tokenizer_eval`
     verifies, so the per-slice eval (fertility / compression /
     char-fallback, integer parts-per-thousand) is driver-checked
@@ -1097,8 +1097,8 @@ def wordpiece_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 13 registrations (pre-scheduled by the r12 plan, oracle
-# generators pytest-pinned engine==oracle in round 12).
+# Exact-substring dedup, hybrid retrieval and image media (each oracle
+# generator is pytest-pinned engine == oracle).
 # ---------------------------------------------------------------------------
 
 from kafkadirect_spark.functions import retrieval  # noqa: E402
@@ -1135,7 +1135,7 @@ _RRF_TERMS = ["data", "model", "learning"]
 def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid lexical+semantic retrieval fused by reciprocal-rank
     fusion (functions/retrieval.py hybrid_rank_rrf, Cormack & Clarke
-    2009 — registered r13 per the r12 plan): BM25 top-20 for the term
+    2009): BM25 top-20 for the term
     query ∪ exact cosine top-20 for probe embedding 7, fused as
     rrf_score = Σ scale DIV (c + rank) — fixed-point integers, only
     RANKS cross the arm boundary, fusion touches ≤ 2·topn rows.  The
@@ -1144,7 +1144,7 @@ def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cosine arm is TakeOrdered top-n, never a global sort; the one
     rank window sorts the ≤topn-row lexical result (allowlisted in
     test_plans._GLOBAL_WINDOW_OK).  The oracle replays both arms and
-    the truncating fusion.  Cross-engine caveat (ADVICE r12): the
+    the truncating fusion.  Cross-engine caveat: the
     semantic arm's ranks come from float64 cosine ordering (numpy
     engine-side vs DuckDB list_cosine_similarity) — the RRF integers
     are exact GIVEN equal ranks; near-tied cosines could in principle
@@ -1202,8 +1202,8 @@ def media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 14 registrations (pre-scheduled by the r13 plan, oracle
-# generators pytest-pinned engine==oracle in round 13 or earlier).
+# Audio media, graph triangles and incremental ExactSubstr (each
+# oracle generator is pytest-pinned engine == oracle).
 # ---------------------------------------------------------------------------
 
 from kafkadirect_spark.functions.graph import (  # noqa: E402
@@ -1237,7 +1237,7 @@ def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle census of the REGISTERED MinHash-LSH candidate
     graph (functions/graph.py triangle_stats, Suri & Vassilvitskii
-    2011 — registered r14 per the r13 plan, over the SELECTIVE LSH
+    2011 — over the SELECTIVE LSH
     pair surface; the simhash band graph is 2.4M edges at sf0.1 and
     its wedge join would own the driver's wall): orient every edge
     low→high in the (degree, id) total order, build wedges only at
@@ -1262,7 +1262,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_exactsubstr_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ExactSubstr — the daily-ingest form of the
     driver-green `dedup_exactsubstr` (functions/dedup.py
-    exactsubstr_incremental — registered r14 per the r13 plan):
+    exactsubstr_incremental):
     dedup a NEW batch (every 5th doc) against an already-accepted
     INDEX corpus (the rest) without re-marking the index.  The
     DISTINCT claim over the registered whole-corpus report is the
@@ -1283,8 +1283,8 @@ def dedup_exactsubstr_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 15 registrations (pre-scheduled by the r14 plan, oracle
-# generators pytest-pinned engine==oracle in round 14).
+# Video media (the oracle generator is pytest-pinned
+# engine == oracle).
 # ---------------------------------------------------------------------------
 
 

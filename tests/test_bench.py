@@ -73,3 +73,34 @@ def test_build_suites_leaves_no_temp_dir(spark):
     suites, _ = bench.build_suites()
     bench.run(spark, SF, {"consumeproduce": suites["consumeproduce"]}, 1)
     assert set(glob.glob(pattern)) <= before
+
+
+def test_plan_stats_counts_python_worker_nodes(spark):
+    """``python`` counts the Python-worker stages, so a plan that
+    moves work from codegen into a Python stage changes its
+    fingerprint; the other five fields do not see it."""
+    df = spark.range(8).withColumn("y", F.col("id") * 2)
+
+    def double(batches):
+        for pdf in batches:
+            yield pdf.assign(y=pdf["id"] * 2)
+
+    codegen = bench.plan_stats(df)
+    python = bench.plan_stats(
+        spark.range(8).mapInPandas(double, "id long, y long"))
+    assert codegen["python"] == 0 and python["python"] == 1
+    assert ({k: v for k, v in codegen.items() if k != "python"}
+            == {k: v for k, v in python.items() if k != "python"})
+
+
+def test_dump_plans_renumbers_expression_ids_per_plan():
+    """Expression ids restart at 1 in every plan, in first-seen
+    order, so one changed plan cannot renumber the plans after it;
+    '##' literals are left alone."""
+    import dump_plans
+
+    plan = ("Project [vec_id#1687L, s#12, concat(##, x#12)]\n"
+            "Exchange hashpartitioning(vec_id#1687L, 4), [plan_id=93]")
+    assert dump_plans._mask_ids(plan) == (
+        "Project [vec_id#1L, s#2, concat(##, x#2)]\n"
+        "Exchange hashpartitioning(vec_id#1L, 4), [plan_id=N]")

@@ -2,9 +2,8 @@
 
 Model-equivalence strategy: an INDEPENDENT in-test BPE (Counter-based
 pair statistics, regex-free list rewrite written differently from the
-module's fold) pins `learn_bpe`; the distributed regime is pinned
-bit-identical to the driver regime; the generated DuckDB oracle SQL
-is pinned against the engine on a synthetic corpus (the sf0.01 gate
+module's loop) pins `learn_bpe`; the generated DuckDB oracle SQL is
+pinned against the engine on a synthetic corpus (the sf0.01 gate
 re-checks it on real data).
 """
 
@@ -70,20 +69,6 @@ def test_learn_matches_independent_model(spark):
     assert got == expect
 
 
-def test_distributed_equals_driver(spark):
-    texts = ["lower lowest newer newest wider widest",
-             "low new wide lower newer wider",
-             "the newest of the new, the widest of the wide"]
-    df = _docs(spark, texts)
-    drv = [tuple(r) for r in
-           bpe.learn_bpe(df, "text", 6, min_count=1).collect()]
-    dist = [tuple(r) for r in
-            bpe.learn_bpe(df, "text", 6, min_count=1,
-                          mode="distributed").collect()]
-    assert dist == drv
-    assert len(drv) == 6
-
-
 def test_overlapping_pairs_count_per_position(spark):
     # 'aaaa' has THREE adjacent (a,a) positions per occurrence —
     # Sennrich's statistics count positions, application merges
@@ -105,10 +90,8 @@ def test_tie_breaks_lexicographic(spark):
 
 def test_early_exhaustion_emits_fewer(spark):
     df = _docs(spark, ["ab ab ab"])
-    for mode in ("driver", "distributed"):
-        out = bpe.learn_bpe(df, "text", 5, min_count=1,
-                            mode=mode).collect()
-        assert [(r.lhs, r.rhs) for r in out] == [("a", "b")]
+    out = bpe.learn_bpe(df, "text", 5, min_count=1).collect()
+    assert [(r.lhs, r.rhs) for r in out] == [("a", "b")]
 
 
 def test_encode_matches_training_segmentation(spark):
@@ -172,20 +155,24 @@ def test_word_type_cap_is_deterministic(spark):
 
 
 def test_guards(spark):
+    from kafkadirect_spark.functions import wordpiece
+
     df = _docs(spark, ["ab"])
     with pytest.raises(ValueError):
         bpe.learn_bpe(df, "text", 0)
     with pytest.raises(ValueError):
-        bpe.learn_bpe(df, "text", 1, mode="magic")
-    with pytest.raises(ValueError):
-        bpe.learn_bpe(df, "text", 1,
-                      max_word_types=bpe.MAX_DRIVER_TYPES + 1)
-    with pytest.raises(ValueError):
         bpe.word_type_counts(df, "text", min_count=0)
-    # the same cap in distributed mode is legal
-    assert bpe.learn_bpe(df, "text", 1, min_count=1,
-                         max_word_types=bpe.MAX_DRIVER_TYPES + 1,
-                         mode="distributed").count() == 1
+    # one merge-learning path: no regime knobs, and a type table past
+    # the driver cap is refused by both trainers
+    for learn in (bpe.learn_bpe, wordpiece.learn_wordpiece):
+        with pytest.raises(TypeError):
+            learn(df, "text", 1, mode="driver")
+        with pytest.raises(TypeError):
+            learn(df, "text", 1, checkpoint_dir="/nonexistent")
+        with pytest.raises(ValueError, match="MAX_DRIVER_TYPES") as e:
+            learn(df, "text", 1, min_count=1,
+                  max_word_types=bpe.MAX_DRIVER_TYPES + 1)
+        assert "mode" not in str(e.value)
 
 
 def test_oracle_sql_matches_engine_on_synthetic(spark):
@@ -209,31 +196,10 @@ def test_oracle_sql_matches_engine_on_synthetic(spark):
         bpe.encode_lengths_oracle_sql(5, 1, 1 << 16)).fetchall()) == enc
 
 
-# --- property tests: the distributed fold is the subtle piece -------
+# --- property tests -------------------------------------------------
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
-
-_sym = st.text(alphabet="ab", min_size=1, max_size=2)
-
-
-@settings(max_examples=20, deadline=None, derandomize=True,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(st.lists(st.lists(_sym, min_size=1, max_size=8),
-                min_size=1, max_size=6),
-       _sym, _sym)
-def test_fold_rewrite_matches_python_model(spark, arrays, lhs, rhs):
-    """bpe._apply_merge (the aggregate fold with the skip flag) must
-    agree with _py_apply on arbitrary symbol arrays — including
-    overlapping runs like [a,a,a] and pair-at-the-end shapes."""
-    df = spark.createDataFrame([(i, a) for i, a in enumerate(arrays)],
-                               "i long, s array<string>")
-    got = {r.i: tuple(r.o) for r in
-           df.select("i", bpe._apply_merge("s", lhs, rhs).alias("o"))
-           .collect()}
-    assert got == {i: bpe._py_apply(tuple(a), lhs, rhs)
-                   for i, a in enumerate(arrays)}
-
 
 @settings(max_examples=8, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -333,36 +299,3 @@ def test_bpe_encode_works_on_streams(spark, tmp_path):
     finally:
         q.stop()
     assert got == expect
-
-
-def test_reliable_checkpoint_cleanup(spark, tmp_path):
-    """checkpoint_dir training (ADVICE r10): same merges as driver
-    mode, no snapshot accumulation — every managed bpe-round-*
-    subdirectory is deleted by the end (a 200-merge cluster run must
-    not leave 200 type-table snapshots on HDFS), and the session's
-    prior global checkpoint dir is restored."""
-    import os
-
-    texts = ["lower lowest newer newest wider widest",
-             "low new wide lower newer wider"]
-    df = _docs(spark, texts)
-    drv = [tuple(r) for r in
-           bpe.learn_bpe(df, "text", 5, min_count=1).collect()]
-
-    prior = str(tmp_path / "prior-global")
-    spark.sparkContext.setCheckpointDir(prior)
-    ck = str(tmp_path / "bpe-ck")
-    dist = [tuple(r) for r in
-            bpe.learn_bpe(df, "text", 5, min_count=1,
-                          mode="distributed",
-                          checkpoint_dir=ck).collect()]
-    assert dist == drv and len(drv) == 5
-    # every per-round snapshot was cleaned up
-    leftovers = [d for d in (os.listdir(ck) if os.path.isdir(ck) else [])
-                 if d.startswith("bpe-round-")]
-    assert leftovers == []
-    # global checkpoint dir restored (setCheckpointDir nests a UUID
-    # under the requested path and may prepend a file: scheme, so
-    # pin by substring)
-    opt = spark.sparkContext._jsc.sc().getCheckpointDir()
-    assert opt.isDefined() and prior in opt.get()

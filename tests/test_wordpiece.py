@@ -1,11 +1,12 @@
 """WordPiece goldens (functions/wordpiece.py): likelihood-scored
 merges (exact scaled-integer keys), ## continuation symbols, greedy
-longest-match encode with whole-word [UNK], regime equivalence, and
-the DuckDB train+encode replay."""
+longest-match encode with whole-word [UNK], and the DuckDB
+train+encode replay."""
 
 import pytest
 
 from kafkadirect_spark.functions import wordpiece as wp
+from kafkadirect_spark.functions.bpe import _py_apply
 
 
 def _docs(spark, texts):
@@ -22,10 +23,11 @@ def test_symbols_and_product():
     assert wp._wp_symbols("abc") == ("a", "##b", "##c")
     assert wp._merge_product("a", "##b") == "ab"
     assert wp._merge_product("##b", "##c") == "##bc"
-    assert wp._py_apply(("a", "##b", "##c"), "a", "##b") == ("ab", "##c")
+    assert _py_apply(("a", "##b", "##c"), "a", "##b",
+                     wp._merge_product("a", "##b")) == ("ab", "##c")
     # left-to-right non-overlapping, like BPE
-    assert wp._py_apply(("##a", "##a", "##a"), "##a", "##a") \
-        == ("##aa", "##a")
+    assert _py_apply(("##a", "##a", "##a"), "##a", "##a",
+                     wp._merge_product("##a", "##a")) == ("##aa", "##a")
 
 
 def test_scored_argmax_prefers_likelihood_over_raw_count():
@@ -58,36 +60,6 @@ def test_encode_longest_match_and_unk():
 # ---------------------------------------------------------------------------
 # engine
 # ---------------------------------------------------------------------------
-
-
-def test_distributed_equals_driver(spark):
-    texts = ["lower lowest newer newest wider widest",
-             "low new wide lower newer wider",
-             "the newest of the new, the widest of the wide"]
-    df = _docs(spark, texts)
-    drv = [tuple(r) for r in
-           wp.learn_wordpiece(df, "text", 6, min_count=1).collect()]
-    dist = [tuple(r) for r in
-            wp.learn_wordpiece(df, "text", 6, min_count=1,
-                               mode="distributed").collect()]
-    assert dist == drv and len(drv) == 6
-
-
-def test_reliable_checkpoint_cleanup(spark, tmp_path):
-    import os
-
-    df = _docs(spark, ["lower lowest newer", "low new lower newer"])
-    drv = [tuple(r) for r in
-           wp.learn_wordpiece(df, "text", 4, min_count=1).collect()]
-    ck = str(tmp_path / "wp-ck")
-    dist = [tuple(r) for r in
-            wp.learn_wordpiece(df, "text", 4, min_count=1,
-                               mode="distributed",
-                               checkpoint_dir=ck).collect()]
-    assert dist == drv
-    leftovers = [d for d in (os.listdir(ck) if os.path.isdir(ck) else [])
-                 if d.startswith("wordpiece-round-")]
-    assert leftovers == []
 
 
 def test_encode_matches_python_model(spark):

@@ -185,6 +185,18 @@ HEADLINERS = {
 }
 
 
+def _mask_ids(plan: str) -> str:
+    """Exchange plan ids and expression ids (``vec_id#1687L``) count
+    every plan and expression the session built before, so one changed
+    plan would renumber every later one.  Mask the plan ids and
+    renumber the expression ids per plan in first-seen order, so a
+    regeneration of unchanged plans is byte-identical."""
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    ids: dict[str, int] = {}
+    return re.sub(r"(?<!#)#(\d+)",
+                  lambda m: f"#{ids.setdefault(m[1], len(ids) + 1)}", plan)
+
+
 def main() -> None:
     from kafkadirect_spark.plans import QUERIES
     from kafkadirect_spark.session import get_spark
@@ -202,10 +214,7 @@ def main() -> None:
 
     for name, note in HEADLINERS.items():
         df = QUERIES[name](spark, sf)
-        # exchange/broadcast plan ids count every plan the session
-        # built before, so they differ run to run; mask them so a
-        # regeneration of unchanged plans is byte-identical
-        plan = re.sub(r"plan_id=\d+", "plan_id=N", explain_formatted(df))
+        plan = _mask_ids(explain_formatted(df))
         out += [f"## {name}", "", f"*Check:* {note}", "", "```",
                 plan.rstrip(), "```", ""]
     path = os.path.join(os.path.dirname(os.path.dirname(

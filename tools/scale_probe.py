@@ -38,8 +38,8 @@ split, a parameter sweep), each over the helper's output:
 
     python tools/scale_probe.py --probe NAME [sf_dir]
 
-with NAME one of semdedup, ivf_pq, bpe, bpe_dist, unigram, unigram_big,
-wordpiece, vocab_coverage, nb_classes, sax.
+with NAME one of semdedup, ivf_pq, bpe, unigram, unigram_big, wordpiece,
+vocab_coverage, nb_classes, sax.
 """
 
 from __future__ import annotations
@@ -222,33 +222,6 @@ def bpe_split(spark, sf_dir: str = "/root/testdata/sf0.1",
                       learn_sec=round(time.perf_counter() - t0, 3))
 
 
-def bpe_dist(spark, sf_dir: str = "/root/testdata/sf0.01",
-             steps: tuple[int, ...] = (1, 4, 8), n_merges: int = 200) -> None:
-    """``learn_bpe(mode="distributed")`` at a realistic merge count
-    over organically grown type tables: per round one vocabulary-sized
-    pair count, a 1-row TakeOrdered and a checkpointed rewrite.  Claim:
-    per-round cost is flat in the round index (the per-round
-    localCheckpoint keeps plan depth O(1); without it the nested fold
-    lineage ran an 8 GB driver out of memory near 25 merges) and tracks
-    only the type table.  Also checks driver == distributed on the 1×
-    corpus."""
-    def learn(mode):
-        return lambda s, sf: bpe.learn_bpe(
-            load_table(s, sf, "documents"), "text", n_merges=n_merges,
-            min_count=2, max_word_types=1 << 16, mode=mode)
-
-    for k in steps:
-        with replicas(spark, sf_dir, k, "alnum") as d:
-            sec, merges = timed(spark, d, learn("distributed"))
-            _emit(op="learn_bpe_distributed", repl=k,
-                  types=_n_types(spark, d), n_merges=merges.count(),
-                  requested=n_merges, sec=sec)
-    md, mx = (learn(m)(spark, sf_dir).collect()
-              for m in ("driver", "distributed"))
-    _emit(op="learn_bpe_regimes_equal", n_merges=n_merges,
-          equal=[tuple(r) for r in md] == [tuple(r) for r in mx])
-
-
 def unigram_train(spark, sf_dir: str = "/root/testdata/sf0.01",
                   steps: tuple[int, ...] = (1, 4, 16), vocab_size: int = 64,
                   rounds: int = 2, seed_factor: int = 4) -> None:
@@ -305,29 +278,20 @@ def wordpiece_train(spark, sf_dir: str = "/root/testdata/sf0.01",
                     steps: tuple[tuple[int, int], ...] = (
                         (1, 0), (4, 1024), (16, 4096)),
                     n_merges: int = 12) -> None:
-    """Distributed WordPiece training over hash-fanned types (fan 0
-    leaves the corpus as is).  Claims: per round the symbol-count and
-    pair-count aggregates stay type-table-bounded, the scored argmax
-    join is bounded by the pair space, DECIMAL(38,0) scoring costs
-    nothing measurable over BPE's raw-count argmax, and the per-round
-    checkpoint keeps plan depth O(1), so wall per round tracks the
-    type table, not the corpus.  At fan 0 the driver regime must give
-    the same merges."""
-    def learn(mode):
-        return lambda s, sf: wordpiece.learn_wordpiece(
-            load_table(s, sf, "documents"), "text", n_merges, min_count=2,
-            max_word_types=1 << 16, mode=mode)
-
+    """WordPiece training over hash-fanned types (fan 0 leaves the
+    corpus as is).  Claims: the corpus is touched once, in the
+    word-type count; the collected table is capped at
+    ``max_word_types``, so wall tracks the type table, not the
+    corpus, and the scored argmax stays a Python loop over it."""
     for k, m in steps:
         with replicas(spark, sf_dir, k, "fan" if m else "none", m) as d:
-            wall, merges = timed(spark, d, learn("distributed"))
-            if m == 0:
-                if merges.collect() != learn("driver")(spark, d).collect():
-                    raise RuntimeError("wordpiece regime divergence")
+            wall, merges = timed(spark, d, lambda s, sf: (
+                wordpiece.learn_wordpiece(
+                    load_table(s, sf, "documents"), "text", n_merges,
+                    min_count=2, max_word_types=1 << 16)))
             _emit(op="learn_wordpiece", repl=k, hash_fan=m,
                   types=_n_types(spark, d), merges=merges.count(),
-                  sec=wall,
-                  sec_per_round=round(wall / n_merges, 2))
+                  sec=wall)
 
 
 def vocab_coverage(spark, sf_dir: str = "/root/testdata/sf0.01",
@@ -408,10 +372,9 @@ def sax(spark, sf_dir: str = "/root/testdata/sf0.1",
 
 
 PROBES = {"semdedup": semdedup, "ivf_pq": ivf_pq, "bpe": bpe_split,
-          "bpe_dist": bpe_dist, "unigram": unigram_train,
-          "unigram_big": unigram_big, "wordpiece": wordpiece_train,
-          "vocab_coverage": vocab_coverage, "nb_classes": nb_classes,
-          "sax": sax}
+          "unigram": unigram_train, "unigram_big": unigram_big,
+          "wordpiece": wordpiece_train, "vocab_coverage": vocab_coverage,
+          "nb_classes": nb_classes, "sax": sax}
 
 
 def main(spark, sf_dir: str, max_repl: int, organic: bool,
