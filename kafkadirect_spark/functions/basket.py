@@ -63,7 +63,7 @@ def basket_pairs_topk(df: DataFrame, basket_col: str, item_col: str,
     # partial collect_set dedups multiplicities — identical to the old
     # (basket, item) distinct), the cap is then a row-local size
     # filter, and pairs are enumerated row-locally from the sorted set
-    # (r15, guide §2.3/2.4): the old shape paid a distinct exchange, a
+    # (guide §2.3/2.4): a join shape pays a distinct exchange, a
     # sizes exchange, a cap join, a basket-count distinct AND the
     # basket-keyed self-join for the same rows — measured 4.9 s →
     # 3.8 s at sf0.1, and C(|basket|,2) pair work is unchanged (the
@@ -96,7 +96,7 @@ def basket_pairs_topk(df: DataFrame, basket_col: str, item_col: str,
     # only when the catalog is long-tail (most items below
     # min_support).  MEASURED on TPC-H lineitem at sf0.1 (parts are
     # uniform, nothing prunes): 5.6 s unpruned vs 9.2 s pruned on the
-    # r14 join shape — hence default False; flip it for power-law
+    # join shape — hence default False; flip it for power-law
     # catalogs.
     if prune_items and min_support >= 2:
         frequent = (kept.select("b", F.explode("__its").alias("it"))

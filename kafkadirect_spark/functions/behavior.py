@@ -95,7 +95,7 @@ def funnel_steps_oracle_sql(steps: list[str],
     """DuckDB replay of ``funnel_steps``: the same min-ts cascade as
     chained CTEs, epoch-second lags, truncating permille.
 
-    Epoch assumption (ADVICE r13): ``epoch_ms // 1000`` matches
+    Epoch assumption: ``epoch_ms // 1000`` matches
     Spark's ``unix_timestamp`` only for timestamps >= 1970 — DuckDB's
     ``//`` truncates toward zero while Spark FLOORS, so the two
     diverge by 1s on negative-epoch subsecond timestamps.  The events
@@ -228,7 +228,7 @@ def attribution_last_touch(events: DataFrame, user_col: str,
                            within_seconds: int | None = None,
                            order_break_col: str | None = None
                            ) -> DataFrame:
-    """Last-touch conversion attribution (round 13) — the credit-
+    """Last-touch conversion attribution — the credit-
     assignment companion to the funnel (which counts conversions) and
     the path miner (which counts sequences): every ``conversion``
     event is attributed to the LATEST non-conversion event type
@@ -249,7 +249,7 @@ def attribution_last_touch(events: DataFrame, user_col: str,
     ``_BNLJ_OK`` entry if registered).  Supply ``order_break_col``
     (e.g. the event id) for deterministic same-timestamp order.
 
-    Cache note (ADVICE r13): the tiny report frame is registered via
+    Cache note: the tiny report frame is registered via
     ``dedup._persist`` so the shared lineage runs once; like every
     ``_persist`` user it stays pinned until
     ``dedup.release_caches()`` — long-lived sessions invoking this
@@ -287,7 +287,7 @@ def attribution_last_touch(events: DataFrame, user_col: str,
     # ≤|types|-row report frame — re-aggregating `conv` would run the
     # full user-partitioned window pass a second time; persisting the
     # tiny report makes the shared lineage run ONCE even without
-    # exchange reuse (r13 review)
+    # exchange reuse
     rep = _persist(conv.groupBy("touch_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_conversions"),
         F.sum("__lag").cast("long").alias("sum_lag_seconds")))
@@ -311,7 +311,7 @@ def attribution_oracle_sql(conversion: str,
     rows-preceding IGNORE NULLS window, whole-second lookback,
     ``(direct)`` fallback, truncating share.
 
-    Epoch assumption (ADVICE r13): the ``epoch_ms // 1000`` lag
+    Epoch assumption: the ``epoch_ms // 1000`` lag
     matches Spark's ``unix_timestamp`` only for timestamps >= 1970
     (DuckDB ``//`` truncates toward zero, Spark floors — a 1s
     divergence on negative-epoch subsecond timestamps)."""

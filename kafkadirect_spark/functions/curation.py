@@ -885,7 +885,7 @@ def surprisal_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Reference analogue: none (SURVEY.md §2 — no document model);
     beyond-parity curation machinery.
 
-    Scale ledger (r15 reshape): the vocabulary frequency table
+    Scale ledger: the vocabulary frequency table
     aggregates straight off the exploded occurrences (map-side
     combine bounds its exchange by |vocab| per partition) and joins
     back by token — AQE broadcasts it when it fits, which a real
@@ -915,6 +915,57 @@ def surprisal_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
              F.sum(bits).cast("long").alias("surprisal_bits"))
     )
+
+
+def _nb_train(train: DataFrame, text_col: str, label_col: str,
+              max_classes: int) -> tuple[DataFrame, dict]:
+    """The NB training statistics both scoring shapes share: the
+    persisted labeled ``(__cls, __tok, __c)`` table, plus a dict of the
+    sorted ``classes``, ``vocab_v`` and the per-class integer
+    ``prior``/``denom`` bits.
+
+    NULL labels are filtered before any statistic.  The classes are
+    the labels with ≥ 1 token row, and the prior's doc total counts
+    only their docs.  ``vocab_v`` is the full trained vocabulary: it
+    is part of the smoothing denominator, so a vocabulary cap applied
+    afterwards drops token rows, not support.  Raises above
+    ``max_classes`` distinct labels (the collect is limited to
+    ``max_classes + 1`` rows) and on an empty table."""
+    labeled = train.filter(F.col(label_col).isNotNull())
+    occ_t = _persist(
+        _widen(labeled.select(F.col(label_col).alias("__cls"),
+                              F.col(text_col)))
+        .select("__cls", F.explode(tokens(text_col)).alias("__tok"))
+        .groupBy("__cls", "__tok")
+        .agg(F.count(F.lit(1)).alias("__c"))
+    )
+    cls_rows = (occ_t.groupBy("__cls").agg(F.sum("__c").alias("__n"))
+                .limit(max_classes + 1).collect())  # ≤ C+1 rows
+    if len(cls_rows) > max_classes:
+        raise ValueError(
+            f"more than max_classes={max_classes} distinct labels — "
+            "NB keeps one column set per class; raise the guard "
+            "only if the label space is genuinely that wide")
+    if not cls_rows:
+        raise ValueError("training frame produced no (class, token) rows")
+    n_tok = {r["__cls"]: int(r["__n"]) for r in cls_rows}
+    classes = sorted(n_tok)
+    vocab_v = occ_t.select("__tok").distinct().count()
+    n_docs = {r["__cls"]: int(r["__nd"]) for r in
+              labeled.groupBy(F.col(label_col).alias("__cls"))
+              .agg(F.count(F.lit(1)).alias("__nd")).collect()
+              if r["__cls"] in n_tok}
+    total_docs = sum(n_docs.values())
+
+    def flog2(n: int) -> int:
+        return n.bit_length() - 1
+
+    return occ_t, {
+        "classes": classes,
+        "vocab_v": vocab_v,
+        "prior": {c: flog2(total_docs) - flog2(n_docs[c]) for c in classes},
+        "denom": {c: flog2(n_tok[c] + vocab_v) for c in classes},
+    }
 
 
 def nb_classify(train: DataFrame, score: DataFrame, id_col: str,
@@ -960,26 +1011,8 @@ def nb_classify(train: DataFrame, score: DataFrame, id_col: str,
     the wide row, never a C-way row explosion — then one
     groupBy(doc).  Nothing data-sized is collected.
     """
-    labeled = train.filter(F.col(label_col).isNotNull())
-    occ_t = (
-        _widen(labeled.select(F.col(label_col).alias("__cls"),
-                              F.col(text_col)))
-        .select("__cls", F.explode(tokens(text_col)).alias("__tok"))
-        .groupBy("__cls", "__tok")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    occ_t = _persist(occ_t)
-    cls_rows = (occ_t.groupBy("__cls").agg(F.sum("__c").alias("__n"))
-                .limit(max_classes + 1).collect())  # ≤ C+1 rows
-    if len(cls_rows) > max_classes:
-        raise ValueError(
-            f"more than max_classes={max_classes} distinct labels — "
-            "NB pivots one column set per class; raise the guard "
-            "only if the label space is genuinely that wide")
-    if not cls_rows:
-        raise ValueError("training frame produced no (class, token) rows")
-    n_tok = {r["__cls"]: int(r["__n"]) for r in cls_rows}
-    classes = sorted(n_tok)
+    occ_t, m = _nb_train(train, text_col, label_col, max_classes)
+    classes, prior, denom = m["classes"], m["prior"], m["denom"]
     bad = [c for c in classes
            if c is None or c == id_col or c.startswith("__") or "`" in c]
     if bad:
@@ -987,25 +1020,11 @@ def nb_classify(train: DataFrame, score: DataFrame, id_col: str,
             f"class labels {bad!r} collide with the classifier's "
             f"internal/pivot column namespace (id column {id_col!r}, "
             "the __ prefix, backticks, NULL) — rename or filter them")
-    vocab_v = occ_t.select("__tok").distinct().count()
-    nd_rows = (labeled.groupBy(F.col(label_col).alias("__cls"))
-               .agg(F.count(F.lit(1)).alias("__nd")).collect())
-    # restrict doc counts to the candidate classes (labels with ≥ 1
-    # token row) so total_docs covers exactly the classes being scored
-    n_docs = {r["__cls"]: int(r["__nd"]) for r in nd_rows
-              if r["__cls"] in n_tok}
-    total_docs = sum(n_docs.values())
-
-    def flog2(n: int) -> int:
-        return n.bit_length() - 1
-
-    prior = {c: flog2(total_docs) - flog2(n_docs[c]) for c in classes}
-    denom = {c: flog2(n_tok[c] + vocab_v) for c in classes}
 
     wide = (occ_t.groupBy("__tok")
             .pivot("__cls", classes).agg(F.first("__c")))
 
-    # r15 reshape (see surprisal_scores): score raw occurrences
+    # As in surprisal_scores: score raw occurrences
     # against the broadcast pivot table instead of pre-collapsing to
     # distinct (doc, token) counts — the (doc, token) exchange cost
     # more than it bounded, and the final groupBy(doc) partial-
@@ -1063,25 +1082,7 @@ def nb_model(train: DataFrame, text_col: str, label_col: str,
     rules (NULL labels filtered; candidate classes and the prior's
     doc total restricted to labels with ≥ 1 token row).
     """
-    labeled = train.filter(F.col(label_col).isNotNull())
-    occ_t = (
-        _widen(labeled.select(F.col(label_col).alias("__cls"),
-                              F.col(text_col)))
-        .select("__cls", F.explode(tokens(text_col)).alias("__tok"))
-        .groupBy("__cls", "__tok")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    occ_t = _persist(occ_t)
-    n_cls = occ_t.select("__cls").distinct().limit(max_classes + 1).count()
-    if n_cls > max_classes:
-        raise ValueError(
-            f"more than max_classes={max_classes} distinct labels")
-    if n_cls == 0:
-        raise ValueError("training frame produced no (class, token) rows")
-    # vocabulary BEFORE the cap: V is part of the smoothing denominator
-    # and must match nb_classify's (the cap drops rare-token ROWS from
-    # the shipped table, not from the trained distribution's support)
-    vocab_v = occ_t.select("__tok").distinct().count()
+    occ_t, model = _nb_train(train, text_col, label_col, max_classes)
     tok_tot = (occ_t.groupBy("__tok").agg(F.sum("__c").alias("__t"))
                .orderBy(F.col("__t").desc(), F.col("__tok").asc())
                .limit(max_vocab))  # distributed TakeOrdered, never a sort
@@ -1089,26 +1090,8 @@ def nb_model(train: DataFrame, text_col: str, label_col: str,
     counts: dict[str, dict[str, int]] = {}
     for r in kept.collect():  # ≤ max_vocab · C rows — bounded by the cap
         counts.setdefault(r["__cls"], {})[r["__tok"]] = int(r["__c"])
-    n_tok = {r["__cls"]: int(r["__n"]) for r in
-             occ_t.groupBy("__cls").agg(F.sum("__c").alias("__n"))
-             .collect()}
-    classes = sorted(n_tok)
-    nd = {r["__cls"]: int(r["__nd"]) for r in
-          labeled.groupBy(F.col(label_col).alias("__cls"))
-          .agg(F.count(F.lit(1)).alias("__nd")).collect()
-          if r["__cls"] in n_tok}
-    total_docs = sum(nd.values())
-
-    def flog2(n: int) -> int:
-        return n.bit_length() - 1
-
-    return {
-        "classes": classes,
-        "vocab_v": vocab_v,
-        "prior": {c: flog2(total_docs) - flog2(nd[c]) for c in classes},
-        "denom": {c: flog2(n_tok[c] + vocab_v) for c in classes},
-        "counts": {c: counts.get(c, {}) for c in classes},
-    }
+    model["counts"] = {c: counts.get(c, {}) for c in model["classes"]}
+    return model
 
 
 def nb_score_rows(df: DataFrame, model: dict, id_col: str,
@@ -1293,7 +1276,6 @@ def temperature_mix(df: DataFrame, strata_col: str, id_col: str,
     # eqNullSafe, not an equi-join: groupBy counts NULL as a stratum,
     # so the threshold join must match it too — a plain join would
     # silently DELETE every NULL-stratum row instead of sampling it
-    # (round-8 self-review finding)
     return (df.join(F.broadcast(thr),
                     F.col(strata_col).eqNullSafe(F.col("__stratum")))
             .filter(hash_bucket(id_col, scale, salt) < F.col("__thr"))
@@ -1351,7 +1333,7 @@ def bigram_surprisal_scores(df: DataFrame, id_col: str, text_col: str,
     tokens have no bigrams and are absent (left-join + coalesce on the
     caller side if zero rows are needed).
 
-    Scale ledger (r15 reshape): the LM bigram table aggregates to
+    Scale ledger: the LM bigram table aggregates to
     ≤ |observed bigrams| rows and joins back by (w1, w2) against the
     RAW per-occurrence bigrams — a plain hash join, AQE-broadcast
     when it fits; prefix counts derive from the bigram table (one
@@ -1465,7 +1447,7 @@ def gopher_quality(df: DataFrame, id_col: str, text_col: str,
             F.max("__k").cast("long").alias(f"__{pfx}_max"))
 
     toks = tokens(text_col)
-    # r15: the 3-gram branch needs only total+distinct — both are
+    # The 3-gram branch needs only total+distinct — both are
     # row-local native array ops (size / array_distinct, codegen'd,
     # NOT lambda HOFs), so its explode + two exchanges are gone.  The
     # 2-gram branch keeps the exploded aggregate because top_2gram_ppm
@@ -1713,8 +1695,8 @@ def collocations(df: DataFrame, id_col: str, text_col: str,
     # `div` (integral division), NOT `/`+floor: Spark decimal `/`
     # HALF_UP-rounds to scale 6 BEFORE the floor, so a quotient with
     # fractional part ≥ .9999995 floors one too high — diverging from
-    # the oracle's exact HUGEINT `//` (caught by round-8 self-review;
-    # decimal `div` is exact integral division in both engines)
+    # the oracle's exact HUGEINT `//` (decimal `div` is exact
+    # integral division in both engines)
     return (pairs.filter(F.col("pair_count") >= min_count)
             .join(ua, "w1").join(ub, "w2")
             .join(F.broadcast(tot))
@@ -1798,7 +1780,7 @@ def pack_sequences_bestfit(df: DataFrame, id_col: str, tokens_col: str,
 
 
 # ---------------------------------------------------------------------------
-# Vocabulary coverage curve (round 11) — the dataset-card question
+# Vocabulary coverage curve — the dataset-card question
 # "what fraction of corpus tokens does a size-k vocabulary cover?",
 # answered WITHOUT ranking the vocabulary: ties at the k-th rank all
 # carry the same count, so the top-k token sum is an exact function
@@ -1917,7 +1899,7 @@ def vocab_coverage_oracle_sql(ks: tuple[int, ...] = (100, 1000, 10000),
 
 
 # ---------------------------------------------------------------------------
-# Weighted sampling (round 11) — the consumer importance_weights was
+# Weighted sampling — the consumer importance_weights was
 # missing: draw a fixed number of weighted samples (data mixing by
 # quality score / token count / DSIR weight) deterministically, with
 # integer-exact systematic sampling instead of float Gumbel keys, so
@@ -2154,8 +2136,7 @@ def sample_weighted_per_group_oracle_sql(
     exclusive prefix sums and HUGEINT ceil arithmetic; NULL group
     keys skipped.  ``group_sql`` is any scalar expression over
     ``table``; its output column is aliased ``group_out`` (match the
-    engine frame's group column name).  Registration-ready for r13
-    (landed library-level r12 per policy item b)."""
+    engine frame's group column name)."""
     hsql = (f"(('0x' || substr(md5('{seed}' || {id_col}::VARCHAR), "
             "1, 14))::BIGINT % 2147483647)")
     cd = ("(({x}::HUGEINT * " + str(int(n))
@@ -2260,9 +2241,7 @@ def contamination_report_oracle_sql(
     """DuckDB replay of ``contamination_report(train, eval)`` where
     both sides are predicates over one table — the same tokenize /
     ``n``-gram / portable-hash pipeline, membership on the hash
-    (collisions replay identically), truncating milli ratio.
-    Registration-ready for r13 (landed library-level r12 per policy
-    item b)."""
+    (collisions replay identically), truncating milli ratio."""
     tok = (f"list_filter(regexp_split_to_array(lower({text_col}), "
            "'[^a-z0-9]+'), x -> x <> '')")
     gram = " || ' ' || ".join(f"w[g+{j}]" for j in range(n))
@@ -2301,7 +2280,7 @@ def contamination_report_oracle_sql(
 def contamination_spans(train: DataFrame, eval_df: DataFrame,
                         text_col: str, id_col: str,
                         n: int = 8) -> DataFrame:
-    """Span-level contamination audit (round 13) — the report
+    """Span-level contamination audit — the report
     gram-set membership (``contamination_report``) cannot give: for
     every evaluation document, the LONGEST maximal run of LEAKED
     tokens (tokens covered by at least one training-matched
@@ -2397,8 +2376,7 @@ def contamination_spans_oracle_sql(
     positional ``n``-gram / portable-hash pipeline, hash membership,
     and the gaps-and-islands span merge (1-based positions vs
     Spark's 0-based — span LENGTHS and counts only use position
-    differences, so the offset cancels).  r14 registration
-    candidate."""
+    differences, so the offset cancels)."""
     tok = (f"list_filter(regexp_split_to_array(lower({text_col}), "
            "'[^a-z0-9]+'), x -> x <> '')")
     gram = " || ' ' || ".join(f"w[g+{j}]" for j in range(n))

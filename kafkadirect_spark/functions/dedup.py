@@ -124,7 +124,7 @@ def _shingle_index(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFra
     are unique per row (every caller's contract), so the two are
     row-identical while this form removes the corpus-sized
     (id, shingle) exchange the old explode→distinct paid (guide §2.4
-    "remove shuffles outright" — r15 measurement: containment at
+    "remove shuffles outright" — measured: containment at
     sf0.1 8.2 s → 4.8 s combined with the capped-index persist)."""
     return (
         _widen(df.select(F.col(id_col), F.col(text_col)))
@@ -156,7 +156,7 @@ def ngram_jaccard_pairs(
     if max_doc_freq is not None:
         # Persist the CAPPED index too: it is what the three consumers
         # actually read, and without this the freq join re-ran once per
-        # consumer (guide §2.4 — r15 containment measurement 8.2→4.9 s).
+        # consumer (guide §2.4 — containment measured 8.2→4.9 s).
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         sh = _persist(
             sh.join(freq.filter(F.col("df") <= max_doc_freq), "shingle"))
@@ -449,7 +449,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFr
     Computed row-locally like ``with_row_signatures`` — the hashed
     distinct-token array materializes as a column, then ``bits``
     fold expressions over that attribute (CSE-safe: the md5 pass runs
-    once per row, not per bit) — ZERO shuffles; the round-4 explode +
+    once per row, not per bit) — ZERO shuffles; the earlier explode +
     distinct + groupBy(doc) formulation produced identical signatures
     through two exchanges (pinned by test_llm_ops.py parity test).
     Token-less docs drop out, as the explode formulation's did."""
@@ -791,7 +791,7 @@ def containment_pairs(
     the curation step drop the subsumed copy and keep the superset.
 
     ``how`` picks the output shape from the SAME intersection frame
-    (VERDICT r8 item 5 — one pass, two consumers):
+    (one pass, two consumers):
 
     - ``"inner"`` (default): the directed pair table
       ``(contained, container, common, n_contained, containment)``;
@@ -1059,7 +1059,7 @@ def cdc_dup_stats(df: DataFrame, text_col: str, id_col: str,
     one hot aggregation key — absorbed by partial aggregation, the
     same envelope as ``span_dedup``.
 
-    r16 (guide §2.5/§5): the input is ``_widen``ed BEFORE chunking —
+    Guide §2.5/§5: the input is ``_widen``ed BEFORE chunking —
     this op's plan already exchanges, so unlike ``cdc_chunks``'s
     pinned ride-the-scan contract there is no zero-exchange property
     to protect, and a narrow scan otherwise serializes the md5-chain
@@ -1147,7 +1147,7 @@ def cdc_stats_oracle_sql(g: int = 3, mask_bits: int = 4) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Edit-distance verification (round 11) — the character-level
+# Edit-distance verification — the character-level
 # verification stage next to jaccard_verify's set-level one: exact
 # Levenshtein over the canonical token surface, computed ONLY for
 # candidate pairs.  Catches the "same shingle set, different order /
@@ -1312,7 +1312,7 @@ def _exactsubstr_occ(df: DataFrame, text_col: str, id_col: str,
     (``persist=False`` for single-consumer callers — the incremental
     path's INDEX side reduces straight to a distinct hash set, and
     materializing a corpus-sized (id, pos, hash) cache for that one
-    pass cost ~0.9 s at sf0.1 for nothing, r15)."""
+    pass cost ~0.9 s at sf0.1 for nothing)."""
     base = _widen(df.select(F.col(id_col), F.col(text_col))) \
         .select(F.col(id_col), tokens(text_col).alias("__toks"))
     occ = base.select(

@@ -124,7 +124,7 @@ def _orient(pairs: DataFrame, a_col: str, b_col: str):
                 .withColumnRenamed("d", "dv"), "v"))
     lo_first = (F.struct(F.col("du"), F.col("u"))
                 < F.struct(F.col("dv"), F.col("v")))
-    # The ORIENTED frame is persisted too (r15): it feeds the wedge
+    # The ORIENTED frame is persisted too: it feeds the wedge
     # self-join's two sides, the closure semi-join and (in
     # local_clustering) the role explode — without its own cache each
     # consumer re-ran the two degree joins from the cached edge list
@@ -189,7 +189,7 @@ def triangle_stats(pairs: DataFrame, a_col: str = "id_a",
                                F.col("hi").alias("y")),
                       ["x", "y"], "left_semi")
     # One-row aggregates combined through a UNION + max instead of two
-    # broadcast joins (r15): the broadcast form materialized each agg
+    # broadcast joins: the broadcast form materialized each agg
     # as its own driver-blocking job; union branches materialize
     # concurrently inside the single final job.  Values are identical
     # (each column is non-null in exactly one branch).

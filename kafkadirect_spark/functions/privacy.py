@@ -24,13 +24,13 @@ fold and the redaction rendering end to end without cross-engine
 regex-parity risk.  For real corpora the pytest suite additionally
 pins ``pii_scrub`` against an independent ``re``-module model.
 
-Relationship to ``text.redact_pii`` / the registered ``pii_redaction``
-query (consolidation policy item c): this module STRICTLY SUBSUMES
-that claim — email/SSN/phone masking and counting plus payment-card
-shape, the Luhn validity split, IPv4, per-kind counts and the
-regex-free oracle.  The r15 plan pairs a ``pii_scrub`` registration
-with a 1:1 ``pii_redaction`` retirement; ``text.redact_pii`` stays in
-the library for the mask-token rendering its tests pin.
+Relationship to ``text.redact_pii`` and the former ``pii_redaction``
+query: this module STRICTLY SUBSUMES that claim — email/SSN/phone
+masking and counting plus payment-card shape, the Luhn validity
+split, IPv4, per-kind counts and the regex-free oracle.  The
+registered ``pii_scrub`` query replaced ``pii_redaction``;
+``text.redact_pii`` stays in the library for the mask-token rendering
+its tests pin.
 
 Reference analogue: none (SURVEY.md §2 — no document model);
 beyond-parity curation machinery beside decontamination and quality
@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 # the usual RE2-style engines (no backreferences, no lookaround):
 # the pytest model pin runs them through python `re` verbatim.
 #
-# IPv4 precision (ADVICE r14): octets are range-checked to 0-255,
+# IPv4 precision: octets are range-checked to 0-255,
 # so '999.999.999.999' and '256.1.2.3' no longer count or redact.
 # Zero-PADDED octets stay matched ('192.168.01.1', '010.001.002.003'
 # — fixed-width log formats emit these and most parsers accept them;

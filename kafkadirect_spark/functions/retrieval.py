@@ -8,7 +8,7 @@ Integer-exact by construction: each system contributes
 1/(c+rank) in fixed point), so the fused score is a BIGINT that both
 engines reproduce bit-for-bit; only RANKS cross the fusion boundary —
 the BM25 decimals and the cosine floats stay inside their systems.
-Cross-engine caveat (ADVICE r12): the semantic arm's RANKS come from
+Cross-engine caveat: the semantic arm's RANKS come from
 float64 cosine ordering (numpy matmul engine-side vs DuckDB
 ``list_cosine_similarity`` in the oracle), so the post-rank integer
 arithmetic is exact GIVEN equal ranks — near-tied cosines could in

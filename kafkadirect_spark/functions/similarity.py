@@ -1,21 +1,25 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, as a 100 TB pipeline needs both:
+- **cosine_topk_blas** — exact top-k: a bounded probe set is broadcast
+  as one normalized numpy matrix and each Arrow batch of the index is
+  scored by one matmul.  The correctness baseline, and the right
+  answer when the probe set is much smaller than the index: the index
+  is scanned once, with no shuffle before the per-probe top-k.
+- **ann_lsh_topk** / **ivf_topk** — approximate top-k with exact
+  cosine only over candidates: random-hyperplane LSH buckets (shuffle
+  key (table, bucket)) or an inverted-file coarse quantizer (shuffle
+  key centroid id).  Sub-quadratic, skew-bounded by bucket/list size.
+- **lsh_candidate_pairs** → **cosine_verify_pairs** — embedding
+  near-dup: LSH candidate pairs, then an exact cosine threshold.
+- **pq_encode** / **pq_topk** / **ivf_pq_topk** / **ivf_pq_rerank** —
+  integer product quantization and asymmetric-distance scoring.
 
-- **cosine_topk** — exact brute force: cross-join + vectorized dot
-  product.  O(n²·d); the correctness baseline and the right answer for
-  a broadcast-able probe set (n_query ≪ n_index: broadcast the probes,
-  scan the index once — no shuffle at all).
-- **ann_lsh_topk** — random-hyperplane LSH: each vector hashes to a
-  sign-pattern bucket; candidates share a bucket in ≥1 of the hash
-  tables; exact cosine only within buckets.  Shuffle key is
-  (table, bucket) — sub-quadratic, skew-bounded by bucket size.
-
-Dot products run through F.aggregate/F.zip_with on the JVM — no
-Python in the inner loop.  Cosines are computed in double precision,
-sequential-sum order, so DuckDB's list_cosine_similarity (the oracle)
-agrees to the last ulp in practice; ranks (not raw floats) are the
-query output to keep the correctness hash stable.
+Outside the BLAS path, dot products run through F.aggregate/F.zip_with
+on the JVM — no Python in the inner loop.  Cosines are computed in
+double precision, sequential-sum order, so DuckDB's
+list_cosine_similarity (the oracle) agrees to the last ulp in practice;
+ranks (not raw floats) are the query output to keep the correctness
+hash stable.
 """
 
 from __future__ import annotations
@@ -27,8 +31,8 @@ from pyspark.sql import functions as F
 
 from kafkadirect_spark.functions.dedup import _persist, _widen
 
-# Hard ceiling on how many vectors the exact BLAS paths will pull to
-# the driver as the probe matrix.  The broadcast-matmul design is
+# Hard ceiling on how many vectors cosine_topk_blas will pull to the
+# driver as the probe matrix.  The broadcast-matmul design is
 # "probe set ≪ index": the probes live in one numpy matrix on every
 # executor, so an unbounded default (the whole index) is a driver/
 # executor OOM at 100 TB.  Callers with a genuinely larger probe set
@@ -74,67 +78,29 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 3,
-    probes: DataFrame | None = None,
-) -> DataFrame:
-    """Exact top-k cosine neighbors per probe vector (self excluded).
+def _collect_probes(probes: DataFrame, id_col: str, vec_col: str,
+                    max_probes: int):
+    """``(X, ids)``: the probe vectors as one float64 matrix (rows in
+    ``ids`` order) and their ids, collected to the driver.
 
-    ``probes`` defaults to the whole index (all-pairs — fine at test
-    scale, the oracle baseline).  With an explicit small probe set the
-    plan is broadcast(probes) ⋈ index: one index scan, zero shuffle
-    before the per-probe top-k.
-    Output: (id, neighbor_id, rank) — ranks are hash-stable; ties
-    broken by neighbor id.
-    """
-    index = df.select(F.col(id_col).alias("_nid"), F.col(vec_col).alias("_nvec"))
-    probe = (probes or df).select(
-        F.col(id_col).alias(id_col), F.col(vec_col).alias("_pvec"))
-    if probes is not None:
-        probe = F.broadcast(probe)
-    pairs = probe.join(index, F.col(id_col) != F.col("_nid"))
-    scored = pairs.withColumn("_cos", cosine(F.col("_pvec"), F.col("_nvec")))
-    w = Window.partitionBy(id_col).orderBy(F.col("_cos").desc(), F.col("_nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col(id_col), F.col("_nid").alias("neighbor_id"), "rank")
-    )
-
-
-def _probe_matrix(df: DataFrame, probes: DataFrame | None, id_col: str,
-                  vec_col: str, max_probes: int):
-    """Collect the (bounded) probe set into a normalized numpy matrix.
-
-    The ONLY driver materialization in this module, and it is guarded:
-    ``limit(max_probes + 1)`` caps what can ever cross the wire, and a
-    probe count above ``max_probes`` raises instead of OOMing the
-    driver.  There is deliberately no unbounded default — at 100 TB the
-    index never fits a broadcast matrix; use ann_lsh_topk / ivf_topk,
-    or cosine_verify_pairs for candidate-restricted exact scoring.
-    """
+    Bounded like every collect in this module: ``limit(max_probes +
+    1)`` caps what can cross the wire, and a probe count above
+    ``max_probes`` raises.  There is deliberately no unbounded default
+    — at 100 TB the index never fits a driver matrix; use ann_lsh_topk
+    / ivf_topk, or cosine_verify_pairs for candidate-restricted exact
+    scoring."""
     import numpy as np
 
-    probe_pdf = (
-        (probes if probes is not None else df)
-        .select(id_col, vec_col)
-        .limit(max_probes + 1)
-        .toPandas()
-    )
-    if len(probe_pdf) > max_probes:
+    pdf = probes.select(id_col, vec_col).limit(max_probes + 1).toPandas()
+    if len(pdf) > max_probes:
         raise ValueError(
-            f"probe set exceeds max_probes={max_probes}: the BLAS paths "
-            "broadcast the probe matrix to every executor, which does not "
-            "scale to an unbounded probe set. Pass an explicit bounded "
-            "`probes` frame, raise `max_probes` consciously, or use the "
-            "ANN paths (ann_lsh_topk / ivf_topk) or cosine_verify_pairs."
-        )
-    P = np.stack([np.asarray(v, dtype=np.float64) for v in probe_pdf[vec_col]])
-    P /= np.linalg.norm(P, axis=1, keepdims=True)
-    return P, probe_pdf[id_col].to_numpy()
+            f"probe set exceeds max_probes={max_probes}: the probes are "
+            "collected to the driver and shipped to every task. Pass an "
+            "explicit bounded `probes` frame, raise `max_probes` "
+            "consciously, or use the ANN paths (ann_lsh_topk / ivf_topk) "
+            "or cosine_verify_pairs.")
+    return (np.array(pdf[vec_col].tolist(), dtype=np.float64),
+            pdf[id_col].to_numpy())
 
 
 def cosine_topk_blas(
@@ -145,23 +111,26 @@ def cosine_topk_blas(
     probes: DataFrame | None = None,
     max_probes: int = MAX_PROBES,
 ) -> DataFrame:
-    """Vectorized exact top-k: the probe set is normalized into one
-    numpy matrix and broadcast; each Arrow batch of the index computes
-    all probe×batch cosines as a single BLAS matmul and emits its
-    batch-local top-k per probe; a final per-probe top-k merges.
+    """Exact top-k cosine neighbors per probe vector (self excluded).
 
-    Same output contract as cosine_topk (id, neighbor_id, rank; ties
-    by neighbor id).  ~100× the per-pair expression path on wide
-    batches.  ``probes=None`` scores the whole index against itself
-    (the exact all-pairs baseline) but is HARD-CAPPED at ``max_probes``
-    vectors — above that the call raises rather than pulling an
-    unbounded matrix to the driver.  At 100 TB pass an explicit probe
-    set ≪ index: the index is scanned once, nothing shuffles except
+    The probe set is normalized into one numpy matrix and broadcast;
+    each Arrow batch of the index computes all probe×batch cosines as
+    a single BLAS matmul and emits its batch-local top-k per probe; a
+    final per-probe top-k merges.  Output: (id, neighbor_id, rank),
+    ties broken by neighbor id.
+
+    ``probes=None`` scores the whole index against itself (the exact
+    all-pairs baseline) but is HARD-CAPPED at ``max_probes`` vectors —
+    above that the call raises rather than pulling an unbounded matrix
+    to the driver.  At 100 TB pass an explicit probe set ≪ index: the
+    index is scanned once, nothing shuffles except
     n_probes·k·n_partitions candidate rows.
     """
     import numpy as np
     import pandas as pd
-    P, p_ids = _probe_matrix(df, probes, id_col, vec_col, max_probes)
+    P, p_ids = _collect_probes(probes if probes is not None else df,
+                               id_col, vec_col, max_probes)
+    P /= np.linalg.norm(P, axis=1, keepdims=True)
     sc = df.sparkSession.sparkContext
     b_mat, b_ids = sc.broadcast(P), sc.broadcast(p_ids)
 
@@ -196,54 +165,6 @@ def cosine_topk_blas(
         .filter(F.col("rank") <= k)
         .select(id_col, "neighbor_id", "rank")
     )
-
-
-def cosine_pairs_blas(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    probes: DataFrame | None = None,
-    max_probes: int = MAX_PROBES,
-) -> DataFrame:
-    """Embedding-cosine near-dup: ALL pairs (id_a < id_b) with cosine ≥
-    threshold — exact, via the same broadcast-matmul batch plan as
-    cosine_topk_blas but emitting every above-threshold hit instead of
-    a top-k.  Output bounded by the true near-dup count.  The probe set
-    is hard-capped at ``max_probes`` (raises above it — never an
-    unbounded driver pull); at scale use cosine_verify_pairs over LSH
-    candidate pairs instead, which keeps every vector executor-side.
-
-    Pairs are emitted once, in (id_a < id_b) order — so a custom
-    ``probes`` subset finds only pairs whose *lower* id is a probe;
-    pass the full bucket membership (not one side) as probes when
-    using LSH candidates."""
-    import numpy as np
-    import pandas as pd
-
-    P, p_ids = _probe_matrix(df, probes, id_col, vec_col, max_probes)
-    sc = df.sparkSession.sparkContext
-    b_mat, b_ids = sc.broadcast(P), sc.broadcast(p_ids)
-
-    def gen(batches):
-        mat, pids = b_mat.value, b_ids.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            X /= np.linalg.norm(X, axis=1, keepdims=True)
-            x_ids = pdf[id_col].to_numpy()
-            sims = mat @ X.T
-            pi, xi = np.where((sims >= threshold) &
-                              (pids[:, None] < x_ids[None, :]))
-            yield pd.DataFrame({
-                "id_a": pids[pi], "id_b": x_ids[xi],
-                "cosine": sims[pi, xi],
-            })
-
-    index = _widen(df.select(id_col, vec_col))
-    return index.mapInPandas(
-        gen, schema="id_a long, id_b long, cosine double")
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str, vec_col: str, dim: int,
@@ -911,21 +832,14 @@ def _adc_tables(probes: DataFrame, id_col: str, vec_col: str,
     which score nothing."""
     import numpy as np
 
-    pdf = (probes.select(id_col, vec_col)
-           .limit(max_probes + 1).toPandas())
-    if len(pdf) > max_probes:
-        raise ValueError(
-            f"probe set exceeds max_probes={max_probes}: ADC embeds "
-            "one m×k literal table per probe; bound the probe frame")
+    X, ids = _collect_probes(probes, id_col, vec_col, max_probes)
     sub = cents[0].shape[1]
-    X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-    P = np.floor(X.reshape(len(pdf), len(cents) * sub) * scale).astype(np.int64)
+    P = np.floor(X.reshape(len(ids), len(cents) * sub) * scale).astype(np.int64)
     tables = np.stack([((P[:, None, j * sub:(j + 1) * sub] - C[None]) ** 2)
                        .sum(axis=2) for j, C in enumerate(cents)], axis=1)
     id_type = dict(probes.dtypes)[id_col]
     return (F.lit(tables.ravel()),
-            F.lit(pdf[id_col].to_numpy().astype(np.int64))
-            .cast(f"array<{id_type}>"))
+            F.lit(ids.astype(np.int64)).cast(f"array<{id_type}>"))
 
 
 def _adc_topn(pairs: DataFrame, flat: Column, pids: Column, id_col: str,
@@ -961,19 +875,20 @@ def pq_topk(df: DataFrame, id_col: str, vec_col: str,
     m-byte codes.  Output ``(id, neighbor_id, rank, adc_dist)``; ties
     break toward the lower neighbor id; the probe itself is excluded.
 
-    The probe set is bounded (``max_probes`` guard, same contract as
-    the BLAS paths): each probe's m×k table is computed driver-side
-    in exact integer arithmetic and embedded in one literal array
-    (``_adc_tables``), so scoring is a pure row-local projection over
-    the codes frame — zero joins before the per-probe top-n window.
+    The probe set is bounded (``max_probes`` guard, the same
+    ``_collect_probes`` as cosine_topk_blas): each probe's m×k table
+    is computed driver-side in exact integer arithmetic and embedded
+    in one literal array (``_adc_tables``), so scoring is a pure
+    row-local projection over the codes frame — zero joins before the
+    per-probe top-n window.
 
     ADC is an approximation of true distance (quantization error);
     the pytest pins exact agreement with a python PQ model (probes
-    excluded before ranking, as in cosine_topk, so ranks 1..n are
-    contiguous).  Unlike the BLAS paths' 100k probe cap, the cap is
-    small: the driver computes every probe's m×k table and ships them
-    all inside the plan, and each probe multiplies the scored rows by
-    the corpus size before the top-n window.
+    excluded before ranking, as in cosine_topk_blas, so ranks 1..n
+    are contiguous).  Unlike cosine_topk_blas's 100k probe cap, the
+    cap is small: the driver computes every probe's m×k table and
+    ships them all inside the plan, and each probe multiplies the
+    scored rows by the corpus size before the top-n window.
     """
     q = _persist(_pq_quantize(df, id_col, vec_col, scale))
     cents = _pq_train(q, id_col, m, k, iters)

@@ -386,56 +386,6 @@ def hist_quantiles(registers: DataFrame, qs_permille: list[int],
             .select("r.q_permille", "r.est_value"))
 
 
-def hist_registers_grouped(df: DataFrame, group_cols: list[str], col: str,
-                           lo: int, hi: int, bins: int = 1000) -> DataFrame:
-    """Per-group equi-width histogram: ≤ ``groups × bins`` rows
-    ``(*group_cols, bin, cnt)`` — the grouped sibling of
-    ``hist_registers`` (same clamping, same overflow audit)."""
-    if hi <= lo:
-        raise ValueError("hi must be > lo")
-    if (hi - lo) * bins >= 2**63:
-        raise ValueError("(hi-lo)*bins overflows int64")
-    x = F.col(col).cast("long")
-    b = F.expr(f"CAST(({col} - {lo}) * {bins} DIV {hi - lo} AS LONG)")
-    bin_ = F.least(F.greatest(b, F.lit(0)), F.lit(bins - 1))
-    return (df.filter(x.isNotNull())
-            .select(*group_cols, bin_.alias("bin"))
-            .groupBy(*group_cols, "bin")
-            .agg(F.count(F.lit(1)).alias("cnt")))
-
-
-def hist_quantiles_grouped(registers: DataFrame, group_cols: list[str],
-                           qs_permille: list[int], lo: int, hi: int,
-                           bins: int = 1000) -> DataFrame:
-    """Per-group quantile estimates from grouped registers.  The
-    windows PARTITION on the group — each frame is ≤ ``bins`` register
-    rows, so no unpartitioned-window exemption is needed; group
-    cardinality carries the parallelism."""
-    from pyspark.sql import Window
-
-    w_cum = (Window.partitionBy(*group_cols).orderBy("bin")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_all = (Window.partitionBy(*group_cols).orderBy("bin")
-             .rowsBetween(Window.unboundedPreceding,
-                          Window.unboundedFollowing))
-    c = registers.withColumn("cum", F.sum("cnt").over(w_cum)) \
-                 .withColumn("n", F.sum("cnt").over(w_all))
-    aggs = [
-        F.min(F.when(
-            F.col("cum") >= F.expr(f"CAST(({q} * n + 999) DIV 1000 AS LONG)"),
-            F.col("bin"))).alias(f"__q{q}")
-        for q in qs_permille]
-    one = c.groupBy(*group_cols).agg(*aggs)
-    pairs = F.array(*[
-        F.struct(F.lit(q).cast("long").alias("q_permille"),
-                 (F.lit(lo) + F.expr(
-                     f"CAST(__q{q} * {hi - lo} DIV {bins} AS LONG)"))
-                 .cast("long").alias("est_value"))
-        for q in qs_permille])
-    return (one.select(*group_cols, F.explode(pairs).alias("r"))
-            .select(*group_cols, "r.q_permille", "r.est_value"))
-
-
 # ---------------------------------------------------------------------------
 # KMV (k minimum values) — distinct counts AND set overlap estimation.
 # ---------------------------------------------------------------------------
@@ -733,7 +683,7 @@ def exact_quantiles_grouped(df: DataFrame, group_col: str,
     converge independently; later rounds scan only the pending
     (group, bucket) cells through a broadcast semi-join.  Driver state
     grows with the group count, so ``max_groups`` guards the driver
-    the way MAX_PROBES guards the BLAS paths: beyond it, raise, don't
+    the way MAX_PROBES guards cosine_topk_blas: beyond it, raise, don't
     OOM.  Null group keys and null values are excluded.
 
     Returns ``(group_col, q_permille, value)``.

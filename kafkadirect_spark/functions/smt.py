@@ -149,9 +149,8 @@ def route_errors(df: DataFrame, error_cond: Column,
     (MEMORY_AND_DISK) so consuming ok THEN dlq evaluates the source
     and ``error_cond`` once — without the persist each side would
     re-scan and re-evaluate, and a non-deterministic condition could
-    even route a record to both or neither side (round-8 self-review;
-    the earlier docstring claimed caching that lazy frames alone do
-    not provide).  Call ``.unpersist()`` on either returned frame's
+    even route a record to both or neither side (lazy frames alone
+    cache nothing).  Call ``.unpersist()`` on either returned frame's
     lineage when done, or let Spark's LRU evict it.  The DLQ side
     carries the full original
     record plus an ``error_context`` struct (caller-supplied

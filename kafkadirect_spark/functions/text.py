@@ -236,7 +236,7 @@ def winnow_fps(df, text_col: str, id_col: str, k: int = 5,
     md5s per row vs the single-expression form's O(n²); 122× at
     sf0.01).  Still zero shuffles — narrow projections + one explode.
 
-    r16 (guide §4.1 "prefer built-ins over per-element lambdas"):
+    Guide §4.1 ("prefer built-ins over per-element lambdas"):
     the window minima come from a SPARSE-TABLE DOUBLING instead of
     the per-window interpreted ``array_min(slice(hs, i, w))`` fold —
     ⌈log₂ w⌉(+1) ``zip_with(m, shift_s(m), least)`` passes, each one

@@ -98,8 +98,7 @@ def sax_words(paa: DataFrame, user_col: str,
     At most 9 breakpoints (10 symbols): the word concatenates symbol
     DIGITS with no separator, so a two-digit symbol would make words
     ambiguous ([1, 11] and [11, 1] both render '111'), silently
-    merging unrelated buckets — rejected here and in the oracle
-    (ADVICE r10)."""
+    merging unrelated buckets — rejected here and in the oracle."""
     if sorted(breakpoints) != list(breakpoints):
         raise ValueError("breakpoints must be ascending")
     if len(breakpoints) > 9:
@@ -125,7 +124,7 @@ def sax_candidate_pairs(words: DataFrame, user_col: str,
 
     ``max_bucket`` is the skew/scale guard (the dedup family's
     hot-shingle-cap convention): when the word space is small
-    relative to the population — the r10 probe measured a binary
+    relative to the population — a scale probe measured a binary
     6-segment alphabet saturating at 64 words, turning pair output
     quadratic in users (17k → 109M pairs at 16× organic growth) —
     buckets larger than ``max_bucket`` are dropped before the join.
@@ -172,13 +171,13 @@ def sax_pipeline(events: DataFrame, user_col: str, ts_col: str,
     ``len(permilles)`` rows (register-sized, the exact_quantiles
     contract).
 
-    The PAA frame is PERSISTED (r15): it is USER-sized (one row per
+    The PAA frame is PERSISTED: it is USER-sized (one row per
     group, never event-sized) and three consumers re-derived it from
     the full events scan + segment aggregation (the quantile input,
     the word build, and the pair join's two sides) — measured 3.15 →
-    2.96 s best-of-3 on the sax_pairs suite at sf0.1.  The r10 leak
-    concern (a persist with no returned handle outlived the caller)
-    is addressed by registering through ``dedup._persist``, whose
+    2.96 s best-of-3 on the sax_pairs suite at sf0.1.  So that a
+    persist with no returned handle cannot outlive the caller, it is
+    registered through ``dedup._persist``, whose
     ``release_caches`` the bench and pipeline callers already invoke.
     The WORDS frame stays unpersisted — measured WORSE when cached
     (3.56 s): it derives row-locally from the cached PAA, and the
@@ -209,7 +208,7 @@ def sax_pairs_oracle_sql(t0: str, t1: str, n_segments: int = 6,
     ``exact_quantiles``), symbolization and long squared distances,
     so the search is registration-ready.  ``t0``/``t1`` accept any
     ISO timestamp ``paa_profiles`` accepts (normalized here rather
-    than assuming date-only strings — ADVICE r10)."""
+    than assuming date-only strings)."""
     import datetime as _dt
 
     if len(permilles) > 9:
@@ -419,7 +418,7 @@ def theil_sen_oracle_sql(group_col: str = "event_type",
     truncates toward zero, exactly like Spark's ``DIV``),
     lower-median rank under the same (slope, rn_a, rn_b) order.
 
-    Epoch assumption (ADVICE r13): the ``epoch_ms // 1000`` second
+    Epoch assumption: the ``epoch_ms // 1000`` second
     quantization matches Spark's ``unix_timestamp`` only for
     timestamps >= 1970 (DuckDB ``//`` truncates toward zero, Spark
     floors — 1s divergence on negative-epoch subsecond timestamps).
@@ -466,7 +465,7 @@ def cusum_changepoint_milli(events: DataFrame, group_col: str,
                             ) -> DataFrame:
     """Sequential changepoint detection per group — the two-sided
     CUSUM chart (Page 1954, public; the classic "when did this metric
-    shift" monitor), integerized (round 14): values quantize to
+    shift" monitor), integerized: values quantize to
     milli-units, each point's deviation is measured against the
     group's LOWER-MEDIAN milli value (the robust center — a few
     outliers cannot move the reference the way a mean would), and the
@@ -719,7 +718,7 @@ def acf_milli(events: DataFrame, group_col: str, ts_col: str,
               max_points: int = 512,
               order_break_col: str | None = None) -> DataFrame:
     """Per-group sample autocorrelation at the requested rank lags
-    (Box & Jenkins 1970's ACF, public; round 15) — the periodicity
+    (Box & Jenkins 1970's ACF, public) — the periodicity
     question no other operator here asks: theil_sen fits a TREND,
     cusum_changepoint localizes a LEVEL SHIFT, sax_pairs clusters
     SHAPES across groups; the ACF answers "does this metric echo
@@ -887,7 +886,7 @@ def seasonal_profile_milli(events: DataFrame, group_col: str,
                            ) -> DataFrame:
     """Classical additive seasonal decomposition per group
     (moving-average method — Macaulay 1931, Hyndman &
-    Athanasopoulos FPP ch. 3, public; round 15) with the Wang, Smith
+    Athanasopoulos FPP ch. 3, public) with the Wang, Smith
     & Hyndman (2006) seasonal-STRENGTH measure — the "what does the
     cycle look like, and how much of the signal is it" claim that
     completes the monitoring suite: acf_milli DETECTS a period,

@@ -227,8 +227,7 @@ def wordpiece_encode(df: DataFrame, id_col: str, text_col: str,
         raise ValueError(
             "the vocabulary source is a streaming DataFrame — pass "
             "the batch training frame via train_df")
-    wt = word_type_counts(source, text_col, min_count, max_word_types)
-    types = [(r["word"], int(r["n"])) for r in wt.collect()]
+    types = _collect_types(source, text_col, min_count, max_word_types)
     vocab = _py_vocab(types, [(0, a, b) for a, b in pairs])
 
     id_field = df.schema[id_col]

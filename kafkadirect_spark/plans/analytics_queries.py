@@ -1,5 +1,5 @@
-"""Warehouse/pipeline analytics beyond the reference surface, round 5
-batch 4 — sketches and deterministic ordering primitives, oracle-paired.
+"""Warehouse/pipeline analytics beyond the reference surface —
+sketches and deterministic ordering primitives, oracle-paired.
 
 The reference engine has neither approximate aggregation nor a global
 ordering primitive (Kafka Streams state is exact and per-partition;
@@ -958,8 +958,8 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``code_0..code_3`` INT columns: the driver's correctness gate
     canonicalizes rows with a pandas sort, which cannot hash list
     cells (repo rule: registered queries emit scalar columns only —
-    enforced by tests/test_plans.py's schema walk since the r8
-    ArrayType version crashed the driver gate; callers wanting the
+    enforced by tests/test_plans.py's schema walk, because an
+    ArrayType column crashes the driver gate; callers wanting the
     array use pq_encode directly)."""
     from kafkadirect_spark.functions import similarity
 
@@ -1034,8 +1034,7 @@ def ivf_pq_rerank_oracle_sql(n: int = 3, refine: int = 4,
     — IVFADC+R: the ivf_pq composite's oracle at n·refine as the
     shortlist CTE, then the exact quantized squared L2 over the raw
     embeddings for shortlist rows only, re-ranked with the engine's
-    tie-break (dist2 ASC, neighbor_id ASC).  Registration-ready for
-    r13 (landed library-level r12 per policy item b)."""
+    tie-break (dist2 ASC, neighbor_id ASC)."""
     short = ivf_pq_oracle_sql(n=n * refine, nprobe=nprobe,
                               stride=stride, probe_pred=probe_pred)
     return f"""
@@ -1066,7 +1065,7 @@ def ivf_pq_rerank_oracle_sql(n: int = 3, refine: int = 4,
 @query("similarity_ivf_pq", oracle=ivf_pq_oracle_sql())
 def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC composite (functions/similarity.py ivf_pq_topk, Jégou
-    et al. 2011 — registered r12 per the r11 plan): the deterministic
+    et al. 2011): the deterministic
     coarse quantizer's inverted-list shortlist (broadcast centroids,
     the similarity_ann_ivf pattern) scored by the PQ codebooks'
     per-probe ADC literal tables, restricted to the probed lists —
@@ -1341,7 +1340,7 @@ def value_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Time-series similarity search (functions/timeseries.py) — the SAX
-# family's driver-verified claim (VERDICT r10 item 2): PAA profiles →
+# family, verified against the DuckDB oracle: PAA profiles →
 # exact-quantile breakpoints → word-bucketed candidate self-join with
 # the max_bucket hot-word guard → exact squared-distance verification.
 # Registered at the bench fingerprint's config (30-day window, 6
@@ -1391,7 +1390,7 @@ def sax_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sax_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user k-NN over the verified SAX pairs (functions/
-    timeseries.py sax_nearest — registered r12 per the r11 plan):
+    timeseries.py sax_nearest):
     symmetrize the candidate pairs (each serves both endpoints), then
     the salted two-phase per-group top-k — no task ever sorts a whole
     user's candidate list alone; ties break exactly (dist2 ASC,
@@ -1409,8 +1408,8 @@ def sax_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 13 registrations (pre-scheduled by the r12 plan, oracle
-# generators pytest-pinned engine==oracle in round 12).
+# ANN rerank, slice similarity and funnels (oracle generators
+# pytest-pinned engine==oracle).
 # ---------------------------------------------------------------------------
 
 from kafkadirect_spark.functions import behavior, similarity  # noqa: E402
@@ -1419,7 +1418,7 @@ from kafkadirect_spark.functions import behavior, similarity  # noqa: E402
 @query("similarity_ivf_pq_rerank", oracle=ivf_pq_rerank_oracle_sql())
 def similarity_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC+R (functions/similarity.py ivf_pq_rerank, Jégou et al.
-    2011 §VI — registered r13 per the r12 plan): the IVFADC
+    2011 §VI): the IVFADC
     composite's per-probe shortlist at n·refine, re-scored with the
     EXACT squared L2 on the quantized integer grid — everything
     similarity_ivf_pq does plus ONE hash join of the
@@ -1445,7 +1444,7 @@ def similarity_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kmv_slice_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs corpus-slice similarity matrix from per-slice KMV
     sketches (functions/sketch.py kmv_group_jaccard, Beyer et al.
-    2007 — registered r13 per the r12 plan): one (slice, gram-hash)
+    2007): one (slice, gram-hash)
     distinct exchange, salted two-phase per-slice min-k (no slice's
     whole gram set ever sorts on one task), then every slice pair's
     Jaccard estimated from the ≤k-row sketches alone — the
@@ -1466,14 +1465,13 @@ def kmv_slice_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
            within_seconds=3600 * 24 * 30))
 def funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate conversion-funnel report with a conversion window
-    (functions/behavior.py funnel_steps — registered r13 per the r12
-    plan): per step, how many users completed signup → view → click →
-    purchase IN ORDER within 30 days of their step-0 completion, with
-    truncating conversion permille and summed step-0→step-k lags.
-    The complement of the registered per-user `event_funnel` (stage
-    rows): this is the corpus-level report.  Min-ts cascade with ZERO
-    windows (plan-tested in test_behavior.py) — one narrow
-    user-keyed exchange per step, never a per-user event sort or
+    (functions/behavior.py funnel_steps): per step, how many users
+    completed signup → view → click → purchase IN ORDER within 30 days
+    of their step-0 completion, with truncating conversion permille and
+    summed step-0→step-k lags. The complement of the registered per-user
+    `event_funnel` (stage rows): this is the corpus-level report. Min-ts
+    cascade with ZERO windows (plan-tested in test_behavior.py) — one
+    narrow user-keyed exchange per step, never a per-user event sort or
     collect.  The oracle replays the cascade as chained CTEs with
     epoch-second lags and the truncating permille."""
     ev = load_table(spark, sf_dir, "events")
@@ -1484,8 +1482,8 @@ def funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 14 registrations (pre-scheduled by the r13 plan, oracle
-# generators pytest-pinned engine==oracle in round 13).
+# Robust trends, paths and attribution (oracle generators pytest-pinned
+# engine==oracle).
 # ---------------------------------------------------------------------------
 
 
@@ -1494,8 +1492,8 @@ def funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
            "event_type", order_break_col="event_id"))
 def theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-group trend — the Theil–Sen estimator
-    (functions/timeseries.py theil_sen_milli, Sen 1968 — registered
-    r14 per the r13 plan): per event_type, the lower median of all
+    (functions/timeseries.py theil_sen_milli, Sen 1968): per
+    event_type, the lower median of all
     pairwise integerized slopes (milli-values per whole epoch
     second, micro-units, TRUNCATING division) over the first
     max_points=64 points in the deterministic (t, v, event_id)
@@ -1520,16 +1518,15 @@ def theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
            n=3, k=10, order_break_col="event_id"))
 def path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k most frequent length-3 consecutive event-type paths
-    (functions/behavior.py path_topk — registered r14 per the r13
-    plan): per user, trigrams of consecutive events in
-    (ts, event_id) order via lead windows, counted corpus-wide,
-    ranked (count desc, path) — "what do users actually do", the
-    exploratory companion to the hypothesis-driven `funnel_steps`
-    (which counts a GIVEN sequence) and `attribution_last_touch`
-    (which assigns credit).  Scale shape: ONE user-partitioned
-    window pass (a user's own event count bounds the task-local
-    sort), one path-count exchange, TakeOrdered top-k; the final
-    rank window sorts the ≤ k-row LIMIT result — bounded by
+    (functions/behavior.py path_topk): per user, trigrams of consecutive
+    events in (ts, event_id) order via lead windows, counted
+    corpus-wide, ranked (count desc, path) — "what do users actually
+    do", the exploratory companion to the hypothesis-driven
+    `funnel_steps` (which counts a GIVEN sequence) and
+    `attribution_last_touch` (which assigns credit). Scale shape: ONE
+    user-partitioned window pass (a user's own event count bounds the
+    task-local sort), one path-count exchange, TakeOrdered top-k; the
+    final rank window sorts the ≤ k-row LIMIT result — bounded by
     construction, allowlisted in test_plans._GLOBAL_WINDOW_OK.  The
     oracle replays the lead windows, path join and ranking."""
     ev = load_table(spark, sf_dir, "events")
@@ -1543,11 +1540,10 @@ def path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            order_break_col="event_id"))
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch conversion attribution with a 24h lookback
-    (functions/behavior.py attribution_last_touch — registered r14
-    per the r13 plan): every purchase is credited to the LATEST
-    non-purchase event type strictly before it in the user's
-    (ts, event_id) order, no further back than 24h (whole epoch
-    seconds, the funnel convention); purchases with no qualifying
+    (functions/behavior.py attribution_last_touch): every purchase is
+    credited to the LATEST non-purchase event type strictly before it in
+    the user's (ts, event_id) order, no further back than 24h (whole
+    epoch seconds, the funnel convention); purchases with no qualifying
     touch credit `(direct)`.  Emits per touch type: conversions,
     truncating share_milli, summed lag seconds — credit assignment,
     a DISTINCT claim from funnel counting and path mining.  Scale
@@ -1566,8 +1562,8 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 15 registrations (pre-scheduled by the r14 plan, oracle
-# generators pytest-pinned engine==oracle in round 14 or earlier).
+# Changepoints, TWAP, baskets and weighted quantiles (oracle generators
+# pytest-pinned engine==oracle).
 # ---------------------------------------------------------------------------
 
 from kafkadirect_spark.functions import basket  # noqa: E402
@@ -1579,7 +1575,7 @@ from kafkadirect_spark.functions import basket  # noqa: E402
 def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential changepoint localization — the two-sided CUSUM
     chart (functions/timeseries.py cusum_changepoint_milli, Page
-    1954 — registered r15 per the r14 plan): per event_type, fold
+    1954): per event_type, fold
     deviations from the group's lower-median milli value into Page's
     one-sided statistics and report the FIRST point where either
     side exceeds h_milli, with direction ('up' wins ties) and both
@@ -1611,16 +1607,15 @@ _TWAP_T0, _TWAP_T1 = "2024-01-01", "2024-01-31"
            order_break_col="event_id"))
 def twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average value per event_type over the January
-    window (functions/timeseries.py twap_milli — registered r15 per
-    the r14 plan): each sample holds from its own timestamp to the
-    NEXT sample in the group (LOCF), the last to the window end, and
-    the mean weights values by those holding seconds — the correct
-    mean for IRREGULARLY-sampled series, the claim user_moving_avg's
-    row-window mean cannot make (a burst of readings must not
-    dominate; pinned by the burst hand-check in test_timeseries.py).
-    Integerized: milli values, whole-second holds, truncating
-    weighted division.  Scale shape: ONE group-partitioned lead
-    window + one map-side-combined aggregate — no global window, no
+    window (functions/timeseries.py twap_milli): each sample holds from
+    its own timestamp to the NEXT sample in the group (LOCF), the last
+    to the window end, and the mean weights values by those holding
+    seconds — the correct mean for IRREGULARLY-sampled series, the claim
+    user_moving_avg's row-window mean cannot make (a burst of readings
+    must not dominate; pinned by the burst hand-check in
+    test_timeseries.py). Integerized: milli values, whole-second holds,
+    truncating weighted division. Scale shape: ONE group-partitioned
+    lead window + one map-side-combined aggregate — no global window, no
     collect.  The oracle replays the lead window, holds and
     truncating division (epoch arithmetic carries the documented
     >=1970 assumption)."""
@@ -1636,8 +1631,8 @@ def twap(spark: SparkSession, sf_dir: str) -> DataFrame:
            k=15, min_support=2))
 def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket pair mining over order/part baskets
-    (functions/basket.py basket_pairs_topk, Agrawal & Srikant 1994 —
-    registered r15 per the r14 plan): top-15 co-occurring part pairs
+    (functions/basket.py basket_pairs_topk, Agrawal & Srikant 1994):
+    top-15 co-occurring part pairs
     across orders with truncating support_ppm and lift_milli —
     UNORDERED co-membership in transaction groups, the relational
     market-basket claim `collocations_topk`'s adjacent-token PMI
@@ -1663,8 +1658,7 @@ _WQ_QS = [100, 500, 900, 990]
        oracle=sketch.weighted_quantiles_oracle_sql(_WQ_QS))
 def weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT weight-mass order statistics (functions/sketch.py
-    weighted_quantiles — registered r15, the weighted-order-
-    statistics claim deferred since r12): token-weighted n_chars
+    weighted_quantiles): token-weighted n_chars
     quantiles over the documents table — "the median TOKEN lives in
     a document of length X", which is NOT the row-count quantile
     exact_quantiles answers (long docs hold most of the token mass;

@@ -198,9 +198,9 @@ def boilerplate_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("pii_scrub", oracle=privacy.synth_pii_scrub_oracle_sql())
 def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub with integer Luhn validity (functions/privacy.py —
-    registered r15 per the r14 plan, retiring `pii_redaction` 1:1
-    whose email/SSN/phone claim this strictly extends): per document,
+    """PII scrub with integer Luhn validity (functions/privacy.py;
+    its email/SSN/phone counts strictly extend the older
+    `pii_redaction` query it replaced): per document,
     counts of emails / SSNs / phones / IPv4s / card-SHAPED tokens and
     of Luhn-VALID cards (shape matches are mostly order-id noise; the
     valid ones are what an audit must flag), plus the md5 of the
@@ -965,7 +965,7 @@ _COVERAGE_KS = (10, 100, 1000, 100000)
        oracle=curation.vocab_coverage_oracle_sql(ks=_COVERAGE_KS))
 def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage curve (functions/curation.py
-    vocab_coverage — registered r12 per the r11 plan): for each
+    vocab_coverage): for each
     vocabulary budget k, the exact share of corpus tokens a top-k
     word vocabulary covers — WITHOUT ranking the vocabulary: the
     count-of-counts table (O(√tokens) rows under Zipf) answers every
@@ -984,7 +984,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
        oracle=curation.sample_weighted_oracle_sql(100, _BPE_SQL))
 def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-n weighted sampling (functions/curation.py
-    sample_weighted_n — registered r12 per the r11 plan): 100 draws
+    sample_weighted_n): 100 draws
     over the documents with BPE-ish token counts as weights — the
     data-mixing shape (sample a token budget by length).  Integer
     systematic sampling over the salted-hash total order: per-shard
@@ -1000,8 +1000,8 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 13 registrations (pre-scheduled by the r12 plan, oracle
-# generators pytest-pinned engine==oracle in round 12).
+# Contamination spans, stratified sampling and budget allocation
+# (oracle generators pytest-pinned engine==oracle).
 # ---------------------------------------------------------------------------
 
 
@@ -1010,14 +1010,13 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level contamination audit (functions/curation.py
     contamination_spans, Brown et al. 2020 appendix C / Chowdhery et
-    al. 2022 §8 — registered r14 per the r13 plan, retiring
-    `contamination_report` 1:1 whose gram-count claim this strictly
-    extends): for every evaluation document (odd doc_ids), the
-    LONGEST maximal run of tokens covered by training-matched 8-gram
-    windows (adjacent/overlapping hits merge — gaps-and-islands on
-    eval-doc-partitioned windows), plus span count, leaked-token
-    mass, and the truncating leak_milli ratio — a doc with 30
-    scattered leaked grams is noise; one 300-token leaked run is a
+    al. 2022 §8; its gram counts strictly extend the older
+    `contamination_report` query it replaced): for every evaluation
+    document (odd doc_ids), the LONGEST maximal run of tokens covered by
+    training-matched 8-gram windows (adjacent/overlapping hits merge —
+    gaps-and-islands on eval-doc-partitioned windows), plus span count,
+    leaked-token mass, and the truncating leak_milli ratio — a doc with
+    30 scattered leaked grams is noise; one 300-token leaked run is a
     verbatim test-set copy.  The train corpus streams through ONE
     broadcast left-semi with ZERO corpus-side shuffles (plan-pinned
     in test_curation.py); the positional span work is eval-sided
@@ -1036,13 +1035,12 @@ def contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
            30, _BPE_SQL, "lang", group_out="lang"))
 def sample_weighted_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-n weighted draws PER LANGUAGE (functions/curation.py
-    sample_weighted_n_per_group — registered r13 per the r12 plan):
-    the stratified data-mixing shape (a fixed token budget per
-    stratum, drawn by document weight) — 30 BPE-token-weighted draws
-    per language via integer systematic sampling run independently
-    inside every stratum.  Unlike the global `sample_weighted`
-    (allowlisted ≤shards-row offset window), every window here is
-    group-PARTITIONED — per-(group, shard) prefix sums, a
+    sample_weighted_n_per_group): the stratified data-mixing shape (a
+    fixed token budget per stratum, drawn by document weight) — 30
+    BPE-token-weighted draws per language via integer systematic
+    sampling run independently inside every stratum. Unlike the global
+    `sample_weighted` (allowlisted ≤shards-row offset window), every
+    window here is group-PARTITIONED — per-(group, shard) prefix sums, a
     group-partitioned offset table, DECIMAL(38,0) ceil walk;
     Σpicks = 30 per group exactly, hypothesis-pinned vs an
     independent python model and bit-replayed by the oracle's
@@ -1064,10 +1062,9 @@ _WATERFILL_BUDGET = 100_000
 def token_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Max-min fair integer allocation of a global token budget
     across language strata (functions/curation.py token_waterfill,
-    Bertsekas & Gallager 1992 §6.5.2 — registered r13 per the r12
-    plan): every stratum capped at a common water level L, strata
-    with less contribute everything, L the largest affordable level,
-    leftover distributed deterministically — Σalloc =
+    Bertsekas & Gallager 1992 §6.5.2): every stratum capped at a common
+    water level L, strata with less contribute everything, L the largest
+    affordable level, leftover distributed deterministically — Σalloc =
     min(budget, Σavail) EXACTLY (hypothesis-pinned vs a binary-search
     model).  The allocator runs entirely on the ≤|strata|-row totals
     frame: one map-side-combined per-language sum of n_chars, then

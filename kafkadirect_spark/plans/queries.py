@@ -1512,7 +1512,7 @@ def asof_enrich_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-5 relational additions: the remaining TPC-H query shapes this
+# Relational additions: the remaining TPC-H query shapes this
 # schema can express (Q2/Q7/Q8/Q9/Q13/Q15/Q16/Q17/Q19/Q21/Q22 adapted
 # to the driver's columns — no partsupp/shipmode/receiptdate).  Each
 # exercises a planner capability the reference lacks outright

@@ -79,7 +79,7 @@ def streaming_decontaminate(stream_df: DataFrame, eval_df: DataFrame,
             "raise the cap or pre-shrink the eval set")
     # frozen as a SORTED int64 array: the membership probe is one
     # vectorized np.isin over the batch's flattened gram hashes —
-    # no per-row python lambda (VERDICT r13 item 5); the closure
+    # no per-row python lambda; the closure
     # envelope (ships once per executor) is unchanged
     eset = np.sort(np.fromiter((r.gh for r in eval_hashes),
                                dtype=np.int64, count=len(eval_hashes)))

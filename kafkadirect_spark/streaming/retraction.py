@@ -30,7 +30,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
@@ -64,6 +63,17 @@ class _SnapshotStore:
     def __init__(self, path: str):
         self.path = path
         os.makedirs(path, exist_ok=True)
+
+    @staticmethod
+    def under(checkpoint: str | None) -> str:
+        """``<checkpoint>/snapshots``: the store lives and dies with the
+        query's checkpoint, so a restart from the checkpoint alone
+        finds its state.  Raises when ``checkpoint`` is missing."""
+        if not checkpoint:
+            raise ValueError(
+                "checkpoint is required: the snapshot store is kept "
+                "under <checkpoint>/snapshots")
+        return os.path.join(checkpoint, "snapshots")
 
     def _versions(self) -> list[int]:
         out = []
@@ -106,18 +116,16 @@ def streaming_table_group_aggregate(
     sink: Callable[[DataFrame, int], None],
     value_cols: list[str] | None = None,
     checkpoint: str | None = None,
-    store_dir: str | None = None,
     tombstone_col: str | None = None,
 ) -> StreamingQuery:
     """Streaming retraction via foreachBatch: merge each microbatch
     into the durable latest-by-key snapshot store, re-aggregate the
     snapshot, hand the result to ``sink(df, batch_id)``.
 
-    Pass both ``checkpoint`` and ``store_dir`` for a restartable query
-    — the store survives the process and a replayed last batch is
-    detected by its recorded batch id and not double-merged.  With
-    ``store_dir=None`` a temp directory is used (still bounded state,
-    but gone with the machine).  ``tombstone_col``: keys whose latest
+    ``checkpoint`` is required: the snapshot store lives under
+    ``<checkpoint>/snapshots``, so a restart from the checkpoint finds
+    its state, and a replayed last batch is detected by its recorded
+    batch id and not double-merged.  ``tombstone_col``: keys whose latest
     record is NULL there are deleted from the snapshot (compaction
     tombstone, LogCleaner.scala:43-92); note a record arriving *after*
     the tombstone with an older ``order_by`` resurrects the key — the
@@ -130,7 +138,7 @@ def streaming_table_group_aggregate(
     # The stored snapshot keeps order_by so future batches can be
     # recency-merged against it.
     stored_cols = list(dict.fromkeys([order_by, *value_cols]))
-    store = _SnapshotStore(store_dir or tempfile.mkdtemp(prefix="kd_ret_"))
+    store = _SnapshotStore(_SnapshotStore.under(checkpoint))
 
     def per_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -151,7 +159,6 @@ def streaming_table_group_aggregate(
             snap = store.read(spark, version)  # scan, not lineage
         sink(table_group_aggregate(snap, group_exprs, aggs), batch_id)
 
-    w = changelog.writeStream.outputMode("append").foreachBatch(per_batch)
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return (changelog.writeStream.outputMode("append")
+            .foreachBatch(per_batch)
+            .option("checkpointLocation", checkpoint).start())

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -54,7 +53,6 @@ def streaming_table_table_join(
     left_tombstone: str | None = None,
     right_tombstone: str | None = None,
     checkpoint: str | None = None,
-    store_dir: str | None = None,
 ) -> StreamingQuery:
     """Start the continuous table-table join; ``sink(diff_df, batch_id)``
     receives per trigger a DataFrame — the CHANGELOG of the join view —
@@ -77,7 +75,10 @@ def streaming_table_table_join(
     ``order_by`` column names but DISJOINT value column names (the same
     contract as the batch Table.join).  ``*_tombstone``: value column
     whose NULL marks a delete on that side (LogCleaner semantics).
-    ``how`` ∈ {inner, left, outer}.
+    ``how`` ∈ {inner, left, outer}.  ``checkpoint`` is required: the
+    snapshot stores and the changelog live under
+    ``<checkpoint>/snapshots``, so a restart from the checkpoint finds
+    both sides' state.
     """
     from kafkadirect_spark.core import Table
 
@@ -100,7 +101,7 @@ def streaming_table_table_join(
             allowMissingColumns=True)
     )
 
-    base = store_dir or tempfile.mkdtemp(prefix="kd_ttj_")
+    base = _SnapshotStore.under(checkpoint)
     stores = {s: _SnapshotStore(f"{base}/{s}") for s in ("L", "R", "J")}
     sides = {
         "L": ([order_by, *left_cols], left_tombstone),
@@ -179,7 +180,6 @@ def streaming_table_table_join(
                 shutil.rmtree(f"{base}/J_changelog/{name}", ignore_errors=True)
         sink(spark.read.parquet(diff_dir), batch_id)
 
-    w = tagged.writeStream.outputMode("append").foreachBatch(per_batch)
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return (tagged.writeStream.outputMode("append")
+            .foreachBatch(per_batch)
+            .option("checkpointLocation", checkpoint).start())

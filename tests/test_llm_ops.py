@@ -1,6 +1,7 @@
 """Training-data-pipeline operators: dedup / similarity / text /
 multimodal — recall and semantics beyond the SQL-oracle gate."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +20,33 @@ def docs(spark):
 def emb(spark):
     from kafkadirect_spark.sources.batch import load_table
     return load_table(spark, SF, "embeddings")
+
+
+@pytest.fixture(scope="module")
+def emb_gram(emb):
+    """Test-local exact cosine model: ``(ids, G)`` with ``G`` the
+    normalized Gram matrix of the embeddings in id order and the
+    diagonal (self) set to -inf."""
+    rows = sorted((r.vec_id, r.embedding) for r in emb.collect())
+    ids = np.array([i for i, _ in rows])
+    X = np.array([v for _, v in rows], dtype=np.float64)
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    G = X @ X.T
+    np.fill_diagonal(G, -np.inf)
+    return ids, G
+
+
+def model_topk(gram, k, probe_ids=None):
+    """``{(id, neighbor_id, rank)}``: each probe's k most cosine-similar
+    other vectors, ties broken by neighbor id."""
+    ids, G = gram
+    out = set()
+    for i, pid in enumerate(ids):
+        if probe_ids is not None and pid not in probe_ids:
+            continue
+        top = np.lexsort((ids, -G[i]))[:k]
+        out |= {(int(pid), int(ids[j]), r + 1) for r, j in enumerate(top)}
+    return out
 
 
 def test_exact_dedup_groups(spark):
@@ -72,9 +100,8 @@ def test_simhash_near_for_near_dups(docs):
     assert sum(far) / len(far) > ham
 
 
-def test_ann_recall_vs_brute_force(emb):
-    bf = {(r.vec_id, r.neighbor_id) for r in
-          similarity.cosine_topk(emb, "vec_id", "embedding", k=3).collect()}
+def test_ann_recall_vs_brute_force(emb, emb_gram):
+    bf = {(p, n) for p, n, _ in model_topk(emb_gram, 3)}
     ann = {(r.vec_id, r.neighbor_id) for r in
            similarity.ann_lsh_topk(emb, "vec_id", "embedding", dim=64, k=3).collect()}
     recall = len(bf & ann) / len(bf)
@@ -87,23 +114,28 @@ def test_ann_recall_vs_brute_force(emb):
     assert m_recall >= recall and m_recall > 0.9, f"{m_recall:.3f}"
 
 
-def test_cosine_topk_with_probe_broadcast(emb):
-    probes = emb.filter(F.col("vec_id") < 5)
-    out = similarity.cosine_topk(emb, "vec_id", "embedding", k=2, probes=probes)
-    rows = out.collect()
-    assert {r.vec_id for r in rows} == {0, 1, 2, 3, 4}
-    assert all(r.neighbor_id != r.vec_id for r in rows)
+def test_cosine_topk_blas_matches_numpy_model(emb, emb_gram):
+    """The exact top-k equals the numpy model, ranks included: over all
+    pairs, and over an explicit broadcast probe subset, whose output
+    holds exactly the probe ids and never the probe itself."""
+    def run(**kw):
+        return {(r.vec_id, r.neighbor_id, r.rank) for r in
+                similarity.cosine_topk_blas(emb, "vec_id", "embedding",
+                                            **kw).collect()}
+
+    assert run(k=3) == model_topk(emb_gram, 3)
+    got = run(k=2, probes=emb.filter(F.col("vec_id") < 5))
+    assert got == model_topk(emb_gram, 2, probe_ids={0, 1, 2, 3, 4})
+    assert {p for p, _, _ in got} == {0, 1, 2, 3, 4}
+    assert all(n != p for p, n, _ in got)
 
 
 def test_blas_probe_cap_raises(emb):
-    """The exact BLAS paths must never pull an unbounded probe set to
-    the driver: above max_probes they raise instead of materializing."""
+    """The exact BLAS path must never pull an unbounded probe set to
+    the driver: above max_probes it raises instead of materializing."""
     with pytest.raises(ValueError, match="max_probes"):
         similarity.cosine_topk_blas(emb, "vec_id", "embedding", k=2,
                                     max_probes=5)
-    with pytest.raises(ValueError, match="max_probes"):
-        similarity.cosine_pairs_blas(emb, "vec_id", "embedding", 0.9,
-                                     max_probes=5)
     # An explicit bounded probe set under the cap still works.
     probes = emb.filter(F.col("vec_id") < 3)
     out = similarity.cosine_topk_blas(emb, "vec_id", "embedding", k=2,
@@ -111,12 +143,13 @@ def test_blas_probe_cap_raises(emb):
     assert out.count() == probes.count() * 2
 
 
-def test_candidate_verify_matches_exact_pairs(emb):
+def test_candidate_verify_matches_exact_pairs(emb, emb_gram):
     """The scale path (multiprobe-LSH candidates → JVM-expression
     cosine verify) must reproduce the exact all-pairs near-dup set at
     the production threshold — full recall, zero false positives."""
-    exact = {(r.id_a, r.id_b) for r in similarity.cosine_pairs_blas(
-        emb, "vec_id", "embedding", 0.45).collect()}
+    ids, G = emb_gram
+    exact = {(int(ids[i]), int(ids[j]))
+             for i, j in zip(*np.nonzero(G >= 0.45)) if ids[i] < ids[j]}
     cand = similarity.lsh_candidate_pairs(
         emb, "vec_id", "embedding", dim=64, probe_radius=1)
     verified = {(r.id_a, r.id_b) for r in similarity.cosine_verify_pairs(

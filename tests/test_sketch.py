@@ -275,26 +275,6 @@ def test_streaming_heavy_hitters_space_saving(spark, tmp_path):
         q.stop()
 
 
-def test_hist_grouped_matches_global_per_group(spark):
-    """Grouped quantiles over one group's rows equal the global
-    function applied to that group alone."""
-    df = (spark.range(0, 2000)
-          .select((F.col("id") % 2).cast("string").alias("g"),
-                  F.col("id").alias("x")))
-    reg_g = sketch.hist_registers_grouped(df, ["g"], "x", 0, 2000, 100)
-    got = {(r.g, r.q_permille): r.est_value
-           for r in sketch.hist_quantiles_grouped(
-               reg_g, ["g"], [500, 900], 0, 2000, 100).collect()}
-    for gval in ("0", "1"):
-        sub = df.filter(F.col("g") == gval)
-        reg = sketch.hist_registers(sub, "x", 0, 2000, 100)
-        want = {r.q_permille: r.est_value
-                for r in sketch.hist_quantiles(
-                    reg, [500, 900], 0, 2000, 100).collect()}
-        for q, v in want.items():
-            assert got[(gval, q)] == v
-
-
 def test_hll_empty_input_estimates_zero(spark):
     """An empty sketch must estimate 0 — not NULL (empty SUM) and not
     the raw estimator's alpha·m bias."""

@@ -402,7 +402,6 @@ def test_streaming_retraction_bounded_state_many_batches(spark, tmpdir):
             {r.attr: r.total for r in df.collect()}),
         value_cols=["attr", "value"],
         checkpoint=f"{tmpdir}/ckpt_many",
-        store_dir=f"{tmpdir}/store_many",
     )
     try:
         q.processAllAvailable()
@@ -412,16 +411,17 @@ def test_streaming_retraction_bounded_state_many_batches(spark, tmpdir):
     # Latest offsets per key are 45..49; odd offsets carry attr "x" →
     # x: 45+47+49, y: 46+48.
     assert results[-1] == {"x": 45 + 47 + 49, "y": 46 + 48}
-    versions = [d for d in os.listdir(f"{tmpdir}/store_many")
-                if d.startswith("v=")]
+    store = f"{tmpdir}/ckpt_many/snapshots"
+    versions = [d for d in os.listdir(store) if d.startswith("v=")]
     assert len(versions) == 1  # pruned: one committed snapshot
-    snap = spark.read.parquet(f"{tmpdir}/store_many/{versions[0]}")
+    snap = spark.read.parquet(f"{store}/{versions[0]}")
     assert snap.count() == 5  # |distinct keys|, not 50 changelog rows
 
 
 def test_streaming_retraction_restart_from_checkpoint(spark, tmpdir):
-    """Kill the query, restart with the same checkpoint + store: state
-    survives and the re-keying retraction still lands correctly."""
+    """Kill the query, restart with the same checkpoint alone: the
+    snapshot store under it survives and the re-keying retraction
+    still lands correctly."""
     up = "key string, attr string, value int, offset bigint"
 
     def w(rows, n):
@@ -439,9 +439,9 @@ def test_streaming_retraction_restart_from_checkpoint(spark, tmpdir):
                 {r.attr: r.total for r in df.collect()}),
             value_cols=["attr", "value"],
             checkpoint=f"{tmpdir}/ckpt_rs",
-            store_dir=f"{tmpdir}/store_rs",
         )
 
+    before = _temp_stores()
     r1 = []
     w([("k1", "x", 5, 0), ("k2", "x", 3, 1)], 0)
     q = start(r1)
@@ -461,6 +461,7 @@ def test_streaming_retraction_restart_from_checkpoint(spark, tmpdir):
         assert r2[-1] == {"x": 3, "y": 7}
     finally:
         q.stop()
+    assert _temp_stores() == before
 
 
 def test_global_table_refresh_staleness_bound(spark, tmpdir):
@@ -520,7 +521,7 @@ def _ttj_harness(spark, tmpdir, how):
         sink=lambda df, bid: outputs.append(
             [(r.key, r.lval, r.rval, r._change) for r in df.collect()]),
         how=how, left_tombstone="lval", right_tombstone="rval",
-        checkpoint=f"{tmpdir}/ckpt", store_dir=f"{tmpdir}/store")
+        checkpoint=f"{tmpdir}/ckpt")
     n = {"l": 0, "r": 0}
 
     def pipe(side, schema):
@@ -586,6 +587,62 @@ def test_streaming_table_table_outer_join(spark, tmpdir):
         assert out[-1] == [("k1", None, None, "delete")]
     finally:
         q.stop()
+
+
+def _temp_stores() -> set[str]:
+    return {n for n in os.listdir(tempfile.gettempdir())
+            if n.startswith(("kd_ret_", "kd_ttj_"))}
+
+
+def test_snapshot_stores_live_under_checkpoint(spark, tmpdir):
+    """The snapshot-store operators keep their state under
+    ``<checkpoint>/snapshots``: a table-table join restarted from its
+    checkpoint alone still joins a right-side update against the left
+    state of the first run, no store appears in the temp dir, and a
+    missing checkpoint is refused."""
+    before = _temp_stores()
+    for side, schema in (("l", LJ), ("r", RJ)):
+        (spark.createDataFrame([], schema).coalesce(1)
+         .write.parquet(f"{tmpdir}/{side}/b_seed"))
+
+    def start(outputs, checkpoint=f"{tmpdir}/ckpt"):
+        left, right = (spark.readStream.schema(schema)
+                       .option("maxFilesPerTrigger", "1")
+                       .parquet(f"{tmpdir}/{side}/*")
+                       for side, schema in (("l", LJ), ("r", RJ)))
+        return table_join.streaming_table_table_join(
+            left, right, key="key", order_by="offset",
+            sink=lambda df, bid: outputs.append(
+                [(r.key, r.lval, r.rval, r._change) for r in df.collect()]),
+            how="inner", checkpoint=checkpoint)
+
+    def run(outputs):
+        q = start(outputs)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    with pytest.raises(ValueError, match="checkpoint"):
+        start([], checkpoint=None)
+    with pytest.raises(ValueError, match="checkpoint"):
+        retraction.streaming_table_group_aggregate(
+            spark.createDataFrame([], LJ), key="key", order_by="offset",
+            group_exprs=[F.col("lval")], aggs=[F.count("*").alias("n")],
+            sink=lambda df, bid: None)
+
+    spark.createDataFrame([("k1", "v1", 0)], LJ).coalesce(1).write.parquet(
+        f"{tmpdir}/l/b0")
+    first = []
+    run(first)
+    assert first[-1] == []  # right side empty: nothing joins yet
+    spark.createDataFrame([("k1", "w1", 1)], RJ).coalesce(1).write.parquet(
+        f"{tmpdir}/r/b0")
+    second = []
+    run(second)
+    assert second[-1] == [("k1", "v1", "w1", "upsert")]
+    assert os.path.isdir(f"{tmpdir}/ckpt/snapshots/L")
+    assert _temp_stores() == before
 
 
 def test_aggregate_with_arbitrary_fold(spark):

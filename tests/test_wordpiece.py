@@ -87,6 +87,16 @@ def test_encode_matches_python_model(spark):
         assert enc[i] == (tuple(want), len(want)), (i, t)
 
 
+def test_encode_refuses_over_cap_type_table(spark):
+    """The encode collects its type table through the same
+    MAX_DRIVER_TYPES guard as training."""
+    from kafkadirect_spark.functions.bpe import MAX_DRIVER_TYPES
+    with pytest.raises(ValueError, match="MAX_DRIVER_TYPES"):
+        wp.wordpiece_encode(_docs(spark, ["a b"]), "doc_id", "text", [],
+                            min_count=1,
+                            max_word_types=MAX_DRIVER_TYPES + 1)
+
+
 def test_tokeval_contract(spark):
     """The encode frame satisfies the shared tokenizer-consumer
     contract: windowed_chunks and tokenizer_eval run unchanged."""
