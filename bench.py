@@ -124,11 +124,9 @@ def _media_png_features_suite(spark, sf_dir):
 
 def _wordpiece_suite(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    merges = wordpiece.learn_wordpiece(docs, "text", n_merges=12,
-                                       min_count=2,
-                                       max_word_types=4096)
-    enc = wordpiece.wordpiece_encode(docs, "doc_id", "text", merges,
-                                     min_count=2, max_word_types=4096)
+    vocab = wordpiece.wordpiece_vocab(docs, "text", n_merges=12,
+                                      min_count=2, max_word_types=4096)
+    enc = wordpiece.wordpiece_encode(docs, "doc_id", "text", vocab)
     return enc.select("doc_id", "n_pieces")
 
 

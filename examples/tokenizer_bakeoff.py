@@ -40,14 +40,13 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     pieces = unigram.learn_unigram(docs, "text", vocab_size=48,
                                    rounds=2, max_piece_len=8,
                                    min_count=2)
-    wp_merges = wordpiece.learn_wordpiece(docs, "text", n_merges=48,
-                                          min_count=2)
+    wp_vocab = wordpiece.wordpiece_vocab(docs, "text", n_merges=48,
+                                         min_count=2)
 
     # 2: encode (one stateless pass each; per-task word memo)
     enc_b = bpe.bpe_encode(docs, "doc_id", "text", merges)
     enc_u = unigram.unigram_encode(docs, "doc_id", "text", pieces)
-    enc_w = wordpiece.wordpiece_encode(docs, "doc_id", "text",
-                                       wp_merges, min_count=2)
+    enc_w = wordpiece.wordpiece_encode(docs, "doc_id", "text", wp_vocab)
 
     # 3: the same integer-exact report for both
     print("\n== tokenizer_eval, per lang (milli = x1000) ==")

@@ -21,9 +21,14 @@ Spark):
    zero Spark jobs per merge.  Pair counts are exact integers, ties
    break (count DESC, lhs ASC, rhs ASC).
 3. **Encoding** (``bpe_encode``) applies the learned merges in rank
-   order with one ``mapInPandas`` pass — merges broadcast via task
-   closure (n_merges rows), per-task word→segmentation memo, so each
-   distinct word per task is encoded once.
+   order.  The pass itself, ``_encode_words``, is shared by all three
+   tokenizer families (BPE, ``wordpiece``, ``unigram``): one stateless
+   ``mapInPandas`` over the ``[^a-z0-9]+`` token surface with a
+   per-task word memo, and each family passes only its word→pieces
+   function and the trained artifact it closes over (here the
+   n_merges-row merge list).  Encode frames are ``(id, pieces
+   array<string>, n long)``; ``bpe_chunk`` (and ``unigram_chunk``) are
+   ``tokeval.windowed_chunks`` over that frame with stride = budget.
 
 Pair statistics count every adjacent position (overlapping pairs in
 a run like 'aaa' count twice) while application merges left-to-right
@@ -42,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafkadirect_spark.functions.text import tokens
+from kafkadirect_spark.functions.tokeval import windowed_chunks
 
 #: merge learning refuses type tables above this — the greedy loop
 #: holds the table in driver memory and is O(types · merges)
@@ -159,30 +165,34 @@ def learn_bpe(df: DataFrame, text_col: str, n_merges: int,
 # encoding
 # ---------------------------------------------------------------------------
 
-def bpe_encode(df: DataFrame, id_col: str, text_col: str,
-               merges) -> DataFrame:
-    """Encode a text column with a learned merge list — standard BPE
-    inference: tokenize (the same ``[^a-z0-9]+`` surface as
-    ``text.tokens``), char-split each word, apply every merge in
-    rank order.  Returns ``(id_col, bpe array<string>, n_bpe long)``.
-
-    ``merges`` is the ``learn_bpe`` frame or a ``[(lhs, rhs), ...]``
-    list in rank order; a frame is collected (≤ n_merges rows,
-    bounded by construction) and shipped in the task closure.  One
-    ``mapInPandas`` pass, no shuffle; a per-task word→segmentation
-    memo encodes each distinct word once per task (memo size is
-    bounded by the task's distinct words — the same envelope as any
-    per-task dictionary aggregation)."""
+def _merges_list(merges) -> list:
+    """``[(lhs, rhs), ...]`` in rank order from a merges frame
+    (collected: ≤ n_merges rows, bounded by construction) or a list of
+    ``(lhs, rhs)`` pairs already in rank order."""
     if isinstance(merges, DataFrame):
         rows = merges.select("merge_rank", "lhs", "rhs").collect()
-        pairs = [(r["lhs"], r["rhs"])
-                 for r in sorted(rows, key=lambda r: r["merge_rank"])]
-    else:
-        pairs = [(a, b) for a, b in merges]
+        return [(r["lhs"], r["rhs"])
+                for r in sorted(rows, key=lambda r: r["merge_rank"])]
+    return [(a, b) for a, b in merges]
 
+
+def _encode_words(df: DataFrame, id_col: str, text_col: str, segment,
+                  out_col: str, n_col: str) -> DataFrame:
+    """The one encode pass all three tokenizer families run: tokenize
+    (the same ``[^a-z0-9]+`` surface as ``text.tokens``), map every
+    word through ``segment(word) -> tuple of pieces`` and concatenate.
+    Returns ``(id_col, out_col array<string>, n_col long)``; a null
+    text encodes to no pieces.
+
+    One stateless ``mapInPandas`` pass, no shuffle, so it applies
+    unchanged to a streaming frame.  ``segment`` and the trained
+    artifact it closes over ship in the task closure; a per-task
+    word→pieces memo encodes each distinct word once per task (memo
+    size is bounded by the task's distinct words — the same envelope
+    as any per-task dictionary aggregation)."""
     id_field = df.schema[id_col]
     out_schema = (f"{id_field.name} {id_field.dataType.simpleString()}, "
-                  "bpe array<string>, n_bpe long")
+                  f"{out_col} array<string>, {n_col} long")
     # widen narrow scans so the Arrow-batched encode runs cluster-wide
     # (a no-op on streaming frames and on scans already as wide as the
     # cluster — the 100 TB case); the per-task word memo still applies
@@ -196,34 +206,44 @@ def bpe_encode(df: DataFrame, id_col: str, text_col: str,
 
         tok_re = re.compile("[^a-z0-9]+")
         memo: dict = {}
-
-        def enc(word: str) -> tuple:
-            seg = memo.get(word)
-            if seg is None:
-                seg = tuple(word)
-                for a, b in pairs:
-                    if (a + b) in word:
-                        seg = _py_apply(seg, a, b)
-                memo[word] = seg
-            return seg
-
         for pdf in batches:
-            bpe_col, n_col = [], []
+            seqs, lens = [], []
             for txt in pdf[text_col]:
-                if txt is None or (isinstance(txt, float)):
-                    bpe_col.append([])
-                    n_col.append(0)
-                    continue
                 out: list = []
-                for w in tok_re.split(str(txt).lower()):
-                    if w:
-                        out.extend(enc(w))
-                bpe_col.append(out)
-                n_col.append(len(out))
-            yield pd.DataFrame({id_col: pdf[id_col], "bpe": bpe_col,
-                                "n_bpe": pd.Series(n_col, dtype="int64")})
+                if txt is not None and not isinstance(txt, float):
+                    for w in tok_re.split(str(txt).lower()):
+                        if w:
+                            seg = memo.get(w)
+                            if seg is None:
+                                seg = memo[w] = segment(w)
+                            out.extend(seg)
+                seqs.append(out)
+                lens.append(len(out))
+            yield pd.DataFrame({id_col: pdf[id_col], out_col: seqs,
+                                n_col: pd.Series(lens, dtype="int64")})
 
     return cols.mapInPandas(gen, out_schema)
+
+
+def bpe_encode(df: DataFrame, id_col: str, text_col: str,
+               merges) -> DataFrame:
+    """Encode a text column with a learned merge list — standard BPE
+    inference: char-split each word, apply every merge in rank order.
+    Returns ``(id_col, bpe array<string>, n_bpe long)``.
+
+    ``merges`` is the ``learn_bpe`` frame or a ``[(lhs, rhs), ...]``
+    list in rank order; a frame is collected (≤ n_merges rows) and
+    shipped in the task closure of the shared ``_encode_words`` pass."""
+    pairs = _merges_list(merges)
+
+    def segment(word: str) -> tuple:
+        seg = tuple(word)
+        for a, b in pairs:
+            if (a + b) in word:
+                seg = _py_apply(seg, a, b)
+        return seg
+
+    return _encode_words(df, id_col, text_col, segment, "bpe", "n_bpe")
 
 
 # ---------------------------------------------------------------------------
@@ -349,12 +369,6 @@ def bpe_vocab(df: DataFrame, text_col: str, merges,
     used) exploded to distinct characters — register-sized output —
     unioned with the ≤ n_merges merge rows."""
     spark = df.sparkSession
-    if isinstance(merges, DataFrame):
-        rows = sorted(merges.select("merge_rank", "lhs", "rhs").collect(),
-                      key=lambda r: r["merge_rank"])
-        pairs = [(int(r["merge_rank"]), r["lhs"], r["rhs"]) for r in rows]
-    else:
-        pairs = [(i + 1, a, b) for i, (a, b) in enumerate(merges)]
     chars = (word_type_counts(df, text_col, min_count, max_word_types)
              .select(F.explode(F.split("word", "")).alias("token"))
              .filter(F.col("token") != "")
@@ -362,7 +376,8 @@ def bpe_vocab(df: DataFrame, text_col: str, merges,
              .select("token", F.lit("char").alias("kind"),
                      F.lit(0).cast("long").alias("rank")))
     merged = spark.createDataFrame(
-        [(a + b, "merge", r) for r, a, b in pairs],
+        [(a + b, "merge", r)
+         for r, (a, b) in enumerate(_merges_list(merges), start=1)],
         "token string, kind string, rank long")
     return chars.unionByName(merged)
 
@@ -375,64 +390,13 @@ def bpe_chunk(df: DataFrame, id_col: str, text_col: str, merges,
     not 512 words).  Token-array chunks, not re-glued text: what a
     training pipeline actually feeds forward.
 
-    One ``bpe_encode`` pass (mapInPandas, per-task memo), then
-    row-local slicing — ``ceil(n/budget)`` chunks per document via a
-    sequence-transform, exploded.  Empty documents emit zero chunks.
-    Returns ``(id_col, chunk_idx, n_tokens, bpe)``.
+    One ``bpe_encode`` pass, then ``tokeval.windowed_chunks`` with
+    stride = budget (disjoint chunks, row-local).  Empty documents
+    emit zero chunks.  Returns ``(id_col, chunk_idx, n_tokens, bpe)``.
     """
     if budget < 1:
         raise ValueError("budget must be >= 1")
-    enc = bpe_encode(df, id_col, text_col, merges)
-    n_chunks = F.ceil(F.col("n_bpe") / F.lit(budget)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.struct(
-            i.cast("long").alias("idx"),
-            F.slice(F.col("bpe"), i * budget + 1, budget)
-            .alias("arr")))
-    return (enc.filter(F.col("n_bpe") > 0)
-            .select(F.col(id_col), F.explode(chunks).alias("c"))
-            .select(id_col,
-                    F.col("c.idx").alias("chunk_idx"),
-                    F.size("c.arr").cast("long").alias("n_tokens"),
-                    F.col("c.arr").alias("bpe")))
-
-
-def chunk_oracle_sql(n_merges: int, budget: int, min_count: int = 2,
-                     max_word_types: int = 1 << 16) -> str:
-    """DuckDB replay of ``bpe_chunk(documents)``: the full-type
-    rewrite chain (as ``encode_lengths_oracle_sql``), word order
-    restored via positional unnest, per-doc sequences flattened in
-    order, then 1-based inclusive list slices."""
-    parts = [_train_ctes(n_merges, min_count, max_word_types)]
-    parts.append("""
-    u0 AS MATERIALIZED (
-      SELECT tok AS word, COUNT(*)::BIGINT AS n,
-             list_transform(generate_series(1, length(tok)),
-                            g -> substr(tok, g, 1)) AS s
-      FROM (SELECT unnest(""" + _TOK_SQL + """) AS tok FROM documents)
-      GROUP BY 1, tok)""")
-    for r in range(1, n_merges + 1):
-        parts.append(_rewrite_round(f"u{r - 1}", f"u{r}",
-                                    f"best{r}", f"urw{r}"))
-    ctes = ",".join(parts)
-    b = budget
-    return f"""WITH RECURSIVE {ctes},
-    tokq AS (
-      SELECT doc_id, w[i] AS word, i AS ord
-      FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-            FROM (SELECT doc_id, {_TOK_SQL} AS w FROM documents))),
-    seqs AS (
-      SELECT doc_id, flatten(list(s ORDER BY ord)) AS toks
-      FROM tokq JOIN u{n_merges} USING (word) GROUP BY doc_id),
-    chunks AS (
-      SELECT doc_id, i AS chunk_idx,
-             toks[(i * {b} + 1):((i + 1) * {b})] AS bpe
-      FROM (SELECT doc_id, toks,
-                   unnest(generate_series(
-                       0, CAST((len(toks) + {b} - 1) // {b} AS BIGINT)
-                          - 1)) AS i
-            FROM seqs WHERE len(toks) > 0))
-    SELECT doc_id, chunk_idx, len(bpe)::BIGINT AS n_tokens,
-           md5(array_to_string(bpe, ',')) AS bpe_md5
-    FROM chunks"""
+    ch = windowed_chunks(bpe_encode(df, id_col, text_col, merges),
+                         id_col, "bpe", budget)
+    return ch.select(id_col, "chunk_idx", "n_tokens",
+                     F.col("tokens").alias("bpe"))

@@ -1943,60 +1943,7 @@ def sample_weighted_n(df: DataFrame, id_col: str, weight_col: str,
     ``importance_weights`` (whose scores are this operator's natural
     weight column).
     """
-    from pyspark.sql import Window
-
-    if n < 1:
-        raise ValueError("n must be >= 1")
-    if shards < 1:
-        raise ValueError("shards must be >= 1")
-    h = hash_bucket(F.concat(F.lit(seed), F.col(id_col).cast("string")),
-                    n_buckets=HASH_P)
-    w_checked = F.when(
-        F.col(weight_col) < 0,
-        F.raise_error(F.concat(F.lit("negative weight for id "),
-                               F.col(id_col).cast("string")))
-    ).otherwise(F.col(weight_col).cast("long"))
-    rows = df.select(F.col(id_col), w_checked.alias("__w"),
-                     h.alias("__h"), (h % shards).alias("__shard"))
-    stats = rows.groupBy("__shard").agg(F.sum("__w").alias("__sw"))
-    # ≤ `shards` rows: bounded single-partition windows, the
-    # shuffle_positions/pack_sequences contract
-    # distinct names on the broadcast side: `off` shares `rows` in its
-    # lineage, and the analyzer's self-join attribute cloning makes a
-    # same-named window output ambiguous after the join
-    shard_ord = Window.orderBy("__shard")
-    off = stats.select(
-        "__shard",
-        F.coalesce(
-            F.sum("__sw").over(
-                shard_ord.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0)).alias("__shard_off"),
-        F.sum("__sw").over(
-            shard_ord.rowsBetween(Window.unboundedPreceding,
-                                  Window.unboundedFollowing))
-        .alias("__grand_w"))
-    win = Window.partitionBy("__shard").orderBy(
-        F.col("__h").asc(), F.col(id_col).asc())
-    local = rows.withColumn(
-        "__cwl",
-        F.coalesce(F.sum("__w").over(
-            win.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)))
-    j = (local.join(F.broadcast(off), "__shard")
-         .filter(F.col("__grand_w") > 0)
-         .withColumn("__cw", F.col("__shard_off") + F.col("__cwl")))
-
-    def ceil_div(x: str) -> str:
-        # ceil(x·n / W) in DECIMAL(38,0): x ≤ W ≤ 2^63, n ≤ 2^31 —
-        # the product stays < 10^38; DIV truncates, +W−1 makes ceil
-        return (f"CAST((CAST({x} AS DECIMAL(38,0)) * {int(n)} "
-                f"+ CAST(__grand_w AS DECIMAL(38,0)) - 1) "
-                f"DIV CAST(__grand_w AS DECIMAL(38,0)) AS BIGINT)")
-
-    picks = F.expr(f"{ceil_div('(__cw + __w)')} - {ceil_div('__cw')}")
-    return (j.withColumn("picks", picks)
-            .filter(F.col("picks") > 0)
-            .select(F.col(id_col), F.col("__w").alias("weight"),
-                    F.col("picks")))
+    return _sample_weighted(df, [], id_col, weight_col, n, seed, shards)
 
 
 def sample_weighted_oracle_sql(n: int, weight_sql: str,
@@ -2065,13 +2012,25 @@ def sample_weighted_n_per_group(df: DataFrame, group_cols,
     machinery beside ``sample_weighted_n`` (global) and
     ``sample_exact_n_per_group`` (uniform per-stratum).
     """
-    from pyspark.sql import Window
-
     if isinstance(group_cols, str):
         group_cols = [group_cols]
     group_cols = list(group_cols)
     if not group_cols:
         raise ValueError("group_cols must name at least one column")
+    return _sample_weighted(df, group_cols, id_col, weight_col, n, seed,
+                            shards)
+
+
+def _sample_weighted(df: DataFrame, group_cols: list, id_col: str,
+                     weight_col: str, n: int, seed: str,
+                     shards: int) -> DataFrame:
+    """The one systematic-sampling body behind ``sample_weighted_n``
+    (no group columns) and ``sample_weighted_n_per_group``: every
+    window, aggregate and join is keyed by ``group_cols`` (empty for
+    the global draw), and rows with a NULL group key are dropped only
+    when there are group columns."""
+    from pyspark.sql import Window
+
     if n < 1:
         raise ValueError("n must be >= 1")
     if shards < 1:
@@ -2083,16 +2042,21 @@ def sample_weighted_n_per_group(df: DataFrame, group_cols,
         F.raise_error(F.concat(F.lit("negative weight for id "),
                                F.col(id_col).cast("string")))
     ).otherwise(F.col(weight_col).cast("long"))
-    notnull = F.lit(True)
-    for g in group_cols:
-        notnull = notnull & F.col(g).isNotNull()
-    rows = (df.filter(notnull)
-            .select(*group_cols, F.col(id_col), w_checked.alias("__w"),
-                    h.alias("__h"), (h % shards).alias("__shard")))
+    if group_cols:
+        notnull = F.lit(True)
+        for g in group_cols:
+            notnull = notnull & F.col(g).isNotNull()
+        df = df.filter(notnull)
+    rows = df.select(*group_cols, F.col(id_col), w_checked.alias("__w"),
+                     h.alias("__h"), (h % shards).alias("__shard"))
     stats = rows.groupBy(*group_cols, "__shard").agg(
         F.sum("__w").alias("__sw"))
-    # ≤ shards rows PER GROUP: the offset window is partitioned on the
-    # group, so no task ever sees more than one stratum's shard table
+    # ≤ shards rows per group: the offset window is partitioned on the
+    # group (a bounded single-partition window for the global draw —
+    # the shuffle_positions/pack_sequences contract).  Distinct names
+    # on the broadcast side: `off` shares `rows` in its lineage, and
+    # the analyzer's self-join attribute cloning makes a same-named
+    # window output ambiguous after the join
     shard_ord = Window.partitionBy(*group_cols).orderBy("__shard")
     off = stats.select(
         *group_cols, "__shard",
@@ -2115,6 +2079,8 @@ def sample_weighted_n_per_group(df: DataFrame, group_cols,
          .withColumn("__cw", F.col("__shard_off") + F.col("__cwl")))
 
     def ceil_div(x: str) -> str:
+        # ceil(x·n / W) in DECIMAL(38,0): x ≤ W ≤ 2^63, n ≤ 2^31 —
+        # the product stays < 10^38; DIV truncates, +W−1 makes ceil
         return (f"CAST((CAST({x} AS DECIMAL(38,0)) * {int(n)} "
                 f"+ CAST(__grand_w AS DECIMAL(38,0)) - 1) "
                 f"DIV CAST(__grand_w AS DECIMAL(38,0)) AS BIGINT)")

@@ -130,6 +130,9 @@ def cosine_topk_blas(
     import pandas as pd
     P, p_ids = _collect_probes(probes if probes is not None else df,
                                id_col, vec_col, max_probes)
+    if not len(p_ids):  # an empty probe set scores nothing
+        return df.sparkSession.createDataFrame(
+            [], f"{id_col} long, neighbor_id long, rank int")
     P /= np.linalg.norm(P, axis=1, keepdims=True)
     sc = df.sparkSession.sparkContext
     b_mat, b_ids = sc.broadcast(P), sc.broadcast(p_ids)

@@ -1,12 +1,15 @@
-"""Tokenizer-consumer operators shared by BOTH tokenizer families
-(``functions/bpe.py``, ``functions/unigram.py``): sliding-window
-context assembly and tokenizer-quality evaluation.  Everything here
-operates on an ENCODE frame — ``(id, tokens array<string>, n long)``,
-the common output contract of ``bpe_encode`` and ``unigram_encode`` —
-so it is tokenizer-agnostic by construction and applies unchanged to
-a streaming encode (both encoders are stateless ``mapInPandas``
-passes; these operators add only row-local column expressions or
-grouped aggregates).
+"""Tokenizer-consumer operators shared by all three tokenizer
+families (``functions/bpe.py``, ``functions/wordpiece.py``,
+``functions/unigram.py``): sliding-window context assembly and
+tokenizer-quality evaluation.  Everything here operates on an ENCODE
+frame — ``(id, tokens array<string>, n long)``, the common output of
+``bpe_encode``, ``wordpiece_encode`` and ``unigram_encode``, which all
+run the one stateless ``mapInPandas`` pass ``bpe._encode_words`` — so
+it is tokenizer-agnostic by construction and applies unchanged to a
+streaming encode (these operators add only row-local column
+expressions or grouped aggregates).  The families' disjoint chunkers
+``bpe_chunk`` and ``unigram_chunk`` are ``windowed_chunks`` with
+stride = budget.
 
 Reference analogue: none (SURVEY.md §2 — the reference has no
 document model); beyond-parity training-data-pipeline machinery.
@@ -35,8 +38,8 @@ def windowed_chunks(enc: DataFrame, id_col: str, tokens_col: str,
     document into windows of ``budget`` tokens starting every
     ``stride`` tokens — the standard pretraining/eval context shape
     (overlapping windows when ``stride < budget``; ``stride ==
-    budget`` degenerates to the disjoint ``bpe_chunk``/
-    ``unigram_chunk`` layout, pytest-pinned).
+    budget``, the default, is the disjoint layout ``bpe_chunk`` and
+    ``unigram_chunk`` emit).
 
     Window starts are ``0, stride, 2·stride, …`` while ``start <
     n`` and the FIRST window always emits (empty documents emit zero

@@ -34,9 +34,11 @@ Architecture mirrors the BPE trainer's scale split:
    bounded type table (piece scores ship in the task closure — the
    inventory is ≤ seed rows by construction) plus one piece-keyed
    groupBy (inventory-sized exchange);
-4. encoding (``unigram_encode``) is one stateless ``mapInPandas``
-   pass with a per-task word→segmentation memo — identical contract
-   to ``bpe_encode``, so it applies unchanged to streaming frames.
+4. encoding (``unigram_encode``) is ``viterbi_segment`` run through
+   the shared ``bpe._encode_words`` pass (one stateless
+   ``mapInPandas`` with a per-task word memo), so it applies
+   unchanged to streaming frames; ``unigram_chunk`` is
+   ``tokeval.windowed_chunks`` over it with stride = budget.
    Characters unseen in training segment as single-char OOV pieces
    (cost = the inventory's max bits + 1 — strictly worse than any
    real piece) — encoding never fails.
@@ -53,6 +55,7 @@ from pyspark.sql import functions as F
 
 from kafkadirect_spark.functions import bpe
 from kafkadirect_spark.functions.bpe import _TOK_SQL
+from kafkadirect_spark.functions.tokeval import windowed_chunks
 
 #: piece inventories are collected per round for the task closure —
 #: bounded by seed_factor·vocab_size + |chars|, guarded here.
@@ -209,81 +212,33 @@ def _model_from(pieces) -> tuple:
     return bits, max_len, oov
 
 
+def unigram_encode(df: DataFrame, id_col: str, text_col: str,
+                   pieces) -> DataFrame:
+    """Encode a text column with a trained piece inventory: Viterbi
+    segmentation of every word through the shared ``bpe._encode_words``
+    pass (inventory in the task closure).  Returns ``(id_col, pieces
+    array<string>, n_pieces long)``."""
+    bits, max_len, oov = _model_from(pieces)
+    return bpe._encode_words(
+        df, id_col, text_col,
+        lambda word: viterbi_segment(word, bits, max_len, oov),
+        "pieces", "n_pieces")
+
+
 def unigram_chunk(df: DataFrame, id_col: str, text_col: str,
                   pieces, budget: int) -> DataFrame:
     """Split every document into ≤ ``budget``-piece chunks under the
     trained unigram tokenizer — same model-input assembly contract as
-    ``bpe.bpe_chunk`` (one encode pass, row-local sequence slicing,
-    empty documents emit zero chunks).  Returns
+    ``bpe.bpe_chunk`` (one encode pass, then ``tokeval.windowed_chunks``
+    with stride = budget; empty documents emit zero chunks).  Returns
     ``(id_col, chunk_idx, n_pieces, pieces)``."""
     if budget < 1:
         raise ValueError("budget must be >= 1")
-    enc = unigram_encode(df, id_col, text_col, pieces)
-    n_chunks = F.ceil(F.col("n_pieces") / F.lit(budget)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.struct(
-            i.cast("long").alias("idx"),
-            F.slice(F.col("pieces"), i * budget + 1, budget)
-            .alias("arr")))
-    return (enc.filter(F.col("n_pieces") > 0)
-            .select(F.col(id_col), F.explode(chunks).alias("c"))
-            .select(id_col,
-                    F.col("c.idx").alias("chunk_idx"),
-                    F.size("c.arr").cast("long").alias("n_pieces"),
-                    F.col("c.arr").alias("pieces")))
-
-
-def unigram_encode(df: DataFrame, id_col: str, text_col: str,
-                   pieces) -> DataFrame:
-    """Encode a text column with a trained piece inventory — one
-    stateless ``mapInPandas`` pass (inventory in the task closure,
-    per-task word→segmentation memo), same tokenizer surface and
-    streaming-applicability contract as ``bpe_encode``.  Returns
-    ``(id_col, pieces array<string>, n_pieces long)``."""
-    bits, max_len, oov = _model_from(pieces)
-    id_field = df.schema[id_col]
-    out_schema = (f"{id_field.name} {id_field.dataType.simpleString()}, "
-                  "pieces array<string>, n_pieces long")
-    # widen narrow scans so the Arrow-batched encode runs cluster-wide
-    # (no-op on streaming frames / already-wide scans — bpe_encode's
-    # contract)
-    from kafkadirect_spark.functions.dedup import _widen
-    cols = _widen(df.select(id_col, text_col))
-
-    def gen(batches):
-        import re
-
-        import pandas as pd
-
-        tok_re = re.compile("[^a-z0-9]+")
-        memo: dict = {}
-
-        def enc(word: str) -> tuple:
-            seg = memo.get(word)
-            if seg is None:
-                seg = viterbi_segment(word, bits, max_len, oov)
-                memo[word] = seg
-            return seg
-
-        for pdf in batches:
-            out_p, out_n = [], []
-            for txt in pdf[text_col]:
-                if txt is None or isinstance(txt, float):
-                    out_p.append([])
-                    out_n.append(0)
-                    continue
-                acc: list = []
-                for w in tok_re.split(str(txt).lower()):
-                    if w:
-                        acc.extend(enc(w))
-                out_p.append(acc)
-                out_n.append(len(acc))
-            yield pd.DataFrame({id_col: pdf[id_col], "pieces": out_p,
-                                "n_pieces": pd.Series(out_n,
-                                                      dtype="int64")})
-
-    return cols.mapInPandas(gen, out_schema)
+    ch = windowed_chunks(unigram_encode(df, id_col, text_col, pieces),
+                         id_col, "pieces", budget)
+    return ch.select(id_col, "chunk_idx",
+                     F.col("n_tokens").alias("n_pieces"),
+                     F.col("tokens").alias("pieces"))
 
 # ---------------------------------------------------------------------------
 # DuckDB oracle generators — the hard-EM loop replayed in SQL.  The

@@ -32,22 +32,25 @@ What distinguishes it, and what this module implements exactly:
 
 Training mirrors ``learn_bpe``: one bounded collect of the capped
 word-TYPE table (Heaps-law bounded; hard-guarded at
-``MAX_DRIVER_TYPES``) and the exact loop in Python.
+``MAX_DRIVER_TYPES``) and the exact loop in Python.  ``learn_wordpiece``
+returns the merges; ``wordpiece_vocab`` runs the same training step
+and returns the vocabulary frame, the one artifact
+``wordpiece_encode`` takes — the encode counts nothing itself, so it
+applies unchanged to a streaming frame.
 
 Reference analogue: none (SURVEY.md §2 — no document model);
-beyond-parity tokenizer machinery.  The encode frame satisfies the
-``tokeval`` contract, so ``windowed_chunks`` / ``tokenizer_eval``
-apply unchanged.
+beyond-parity tokenizer machinery.  The encode runs the shared
+``bpe._encode_words`` pass, so its frame satisfies the ``tokeval``
+contract and ``windowed_chunks`` / ``tokenizer_eval`` apply
+unchanged.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from kafkadirect_spark.functions.bpe import (
-    _collect_types, _py_apply, word_type_counts,
-)
+from kafkadirect_spark.functions import bpe
+from kafkadirect_spark.functions.bpe import _TOK_SQL, _py_apply
 
 #: the score quantization: key = pair·SCALE DIV (cnt_lhs·cnt_rhs)
 SCALE = 10 ** 18
@@ -105,12 +108,15 @@ def _py_learn(types: list, n_merges: int) -> list:
     return merges
 
 
-#: char-split with continuation markers — textually mirrored by the
-#: oracle's list_transform CASE
-_WP_SYMBOLS_EXPR = (
-    "transform(sequence(1, length(word)), g -> "
-    "CASE WHEN g = 1 THEN substring(word, 1, 1) "
-    "ELSE concat('##', substring(word, g, 1)) END)")
+def _train(df: DataFrame, text_col: str, n_merges: int, min_count: int,
+           max_word_types: int) -> tuple:
+    """``(types, merges)``: the one bounded type-table collect (the
+    same ``bpe._collect_types`` as ``bpe.learn_bpe``) and the exact
+    scored-merge loop over it."""
+    if n_merges < 1:
+        raise ValueError("n_merges must be >= 1")
+    types = bpe._collect_types(df, text_col, min_count, max_word_types)
+    return types, _py_learn(types, n_merges)
 
 
 def learn_wordpiece(df: DataFrame, text_col: str, n_merges: int,
@@ -121,30 +127,29 @@ def learn_wordpiece(df: DataFrame, text_col: str, n_merges: int,
     by rank — ≤ ``n_merges`` rows (early exhaustion emits fewer).
     The same type-table collect as ``bpe.learn_bpe``; only the scored
     argmax and the ##-stripped merge product differ."""
-    if n_merges < 1:
-        raise ValueError("n_merges must be >= 1")
-    types = _collect_types(df, text_col, min_count, max_word_types)
-    return df.sparkSession.createDataFrame(_py_learn(types, n_merges),
-                                           _MERGES_SCHEMA)
+    _, merges = _train(df, text_col, n_merges, min_count, max_word_types)
+    return df.sparkSession.createDataFrame(merges, _MERGES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # vocabulary + greedy longest-match encoding
 # ---------------------------------------------------------------------------
 
+def _vocab_rows(types: list, merges: list) -> list:
+    """``[(piece, kind, rank), ...]``: every observed char of the
+    capped training table — plain at word start (``char``),
+    ##-prefixed after (``cont_char``), rank 0 — then every merge
+    product (``merge``, its 1-based rank)."""
+    chars = sorted({p for w, _ in types for p in _wp_symbols(w)})
+    return ([(p, "cont_char" if p.startswith("##") else "char", 0)
+             for p in chars]
+            + [(_merge_product(m[1], m[2]), "merge", m[0])
+               for m in merges])
+
+
 def _py_vocab(types: list, merges: list) -> set:
-    """The inference vocabulary: every observed char of the capped
-    training table — plain at word start, ##-prefixed after — plus
-    every merge product."""
-    vocab = set()
-    for w, _ in types:
-        vocab.add(w[0])
-        for ch in w[1:]:
-            vocab.add("##" + ch)
-    for m in merges:
-        lhs, rhs = m[1], m[2]
-        vocab.add(_merge_product(lhs, rhs))
-    return vocab
+    """The inference vocabulary: the pieces of ``_vocab_rows``."""
+    return {p for p, _, _ in _vocab_rows(types, merges)}
 
 
 def _py_encode_word(word: str, vocab: set) -> tuple:
@@ -170,105 +175,35 @@ def _py_encode_word(word: str, vocab: set) -> tuple:
     return tuple(pieces)
 
 
-def wordpiece_vocab(df: DataFrame, text_col: str, merges,
+def wordpiece_vocab(df: DataFrame, text_col: str, n_merges: int,
                     min_count: int = 2,
                     max_word_types: int = 1 << 16) -> DataFrame:
-    """``(piece, kind 'char'|'cont_char'|'merge', rank)`` — the
-    shippable artifact (rank 0 for base pieces).  One capped
-    word-type pass exploded to distinct observed chars; register-
-    sized output."""
-    spark = df.sparkSession
-    pairs = _merges_list(merges)
-    wt = word_type_counts(df, text_col, min_count, max_word_types)
-    chars = (wt.select(F.explode(F.expr(_WP_SYMBOLS_EXPR)).alias("piece"))
-             .distinct()
-             .select("piece",
-                     F.when(F.col("piece").startswith("##"),
-                            F.lit("cont_char")).otherwise(F.lit("char"))
-                     .alias("kind"),
-                     F.lit(0).cast("long").alias("rank")))
-    merged = spark.createDataFrame(
-        [(_merge_product(a, b), "merge", r)
-         for r, (a, b) in enumerate(pairs, start=1)],
-        "piece string, kind string, rank long")
-    return chars.unionByName(merged)
-
-
-def _merges_list(merges) -> list:
-    if isinstance(merges, DataFrame):
-        rows = merges.select("merge_rank", "lhs", "rhs").collect()
-        return [(r["lhs"], r["rhs"])
-                for r in sorted(rows, key=lambda r: r["merge_rank"])]
-    return [(m[1], m[2]) if len(m) >= 3 and isinstance(m[0], int)
-            else (m[0], m[1]) for m in merges]
+    """Train WordPiece and return the shippable artifact
+    ``wordpiece_encode`` takes: ``(piece, kind 'char'|'cont_char'|
+    'merge', rank)`` (rank 0 for base pieces).  One type-table
+    collect — the same training step as ``learn_wordpiece`` — and the
+    rest in Python; register-sized output."""
+    types, merges = _train(df, text_col, n_merges, min_count,
+                           max_word_types)
+    return df.sparkSession.createDataFrame(
+        _vocab_rows(types, merges), "piece string, kind string, rank long")
 
 
 def wordpiece_encode(df: DataFrame, id_col: str, text_col: str,
-                     merges, min_count: int = 2,
-                     max_word_types: int = 1 << 16,
-                     train_df: DataFrame | None = None) -> DataFrame:
+                     vocab: DataFrame) -> DataFrame:
     """Encode a text column with a trained WordPiece vocabulary —
-    greedy longest-match per word, ``(id_col, pieces array<string>,
-    n_pieces long)`` (the shared tokenizer-consumer contract, so
-    ``tokeval`` applies unchanged).  The vocabulary (chars of the
-    capped training table + merge products — bounded by construction)
-    ships in the task closure; one ``mapInPandas`` pass, no shuffle,
-    per-task word→pieces memo.
+    greedy longest-match per word through the shared
+    ``bpe._encode_words`` pass.  Returns ``(id_col, pieces
+    array<string>, n_pieces long)`` (the shared tokenizer-consumer
+    contract, so ``tokeval`` applies unchanged).
 
-    ``train_df``: the BATCH frame the vocabulary's base chars derive
-    from (the corpus training ran on).  Defaults to ``df`` — but a
-    streaming ``df`` cannot be collected for the vocabulary, so a
-    streaming encode MUST pass the training frame explicitly (the
-    encode pass itself is stateless and streams fine, pytest-pinned
-    streamed == batch)."""
-    pairs = _merges_list(merges)
-    source = train_df if train_df is not None else df
-    if source.isStreaming:
-        raise ValueError(
-            "the vocabulary source is a streaming DataFrame — pass "
-            "the batch training frame via train_df")
-    types = _collect_types(source, text_col, min_count, max_word_types)
-    vocab = _py_vocab(types, [(0, a, b) for a, b in pairs])
-
-    id_field = df.schema[id_col]
-    out_schema = (f"{id_field.name} {id_field.dataType.simpleString()}, "
-                  "pieces array<string>, n_pieces long")
-    from kafkadirect_spark.functions.dedup import _widen
-    cols = _widen(df.select(id_col, text_col))
-
-    def gen(batches):
-        import re
-
-        import pandas as pd
-
-        tok_re = re.compile("[^a-z0-9]+")
-        memo: dict = {}
-
-        def enc(word: str) -> tuple:
-            seg = memo.get(word)
-            if seg is None:
-                seg = _py_encode_word(word, vocab)
-                memo[word] = seg
-            return seg
-
-        for pdf in batches:
-            p_col, n_col = [], []
-            for txt in pdf[text_col]:
-                if txt is None or isinstance(txt, float):
-                    p_col.append([])
-                    n_col.append(0)
-                    continue
-                out: list = []
-                for w in tok_re.split(str(txt).lower()):
-                    if w:
-                        out.extend(enc(w))
-                p_col.append(out)
-                n_col.append(len(out))
-            yield pd.DataFrame({id_col: pdf[id_col], "pieces": p_col,
-                                "n_pieces": pd.Series(n_col,
-                                                      dtype="int64")})
-
-    return cols.mapInPandas(gen, out_schema)
+    ``vocab`` is the ``wordpiece_vocab`` frame, collected (bounded by
+    construction) into the task closure.  The encode needs nothing but
+    that artifact, so it runs unchanged on a streaming ``df``."""
+    pieces = {r["piece"] for r in vocab.select("piece").collect()}
+    return bpe._encode_words(df, id_col, text_col,
+                             lambda word: _py_encode_word(word, pieces),
+                             "pieces", "n_pieces")
 
 
 # ---------------------------------------------------------------------------
@@ -278,9 +213,6 @@ def wordpiece_encode(df: DataFrame, id_col: str, text_col: str,
 # ##-stripped product; encode replayed as a longest-match table + a
 # position-walking recursion per word TYPE.
 # ---------------------------------------------------------------------------
-
-_TOK_SQL = ("list_filter(regexp_split_to_array(lower(text), "
-            "'[^a-z0-9]+'), x -> x <> '')")
 
 _WP_SYMBOLS_SQL = (
     "list_transform(generate_series(1, length(word)), g -> "

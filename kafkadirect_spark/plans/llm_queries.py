@@ -1087,11 +1087,8 @@ def wordpiece_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (unrolled merge rounds), encode (longest-match walk recursion)
     and the eval reduction entirely in DuckDB SQL."""
     docs = load_table(spark, sf_dir, "documents")
-    merges = wordpiece.learn_wordpiece(docs, "text", **_WP_PARAMS)
-    enc = wordpiece.wordpiece_encode(
-        docs, "doc_id", "text", merges,
-        min_count=_WP_PARAMS["min_count"],
-        max_word_types=_WP_PARAMS["max_word_types"])
+    vocab = wordpiece.wordpiece_vocab(docs, "text", **_WP_PARAMS)
+    enc = wordpiece.wordpiece_encode(docs, "doc_id", "text", vocab)
     return tokeval.tokenizer_eval(docs, enc, "doc_id", "text",
                                   "pieces", by="lang")
 

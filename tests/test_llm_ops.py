@@ -1801,8 +1801,9 @@ def test_ivf_pq_rerank_guards(spark):
 
 
 def test_adc_topn_empty_probe_set(spark):
-    """An empty probe frame scores nothing: every ADC top-n is empty
-    rather than an analysis error over empty literal tables."""
+    """An empty probe frame scores nothing: every ADC top-n and the
+    exact cosine top-k are empty rather than an analysis error over
+    empty literal tables or a numpy error over an empty matrix."""
     import random
 
     rng = random.Random(17)
@@ -1817,6 +1818,8 @@ def test_adc_topn_empty_probe_set(spark):
                                   centroid_stride=10, **kw).collect() == []
     assert similarity.ivf_pq_rerank(df, "vec_id", "embedding", none,
                                     centroid_stride=10, **kw).collect() == []
+    assert similarity.cosine_topk_blas(df, "vec_id", "embedding", k=3,
+                                       probes=none).collect() == []
 
 
 # ---------------------------------------------------------------------------

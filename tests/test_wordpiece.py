@@ -68,9 +68,10 @@ def test_encode_matches_python_model(spark):
              "Qu1ck runs; the fox! THE FOX."]
     df = _docs(spark, texts)
     merges = wp.learn_wordpiece(df, "text", 8, min_count=1)
+    vocab_df = wp.wordpiece_vocab(df, "text", 8, min_count=1)
     enc = {r.doc_id: (tuple(r.pieces), r.n_pieces)
-           for r in wp.wordpiece_encode(df, "doc_id", "text", merges,
-                                        min_count=1).collect()}
+           for r in wp.wordpiece_encode(df, "doc_id", "text",
+                                        vocab_df).collect()}
     # python replay
     import re
 
@@ -79,6 +80,7 @@ def test_encode_matches_python_model(spark):
     types = [(r["word"], int(r["n"])) for r in wt.collect()]
     mrows = [tuple(r) for r in merges.collect()]
     vocab = wp._py_vocab(types, mrows)
+    assert {r.piece for r in vocab_df.collect()} == vocab
     for i, t in enumerate(texts):
         want = []
         for w in re.split("[^a-z0-9]+", t.lower()):
@@ -88,13 +90,13 @@ def test_encode_matches_python_model(spark):
 
 
 def test_encode_refuses_over_cap_type_table(spark):
-    """The encode collects its type table through the same
+    """The vocabulary the encode takes is collected through the same
     MAX_DRIVER_TYPES guard as training."""
     from kafkadirect_spark.functions.bpe import MAX_DRIVER_TYPES
     with pytest.raises(ValueError, match="MAX_DRIVER_TYPES"):
-        wp.wordpiece_encode(_docs(spark, ["a b"]), "doc_id", "text", [],
-                            min_count=1,
-                            max_word_types=MAX_DRIVER_TYPES + 1)
+        wp.wordpiece_vocab(_docs(spark, ["a b"]), "text", 1,
+                           min_count=1,
+                           max_word_types=MAX_DRIVER_TYPES + 1)
 
 
 def test_tokeval_contract(spark):
@@ -103,8 +105,8 @@ def test_tokeval_contract(spark):
     from kafkadirect_spark.functions import tokeval
 
     df = _docs(spark, ["aa bb cc dd ee ff gg hh", "aa bb aa bb"])
-    merges = wp.learn_wordpiece(df, "text", 3, min_count=1)
-    enc = wp.wordpiece_encode(df, "doc_id", "text", merges, min_count=1)
+    vocab = wp.wordpiece_vocab(df, "text", 3, min_count=1)
+    enc = wp.wordpiece_encode(df, "doc_id", "text", vocab)
     chunks = tokeval.windowed_chunks(enc, "doc_id", "pieces",
                                      budget=4, stride=2)
     assert chunks.count() > 0
@@ -143,13 +145,11 @@ def test_encode_lengths_oracle_matches_engine(spark):
 
     sf = "/root/testdata/sf0.001"
     docs = load_table(spark, sf, "documents")
-    merges = wp.learn_wordpiece(docs, "text", **_PARAMS)
+    vocab = wp.wordpiece_vocab(docs, "text", **_PARAMS)
     eng = sorted(
         (r.doc_id, r.n_pieces)
-        for r in wp.wordpiece_encode(docs, "doc_id", "text", merges,
-                                     min_count=_PARAMS["min_count"],
-                                     max_word_types=_PARAMS[
-                                         "max_word_types"]).collect())
+        for r in wp.wordpiece_encode(docs, "doc_id", "text",
+                                     vocab).collect())
     con = duckdb.connect()
     con.execute("CREATE VIEW documents AS SELECT * FROM "
                 f"read_parquet('{sf}/documents.parquet')")
@@ -169,10 +169,8 @@ def test_eval_oracle_matches_engine(spark):
 
     sf = "/root/testdata/sf0.001"
     docs = load_table(spark, sf, "documents")
-    merges = wp.learn_wordpiece(docs, "text", **_PARAMS)
-    enc = wp.wordpiece_encode(docs, "doc_id", "text", merges,
-                              min_count=_PARAMS["min_count"],
-                              max_word_types=_PARAMS["max_word_types"])
+    vocab = wp.wordpiece_vocab(docs, "text", **_PARAMS)
+    enc = wp.wordpiece_encode(docs, "doc_id", "text", vocab)
     eng = sorted(tuple(r) for r in tokeval.tokenizer_eval(
         docs, enc, "doc_id", "text", "pieces", by="lang").collect())
     con = duckdb.connect()
@@ -187,27 +185,23 @@ def test_wordpiece_encode_works_on_streams(spark, tmp_path):
     """wordpiece_encode is a stateless mapInPandas transform, so the
     trained tokenizer applies unchanged to a Structured Streaming
     ingest (streamed == batch) — the same contract as bpe_encode and
-    unigram_encode; the vocabulary derives from the BATCH training
-    frame passed via train_df."""
+    unigram_encode; the stream is encoded with the batch-trained
+    vocabulary alone."""
     import os
 
     texts = ["lower lowest newer newest", "low new lower newer",
              "the lowest of the low"]
     batch_df = _docs(spark, texts)
-    merges = wp.learn_wordpiece(batch_df, "text", 5, min_count=1)
+    vocab = wp.wordpiece_vocab(batch_df, "text", 5, min_count=1)
     expect = {r.doc_id: (list(r.pieces), r.n_pieces) for r in
-              wp.wordpiece_encode(batch_df, "doc_id", "text", merges,
-                                  min_count=1).collect()}
+              wp.wordpiece_encode(batch_df, "doc_id", "text",
+                                  vocab).collect()}
 
     src = os.path.join(str(tmp_path), "src")
     batch_df.repartition(2).write.parquet(src)
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", "1").parquet(src))
-    with pytest.raises(ValueError, match="train_df"):
-        wp.wordpiece_encode(stream, "doc_id", "text", merges,
-                            min_count=1)
-    out = wp.wordpiece_encode(stream, "doc_id", "text", merges,
-                              min_count=1, train_df=batch_df)
+    out = wp.wordpiece_encode(stream, "doc_id", "text", vocab)
     assert out.isStreaming
     q = (out.writeStream.format("memory").queryName("wp_stream")
          .outputMode("append").start())
@@ -224,15 +218,37 @@ def test_wordpiece_vocab_frame(spark):
     df = _docs(spark, ["abc abc ab", "abc ab a"])
     merges = wp.learn_wordpiece(df, "text", 2, min_count=1)
     v = {(r.piece, r.kind) for r in
-         wp.wordpiece_vocab(df, "text", merges, min_count=1).collect()}
+         wp.wordpiece_vocab(df, "text", 2, min_count=1).collect()}
     # base chars: 'a' plain (word start), '##b'/'##c' continuations
     assert ("a", "char") in v
     assert ("##b", "cont_char") in v and ("##c", "cont_char") in v
     # every merge product present with kind 'merge'
     prods = {p for p, kind in v if kind == "merge"}
     assert len(prods) == 2
+    # the same merges learn_wordpiece trains
+    assert prods == {wp._merge_product(r.lhs, r.rhs)
+                     for r in merges.collect()}
     for p in prods:
         assert not p.startswith("###")  # products strip exactly one ##
+
+
+def test_wordpiece_eval_counts_word_types_once(spark, monkeypatch):
+    """Building the registered wordpiece_eval collects the corpus's
+    word-type table once: the encode takes the trained vocabulary and
+    counts nothing itself."""
+    from kafkadirect_spark.functions import bpe
+    from kafkadirect_spark.plans import QUERIES
+
+    calls = []
+    real = bpe._collect_types
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(bpe, "_collect_types", counting)
+    QUERIES["wordpiece_eval"](spark, "/root/testdata/sf0.001")
+    assert len(calls) == 1
 
 
 def test_encode_properties_hypothesis():

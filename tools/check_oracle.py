@@ -53,16 +53,16 @@ def canon_pandas(df):
     sorted by all columns via pandas (this is where unhashable cells
     like lists crash the gate).  Timestamps are normalized to [ns]:
     Spark's toPandas yields datetime64[ns] while DuckDB yields
-    datetime64[us] — a representation difference the driver's r4 rows
-    show it tolerates (windowed_count_tumbling et al. were green)."""
+    datetime64[us] — a representation difference the driver's gate
+    tolerates (windowed_count_tumbling et al. pass it)."""
     df = df[sorted(df.columns)]
     for c in df.columns:
         if str(df[c].dtype).startswith("datetime64"):
             df[c] = df[c].astype("datetime64[ns]")
     # NO array-cell coercion here, deliberately: the driver's gate has
     # none, so an ArrayType output must crash THIS sort exactly the way
-    # it crashes the driver's (the r8 tupleization patch made this tool
-    # a false-green generator for embedding_pq_codes — VERDICT r8 §1).
+    # it crashes the driver's (coercing array cells to tuples here once
+    # passed an embedding_pq_codes that the driver's gate crashed on).
     # Registered queries emit scalar columns only; the schema walk in
     # tests/test_plans.py enforces it before a query can get this far.
     return df.sort_values(list(df.columns)).reset_index(drop=True)

@@ -155,14 +155,14 @@ HEADLINERS = {
                        "sequence-transform + explode amplification "
                        "(the window count a training run consumes)",
     "tokenizer_eval": "bounded type-table EM rounds + one stateless "
-                      "ArrowEvalPython encode pass; ONE equi-join of "
+                      "MapInPandas encode pass; ONE equi-join of "
                       "encode onto (doc, slice, counts) and one "
                       "map-side-combined final aggregate",
-    # r12 registrations
     "similarity_ivf_pq": "broadcast centroid assignment (the "
                          "allowlisted bounded BNLJ), ONE candidate "
-                         "hash join on list id, row-local literal-map "
-                         "ADC, one per-probe top-n window — no "
+                         "hash join on list id, row-local ADC (one "
+                         "flat literal array read with element_at), "
+                         "one per-probe top-n window — no "
                          "whole-index scan at query time",
     "sax_nearest": "the sax_pairs plan + a candidate-sized "
                    "symmetrize union and the salted two-phase "
@@ -179,7 +179,7 @@ HEADLINERS = {
                        "<=shards-row offset window (allowlisted) + "
                        "one bounded broadcast — no global data sort",
     "wordpiece_eval": "scored-merge training on the bounded type "
-                      "table + one stateless ArrowEvalPython "
+                      "table + one stateless MapInPandas "
                       "longest-match encode; one equi-join + one "
                       "map-side-combined aggregate",
 }
